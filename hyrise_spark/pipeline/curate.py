@@ -33,7 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from hyrise_spark.catalog import load_tables
-from hyrise_spark.registry import register
+from hyrise_spark.registry import register, register_sql
 
 # chunk geometry: 40-token windows, stride 30 (10-token overlap) — the
 # standard RAG/training-window shape, scaled to the synthetic corpus.
@@ -1788,17 +1788,14 @@ _AUC_SQL = """
 """
 
 
-@register(
+# Rank-sum AUC of the n_chars signal against the lang='en' weak label
+# (same text on both engines; windows run over the score histogram,
+# never the data — see the rank-identity note above).
+register_sql(
     "curate_classifier_auc",
-    oracle=_AUC_SQL,
+    _AUC_SQL,
     tags=("curation", "evaluation", "sql"),
 )
-def curate_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank-sum AUC of the n_chars signal against the lang='en' weak label
-    (same text on both engines; windows run over the score histogram,
-    never the data — see the rank-identity note above)."""
-    _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(_AUC_SQL)
 
 
 # Precision/recall curve companion to the AUC: for every decision
@@ -1836,17 +1833,14 @@ _PR_CURVE_SQL = """
 """
 
 
-@register(
+# Precision/recall at every keep-if-score>=t threshold (bucketed
+# n_chars signal vs the lang='en' weak label) — descending cumulative
+# sums over the score histogram; same text on both engines.
+register_sql(
     "curate_classifier_pr_curve",
-    oracle=_PR_CURVE_SQL,
+    _PR_CURVE_SQL,
     tags=("curation", "evaluation", "sql"),
 )
-def curate_classifier_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Precision/recall at every keep-if-score>=t threshold (bucketed
-    n_chars signal vs the lang='en' weak label) — descending cumulative
-    sums over the score histogram; same text on both engines."""
-    _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(_PR_CURVE_SQL)
 
 
 # Gate-agreement metric: Cohen's kappa between two binary curation gates —
@@ -1883,13 +1877,10 @@ _KAPPA_SQL = """
 """
 
 
-@register(
+# Cohen's kappa between a length rule and a language gate over
+# documents (same text on both engines; see note above).
+register_sql(
     "curate_gate_agreement_kappa",
-    oracle=_KAPPA_SQL,
+    _KAPPA_SQL,
     tags=("curation", "evaluation", "sql"),
 )
-def curate_gate_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa between a length rule and a language gate over
-    documents (same text on both engines; see note above)."""
-    _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(_KAPPA_SQL)

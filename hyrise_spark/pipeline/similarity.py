@@ -1713,8 +1713,8 @@ def _pack_sql(vec: str, lo: int) -> str:
     )
 
 
-def _pack_word(v: Column, lo: int) -> Column:
-    """32 sign bits of v[lo+1 .. lo+32] as one BIGINT.
+def _pack_word(vec: str, lo: int) -> Column:
+    """32 sign bits of column `vec`[lo+1 .. lo+32] as one BIGINT.
 
     Round 13 (§1.2 per-task vs per-PLAN work): one compact aggregate-fold
     expression instead of the former unrolled 32-term OR tree. The unrolled
@@ -1723,10 +1723,9 @@ def _pack_word(v: Column, lo: int) -> Column:
     (the BQ family was build-dominated). Distinct bit weights make bit_or
     equal to +, so the fold accumulates with addition; values are
     bit-identical to the unrolled form and to the oracle's bit_or."""
-    col = v._jc.toString() if hasattr(v, "_jc") else str(v)
     return F.expr(
         f"aggregate(sequence(1, 32), 0L, (acc, i) -> "
-        f"acc + IF({col}[i + {lo} - 1] > 0D, shiftleft(1L, i - 1), 0L))"
+        f"acc + IF({vec}[i + {lo} - 1] > 0D, shiftleft(1L, i - 1), 0L))"
     )
 
 
@@ -1744,8 +1743,8 @@ def _bq_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.select(
         "vec_id",
         _normalize(F.col("r")).alias("v"),
-        _pack_word(F.col("r"), 0).alias("w1"),
-        _pack_word(F.col("r"), 32).alias("w2"),
+        _pack_word("r", 0).alias("w1"),
+        _pack_word("r", 32).alias("w2"),
     )
 
 

@@ -1605,9 +1605,9 @@ def _langid_pred_sql() -> str:
       GROUP BY l.lang
     )
     SELECT lang, tp, fp, fn,
-           ROUND(CAST(tp AS DOUBLE) / (tp + fp), 4) AS precision,
-           ROUND(CAST(tp AS DOUBLE) / (tp + fn), 4) AS recall,
-           ROUND(2.0 * tp / (2.0 * tp + fp + fn), 4) AS f1
+           ROUND(CAST(tp AS DOUBLE) / NULLIF(tp + fp, 0), 4) AS precision,
+           ROUND(CAST(tp AS DOUBLE) / NULLIF(tp + fn, 0), 4) AS recall,
+           ROUND(2.0 * tp / NULLIF(2.0 * tp + fp + fn, 0), 4) AS f1
     FROM per_class
     ORDER BY lang
     """,
@@ -1666,12 +1666,21 @@ def text_langid_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return per_class.select(
         "lang", "tp", "fp", "fn",
-        F.round(F.col("tp").cast("double") / (F.col("tp") + F.col("fp")), 4)
-        .alias("precision"),
-        F.round(F.col("tp").cast("double") / (F.col("tp") + F.col("fn")), 4)
-        .alias("recall"),
+        # NULLIF: a label never predicted (tp + fp = 0) yields NULL under
+        # ANSI too, instead of a DIVIDE_BY_ZERO error
         F.round(
-            2.0 * F.col("tp") / (2.0 * F.col("tp") + F.col("fp") + F.col("fn")),
+            F.col("tp").cast("double")
+            / F.nullif(F.col("tp") + F.col("fp"), F.lit(0)),
+            4,
+        ).alias("precision"),
+        F.round(
+            F.col("tp").cast("double")
+            / F.nullif(F.col("tp") + F.col("fn"), F.lit(0)),
+            4,
+        ).alias("recall"),
+        F.round(
+            2.0 * F.col("tp")
+            / F.nullif(2.0 * F.col("tp") + F.col("fp") + F.col("fn"), F.lit(0)),
             4,
         ).alias("f1"),
     ).orderBy("lang")

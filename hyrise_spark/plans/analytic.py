@@ -14,7 +14,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from hyrise_spark.catalog import load_tables
-from hyrise_spark.registry import register
+from hyrise_spark.registry import register, register_sql
 
 
 def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
@@ -56,25 +56,15 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "agg_grouping_sets",
-    oracle="""
+    """
     SELECT l_returnflag, l_linestatus, COUNT(*) AS n
     FROM lineitem
     GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
     """,
     tags=("aggregate", "grouping-sets"),
 )
-def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus, COUNT(*) AS n
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
-    )
 
 
 # Pivot: avg-free (deterministic SUM) wide table of order counts by status.
@@ -738,17 +728,13 @@ _GROUPING_FN_SQL = """
 """
 
 
-@register(
+# GROUPING() over ROLLUP: the 0/1 super-aggregate markers per key —
+# same text, two independent implementations of the bitmask.
+register_sql(
     "agg_grouping_function",
-    oracle=_GROUPING_FN_SQL,
+    _GROUPING_FN_SQL,
     tags=("aggregate", "grouping-sets", "sql"),
 )
-def agg_grouping_function(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPING() over ROLLUP: the 0/1 super-aggregate markers per key —
-    same text, two independent implementations of the bitmask."""
-    (li,) = _t(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("lineitem")
-    return spark.sql(_GROUPING_FN_SQL)
 
 
 # -- round 9: TRY_CAST (fallible cast -> NULL; beyond the reference, whose
@@ -764,19 +750,15 @@ _TRY_CAST_SQL = """
 """
 
 
-@register(
+# TRY_CAST: failed conversions yield NULL instead of an error (the
+# reference's lossy_cast asserts; DuckDB/Spark agree on the NULL
+# contract). Same text, both engines; mixes guaranteed-fail,
+# data-dependent, and guaranteed-roundtrip casts.
+register_sql(
     "projection_try_cast",
-    oracle=_TRY_CAST_SQL,
+    _TRY_CAST_SQL,
     tags=("projection", "cast", "sql"),
 )
-def projection_try_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRY_CAST: failed conversions yield NULL instead of an error (the
-    reference's lossy_cast asserts; DuckDB/Spark agree on the NULL
-    contract). Same text, both engines; mixes guaranteed-fail,
-    data-dependent, and guaranteed-roundtrip casts."""
-    (docs,) = _t(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("documents")
-    return spark.sql(_TRY_CAST_SQL)
 
 
 @register(
@@ -985,16 +967,13 @@ _PIVOT_SQL = """
 """
 
 
-@register(
+# FROM ... PIVOT (agg FOR col IN (...)): one hash aggregate wide —
+# same plan Catalyst builds for the conditional-agg spelling.
+register_sql(
     "pivot_sql_clause",
-    oracle=_PIVOT_SQL,
+    _PIVOT_SQL,
     tags=("pivot", "sql"),
 )
-def pivot_sql_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FROM ... PIVOT (agg FOR col IN (...)): one hash aggregate wide —
-    same plan Catalyst builds for the conditional-agg spelling."""
-    load_tables(spark, sf_dir, ("orders",))
-    return spark.sql(_PIVOT_SQL)
 
 
 _UNPIVOT_SQL = """
@@ -1010,16 +989,13 @@ _UNPIVOT_SQL = """
 """
 
 
-@register(
+# FROM ... UNPIVOT (val FOR attr IN (...)): narrow explode, no
+# shuffle — same text on both engines.
+register_sql(
     "unpivot_sql_clause",
-    oracle=_UNPIVOT_SQL,
+    _UNPIVOT_SQL,
     tags=("unpivot", "sql"),
 )
-def unpivot_sql_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FROM ... UNPIVOT (val FOR attr IN (...)): narrow explode, no
-    shuffle — same text on both engines."""
-    load_tables(spark, sf_dir, ("part",))
-    return spark.sql(_UNPIVOT_SQL)
 
 
 # -- round 9: BOOL_AND / BOOL_OR aggregates (SQL:1999 EVERY/ANY; native in
@@ -1039,16 +1015,13 @@ _BOOL_AGG_SQL = """
 """
 
 
-@register(
+# BOOL_AND/BOOL_OR grouped reducers — identical text on both engines
+# (independent implementations of the SQL:1999 boolean aggregates).
+register_sql(
     "aggregate_bool_and_or",
-    oracle=_BOOL_AGG_SQL,
+    _BOOL_AGG_SQL,
     tags=("aggregate", "bool", "sql"),
 )
-def aggregate_bool_and_or(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BOOL_AND/BOOL_OR grouped reducers — identical text on both engines
-    (independent implementations of the SQL:1999 boolean aggregates)."""
-    load_tables(spark, sf_dir, ("orders",))
-    return spark.sql(_BOOL_AGG_SQL)
 
 
 # -- round 11 (VERDICT task 7): deterministic companions for the two

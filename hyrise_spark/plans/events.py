@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
 from hyrise_spark.catalog import load_tables
-from hyrise_spark.registry import register
+from hyrise_spark.registry import register, register_sql
 
 
 def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
@@ -2047,17 +2047,13 @@ _LINEAR_TREND_SQL = """
 """
 
 
-@register(
+# OLS trend per event_type over the hourly count series (same text on
+# both engines; see the sufficient-statistic note above).
+register_sql(
     "events_linear_trend",
-    oracle=_LINEAR_TREND_SQL,
+    _LINEAR_TREND_SQL,
     tags=("events", "timeseries", "sql"),
 )
-def events_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OLS trend per event_type over the hourly count series (same text on
-    both engines; see the sufficient-statistic note above)."""
-    (events,) = _t(spark, sf_dir, "events")
-    events.createOrReplaceTempView("events")
-    return spark.sql(_LINEAR_TREND_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2087,9 +2083,11 @@ def events_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   n * S2           (7,0)x(30,0)  -> (37,0)                [n < 1e7]
 #   S1 * S1          (18,0)x(18,0) -> (37,0)                [|S1| < 1e18]
 #   difference       (37,0)-(37,0) -> (38,0), then one CAST to DOUBLE.
-# Identical results wherever the old INT64 form was exact (sf0.001/0.01);
-# past the documented envelope both engines now fail LOUDLY (DuckDB
-# raises, Spark nulls) instead of wrapping.
+# Identical results wherever the old INT64 form was exact (sf0.001/0.01).
+# Past the documented envelope DuckDB raises, but non-ANSI Spark does NOT
+# fail loudly: its decimal overflow yields NULL, GREATEST(0.0, ...) skips
+# the NULL, and the strength reads 0.0. Only the DuckDB differential
+# catches that case.
 _SEASONAL_STRENGTH_SQL = """
     WITH hourly AS (
       SELECT event_type, date_trunc('hour', ts) AS h,
@@ -2147,14 +2145,10 @@ _SEASONAL_STRENGTH_SQL = """
 """
 
 
-@register(
+# Wang-Hyndman seasonal/trend strength per event series (same text on
+# both engines; integer-lattice variance discipline — see note).
+register_sql(
     "events_seasonal_strength",
-    oracle=_SEASONAL_STRENGTH_SQL,
+    _SEASONAL_STRENGTH_SQL,
     tags=("events", "timeseries", "sql"),
 )
-def events_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wang-Hyndman seasonal/trend strength per event series (same text on
-    both engines; integer-lattice variance discipline — see note)."""
-    (events,) = _t(spark, sf_dir, "events")
-    events.createOrReplaceTempView("events")
-    return spark.sql(_SEASONAL_STRENGTH_SQL)

@@ -2,53 +2,39 @@
 
 The reference ships the Join Order Benchmark as a first-class suite
 (src/benchmark/join_order_benchmark.cpp; 113 queries over the IMDB dataset,
-Leis et al. "How good are query optimizers, really?"). The IMDB data is not
-available here, so this module reproduces what JOB actually *measures* — the
-optimizer's join-ordering quality — on the driver schema:
+Leis et al. "How good are query optimizers, really?") and runs it as SQL
+text through its own pipeline (parse -> LQP -> optimize -> PQP). The IMDB
+data is not available here, so this module reproduces what JOB actually
+*measures* — the optimizer's join-ordering quality — on the synthetic
+star schema (TESTDATA.md):
 
-  * 5-9 way join graphs (chains, stars, diamonds, and a clique edge),
+  * 5-18 way join graphs (chains, stars, diamonds, and clique edges),
   * the same dimension joined twice under different aliases (JOB joins
     `name`/`title` repeatedly; here `nation`/`region` play that role),
   * correlated, selective predicates on dimension attributes,
   * MIN(...) result rows (JOB's signature single-row aggregates).
 
-The Spark plans are written in the NAIVE join order exactly as JOB queries
-are — picking a better order is the optimizer's job, and the session enables
-CBO + joinReorder (session.py) with ANALYZE'd stats (layout.py); the
-plan-quality test test_cbo_stats_drive_join_reorder pins that machinery.
-Tiny dims (nation 25 rows, region 5 rows) are broadcast explicitly; the
-fact-to-fact orders are left to CBO/AQE.
-
-All queries are DuckDB-oracle-checked (single- or few-row outputs, like JOB).
+Each query is ONE SQL text, registered with `register_sql`: DuckDB runs it
+as the oracle and Spark runs it through `spark.sql`. The texts are written
+in the NAIVE join order, exactly as JOB queries are — picking a better order
+is the optimizer's job: the session enables CBO + joinReorder (session.py)
+over ANALYZE'd stats (layout.py), and AQE converts runtime-small sides to
+broadcasts. There are no explicit broadcast hints. Date predicates are
+half-open ranges on the raw column (`col >= TIMESTAMP 'Y-01-01' AND col <
+TIMESTAMP 'Y+1-01-01'`), never EXTRACT(YEAR ...) = Y, so the bounds reach
+the parquet scan's PushedFilters.
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
-
-from hyrise_spark.catalog import load_tables
-from hyrise_spark.registry import register
-
-R2 = 2
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_tables(spark, sf_dir, names)
-    return [tabs[n] for n in names]
-
-
-def _ts_range(col: str, start: str, end: str):
-    """Half-open timestamp range — pushable to the parquet scan, unlike
-    EXTRACT/year() which wrap the column in a function and defeat pushdown."""
-    return (F.col(col) >= F.lit(start)) & (F.col(col) < F.lit(end))
+from hyrise_spark.registry import register_sql
 
 
 # --------------------------------------------------------------------------
 # JOB 1a analog: 5-way chain, selective filter at the far end of the chain.
-@register(
+register_sql(
     "job_q1",
-    oracle="""
+    """
     SELECT CAST(MIN(o_orderkey) AS BIGINT) AS min_orderkey,
            MIN(c_name) AS min_cust,
            ROUND(MIN(o_totalprice), 2) AS min_price
@@ -58,34 +44,18 @@ def _ts_range(col: str, start: str, end: str):
     JOIN part ON l_partkey = p_partkey
     WHERE p_type = 'PROMO' AND p_size < 5
       AND c_mktsegment = 'BUILDING'
-      AND EXTRACT(YEAR FROM l_shipdate) = 1997
+      AND l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
     """,
     tags=("job",),
 )
-def job_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, part = _t(spark, sf_dir, "lineitem", "orders", "customer", "part")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01"))
-        )
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(F.col("c_mktsegment") == "BUILDING"), F.col("o_custkey") == F.col("c_custkey"))
-        .join(part.filter((F.col("p_type") == "PROMO") & (F.col("p_size") < 5)), F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.min("o_orderkey").alias("min_orderkey"),
-            F.min("c_name").alias("min_cust"),
-            F.round(F.min("o_totalprice"), R2).alias("min_price"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # JOB 6a analog: 9-way with nation/region joined TWICE under aliases —
 # customer side pinned to ASIA, supplier side pinned to EUROPE.
-@register(
+register_sql(
     "job_q2",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(cn.n_name) AS min_cust_nation,
            MIN(sn.n_name) AS min_supp_nation,
@@ -101,45 +71,17 @@ def job_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN part ON l_partkey = p_partkey
     WHERE cr.r_name = 'ASIA' AND sr.r_name = 'EUROPE'
       AND p_retailprice > 990
-      AND EXTRACT(YEAR FROM o_orderdate) = 1998
+      AND o_orderdate >= TIMESTAMP '1998-01-01' AND o_orderdate < TIMESTAMP '1999-01-01'
     """,
     tags=("job",),
 )
-def job_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, supp, part = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region", "supplier", "part"
-    )
-    cn = nation.select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cn_name"), F.col("n_regionkey").alias("cn_reg")
-    )
-    sn = nation.select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("sn_name"), F.col("n_regionkey").alias("sn_reg")
-    )
-    cr = region.filter(F.col("r_name") == "ASIA").select(F.col("r_regionkey").alias("cr_key"))
-    sr = region.filter(F.col("r_name") == "EUROPE").select(F.col("r_regionkey").alias("sr_key"))
-    return (
-        li.join(orders.filter(_ts_range("o_orderdate", "1998-01-01", "1999-01-01")), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(cr), F.col("cn_reg") == F.col("cr_key"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(sr), F.col("sn_reg") == F.col("sr_key"))
-        .join(part.filter(F.col("p_retailprice") > 990), F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("cn_name").alias("min_cust_nation"),
-            F.min("sn_name").alias("min_supp_nation"),
-            F.round(F.min("l_extendedprice"), R2).alias("min_price"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # JOB 3b analog: 6-way star with IN-lists and a range band on the fact.
-@register(
+register_sql(
     "job_q3",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_brand) AS min_brand,
            MIN(s_name) AS min_supp
@@ -157,34 +99,14 @@ def job_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part, supp, orders, cust, nation = _t(
-        spark, sf_dir, "lineitem", "part", "supplier", "orders", "customer", "nation"
-    )
-    return (
-        li.filter(F.col("l_quantity").between(20, 30))
-        .join(
-            part.filter(F.col("p_brand").isin("Brand#1", "Brand#2", "Brand#3") & F.col("p_size").between(10, 30)),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .join(supp.filter(F.col("s_acctbal") > 5000), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(orders.filter(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_brand").alias("min_brand"),
-            F.min("s_name").alias("min_supp"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # JOB 11c analog: clique edge — customer and supplier must share a nation
 # (c_nationkey = s_nationkey joins two branches of the graph directly).
-@register(
+register_sql(
     "job_q4",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -193,39 +115,20 @@ def job_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN customer ON o_custkey = c_custkey
     JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
     JOIN nation ON c_nationkey = n_nationkey
-    WHERE EXTRACT(YEAR FROM o_orderdate) = 1997
+    WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
       AND o_totalprice > 100000
     """,
     tags=("job",),
 )
-def job_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, supp, nation = _t(spark, sf_dir, "lineitem", "orders", "customer", "supplier", "nation")
-    return (
-        li.join(
-            orders.filter(_ts_range("o_orderdate", "1997-01-01", "1998-01-01") & (F.col("o_totalprice") > 100000)),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            supp,
-            (F.col("l_suppkey") == F.col("s_suppkey")) & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # JOB 13d analog: anti-correlated predicates — expensive lineitems of cheap
 # parts (forces the optimizer to see that neither filter alone is selective
 # but their conjunction through the join is).
-@register(
+register_sql(
     "job_q5",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            ROUND(MAX(l_extendedprice), 2) AS max_price
@@ -239,27 +142,13 @@ def job_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part, supp, nation, region = _t(spark, sf_dir, "lineitem", "part", "supplier", "nation", "region")
-    return (
-        li.filter(F.col("l_extendedprice") > 95000)
-        .join(part.filter(F.col("p_retailprice") < 920), F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region.filter(F.col("r_name").isin("AFRICA", "AMERICA"))), F.col("n_regionkey") == F.col("r_regionkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.round(F.max("l_extendedprice"), R2).alias("max_price"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # JOB 8a analog: LIKE predicates on two different dims in one graph.
-@register(
+register_sql(
     "job_q6",
-    oracle="""
+    """
     SELECT CAST(MIN(o_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(n_name) AS min_nation
@@ -273,27 +162,14 @@ def job_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, part, supp, nation = _t(spark, sf_dir, "lineitem", "orders", "part", "supplier", "nation")
-    return (
-        li.join(orders.filter(F.col("o_orderstatus") == "F"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(part.filter(F.col("p_name").like("red%")), F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation.filter(F.col("n_name").like("NATION_1%"))), F.col("s_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("o_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("n_name").alias("min_nation"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # JOB 16b analog: 6-way through a second fact (events) — behavioral join
 # chain events -> customer -> orders -> lineitem with dim filters.
-@register(
+register_sql(
     "job_q7",
-    oracle="""
+    """
     SELECT CAST(MIN(event_id) AS BIGINT) AS min_event,
            CAST(MIN(o_orderkey) AS BIGINT) AS min_orderkey,
            MIN(n_name) AS min_nation
@@ -303,37 +179,20 @@ def job_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN region ON n_regionkey = r_regionkey
     JOIN orders ON o_custkey = c_custkey
     WHERE event_type = 'purchase' AND r_name = 'AMERICA'
-      AND EXTRACT(YEAR FROM o_orderdate) = 1997
+      AND o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
       AND o_totalprice > 150000
     """,
     tags=("job",),
 )
-def job_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events, cust, nation, region, orders = _t(spark, sf_dir, "events", "customer", "nation", "region", "orders")
-    return (
-        events.filter(F.col("event_type") == "purchase")
-        .join(cust, F.col("user_id") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region.filter(F.col("r_name") == "AMERICA")), F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(
-            orders.filter(_ts_range("o_orderdate", "1997-01-01", "1998-01-01") & (F.col("o_totalprice") > 150000)),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .agg(
-            F.min("event_id").alias("min_event"),
-            F.min("o_orderkey").alias("min_orderkey"),
-            F.min("n_name").alias("min_nation"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # JOB 17e analog: diamond — orders joins lineitem twice transitively
 # (customer branch and supplier branch), both branches constrained to the
 # same region via two region aliases with an equality between them.
-@register(
+register_sql(
     "job_q8",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(cn.n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -344,43 +203,19 @@ def job_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN supplier ON l_suppkey = s_suppkey
     JOIN nation sn ON s_nationkey = sn.n_nationkey
     WHERE cn.n_regionkey = sn.n_regionkey
-      AND EXTRACT(YEAR FROM l_shipdate) = 1998
+      AND l_shipdate >= TIMESTAMP '1998-01-01' AND l_shipdate < TIMESTAMP '1999-01-01'
       AND l_discount > 0.08
     """,
     tags=("job",),
 )
-def job_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, supp = _t(spark, sf_dir, "lineitem", "orders", "customer", "nation", "supplier")
-    cn = nation.select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cn_name"), F.col("n_regionkey").alias("cn_reg")
-    )
-    sn = nation.select(F.col("n_nationkey").alias("sn_key"), F.col("n_regionkey").alias("sn_reg"))
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1998-01-01"))
-            & (F.col("l_shipdate") < F.lit("1999-01-01"))
-            & (F.col("l_discount") > 0.08)
-        )
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .filter(F.col("cn_reg") == F.col("sn_reg"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("cn_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # JOB 20a analog: one branch is itself an aggregate (big customers), the
 # optimizer must place the derived relation correctly in the graph.
-@register(
+register_sql(
     "job_q9",
-    oracle="""
+    """
     WITH big AS (
       SELECT o_custkey FROM orders GROUP BY o_custkey
       HAVING SUM(o_totalprice) > 2000000
@@ -393,37 +228,19 @@ def job_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN customer ON o_custkey = c_custkey
     JOIN big ON big.o_custkey = c_custkey
     JOIN part ON l_partkey = p_partkey
-    WHERE p_type IN ('ECONOMY', 'PROMO') AND EXTRACT(YEAR FROM o_orderdate) = 1996
+    WHERE p_type IN ('ECONOMY', 'PROMO')
+      AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
     """,
     tags=("job",),
 )
-def job_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, part = _t(spark, sf_dir, "lineitem", "orders", "customer", "part")
-    big = (
-        orders.groupBy(F.col("o_custkey").alias("big_custkey"))
-        .agg(F.sum("o_totalprice").alias("tot"))
-        .filter(F.col("tot") > 2000000)
-        .select("big_custkey")
-    )
-    return (
-        li.join(orders.filter(_ts_range("o_orderdate", "1996-01-01", "1997-01-01")), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(big, F.col("big_custkey") == F.col("c_custkey"))
-        .join(part.filter(F.col("p_type").isin("ECONOMY", "PROMO")), F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("c_name").alias("min_cust"),
-            F.round(F.min("l_extendedprice"), R2).alias("min_price"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # JOB 29a analog: widest graph — 8 relations, every join edge used, three
 # selective dim filters at different depths.
-@register(
+register_sql(
     "job_q10",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_brand) AS min_brand,
            MIN(s_name) AS min_supp,
@@ -440,25 +257,6 @@ def job_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, supp, part = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region", "supplier", "part"
-    )
-    return (
-        li.filter(F.col("l_quantity") < 10)
-        .join(orders.filter(F.col("o_orderstatus") == "O"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region.filter(F.col("r_name") != "ASIA")), F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(supp.filter(F.col("s_acctbal") < 1000), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(part.filter(F.col("p_size") == 25), F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_brand").alias("min_brand"),
-            F.min("s_name").alias("min_supp"),
-            F.min("r_name").alias("min_region"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -466,9 +264,9 @@ def job_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
 # customer side and the supplier side each pull their own nation+region
 # (JOB's `name AS n1, name AS n2` pattern). Selective predicates sit on the
 # two far ends; CBO must pick which chain to reduce first.
-@register(
+register_sql(
     "job_q11",
-    oracle="""
+    """
     SELECT CAST(MIN(o_orderkey) AS BIGINT) AS min_orderkey,
            MIN(cn.n_name) AS min_cust_nation, MIN(sn.n_name) AS min_supp_nation,
            ROUND(MIN(o_totalprice), 2) AS min_price
@@ -486,49 +284,15 @@ def job_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job", "job-large"),
 )
-def job_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, supp = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region", "supplier"
-    )
-    cn, sn = nation.alias("cn"), nation.alias("sn")
-    cr, sr = region.alias("cr"), region.alias("sr")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01"))
-        )
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            cust.filter(F.col("c_mktsegment") == "AUTOMOBILE"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn.n_nationkey"))
-        .join(
-            F.broadcast(cr.filter(F.col("cr.r_name") == "ASIA")),
-            F.col("cn.n_regionkey") == F.col("cr.r_regionkey"),
-        )
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn.n_nationkey"))
-        .join(
-            F.broadcast(sr.filter(F.col("sr.r_name") == "EUROPE")),
-            F.col("sn.n_regionkey") == F.col("sr.r_regionkey"),
-        )
-        .agg(
-            F.min("o_orderkey").alias("min_orderkey"),
-            F.min("cn.n_name").alias("min_cust_nation"),
-            F.min("sn.n_name").alias("min_supp_nation"),
-            F.round(F.min("o_totalprice"), R2).alias("min_price"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # JOB 29-analog: 10-way graph — the 8-way double-dimension star above plus
 # part and the events stream joined on the customer key (JOB's widest
 # queries mix in the info tables the same way).
-@register(
+register_sql(
     "job_q12",
-    oracle="""
+    """
     SELECT CAST(MIN(o_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part, MIN(event_type) AS min_event,
            MIN(cn.n_name) AS min_cust_nation
@@ -548,45 +312,6 @@ def job_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job", "job-large"),
 )
-def job_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, supp, part, events = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region",
-        "supplier", "part", "events",
-    )
-    cn, sn = nation.alias("cn"), nation.alias("sn")
-    cr, sr = region.alias("cr"), region.alias("sr")
-    return (
-        li.join(
-            orders.filter(F.col("o_orderstatus") == "F"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn.n_nationkey"))
-        .join(
-            F.broadcast(cr.filter(F.col("cr.r_name") == "AMERICA")),
-            F.col("cn.n_regionkey") == F.col("cr.r_regionkey"),
-        )
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn.n_nationkey"))
-        .join(
-            F.broadcast(sr.filter(F.col("sr.r_name") != "AFRICA")),
-            F.col("sn.n_regionkey") == F.col("sr.r_regionkey"),
-        )
-        .join(
-            part.filter(F.col("p_type") == "PROMO"),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .join(
-            events.filter(F.col("event_type") == "purchase"),
-            F.col("user_id") == F.col("c_custkey"),
-        )
-        .agg(
-            F.min("o_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("event_type").alias("min_event"),
-            F.min("cn.n_name").alias("min_cust_nation"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -595,9 +320,9 @@ def job_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
 # its own orders + customer + nation chain, plus the shared part and a
 # supplier on the left branch. Join-order choice dominates: the part filter
 # must be pushed into both branches before the branch-join.
-@register(
+register_sql(
     "job_q13",
-    oracle="""
+    """
     SELECT CAST(MIN(l1.l_orderkey) AS BIGINT) AS min_left_order,
            CAST(MIN(l2.l_orderkey) AS BIGINT) AS min_right_order,
            MIN(p_name) AS min_part,
@@ -619,53 +344,6 @@ def job_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job", "job-large"),
 )
-def job_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, supp, part = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region",
-        "supplier", "part",
-    )
-    l1, l2 = li.alias("l1"), li.alias("l2")
-    o1, o2 = orders.alias("o1"), orders.alias("o2")
-    c1, c2 = cust.alias("c1"), cust.alias("c2")
-    n1, n2 = nation.alias("n1"), nation.alias("n2")
-    r1, r2 = region.alias("r1"), region.alias("r2")
-    p = part.filter(F.col("p_size") == 1)
-    return (
-        l1.join(p, F.col("l1.l_partkey") == F.col("p_partkey"))
-        .join(
-            l2,
-            (F.col("l2.l_partkey") == F.col("p_partkey"))
-            & (F.col("l2.l_orderkey") != F.col("l1.l_orderkey")),
-        )
-        .join(
-            o1.filter(F.col("o1.o_orderpriority") == "1-URGENT"),
-            F.col("l1.l_orderkey") == F.col("o1.o_orderkey"),
-        )
-        .join(
-            o2.filter(F.col("o2.o_orderpriority") == "5-LOW"),
-            F.col("l2.l_orderkey") == F.col("o2.o_orderkey"),
-        )
-        .join(c1, F.col("o1.o_custkey") == F.col("c1.c_custkey"))
-        .join(c2, F.col("o2.o_custkey") == F.col("c2.c_custkey"))
-        .join(F.broadcast(n1), F.col("c1.c_nationkey") == F.col("n1.n_nationkey"))
-        .join(F.broadcast(n2), F.col("c2.c_nationkey") == F.col("n2.n_nationkey"))
-        .join(supp, F.col("l1.l_suppkey") == F.col("s_suppkey"))
-        .join(
-            F.broadcast(r1.filter(F.col("r1.r_name") == "ASIA")),
-            F.col("n1.n_regionkey") == F.col("r1.r_regionkey"),
-        )
-        .join(
-            F.broadcast(r2.filter(F.col("r2.r_name") == "EUROPE")),
-            F.col("n2.n_regionkey") == F.col("r2.r_regionkey"),
-        )
-        .agg(
-            F.min("l1.l_orderkey").alias("min_left_order"),
-            F.min("l2.l_orderkey").alias("min_right_order"),
-            F.min("p_name").alias("min_part"),
-            F.min("n1.n_name").alias("min_left_nation"),
-            F.min("n2.n_name").alias("min_right_nation"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -674,9 +352,9 @@ def job_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
 # customer and the supplier must sit in the SAME nation, closing the loop
 # through the nation node rather than a direct clique edge (job_q4 covers
 # the 4-cycle variant).
-@register(
+register_sql(
     "job_q14",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -690,29 +368,6 @@ def job_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, supp = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "supplier"
-    )
-    return (
-        li.filter(F.col("l_quantity") > 40)
-        .join(
-            orders.filter(_ts_range("o_orderdate", "1996-01-01", "1997-01-01")),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(
-            supp,
-            (F.col("s_nationkey") == F.col("n_nationkey"))
-            & (F.col("l_suppkey") == F.col("s_suppkey")),
-        )
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -721,9 +376,9 @@ def job_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distinct orders (orderkeys strictly increasing to canonicalize the
 # triangle). The optimizer must recognize the shared part reduction before
 # any branch-branch join or the triangle explodes.
-@register(
+register_sql(
     "job_q15",
-    oracle="""
+    """
     SELECT CAST(MIN(l1.l_orderkey) AS BIGINT) AS min_o1,
            CAST(MIN(l2.l_orderkey) AS BIGINT) AS min_o2,
            CAST(MIN(l3.l_orderkey) AS BIGINT) AS min_o3,
@@ -737,30 +392,6 @@ def job_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job", "job-large"),
 )
-def job_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part = _t(spark, sf_dir, "lineitem", "part")
-    l1, l2, l3 = li.alias("l1"), li.alias("l2"), li.alias("l3")
-    p = part.filter((F.col("p_size") == 1) & (F.col("p_retailprice") < 910))
-    return (
-        l1.join(p, F.col("l1.l_partkey") == F.col("p_partkey"))
-        .join(
-            l2,
-            (F.col("l2.l_partkey") == F.col("p_partkey"))
-            & (F.col("l2.l_orderkey") > F.col("l1.l_orderkey")),
-        )
-        .join(
-            l3,
-            (F.col("l3.l_partkey") == F.col("p_partkey"))
-            & (F.col("l3.l_orderkey") > F.col("l2.l_orderkey")),
-        )
-        .agg(
-            F.min("l1.l_orderkey").alias("min_o1"),
-            F.min("l2.l_orderkey").alias("min_o2"),
-            F.min("l3.l_orderkey").alias("min_o3"),
-            F.min("p_name").alias("min_part"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -768,9 +399,9 @@ def job_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
 # chain — lineitems of never-returned parts, then the chain continues
 # through orders -> customer -> nation. The optimizer must place the anti
 # reduction before the downstream joins.
-@register(
+register_sql(
     "job_q16",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part, MIN(n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -789,43 +420,14 @@ def job_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part, orders, cust, nation = _t(
-        spark, sf_dir, "lineitem", "part", "orders", "customer", "nation"
-    )
-    # "bulk-returned recently" exclusion set — selective enough that the anti
-    # join keeps ~70% of parts at every SF (all-R exclusion would keep none)
-    returned = li.filter(
-        (F.col("l_returnflag") == "R")
-        & (F.col("l_quantity") >= 48)
-        & (F.col("l_shipdate") >= F.lit("1998-01-01"))
-    ).select(F.col("l_partkey").alias("ret_pk"))
-    clean_parts = part.filter(
-        (F.col("p_type") == "LARGE") & (F.col("p_size") < 4)
-    ).join(returned, F.col("p_partkey") == F.col("ret_pk"), "left_anti")
-    return (
-        li.join(clean_parts, F.col("l_partkey") == F.col("p_partkey"))
-        .join(
-            orders.filter(_ts_range("o_orderdate", "1998-01-01", "1999-01-01")),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Semi + anti mixed in one chain: customers WITH a 1997 urgent order (semi)
 # but WITHOUT any 1998 order (anti), then on through nation + region.
-@register(
+register_sql(
     "job_q17",
-    oracle="""
+    """
     SELECT CAST(MIN(c_custkey) AS BIGINT) AS min_cust,
            MIN(n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -845,40 +447,15 @@ def job_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, nation, region, orders = _t(
-        spark, sf_dir, "customer", "nation", "region", "orders"
-    )
-    urgent_97 = orders.filter(
-        (F.col("o_orderpriority") == "1-URGENT")
-        & _ts_range("o_orderdate", "1997-01-01", "1998-01-01")
-    ).select(F.col("o_custkey").alias("u_ck"))
-    any_98 = orders.filter(_ts_range("o_orderdate", "1998-01-01", "1999-01-01")).select(
-        F.col("o_custkey").alias("a_ck")
-    )
-    return (
-        cust.join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(
-            F.broadcast(region.filter(F.col("r_name") == "EUROPE")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .join(urgent_97, F.col("c_custkey") == F.col("u_ck"), "left_semi")
-        .join(any_98, F.col("c_custkey") == F.col("a_ck"), "left_anti")
-        .agg(
-            F.min("c_custkey").alias("min_cust"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Theta self-join inside a chain: same customer, an order in 1996 and a
 # LARGER order in 1997 (o2.o_totalprice > o1.o_totalprice), customer chain
 # continues to nation. Two aliased copies of orders with a non-equi edge.
-@register(
+register_sql(
     "job_q18",
-    oracle="""
+    """
     SELECT CAST(MIN(o1.o_orderkey) AS BIGINT) AS min_o1,
            CAST(MIN(o2.o_orderkey) AS BIGINT) AS min_o2,
            MIN(n_name) AS min_nation,
@@ -894,36 +471,14 @@ def job_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, cust, nation = _t(spark, sf_dir, "orders", "customer", "nation")
-    o1 = orders.filter(
-        _ts_range("o_orderdate", "1996-01-01", "1997-01-01")
-        & (F.col("o_totalprice") > 300000)
-    ).alias("o1")
-    o2 = orders.filter(_ts_range("o_orderdate", "1997-01-01", "1998-01-01")).alias("o2")
-    return (
-        o1.join(
-            o2,
-            (F.col("o1.o_custkey") == F.col("o2.o_custkey"))
-            & (F.col("o2.o_totalprice") > F.col("o1.o_totalprice")),
-        )
-        .join(cust, F.col("o1.o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("o1.o_orderkey").alias("min_o1"),
-            F.min("o2.o_orderkey").alias("min_o2"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # THREE aliased copies of orders: customers ordering in 1996 AND 1997 AND
 # 1998 ("loyal" chain) — the second >=3-copies family, on the mid-size fact.
-@register(
+register_sql(
     "job_q19",
-    oracle="""
+    """
     SELECT CAST(MIN(c_custkey) AS BIGINT) AS min_cust,
            CAST(MIN(o1.o_orderkey) AS BIGINT) AS min_o1,
            CAST(MIN(o2.o_orderkey) AS BIGINT) AS min_o2,
@@ -940,37 +495,15 @@ def job_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = _t(spark, sf_dir, "customer", "orders")
-
-    def year_orders(alias: str, y: int) -> DataFrame:
-        return orders.filter(
-            _ts_range("o_orderdate", f"{y}-01-01", f"{y + 1}-01-01")
-            & (F.col("o_totalprice") > 200000)
-        ).alias(alias)
-
-    o1, o2, o3 = year_orders("o1", 1996), year_orders("o2", 1997), year_orders("o3", 1998)
-    return (
-        cust.filter(F.col("c_mktsegment") == "MACHINERY")
-        .join(o1, F.col("o1.o_custkey") == F.col("c_custkey"))
-        .join(o2, F.col("o2.o_custkey") == F.col("c_custkey"))
-        .join(o3, F.col("o3.o_custkey") == F.col("c_custkey"))
-        .agg(
-            F.min("c_custkey").alias("min_cust"),
-            F.min("o1.o_orderkey").alias("min_o1"),
-            F.min("o2.o_orderkey").alias("min_o2"),
-            F.min("o3.o_orderkey").alias("min_o3"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Widest mixed graph: the double-dimension 8-way star (q11's shape) PLUS
 # part and an anti-join against returned parts — 9 base relations + the
 # anti branch, combining duplicate dim chains with an anti reduction.
-@register(
+register_sql(
     "job_q20",
-    oracle="""
+    """
     SELECT CAST(MIN(o_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(cn.n_name) AS min_cust_nation, MIN(sn.n_name) AS min_supp_nation
@@ -994,55 +527,15 @@ def job_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job", "job-large"),
 )
-def job_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, supp, part = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region",
-        "supplier", "part",
-    )
-    cn, sn = nation.alias("cn"), nation.alias("sn")
-    cr, sr = region.alias("cr"), region.alias("sr")
-    returned = li.filter(
-        (F.col("l_returnflag") == "R")
-        & (F.col("l_quantity") >= 48)
-        & (F.col("l_shipdate") >= F.lit("1998-01-01"))
-    ).select(F.col("l_partkey").alias("ret_pk"))
-    clean_parts = part.filter(F.col("p_size") < 10).join(
-        returned, F.col("p_partkey") == F.col("ret_pk"), "left_anti"
-    )
-    return (
-        li.join(
-            orders.filter(_ts_range("o_orderdate", "1997-01-01", "1998-01-01")),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn.n_nationkey"))
-        .join(
-            F.broadcast(cr.filter(F.col("cr.r_name") == "AFRICA")),
-            F.col("cn.n_regionkey") == F.col("cr.r_regionkey"),
-        )
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn.n_nationkey"))
-        .join(
-            F.broadcast(sr.filter(F.col("sr.r_name") == "AMERICA")),
-            F.col("sn.n_regionkey") == F.col("sr.r_regionkey"),
-        )
-        .join(clean_parts, F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.min("o_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("cn.n_name").alias("min_cust_nation"),
-            F.min("sn.n_name").alias("min_supp_nation"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Outer join INSIDE the graph: every EUROPE customer, with their 1998 urgent
 # orders if any (left outer mid-chain), nation chain continuing after the
 # outer join. COALESCE keeps the unmatched side countable.
-@register(
+register_sql(
     "job_q21",
-    oracle="""
+    """
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
            CAST(COUNT(o_orderkey) AS BIGINT) AS n_matched,
            CAST(MIN(c_custkey) AS BIGINT) AS min_cust,
@@ -1057,36 +550,14 @@ def job_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, nation, region, orders = _t(
-        spark, sf_dir, "customer", "nation", "region", "orders"
-    )
-    urgent = orders.filter(
-        (F.col("o_orderpriority") == "1-URGENT")
-        & _ts_range("o_orderdate", "1998-01-01", "1999-01-01")
-    )
-    return (
-        cust.join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(
-            F.broadcast(region.filter(F.col("r_name") == "EUROPE")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .join(urgent, F.col("o_custkey") == F.col("c_custkey"), "left")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count("o_orderkey").alias("n_matched"),
-            F.min("c_custkey").alias("min_cust"),
-            F.min("n_name").alias("min_nation"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Correlated scalar subquery INSIDE the graph: lineitems priced above their
 # part's average lineitem price, with the usual chain continuing.
-@register(
+register_sql(
     "job_q22",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -1101,31 +572,15 @@ def job_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part, supp = _t(spark, sf_dir, "lineitem", "part", "supplier")
-    avg_price = li.groupBy(F.col("l_partkey").alias("ap_pk")).agg(
-        F.avg("l_extendedprice").alias("avg_price")
-    )
-    return (
-        li.join(part.filter(F.col("p_size") < 5), F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp.filter(F.col("s_acctbal") > 3000), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(avg_price, F.col("l_partkey") == F.col("ap_pk"))
-        .filter(F.col("l_extendedprice") > 1.5 * F.col("avg_price"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # IN-subquery against an aggregated derived relation: suppliers shipping any
 # of the 3 highest-revenue parts (66 of 100 suppliers at sf0.01 — selective
 # but non-degenerate), chain through nation.
-@register(
+register_sql(
     "job_q23",
-    oracle="""
+    """
     SELECT CAST(MIN(s_suppkey) AS BIGINT) AS min_supp,
            MIN(n_name) AS min_nation,
            CAST(COUNT(DISTINCT s_suppkey) AS BIGINT) AS n_supps
@@ -1139,25 +594,6 @@ def job_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q23(spark: SparkSession, sf_dir: str) -> DataFrame:
-    supp, nation, li = _t(spark, sf_dir, "supplier", "nation", "lineitem")
-    top_parts = (
-        li.groupBy("l_partkey")
-        .agg(F.sum("l_extendedprice").alias("rev"))
-        .orderBy(F.col("rev").desc(), "l_partkey")
-        .limit(3)
-        .select(F.col("l_partkey").alias("tp_pk"))
-    )
-    return (
-        supp.join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(li, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(top_parts, F.col("l_partkey") == F.col("tp_pk"), "left_semi")
-        .agg(
-            F.min("s_suppkey").alias("min_supp"),
-            F.min("n_name").alias("min_nation"),
-            F.countDistinct("s_suppkey").alias("n_supps"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1165,9 +601,9 @@ def job_q23(spark: SparkSession, sf_dir: str) -> DataFrame:
 # family): orders placed the SAME CALENDAR DAY as a machinery customer's
 # very large order — a self-join of orders on CAST(date) with a selective
 # left side.
-@register(
+register_sql(
     "job_q24",
-    oracle="""
+    """
     SELECT CAST(MIN(o1.o_orderkey) AS BIGINT) AS min_big,
            CAST(MIN(o2.o_orderkey) AS BIGINT) AS min_same_day,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -1179,34 +615,14 @@ def job_q23(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q24(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, cust = _t(spark, sf_dir, "orders", "customer")
-    o1 = orders.filter(F.col("o_totalprice") > 450000).alias("o1")
-    o2 = orders.alias("o2")
-    return (
-        o1.join(
-            cust.filter(F.col("c_mktsegment") == "MACHINERY"),
-            F.col("o1.o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            o2,
-            (F.col("o1.o_orderdate").cast("date") == F.col("o2.o_orderdate").cast("date"))
-            & (F.col("o2.o_orderkey") != F.col("o1.o_orderkey")),
-        )
-        .agg(
-            F.min("o1.o_orderkey").alias("min_big"),
-            F.min("o2.o_orderkey").alias("min_same_day"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Double exclusion: lineitems of parts never bulk-returned AND of suppliers
 # with no negative balance — TWO anti joins at different graph depths.
-@register(
+register_sql(
     "job_q25",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part, MIN(s_name) AS min_supp,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -1226,30 +642,6 @@ def job_q24(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part, supp = _t(spark, sf_dir, "lineitem", "part", "supplier")
-    returned = li.filter(
-        (F.col("l_returnflag") == "R")
-        & (F.col("l_quantity") >= 48)
-        & (F.col("l_shipdate") >= F.lit("1998-01-01"))
-    ).select(F.col("l_partkey").alias("ret_pk"))
-    clean_parts = part.filter(F.col("p_size") == 7).join(
-        returned, F.col("p_partkey") == F.col("ret_pk"), "left_anti"
-    )
-    negative = supp.filter(F.col("s_acctbal") < 0).select(
-        F.col("s_suppkey").alias("neg_sk")
-    )
-    good_supp = supp.join(negative, F.col("s_suppkey") == F.col("neg_sk"), "left_anti")
-    return (
-        li.join(clean_parts, F.col("l_partkey") == F.col("p_partkey"))
-        .join(good_supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("s_name").alias("min_supp"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1257,9 +649,9 @@ def job_q25(spark: SparkSession, sf_dir: str) -> DataFrame:
 # `it.info = x OR mi.info = y`): the predicate references part AND supplier,
 # so it cannot be pushed below the lineitem join of either — the optimizer
 # must still push the date range and reduce with the conjunctive terms.
-@register(
+register_sql(
     "job_q26",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part, MIN(s_name) AS min_supp,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -1271,20 +663,6 @@ def job_q25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q26(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part, supp = _t(spark, sf_dir, "lineitem", "part", "supplier")
-    return (
-        li.filter(_ts_range("l_shipdate", "1997-01-01", "1998-01-01"))
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter((F.col("p_type") == "PROMO") | (F.col("s_acctbal") < 0))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("s_name").alias("min_supp"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1292,9 +670,9 @@ def job_q26(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same customer within 30 days (strictly later) — the non-equi band edge
 # sits between two aliased copies of orders, and the chain continues through
 # customer -> nation afterwards.
-@register(
+register_sql(
     "job_q27",
-    oracle="""
+    """
     SELECT CAST(MIN(o1.o_orderkey) AS BIGINT) AS min_big,
            CAST(MIN(o2.o_orderkey) AS BIGINT) AS min_followup,
            MIN(n_name) AS min_nation,
@@ -1309,29 +687,6 @@ def job_q26(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q27(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, cust, nation = _t(spark, sf_dir, "orders", "customer", "nation")
-    o1 = orders.filter(F.col("o_totalprice") > 450000).alias("o1")
-    o2 = orders.alias("o2")
-    return (
-        o1.join(
-            o2,
-            (F.col("o2.o_custkey") == F.col("o1.o_custkey"))
-            & (F.col("o2.o_orderdate") > F.col("o1.o_orderdate"))
-            & (
-                F.col("o2.o_orderdate")
-                < F.col("o1.o_orderdate") + F.expr("INTERVAL 30 DAYS")
-            ),
-        )
-        .join(cust, F.col("o1.o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("o1.o_orderkey").alias("min_big"),
-            F.min("o2.o_orderkey").alias("min_followup"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1339,9 +694,9 @@ def job_q27(spark: SparkSession, sf_dir: str) -> DataFrame:
 # times): customers with at least one order in EACH of 1996/1997/1998/1999 —
 # the widest same-relation fan in the suite; CBO must reduce each yearly
 # branch before the branch-branch joins.
-@register(
+register_sql(
     "job_q28",
-    oracle="""
+    """
     SELECT CAST(MIN(o1.o_orderkey) AS BIGINT) AS min_o1,
            CAST(MIN(o2.o_orderkey) AS BIGINT) AS min_o2,
            CAST(MIN(o3.o_orderkey) AS BIGINT) AS min_o3,
@@ -1360,34 +715,15 @@ def job_q27(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job", "job-large"),
 )
-def job_q28(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = _t(spark, sf_dir, "customer", "orders")
-    years = [
-        ("o1", "1996-01-01", "1997-01-01"),
-        ("o2", "1997-01-01", "1998-01-01"),
-        ("o3", "1998-01-01", "1999-01-01"),
-        ("o4", "1999-01-01", "2000-01-01"),
-    ]
-    out = cust.filter(F.col("c_mktsegment") == "BUILDING")
-    for alias, lo, hi in years:
-        branch = orders.filter(_ts_range("o_orderdate", lo, hi)).alias(alias)
-        out = out.join(branch, F.col(f"{alias}.o_custkey") == F.col("c_custkey"))
-    return out.agg(
-        F.min("o1.o_orderkey").alias("min_o1"),
-        F.min("o2.o_orderkey").alias("min_o2"),
-        F.min("o3.o_orderkey").alias("min_o3"),
-        F.min("o4.o_orderkey").alias("min_o4"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
 
 
 # --------------------------------------------------------------------------
 # Dimension SELF-JOIN feeding the fact graph: ordered nation PAIRS within
 # one region (n1.key < n2.key canonicalizes), then cross-nation trade —
 # a customer in n1 buying from a supplier in n2 — through orders+lineitem.
-@register(
+register_sql(
     "job_q29",
-    oracle="""
+    """
     SELECT MIN(n1.n_name) AS min_cust_nation,
            MIN(n2.n_name) AS min_supp_nation,
            CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
@@ -1405,45 +741,6 @@ def job_q28(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q29(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation, region, cust, orders, li, supp = _t(
-        spark, sf_dir, "nation", "region", "customer", "orders", "lineitem", "supplier"
-    )
-    n1, n2 = nation.alias("n1"), nation.alias("n2")
-    pairs = (
-        n1.join(
-            n2,
-            (F.col("n1.n_regionkey") == F.col("n2.n_regionkey"))
-            & (F.col("n1.n_nationkey") < F.col("n2.n_nationkey")),
-        )
-        .join(
-            region.filter(F.col("r_name") == "ASIA"),
-            F.col("n1.n_regionkey") == F.col("r_regionkey"),
-        )
-        .select(
-            F.col("n1.n_nationkey").alias("cust_nk"),
-            F.col("n1.n_name").alias("cust_nation"),
-            F.col("n2.n_nationkey").alias("supp_nk"),
-            F.col("n2.n_name").alias("supp_nation"),
-        )
-    )
-    return (
-        li.filter(_ts_range("l_shipdate", "1997-01-01", "1998-01-01"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(
-            pairs,
-            (F.col("c_nationkey") == F.col("cust_nk"))
-            & (F.col("s_nationkey") == F.col("supp_nk")),
-        )
-        .agg(
-            F.min("cust_nation").alias("min_cust_nation"),
-            F.min("supp_nation").alias("min_supp_nation"),
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1451,9 +748,9 @@ def job_q29(spark: SparkSession, sf_dir: str) -> DataFrame:
 # urgent 1997 orders unioned with very large 1998 orders (disjoint by year)
 # — joined on through customer -> nation -> region. The optimizer must push
 # the customer join below the union or broadcast the reduced dim chain.
-@register(
+register_sql(
     "job_q30",
-    oracle="""
+    """
     SELECT CAST(MIN(o_orderkey) AS BIGINT) AS min_orderkey,
            MIN(n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -1473,35 +770,6 @@ def job_q29(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q30(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, cust, nation, region = _t(
-        spark, sf_dir, "orders", "customer", "nation", "region"
-    )
-    urgent = orders.filter(
-        (F.col("o_orderpriority") == "1-URGENT")
-        & _ts_range("o_orderdate", "1997-01-01", "1998-01-01")
-    ).select("o_orderkey", "o_custkey")
-    large = orders.filter(
-        (F.col("o_totalprice") > 400000)
-        & _ts_range("o_orderdate", "1998-01-01", "1999-01-01")
-    ).select("o_orderkey", "o_custkey")
-    dims = (
-        cust.join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(
-            F.broadcast(region.filter(F.col("r_name") == "EUROPE")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .select("c_custkey", "n_name")
-    )
-    return (
-        urgent.unionAll(large)
-        .join(dims, F.col("o_custkey") == F.col("c_custkey"))
-        .agg(
-            F.min("o_orderkey").alias("min_orderkey"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1509,9 +777,9 @@ def job_q30(spark: SparkSession, sf_dir: str) -> DataFrame:
 # relation is itself a 2-way join, not a base-table aggregate): per-customer
 # 1997 lineitem count from orders JOIN lineitem, thresholded, then joined on
 # through customer -> nation.
-@register(
+register_sql(
     "job_q31",
-    oracle="""
+    """
     SELECT CAST(MIN(a.o_custkey) AS BIGINT) AS min_custkey,
            MIN(n_name) AS min_nation,
            CAST(MAX(a.li_cnt) AS BIGINT) AS max_li_cnt,
@@ -1528,27 +796,6 @@ def job_q30(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q31(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, li, cust, nation = _t(
-        spark, sf_dir, "orders", "lineitem", "customer", "nation"
-    )
-    per_cust = (
-        orders.filter(_ts_range("o_orderdate", "1997-01-01", "1998-01-01"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("li_cnt"))
-        .filter(F.col("li_cnt") >= 5)
-    )
-    return (
-        per_cust.join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("o_custkey").alias("min_custkey"),
-            F.min("n_name").alias("min_nation"),
-            F.max("li_cnt").alias("max_li_cnt"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1556,9 +803,9 @@ def job_q31(spark: SparkSession, sf_dir: str) -> DataFrame:
 # than 50x their own account balance — the anti edge carries an equi key
 # (custkey) PLUS an inequality between columns of BOTH relations, then the
 # chain continues to nation.
-@register(
+register_sql(
     "job_q32",
-    oracle="""
+    """
     SELECT CAST(MIN(c_custkey) AS BIGINT) AS min_custkey,
            MIN(n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -1572,32 +819,15 @@ def job_q31(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q32(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders, nation = _t(spark, sf_dir, "customer", "orders", "nation")
-    return (
-        cust.filter(F.col("c_mktsegment") == "MACHINERY")
-        .join(
-            orders,
-            (F.col("o_custkey") == F.col("c_custkey"))
-            & (F.col("o_totalprice") > 50 * F.col("c_acctbal")),
-            "left_anti",
-        )
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("c_custkey").alias("min_custkey"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # TWO-COLUMN tuple semi-join: lineitems whose (partkey, suppkey) PAIR also
 # appears among 1998 'R' returns — the semi key is composite, so a
 # single-column reduction is wrong; chain continues through part.
-@register(
+register_sql(
     "job_q33",
-    oracle="""
+    """
     SELECT CAST(MIN(l.l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -1613,32 +843,6 @@ def job_q32(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q33(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part = _t(spark, sf_dir, "lineitem", "part")
-    returned_pairs = (
-        li.filter(
-            (F.col("l_returnflag") == "R")
-            & (F.col("l_shipdate") >= F.lit("1998-01-01"))
-        )
-        .select(
-            F.col("l_partkey").alias("rp_pk"), F.col("l_suppkey").alias("rp_sk")
-        )
-    )
-    return (
-        li.filter(F.col("l_shipdate") < F.lit("1996-01-01"))
-        .join(
-            returned_pairs,
-            (F.col("l_partkey") == F.col("rp_pk"))
-            & (F.col("l_suppkey") == F.col("rp_sk")),
-            "left_semi",
-        )
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1646,9 +850,9 @@ def job_q33(spark: SparkSession, sf_dir: str) -> DataFrame:
 # supplier with a SINGLE shared region node (q14's cycle closes through
 # nation; here the loop is one level higher — both nation aliases must land
 # in the same region row), fact edge lineitem closing the other side.
-@register(
+register_sql(
     "job_q34",
-    oracle="""
+    """
     SELECT MIN(n1.n_name) AS min_cust_nation,
            MIN(n2.n_name) AS min_supp_nation,
            CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
@@ -1665,32 +869,6 @@ def job_q33(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q34(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, supp, region = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "supplier", "region"
-    )
-    n1, n2 = nation.alias("n1"), nation.alias("n2")
-    return (
-        li.join(
-            orders.filter(_ts_range("o_orderdate", "1996-01-01", "1997-01-01")),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("c_nationkey") == F.col("n1.n_nationkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("n2.n_nationkey"))
-        .join(
-            F.broadcast(region.filter(F.col("r_name") == "AMERICA")),
-            (F.col("n1.n_regionkey") == F.col("r_regionkey"))
-            & (F.col("n2.n_regionkey") == F.col("r_regionkey")),
-        )
-        .agg(
-            F.min("n1.n_name").alias("min_cust_nation"),
-            F.min("n2.n_name").alias("min_supp_nation"),
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1699,9 +877,9 @@ def job_q34(spark: SparkSession, sf_dir: str) -> DataFrame:
 # semi join against events (customers with any purchase event) and an
 # anti join against bulk-returned parts — equi, semi, and anti edges in one
 # graph, the widest mixed shape in the suite.
-@register(
+register_sql(
     "job_q35",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(n1.n_name) AS min_cust_nation,
            MIN(n2.n_name) AS min_supp_nation,
@@ -1730,51 +908,6 @@ def job_q34(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job", "job-large"),
 )
-def job_q35(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, supp, region, part, events = _t(
-        spark,
-        sf_dir,
-        "lineitem",
-        "orders",
-        "customer",
-        "nation",
-        "supplier",
-        "region",
-        "part",
-        "events",
-    )
-    n1 = nation.alias("n1")
-    n2 = nation.alias("n2")
-    r1 = region.filter(F.col("r_name") == "ASIA").alias("r1")
-    r2 = region.filter(F.col("r_name") != "AFRICA").alias("r2")
-    purchasers = events.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("ev_uid")
-    )
-    returned = li.filter(
-        (F.col("l_returnflag") == "R") & (F.col("l_quantity") >= 45)
-    ).select(F.col("l_partkey").alias("ret_pk"))
-    clean_parts = part.join(returned, F.col("p_partkey") == F.col("ret_pk"), "left_anti")
-    return (
-        li.join(
-            orders.filter(_ts_range("o_orderdate", "1997-01-01", "1998-01-01")),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(purchasers, F.col("c_custkey") == F.col("ev_uid"), "left_semi")
-        .join(F.broadcast(n1), F.col("c_nationkey") == F.col("n1.n_nationkey"))
-        .join(F.broadcast(r1), F.col("n1.n_regionkey") == F.col("r1.r_regionkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("n2.n_nationkey"))
-        .join(F.broadcast(r2), F.col("n2.n_regionkey") == F.col("r2.r_regionkey"))
-        .join(clean_parts, F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("n1.n_name").alias("min_cust_nation"),
-            F.min("n2.n_name").alias("min_supp_nation"),
-            F.min("p_name").alias("min_part"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1782,9 +915,9 @@ def job_q35(spark: SparkSession, sf_dir: str) -> DataFrame:
 # negative-balance supplier count per nation — some nations have no such
 # supplier, so the outer side is genuinely unmatched (the channel-overlap
 # shape inside a join graph).
-@register(
+register_sql(
     "job_q36",
-    oracle="""
+    """
     SELECT COALESCE(cn.nk, sn.nk) AS nationkey,
            cn.cust_cnt AS cust_cnt,
            sn.supp_cnt AS supp_cnt
@@ -1800,34 +933,15 @@ def job_q35(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q36(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, supp = _t(spark, sf_dir, "customer", "supplier")
-    cn = cust.groupBy(F.col("c_nationkey").alias("cnk")).agg(
-        F.count(F.lit(1)).alias("cust_cnt")
-    )
-    sn = (
-        supp.filter(F.col("s_acctbal") < 0)
-        .groupBy(F.col("s_nationkey").alias("snk"))
-        .agg(F.count(F.lit(1)).alias("supp_cnt"))
-    )
-    return (
-        cn.join(sn, F.col("cnk") == F.col("snk"), "full_outer")
-        .select(
-            F.coalesce(F.col("cnk"), F.col("snk")).alias("nationkey"),
-            "cust_cnt",
-            "supp_cnt",
-        )
-        .orderBy("nationkey")
-    )
 
 
 # --------------------------------------------------------------------------
 # Uncorrelated SCALAR SUBQUERY inside the join condition: the join's band
 # bound is itself a query (the corpus-wide average quantity) — the optimizer
 # must evaluate the scalar once and broadcast it, not per-row.
-@register(
+register_sql(
     "job_q37",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            CAST(COUNT(*) AS BIGINT) AS cnt
     FROM lineitem
@@ -1837,29 +951,14 @@ def job_q36(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q37(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders = _t(spark, sf_dir, "lineitem", "orders")
-    avg_q = li.agg(F.avg("l_quantity").alias("avg_q"))
-    return (
-        li.join(F.broadcast(avg_q))
-        .filter(F.col("l_quantity") > F.col("avg_q"))
-        .join(
-            orders.filter(F.col("o_orderpriority") == "1-URGENT"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # FIVE aliased copies of one relation — customers ordering in every year
 # 1995-1999, the widest same-relation fan in the suite (extends q28's four).
-@register(
+register_sql(
     "job_q38",
-    oracle="""
+    """
     SELECT CAST(MIN(o1.o_orderkey) AS BIGINT) AS min_o1,
            CAST(MIN(o5.o_orderkey) AS BIGINT) AS min_o5,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -1878,28 +977,15 @@ def job_q37(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job", "job-large"),
 )
-def job_q38(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = _t(spark, sf_dir, "customer", "orders")
-    out = cust.filter(F.col("c_mktsegment") == "AUTOMOBILE")
-    for i, year in enumerate(range(1995, 2000), start=1):
-        branch = orders.filter(
-            _ts_range("o_orderdate", f"{year}-01-01", f"{year + 1}-01-01")
-        ).alias(f"o{i}")
-        out = out.join(branch, F.col(f"o{i}.o_custkey") == F.col("c_custkey"))
-    return out.agg(
-        F.min("o1.o_orderkey").alias("min_o1"),
-        F.min("o5.o_orderkey").alias("min_o5"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
 
 
 # --------------------------------------------------------------------------
 # Anti join against a UNION-assembled exclusion set: parts excluded either
 # for price (dimension predicate) or for bulk returns (fact-derived) — the
 # excluded set is built from two different relations before the anti edge.
-@register(
+register_sql(
     "job_q39",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(s_name) AS min_supp,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -1915,34 +1001,15 @@ def job_q38(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q39(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, supp, part = _t(spark, sf_dir, "lineitem", "supplier", "part")
-    pricey = part.filter(F.col("p_retailprice") > 1900).select(
-        F.col("p_partkey").alias("ex_pk")
-    )
-    returned = li.filter(
-        (F.col("l_returnflag") == "R") & (F.col("l_quantity") >= 49)
-    ).select(F.col("l_partkey").alias("ex_pk"))
-    excluded = pricey.union(returned).distinct()
-    return (
-        li.filter(F.col("l_shipdate") >= F.lit("1998-01-01"))
-        .join(excluded, F.col("l_partkey") == F.col("ex_pk"), "left_anti")
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("s_name").alias("min_supp"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Group-vs-parent-group comparison: customers whose 1997 order count beats
 # their NATION's per-customer average — an aggregate compared against the
 # aggregate of its enclosing group, two grouping levels joined back.
-@register(
+register_sql(
     "job_q40",
-    oracle="""
+    """
     WITH per_cust AS (
       SELECT c_custkey, c_nationkey, CAST(COUNT(*) AS BIGINT) AS cnt
       FROM customer
@@ -1962,29 +1029,6 @@ def job_q39(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q40(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders, nation = _t(spark, sf_dir, "customer", "orders", "nation")
-    per_cust = (
-        cust.join(
-            orders.filter(_ts_range("o_orderdate", "1997-01-01", "1998-01-01")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .groupBy("c_custkey", "c_nationkey")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    per_nation = per_cust.groupBy(F.col("c_nationkey").alias("nk")).agg(
-        F.avg("cnt").alias("avg_cnt")
-    )
-    return (
-        per_cust.join(per_nation, F.col("c_nationkey") == F.col("nk"))
-        .filter(F.col("cnt") > F.col("avg_cnt"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("c_custkey").alias("min_custkey"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1997,9 +1041,9 @@ def job_q40(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-user explosion a bare user_id equi-join would produce. With CBO stats
 # this graph is the 16-leaf DP-reorder proof
 # (test_plan_quality.py::test_cbo_reorders_sixteen_way_graph).
-@register(
+register_sql(
     "job_q41",
-    oracle="""
+    """
     SELECT CAST(MIN(l.l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(cn.n_name) AS min_cust_nation,
            MIN(p.p_name) AS min_part,
@@ -2033,59 +1077,6 @@ def job_q40(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job", "job-large"),
 )
-def job_q41(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, supp, region, part, events = _t(
-        spark, sf_dir,
-        "lineitem", "orders", "customer", "nation", "supplier", "region", "part",
-        "events",
-    )
-    cn = nation.alias("cn")
-    sn = nation.alias("sn")
-    cr = region.filter(F.col("r_name") == "AMERICA").alias("cr")
-    sr = region.filter(F.col("r_name") == "EUROPE").alias("sr")
-    p = part.filter(F.col("p_type") == "PROMO").alias("p")
-    p2 = part.filter(F.col("p_type") == "ECONOMY").alias("p2")
-    e = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("e_uid"), F.to_date("ts").alias("e_day"))
-    )
-    e2 = (
-        events.filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("e2_uid"), F.to_date("ts").alias("e2_day"))
-    )
-    e3 = (
-        events.filter(F.col("event_type") == "signup")
-        .select(F.col("user_id").alias("e3_uid"), F.to_date("ts").alias("e3_day"))
-    )
-    o2 = orders.filter(F.col("o_orderpriority") == "1-URGENT").alias("o2")
-    l2 = li.filter(F.col("l_returnflag") == "R").alias("l2")
-    s2 = supp.alias("s2")
-    return (
-        li.filter(_ts_range("l_shipdate", "1996-03-01", "1996-04-01"))
-        .alias("l")
-        .join(orders.alias("o"), F.col("l.l_orderkey") == F.col("o.o_orderkey"))
-        .join(cust.alias("c"), F.col("o.o_custkey") == F.col("c.c_custkey"))
-        .join(F.broadcast(cn), F.col("c.c_nationkey") == F.col("cn.n_nationkey"))
-        .join(F.broadcast(cr), F.col("cn.n_regionkey") == F.col("cr.r_regionkey"))
-        .join(supp.alias("s"), F.col("l.l_suppkey") == F.col("s.s_suppkey"))
-        .join(F.broadcast(sn), F.col("s.s_nationkey") == F.col("sn.n_nationkey"))
-        .join(F.broadcast(sr), F.col("sn.n_regionkey") == F.col("sr.r_regionkey"))
-        .join(p, F.col("l.l_partkey") == F.col("p.p_partkey"))
-        .join(e, F.col("e_uid") == F.col("c.c_custkey"))
-        .join(e2, (F.col("e2_uid") == F.col("e_uid")) & (F.col("e2_day") == F.col("e_day")))
-        .join(e3, (F.col("e3_uid") == F.col("e_uid")) & (F.col("e3_day") == F.col("e_day")))
-        .join(o2, F.col("o2.o_custkey") == F.col("c.c_custkey"))
-        .join(l2, F.col("l2.l_orderkey") == F.col("o2.o_orderkey"))
-        .join(p2, F.col("l2.l_partkey") == F.col("p2.p_partkey"))
-        .join(s2, F.col("l2.l_suppkey") == F.col("s2.s_suppkey"))
-        .agg(
-            F.min("l.l_orderkey").alias("min_orderkey"),
-            F.min("cn.n_name").alias("min_cust_nation"),
-            F.min("p.p_name").alias("min_part"),
-            F.min("p2.p_name").alias("min_part2"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2097,9 +1088,9 @@ def job_q41(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same fan-out bounds hold: key-unique dimension joins, URGENT-only second
 # chain, per-(user, day) event legs. With CBO stats this is the 18-leaf
 # DP-reorder proof (test_cbo_reorders_eighteen_way_graph).
-@register(
+register_sql(
     "job_q42",
-    oracle="""
+    """
     SELECT CAST(MIN(l.l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(cn.n_name) AS min_cust_nation,
            MIN(sn2.n_name) AS min_supp2_nation,
@@ -2136,64 +1127,6 @@ def job_q41(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job", "job-large"),
 )
-def job_q42(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, supp, region, part, events = _t(
-        spark, sf_dir,
-        "lineitem", "orders", "customer", "nation", "supplier", "region", "part",
-        "events",
-    )
-    cn = nation.alias("cn")
-    sn = nation.alias("sn")
-    sn2 = nation.alias("sn2")
-    cr = region.filter(F.col("r_name") == "AMERICA").alias("cr")
-    sr = region.filter(F.col("r_name") == "EUROPE").alias("sr")
-    sr2 = region.filter(F.col("r_name") == "ASIA").alias("sr2")
-    p = part.filter(F.col("p_type") == "PROMO").alias("p")
-    p2 = part.filter(F.col("p_type") == "ECONOMY").alias("p2")
-    e = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("e_uid"), F.to_date("ts").alias("e_day"))
-    )
-    e2 = (
-        events.filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("e2_uid"), F.to_date("ts").alias("e2_day"))
-    )
-    e3 = (
-        events.filter(F.col("event_type") == "signup")
-        .select(F.col("user_id").alias("e3_uid"), F.to_date("ts").alias("e3_day"))
-    )
-    o2 = orders.filter(F.col("o_orderpriority") == "1-URGENT").alias("o2")
-    l2 = li.filter(F.col("l_returnflag") == "R").alias("l2")
-    s2 = supp.alias("s2")
-    return (
-        li.filter(_ts_range("l_shipdate", "1996-03-01", "1996-04-01"))
-        .alias("l")
-        .join(orders.alias("o"), F.col("l.l_orderkey") == F.col("o.o_orderkey"))
-        .join(cust.alias("c"), F.col("o.o_custkey") == F.col("c.c_custkey"))
-        .join(F.broadcast(cn), F.col("c.c_nationkey") == F.col("cn.n_nationkey"))
-        .join(F.broadcast(cr), F.col("cn.n_regionkey") == F.col("cr.r_regionkey"))
-        .join(supp.alias("s"), F.col("l.l_suppkey") == F.col("s.s_suppkey"))
-        .join(F.broadcast(sn), F.col("s.s_nationkey") == F.col("sn.n_nationkey"))
-        .join(F.broadcast(sr), F.col("sn.n_regionkey") == F.col("sr.r_regionkey"))
-        .join(p, F.col("l.l_partkey") == F.col("p.p_partkey"))
-        .join(e, F.col("e_uid") == F.col("c.c_custkey"))
-        .join(e2, (F.col("e2_uid") == F.col("e_uid")) & (F.col("e2_day") == F.col("e_day")))
-        .join(e3, (F.col("e3_uid") == F.col("e_uid")) & (F.col("e3_day") == F.col("e_day")))
-        .join(o2, F.col("o2.o_custkey") == F.col("c.c_custkey"))
-        .join(l2, F.col("l2.l_orderkey") == F.col("o2.o_orderkey"))
-        .join(p2, F.col("l2.l_partkey") == F.col("p2.p_partkey"))
-        .join(s2, F.col("l2.l_suppkey") == F.col("s2.s_suppkey"))
-        .join(F.broadcast(sn2), F.col("s2.s_nationkey") == F.col("sn2.n_nationkey"))
-        .join(F.broadcast(sr2), F.col("sn2.n_regionkey") == F.col("sr2.r_regionkey"))
-        .agg(
-            F.min("l.l_orderkey").alias("min_orderkey"),
-            F.min("cn.n_name").alias("min_cust_nation"),
-            F.min("sn2.n_name").alias("min_supp2_nation"),
-            F.min("p.p_name").alias("min_part"),
-            F.min("p2.p_name").alias("min_part2"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2203,9 +1136,9 @@ def job_q42(spark: SparkSession, sf_dir: str) -> DataFrame:
 # joins, so the reorderer must respect the barrier while still hoisting
 # the selective region filter below it — null-extended customers (no 1997
 # orders) must survive to the aggregate.
-@register(
+register_sql(
     "job_q43",
-    oracle="""
+    """
     SELECT n_name,
            CAST(COUNT(*) AS BIGINT) AS n_customers,
            CAST(COUNT(o_orderkey) AS BIGINT) AS n_with_orders,
@@ -2226,33 +1159,6 @@ def job_q42(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q43(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, nation, region, orders = _t(
-        spark, sf_dir, "customer", "nation", "region", "orders"
-    )
-    big = (
-        orders.filter(
-            _ts_range("o_orderdate", "1997-01-01", "1998-01-01")
-            & (F.col("o_totalprice") > 150000)
-        )
-        .groupBy("o_custkey")
-        .agg(F.min("o_orderkey").alias("o_orderkey"))
-    )
-    return (
-        cust.filter(F.col("c_mktsegment") == "MACHINERY")
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(
-            F.broadcast(region.filter(F.col("r_name") == "ASIA")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .join(big, F.col("o_custkey") == F.col("c_custkey"), "left")
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.count("o_orderkey").alias("n_with_orders"),
-            F.min("c_custkey").alias("min_custkey"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2261,9 +1167,9 @@ def job_q43(spark: SparkSession, sf_dir: str) -> DataFrame:
 # both branches, then join small x small) — a left-deep-only planner pays
 # a fact x fact join before either aggregate. Branch A: 1996 order volume
 # per part; branch B: 1997 average shipped quantity per part.
-@register(
+register_sql(
     "job_q44",
-    oracle="""
+    """
     WITH a AS (
       SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS orders_1996
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -2289,32 +1195,6 @@ def job_q43(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q44(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
-    a = (
-        li.join(
-            orders.filter(_ts_range("o_orderdate", "1996-01-01", "1997-01-01")),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .groupBy("l_partkey")
-        .agg(F.count(F.lit(1)).alias("orders_1996"))
-    )
-    b = (
-        li.filter(_ts_range("l_shipdate", "1997-01-01", "1998-01-01"))
-        .groupBy(F.col("l_partkey").alias("b_partkey"))
-        .agg(F.sum(F.col("l_quantity").cast("long")).alias("qty_1997"))
-    )
-    return (
-        part.filter(F.col("p_size") < 25)
-        .join(a, F.col("p_partkey") == F.col("l_partkey"))
-        .join(b, F.col("p_partkey") == F.col("b_partkey"))
-        .groupBy("p_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_parts"),
-            F.sum("orders_1996").alias("sum_orders_1996"),
-            F.sum("qty_1997").alias("sum_qty_1997"),
-        )
-    )
 
 
 # ===========================================================================
@@ -2332,9 +1212,9 @@ def job_q44(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LIKE-chain family, a-variant (JOB 8a/9a): five LIKE / NOT LIKE predicates
 # spread over four relations in a 6-way graph — prefix (pushable as
 # StringStartsWith), suffix, and negated containment all present.
-@register(
+register_sql(
     "job_q45",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(s_name) AS min_supp,
@@ -2353,38 +1233,15 @@ def job_q44(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q45(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, part, supp, nation = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "part", "supplier", "nation"
-    )
-    return (
-        li.filter(_ts_range("l_shipdate", "1997-01-01", "1998-01-01"))
-        .join(orders.filter(F.col("o_orderpriority").like("1%")),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(F.col("c_name").like("Customer#0000000%")),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(part.filter(F.col("p_name").like("red %")
-                          & ~F.col("p_name").like("%bolt")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp.filter(F.col("s_name").like("%1")),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("s_name").alias("min_supp"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # LIKE-chain family, b-variant: SAME 6-way graph, selectivities shifted to
 # the other relations (suffix LIKE on part, prefix on nation, suffix on
 # priority) — JOB's variant discipline, where the optimal order flips.
-@register(
+register_sql(
     "job_q46",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(n_name) AS min_nation,
@@ -2403,29 +1260,6 @@ def job_q45(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q46(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, part, supp, nation = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "part", "supplier", "nation"
-    )
-    return (
-        li.filter(_ts_range("l_shipdate", "1996-01-01", "1997-01-01"))
-        .join(orders.filter(F.col("o_orderpriority").like("%HIGH")),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(part.filter(F.col("p_name").like("%gear")
-                          & ~F.col("p_name").like("small%")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp.filter(F.col("s_name").like("%0")),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation.filter(F.col("n_name").like("NATION_1%"))),
-              F.col("s_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2433,9 +1267,9 @@ def job_q46(spark: SparkSession, sf_dir: str) -> DataFrame:
 # `t.title LIKE x OR t.title LIKE y`) plus an underscore-wildcard pattern —
 # the single-char wildcard exercises the matcher's non-prefix path
 # (like_matcher.cpp handles %/_ distinctly).
-@register(
+register_sql(
     "job_q47",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(c_name) AS min_cust,
@@ -2452,28 +1286,6 @@ def job_q46(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q47(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, part = _t(spark, sf_dir, "lineitem", "orders", "customer", "part")
-    return (
-        li.join(orders.filter(F.col("o_orderstatus") != "P"),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(F.col("c_name").like("%5")),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            part.filter(
-                (F.col("p_name").like("blue%") | F.col("p_name").like("hot%"))
-                & ~F.col("p_name").like("%gizmo")
-                & F.col("p_name").like("%____")
-            ),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("c_name").alias("min_cust"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2482,9 +1294,9 @@ def job_q47(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LIKE / NOT LIKE, <>, and a duplicated nation->region dimension chain.
 # The point is selectivity-estimation stress: the product of 27 estimates
 # must still order the joins sanely.
-@register(
+register_sql(
     "job_q48",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(cn.n_name) AS min_cust_nation,
@@ -2526,82 +1338,6 @@ def job_q47(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q48(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, supp, part = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region",
-        "supplier", "part"
-    )
-    cn = nation.filter(~F.col("n_name").like("%_2")).select(
-        F.col("n_nationkey").alias("cn_key"),
-        F.col("n_name").alias("cn_name"),
-        F.col("n_regionkey").alias("cn_reg"),
-    )
-    sn = nation.filter(F.col("n_name").like("NATION_%")).select(
-        F.col("n_nationkey").alias("sn_key"),
-        F.col("n_name").alias("sn_name"),
-        F.col("n_regionkey").alias("sn_reg"),
-    )
-    cr = region.filter(F.col("r_name").isin("ASIA", "EUROPE", "AFRICA")).select(
-        F.col("r_regionkey").alias("cr_key")
-    )
-    sr = region.filter(F.col("r_name") != "MIDDLE EAST").select(
-        F.col("r_regionkey").alias("sr_key")
-    )
-    return (
-        li.filter(
-            F.col("l_quantity").between(5, 45)
-            & (F.col("l_extendedprice") > 1000)
-            & F.col("l_discount").between(0.01, 0.08)
-            & F.col("l_returnflag").isin("N", "A")
-            & (F.col("l_linestatus") == "O")
-            & (F.col("l_tax") < 0.07)
-            & _ts_range("l_shipdate", "1996-01-01", "1999-01-01")
-        )
-        .join(
-            orders.filter(
-                F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-                & F.col("o_totalprice").between(20000, 400000)
-                & (F.col("o_orderstatus") != "P")
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            cust.filter(
-                (F.col("c_acctbal") > 0)
-                & F.col("c_mktsegment").isin("BUILDING", "AUTOMOBILE", "MACHINERY")
-                & ~F.col("c_name").like("%99")
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(cr), F.col("cn_reg") == F.col("cr_key"))
-        .join(
-            supp.filter(
-                F.col("s_acctbal").between(-500, 9000)
-                & F.col("s_name").like("Supplier#%")
-            ),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(sr), F.col("sn_reg") == F.col("sr_key"))
-        .join(
-            part.filter(
-                F.col("p_size").between(1, 40)
-                & F.col("p_type").isin("PROMO", "ECONOMY", "STANDARD")
-                & (F.col("p_retailprice") < 990)
-                & ~F.col("p_name").like("%gizmo")
-                & (F.col("p_brand") != "Brand#13")
-            ),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("cn_name").alias("min_cust_nation"),
-            F.min("sn_name").alias("min_supp_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2609,9 +1345,9 @@ def job_q48(spark: SparkSession, sf_dir: str) -> DataFrame:
 # predicate set re-weighted — an OR-group spanning two ORDER attributes,
 # IS NOT NULL terms, NOT IN, and bands moved to different columns. The
 # estimation product shifts enough that a different join order wins.
-@register(
+register_sql(
     "job_q49",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(cn.n_name) AS min_cust_nation,
@@ -2651,87 +1387,15 @@ def job_q48(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q49(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, supp, part = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region",
-        "supplier", "part"
-    )
-    cn = nation.filter(F.col("n_name").like("NATION%")).select(
-        F.col("n_nationkey").alias("cn_key"),
-        F.col("n_name").alias("cn_name"),
-        F.col("n_regionkey").alias("cn_reg"),
-    )
-    sn = nation.filter(~F.col("n_name").like("%_0")).select(
-        F.col("n_nationkey").alias("sn_key"),
-        F.col("n_regionkey").alias("sn_reg"),
-    )
-    cr = region.filter(F.col("r_name") != "AFRICA").select(
-        F.col("r_regionkey").alias("cr_key")
-    )
-    sr = region.filter(F.col("r_name").isin("ASIA", "AMERICA", "EUROPE")).select(
-        F.col("r_regionkey").alias("sr_key")
-    )
-    return (
-        li.filter(
-            F.col("l_quantity").between(10, 30)
-            & F.col("l_extendedprice").between(5000, 45000)
-            & (F.col("l_discount") <= 0.05)
-            & (F.col("l_returnflag") != "R")
-            & _ts_range("l_shipdate", "1997-01-01", "2000-01-01")
-        )
-        .join(
-            orders.filter(
-                ((F.col("o_orderpriority") == "5-LOW") | (F.col("o_totalprice") > 350000))
-                & F.col("o_orderstatus").isin("O", "F")
-                & (F.col("o_orderdate") >= F.lit("1996-06-01"))
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            cust.filter(
-                F.col("c_acctbal").between(-500, 8000)
-                & (F.col("c_mktsegment") != "FURNITURE")
-                & F.col("c_name").like("Customer#%")
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(cr), F.col("cn_reg") == F.col("cr_key"))
-        .join(
-            supp.filter(
-                F.col("s_acctbal").isNotNull() & ~F.col("s_name").like("%999")
-            ),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(sr), F.col("sn_reg") == F.col("sr_key"))
-        .join(
-            part.filter(
-                (F.col("p_size") >= 5)
-                & ~F.col("p_type").isin("LARGE", "MEDIUM")
-                & F.col("p_retailprice").between(910, 995)
-                & F.col("p_name").like("% %")
-                & F.col("p_brand").isNotNull()
-            ),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("cn_name").alias("min_cust_nation"),
-            F.round(F.min("o_totalprice"), R2).alias("min_price"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Predicate-monster family, c-variant (29c): widened to a TENTH relation
 # (the events behavioral leg, user-keyed) plus a dimension-vs-dimension
 # inequality (cn.n_name <> sn.n_name) the estimator cannot factorize.
-@register(
+register_sql(
     "job_q50",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(event_type) AS min_event,
@@ -2768,77 +1432,6 @@ def job_q49(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q50(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, supp, part, events = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region",
-        "supplier", "part", "events"
-    )
-    cn = nation.select(
-        F.col("n_nationkey").alias("cn_key"),
-        F.col("n_name").alias("cn_name"),
-        F.col("n_regionkey").alias("cn_reg"),
-    )
-    sn = nation.filter(~F.col("n_name").like("%_3")).select(
-        F.col("n_nationkey").alias("sn_key"),
-        F.col("n_name").alias("sn_name"),
-        F.col("n_regionkey").alias("sn_reg"),
-    )
-    cr = region.filter(F.col("r_name").isin("ASIA", "EUROPE")).select(
-        F.col("r_regionkey").alias("cr_key")
-    )
-    sr = region.filter(F.col("r_name") != "AFRICA").select(
-        F.col("r_regionkey").alias("sr_key")
-    )
-    purchases = events.filter(
-        (F.col("event_type") == "purchase") & (F.col("value") > 300)
-    )
-    return (
-        li.filter(
-            (F.col("l_quantity") <= 40)
-            & (F.col("l_extendedprice") > 2000)
-            & F.col("l_returnflag").isin("N", "R")
-            & (F.col("l_shipdate") >= F.lit("1995-06-01"))
-        )
-        .join(
-            orders.filter(
-                (F.col("o_totalprice") > 10000)
-                & ~F.col("o_orderpriority").isin("4-NOT SPECIFIED")
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            cust.filter(
-                (F.col("c_acctbal") != 0)
-                & F.col("c_mktsegment").isin(
-                    "BUILDING", "HOUSEHOLD", "MACHINERY", "AUTOMOBILE", "FURNITURE")
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(cr), F.col("cn_reg") == F.col("cr_key"))
-        .join(supp.filter(F.col("s_acctbal") > -900),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(sn),
-              (F.col("s_nationkey") == F.col("sn_key"))
-              & (F.col("cn_name") != F.col("sn_name")))
-        .join(F.broadcast(sr), F.col("sn_reg") == F.col("sr_key"))
-        .join(
-            part.filter(
-                (F.col("p_size") < 48)
-                & (F.col("p_retailprice") > 905)
-                & ~F.col("p_name").like("cold%")
-                & F.col("p_brand").like("Brand#%")
-            ),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .join(purchases, F.col("c_custkey") == F.col("user_id"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("event_type").alias("min_event"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2847,9 +1440,9 @@ def job_q50(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lineitem x2, supplier x2, nation x2, region x2 — meeting at part. A part
 # shipped from ASIA and from EUROPE in the same year; 9 leaves where 8 are
 # aliased duplicates.
-@register(
+register_sql(
     "job_q51",
-    oracle="""
+    """
     SELECT CAST(MIN(p_partkey) AS BIGINT) AS min_part,
            MIN(s1.s_name) AS min_asia_supp,
            MIN(s2.s_name) AS min_europe_supp,
@@ -2870,39 +1463,6 @@ def job_q50(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q51(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part, li, supp, nation, region = _t(
-        spark, sf_dir, "part", "lineitem", "supplier", "nation", "region"
-    )
-
-    def leg(tag: str, rname: str):
-        l = li.filter(_ts_range("l_shipdate", "1997-01-01", "1998-01-01")).select(
-            F.col("l_partkey").alias(f"{tag}_pk"), F.col("l_suppkey").alias(f"{tag}_sk")
-        )
-        s = supp.select(F.col("s_suppkey").alias(f"{tag}_skey"),
-                        F.col("s_name").alias(f"{tag}_sname"),
-                        F.col("s_nationkey").alias(f"{tag}_snat"))
-        n = nation.select(F.col("n_nationkey").alias(f"{tag}_nkey"),
-                          F.col("n_regionkey").alias(f"{tag}_nreg"))
-        r = region.filter(F.col("r_name") == rname).select(
-            F.col("r_regionkey").alias(f"{tag}_rkey"))
-        return (
-            l.join(s, F.col(f"{tag}_sk") == F.col(f"{tag}_skey"))
-            .join(F.broadcast(n), F.col(f"{tag}_snat") == F.col(f"{tag}_nkey"))
-            .join(F.broadcast(r), F.col(f"{tag}_nreg") == F.col(f"{tag}_rkey"))
-        )
-
-    return (
-        part.filter(F.col("p_type") == "PROMO")
-        .join(leg("a", "ASIA"), F.col("a_pk") == F.col("p_partkey"))
-        .join(leg("e", "EUROPE"), F.col("e_pk") == F.col("p_partkey"))
-        .agg(
-            F.min("p_partkey").alias("min_part"),
-            F.min("a_sname").alias("min_asia_supp"),
-            F.min("e_sname").alias("min_europe_supp"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2910,9 +1470,9 @@ def job_q51(spark: SparkSession, sf_dir: str) -> DataFrame:
 # part x2 in one graph — loyal customers (an order in each of 1996/97/98)
 # whose 1996 order contains a PROMO item and whose 1998 order contains an
 # ECONOMY item. Three relations multi-aliased at once.
-@register(
+register_sql(
     "job_q52",
-    oracle="""
+    """
     SELECT CAST(MIN(c_custkey) AS BIGINT) AS min_cust,
            CAST(MIN(o1.o_orderkey) AS BIGINT) AS min_o1,
            CAST(MIN(o3.o_orderkey) AS BIGINT) AS min_o3,
@@ -2933,37 +1493,6 @@ def job_q51(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q52(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders, li, part = _t(spark, sf_dir, "customer", "orders", "lineitem", "part")
-    o1 = orders.filter(_ts_range("o_orderdate", "1996-01-01", "1997-01-01")).select(
-        F.col("o_custkey").alias("o1_ck"), F.col("o_orderkey").alias("o1_ok"))
-    o2 = orders.filter(
-        _ts_range("o_orderdate", "1997-01-01", "1998-01-01")
-        & (F.col("o_orderpriority") == "1-URGENT")
-    ).select(F.col("o_custkey").alias("o2_ck"))
-    o3 = orders.filter(_ts_range("o_orderdate", "1998-01-01", "1999-01-01")).select(
-        F.col("o_custkey").alias("o3_ck"), F.col("o_orderkey").alias("o3_ok"))
-    l1 = li.select(F.col("l_orderkey").alias("l1_ok"), F.col("l_partkey").alias("l1_pk"))
-    l3 = li.select(F.col("l_orderkey").alias("l3_ok"), F.col("l_partkey").alias("l3_pk"))
-    p1 = part.filter(F.col("p_type") == "PROMO").select(
-        F.col("p_partkey").alias("p1_key"))
-    p3 = part.filter(F.col("p_type") == "ECONOMY").select(
-        F.col("p_partkey").alias("p3_key"))
-    return (
-        cust.join(o1, F.col("o1_ck") == F.col("c_custkey"))
-        .join(o2, F.col("o2_ck") == F.col("c_custkey"))
-        .join(o3, F.col("o3_ck") == F.col("c_custkey"))
-        .join(l1, F.col("l1_ok") == F.col("o1_ok"))
-        .join(p1, F.col("l1_pk") == F.col("p1_key"))
-        .join(l3, F.col("l3_ok") == F.col("o3_ok"))
-        .join(p3, F.col("l3_pk") == F.col("p3_key"))
-        .agg(
-            F.min("c_custkey").alias("min_cust"),
-            F.min("o1_ok").alias("min_o1"),
-            F.min("o3_ok").alias("min_o3"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2971,9 +1500,9 @@ def job_q52(spark: SparkSession, sf_dir: str) -> DataFrame:
 # events forming a same-day view -> click -> purchase funnel per user,
 # bridged to customer -> nation. Two timestamp-ordering theta edges keep
 # the legs bounded (~1 match per pair) instead of a per-user cross blowup.
-@register(
+register_sql(
     "job_q53",
-    oracle="""
+    """
     SELECT CAST(MIN(e1.event_id) AS BIGINT) AS min_view,
            CAST(MIN(e3.event_id) AS BIGINT) AS min_purchase,
            MIN(n_name) AS min_nation,
@@ -2990,49 +1519,15 @@ def job_q52(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q53(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events, cust, nation = _t(spark, sf_dir, "events", "customer", "nation")
-
-    def ev(tag: str, etype: str):
-        return events.filter(F.col("event_type") == etype).select(
-            F.col("event_id").alias(f"{tag}_id"),
-            F.col("user_id").alias(f"{tag}_uid"),
-            F.col("ts").alias(f"{tag}_ts"),
-            F.to_date(f"ts").alias(f"{tag}_day"),
-        )
-
-    e1, e2, e3 = ev("e1", "view"), ev("e2", "click"), ev("e3", "purchase")
-    return (
-        e1.join(
-            e2,
-            (F.col("e1_uid") == F.col("e2_uid"))
-            & (F.col("e1_day") == F.col("e2_day"))
-            & (F.col("e2_ts") > F.col("e1_ts")),
-        )
-        .join(
-            e3,
-            (F.col("e2_uid") == F.col("e3_uid"))
-            & (F.col("e2_day") == F.col("e3_day"))
-            & (F.col("e3_ts") > F.col("e2_ts")),
-        )
-        .join(cust, F.col("e1_uid") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("e1_id").alias("min_view"),
-            F.min("e3_id").alias("min_purchase"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Filter-on-every-hop family (JOB 10): a 7-way graph where EVERY relation
 # carries its own selective predicate — the reorderer has six independent
 # reduction opportunities and must sequence them.
-@register(
+register_sql(
     "job_q54",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(c_name) AS min_cust,
            MIN(s_name) AS min_supp,
@@ -3053,39 +1548,14 @@ def job_q53(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q54(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, part, supp = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region",
-        "part", "supplier"
-    )
-    return (
-        li.filter(F.col("l_returnflag") == "R")
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(F.col("c_mktsegment") == "BUILDING"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation.filter(F.col("n_name") == "NATION_2")),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region.filter(F.col("r_name") == "ASIA")),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(part.filter(F.col("p_type") == "SMALL"),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp.filter(F.col("s_acctbal") > 0),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("c_name").alias("min_cust"),
-            F.min("s_name").alias("min_supp"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # OR-of-LIKEs + IN-lists on two dims (JOB 15b/22c): a three-way LIKE
 # disjunction on part plus brand/region/priority IN-lists.
-@register(
+register_sql(
     "job_q55",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(r_name) AS min_region,
@@ -3103,32 +1573,6 @@ def job_q54(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q55(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, part, supp, nation, region = _t(
-        spark, sf_dir, "lineitem", "orders", "part", "supplier", "nation", "region"
-    )
-    return (
-        li.join(orders.filter(F.col("o_orderpriority").isin("1-URGENT", "5-LOW")),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            part.filter(
-                (F.col("p_name").like("red%") | F.col("p_name").like("blue%")
-                 | F.col("p_name").like("old%"))
-                & F.col("p_brand").isin("Brand#1", "Brand#5", "Brand#9", "Brand#21")
-            ),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region.filter(F.col("r_name").isin("ASIA", "AMERICA"))),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("r_name").alias("min_region"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -3136,9 +1580,9 @@ def job_q55(spark: SparkSession, sf_dir: str) -> DataFrame:
 # emptiness emerges from the JOIN (EUROPE x NATION_0 never meet — NATION_0
 # is in AFRICA), invisible to scan-level statistics. MIN over zero rows
 # must yield the single all-NULL row with cnt = 0 on both engines.
-@register(
+register_sql(
     "job_q56",
-    oracle="""
+    """
     SELECT CAST(MIN(c_custkey) AS BIGINT) AS min_cust,
            MIN(n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -3150,22 +1594,6 @@ def job_q55(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q56(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, nation, region, orders = _t(
-        spark, sf_dir, "customer", "nation", "region", "orders"
-    )
-    return (
-        cust.join(F.broadcast(nation.filter(F.col("n_name") == "NATION_0")),
-                  F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region.filter(F.col("r_name") == "EUROPE")),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(orders, F.col("o_custkey") == F.col("c_custkey"))
-        .agg(
-            F.min("c_custkey").alias("min_cust"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -3174,9 +1602,9 @@ def job_q56(spark: SparkSession, sf_dir: str) -> DataFrame:
 # large-IN planning path (in_expression_rewrite_rule.cpp) in join context.
 _Q57_CUSTS = [f"Customer#{k:09d}" for k in range(7, 1500, 37)]
 
-@register(
+register_sql(
     "job_q57",
-    oracle=f"""
+    f"""
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(c_name) AS min_cust,
            MIN(n_name) AS min_nation,
@@ -3190,30 +1618,15 @@ _Q57_CUSTS = [f"Customer#{k:09d}" for k in range(7, 1500, 37)]
     """,
     tags=("job",),
 )
-def job_q57(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation = _t(spark, sf_dir, "lineitem", "orders", "customer", "nation")
-    return (
-        li.join(orders.filter(_ts_range("o_orderdate", "1997-01-01", "1999-01-01")),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(F.col("c_name").isin(_Q57_CUSTS)),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("c_name").alias("min_cust"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Band family (JOB 4/12: numeric bands on mid-chain attributes): four
 # BETWEEN bands on four different relations, no equality dim filters at
 # all — estimation has only range selectivities to work with.
-@register(
+register_sql(
     "job_q58",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            ROUND(MIN(s_acctbal), 2) AS min_sbal,
            ROUND(MIN(c_acctbal), 2) AS min_cbal,
@@ -3230,35 +1643,15 @@ def job_q57(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q58(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, supp, nation = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "supplier", "nation"
-    )
-    return (
-        li.filter(F.col("l_quantity").between(20, 30))
-        .join(orders.filter(F.col("o_totalprice").between(50000, 250000)),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(F.col("c_acctbal").between(-100, 900)),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(supp.filter(F.col("s_acctbal").between(2000, 3500)),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.round(F.min("s_acctbal"), R2).alias("min_sbal"),
-            F.round(F.min("c_acctbal"), R2).alias("min_cbal"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Dim-inequality edge (JOB 17's k.keyword <> shape): customer and supplier
 # nations must share a REGION but DIFFER as nations — an equality and an
 # inequality between two aliased copies of the same dimension.
-@register(
+register_sql(
     "job_q59",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(cn.n_name) AS min_cust_nation,
            MIN(sn.n_name) AS min_supp_nation,
@@ -3277,46 +1670,15 @@ def job_q58(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q59(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, supp, region = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "supplier", "region"
-    )
-    cn = nation.select(F.col("n_nationkey").alias("cn_key"),
-                       F.col("n_name").alias("cn_name"),
-                       F.col("n_regionkey").alias("cn_reg"))
-    sn = nation.select(F.col("n_nationkey").alias("sn_key"),
-                       F.col("n_name").alias("sn_name"),
-                       F.col("n_regionkey").alias("sn_reg"))
-    return (
-        li.filter(_ts_range("l_shipdate", "1998-01-01", "1999-01-01"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(
-            F.broadcast(sn),
-            (F.col("s_nationkey") == F.col("sn_key"))
-            & (F.col("cn_reg") == F.col("sn_reg"))
-            & (F.col("cn_key") != F.col("sn_key")),
-        )
-        .join(F.broadcast(region.filter(F.col("r_name") == "AMERICA")),
-              F.col("cn_reg") == F.col("r_regionkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("cn_name").alias("min_cust_nation"),
-            F.min("sn_name").alias("min_supp_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Cycle + LIKE chain: the q14 cycle (customer/supplier must share a nation,
 # closing customer->order->lineitem->supplier->nation->customer) with three
 # LIKE predicates layered on — JOB 22c's shape.
-@register(
+register_sql(
     "job_q60",
-    oracle="""
+    """
     SELECT CAST(MIN(o_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(n_name) AS min_nation,
@@ -3333,30 +1695,6 @@ def job_q59(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q60(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders, li, supp, nation, part = _t(
-        spark, sf_dir, "customer", "orders", "lineitem", "supplier", "nation", "part"
-    )
-    return (
-        cust.filter(~F.col("c_name").like("%00"))
-        .join(orders, F.col("o_custkey") == F.col("c_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            supp,
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("s_nationkey") == F.col("c_nationkey")),
-        )
-        .join(F.broadcast(nation.filter(F.col("n_name").like("NATION_%"))),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(part.filter(F.col("p_name").like("%widget")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.min("o_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -3364,9 +1702,9 @@ def job_q60(spark: SparkSession, sf_dir: str) -> DataFrame:
 # two-relation OR): (part OR supplier OR customer attribute) cannot be
 # pushed below ANY single join — the conjunctive date/status terms must
 # still reach the scans while the OR evaluates post-join.
-@register(
+register_sql(
     "job_q61",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            ROUND(MIN(p_retailprice), 2) AS min_rp,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -3381,28 +1719,6 @@ def job_q60(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q61(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, part, supp = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "part", "supplier"
-    )
-    return (
-        li.filter(_ts_range("l_shipdate", "1997-01-01", "1998-01-01"))
-        .join(orders.filter(F.col("o_orderstatus") == "F"),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(
-            (F.col("p_retailprice") > 997)
-            | (F.col("s_acctbal") < -700)
-            | (F.col("c_acctbal") > 9900)
-        )
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.round(F.min("p_retailprice"), R2).alias("min_rp"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -3410,9 +1726,9 @@ def job_q61(spark: SparkSession, sf_dir: str) -> DataFrame:
 # predicate pair, types.hpp:172): UPPER/LOWER-wrapped patterns including an
 # escaped underscore — the wrapped column defeats prefix pushdown, which is
 # exactly the reference's CI-matcher situation.
-@register(
+register_sql(
     "job_q62",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(n_name) AS min_nation,
@@ -3422,43 +1738,19 @@ def job_q61(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN supplier ON l_suppkey = s_suppkey
     JOIN nation ON s_nationkey = n_nationkey
     WHERE UPPER(p_name) LIKE 'RED%'
-      AND LOWER(n_name) LIKE 'nation\\_1%' ESCAPE '\\'
+      AND LOWER(n_name) LIKE 'nation!_1%' ESCAPE '!'
       AND UPPER(p_name) NOT LIKE '%ANVIL'
     """,
     tags=("job",),
 )
-def job_q62(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part, supp, nation = _t(spark, sf_dir, "lineitem", "part", "supplier", "nation")
-    return (
-        li.join(
-            part.filter(
-                F.upper(F.col("p_name")).like("RED%")
-                & ~F.upper(F.col("p_name")).like("%ANVIL")
-            ),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(
-            F.broadcast(
-                nation.filter(F.lower(F.col("n_name")).like(r"nation\_1%"))
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # NOT-LIKE-dominant d-variant: every string predicate is a negation —
 # negated selectivities are the classic estimator blind spot (JOB 13d).
-@register(
+register_sql(
     "job_q63",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(s_name) AS min_supp,
@@ -3476,37 +1768,15 @@ def job_q62(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q63(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, part, supp = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "part", "supplier"
-    )
-    return (
-        li.filter(_ts_range("l_shipdate", "1999-01-01", "1999-04-01"))
-        .join(orders.filter(~F.col("o_orderpriority").like("4%")),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(~F.col("c_name").like("%0")),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(part.filter(~F.col("p_name").like("%bolt")
-                          & ~F.col("p_name").like("small%")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp.filter(~F.col("s_name").like("%7")),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("s_name").alias("min_supp"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Underscore-wildcard family: single-char wildcards in three positions
 # (leading _, counted-length suffix, fixed-shape priority) — none of these
 # are prefix patterns, so the matcher must run its general path.
-@register(
+register_sql(
     "job_q64",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -3520,30 +1790,15 @@ def job_q63(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part, orders = _t(spark, sf_dir, "lineitem", "part", "orders")
-    return (
-        li.filter(F.col("l_returnflag") == "N")
-        .join(part.filter(F.col("p_name").like("_e%")
-                          & F.col("p_name").like("% ____")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .join(orders.filter(F.col("o_orderpriority").like("_-____%")),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Kitchen-sink 11-way (JOB 33c): duplicated nation/region dims on BOTH fact
 # sides, a same-order lineitem self-edge with a linenumber ordering, part
 # joined twice, LIKE + NOT LIKE + IN + BETWEEN all present.
-@register(
+register_sql(
     "job_q65",
-    oracle="""
+    """
     SELECT CAST(MIN(l1.l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(part.p_name) AS min_gear_part,
            MIN(p2.p_name) AS min_other_part,
@@ -3569,47 +1824,6 @@ def job_q64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q65(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, supp, part = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region",
-        "supplier", "part"
-    )
-    cn = nation.select(F.col("n_nationkey").alias("cn_key"),
-                       F.col("n_regionkey").alias("cn_reg"))
-    sn = nation.select(F.col("n_nationkey").alias("sn_key"),
-                       F.col("n_regionkey").alias("sn_reg"))
-    cr = region.filter(F.col("r_name").isin("ASIA", "EUROPE")).select(
-        F.col("r_regionkey").alias("cr_key"))
-    sr = region.filter(F.col("r_name").isin("ASIA", "EUROPE")).select(
-        F.col("r_regionkey").alias("sr_key"))
-    l2 = li.select(F.col("l_orderkey").alias("l2_ok"),
-                   F.col("l_linenumber").alias("l2_ln"),
-                   F.col("l_partkey").alias("l2_pk"))
-    p2 = part.filter(~F.col("p_name").like("%gear")).select(
-        F.col("p_partkey").alias("p2_key"), F.col("p_name").alias("p2_name"))
-    return (
-        li.filter(F.col("l_quantity").between(30, 50))
-        .join(orders.filter(
-            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH", "3-MEDIUM")),
-            F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(cr), F.col("cn_reg") == F.col("cr_key"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(sr), F.col("sn_reg") == F.col("sr_key"))
-        .join(part.filter(F.col("p_name").like("%gear")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .join(l2, (F.col("l2_ok") == F.col("l_orderkey"))
-              & (F.col("l2_ln") < F.col("l_linenumber")))
-        .join(p2, F.col("l2_pk") == F.col("p2_key"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_gear_part"),
-            F.min("p2_name").alias("min_other_part"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -3617,9 +1831,9 @@ def job_q65(spark: SparkSession, sf_dir: str) -> DataFrame:
 # join inside the EXISTS) and one anti branch, all against the same outer
 # customer — JOB-adjacent subquery-heavy shape the reference's translator
 # handles via semi/anti reductions (sql_translator.cpp).
-@register(
+register_sql(
     "job_q66",
-    oracle="""
+    """
     SELECT CAST(MIN(c_custkey) AS BIGINT) AS min_cust,
            MIN(n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -3639,32 +1853,6 @@ def job_q65(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q66(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, nation, orders, li, part = _t(
-        spark, sf_dir, "customer", "nation", "orders", "lineitem", "part"
-    )
-    b1 = orders.filter(_ts_range("o_orderdate", "1996-01-01", "1997-01-01")).select(
-        F.col("o_custkey").alias("b1_ck"))
-    b2 = (
-        orders.filter(_ts_range("o_orderdate", "1997-01-01", "1998-01-01"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(part.filter(F.col("p_type") == "PROMO"),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .select(F.col("o_custkey").alias("b2_ck"))
-    )
-    b3 = orders.filter(_ts_range("o_orderdate", "1999-01-01", "2000-01-01")).select(
-        F.col("o_custkey").alias("b3_ck"))
-    return (
-        cust.join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(b1, F.col("c_custkey") == F.col("b1_ck"), "left_semi")
-        .join(b2, F.col("c_custkey") == F.col("b2_ck"), "left_semi")
-        .join(b3, F.col("c_custkey") == F.col("b3_ck"), "left_anti")
-        .agg(
-            F.min("c_custkey").alias("min_cust"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -3672,9 +1860,9 @@ def job_q66(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the fact with a theta edge (l_quantity > avg_qty) while LIKE predicates
 # reduce part and supplier — JOB 20a's derived-relation shape with the
 # LIKE family layered on.
-@register(
+register_sql(
     "job_q67",
-    oracle="""
+    """
     SELECT CAST(MIN(p_partkey) AS BIGINT) AS min_part,
            MIN(s_name) AS min_supp,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -3689,26 +1877,6 @@ def job_q66(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q67(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part, li, supp = _t(spark, sf_dir, "part", "lineitem", "supplier")
-    pq = li.groupBy(F.col("l_partkey").alias("pq_pk")).agg(
-        F.avg("l_quantity").alias("avg_qty"))
-    return (
-        part.filter(F.col("p_name").like("old%"))
-        .join(pq, F.col("pq_pk") == F.col("p_partkey"))
-        .join(
-            li.filter(_ts_range("l_shipdate", "2000-01-01", "2000-07-01")),
-            (F.col("l_partkey") == F.col("p_partkey"))
-            & (F.col("l_quantity") > F.col("avg_qty")),
-        )
-        .join(supp.filter(~F.col("s_name").like("%3")),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .agg(
-            F.min("p_partkey").alias("min_part"),
-            F.min("s_name").alias("min_supp"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -3716,9 +1884,9 @@ def job_q67(spark: SparkSession, sf_dir: str) -> DataFrame:
 # as a machinery customer's very large order, with LIKE/NOT LIKE splitting
 # the two customer copies — the derived-attribute join (CAST to DATE)
 # cannot use raw column statistics.
-@register(
+register_sql(
     "job_q68",
-    oracle="""
+    """
     SELECT CAST(MIN(o1.o_orderkey) AS BIGINT) AS min_big,
            CAST(MIN(o2.o_orderkey) AS BIGINT) AS min_same_day,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -3735,43 +1903,15 @@ def job_q67(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q68(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, cust = _t(spark, sf_dir, "orders", "customer")
-    o1 = orders.filter(F.col("o_totalprice") > 420000).select(
-        F.col("o_orderkey").alias("o1_ok"),
-        F.col("o_custkey").alias("o1_ck"),
-        F.to_date("o_orderdate").alias("o1_day"),
-    )
-    c1 = cust.filter((F.col("c_mktsegment") == "MACHINERY")
-                     & F.col("c_name").like("%1")).select(
-        F.col("c_custkey").alias("c1_key"))
-    o2 = orders.filter(F.col("o_orderpriority").like("1%")).select(
-        F.col("o_orderkey").alias("o2_ok"),
-        F.col("o_custkey").alias("o2_ck"),
-        F.to_date("o_orderdate").alias("o2_day"),
-    )
-    c2 = cust.filter(~F.col("c_name").like("%1")).select(
-        F.col("c_custkey").alias("c2_key"))
-    return (
-        o1.join(c1, F.col("o1_ck") == F.col("c1_key"))
-        .join(o2, (F.col("o2_day") == F.col("o1_day"))
-              & (F.col("o2_ok") != F.col("o1_ok")))
-        .join(c2, F.col("o2_ck") == F.col("c2_key"))
-        .agg(
-            F.min("o1_ok").alias("min_big"),
-            F.min("o2_ok").alias("min_same_day"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Outer-then-semi ordering: the left join's null-extended rows must survive
 # INTO the semi reduction on a different key — reordering the semi below
 # the outer would change results; the optimizer must prove it can't.
-@register(
+register_sql(
     "job_q69",
-    oracle="""
+    """
     SELECT CAST(MIN(c_custkey) AS BIGINT) AS min_cust,
            CAST(MIN(o_orderkey) AS BIGINT) AS min_order,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -3785,25 +1925,6 @@ def job_q68(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q69(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, nation, region, orders, events = _t(
-        spark, sf_dir, "customer", "nation", "region", "orders", "events"
-    )
-    o97 = orders.filter(_ts_range("o_orderdate", "1997-01-01", "1998-01-01"))
-    purchasers = events.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("pu_uid"))
-    return (
-        cust.join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region.filter(F.col("r_name") == "EUROPE")),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(purchasers, F.col("c_custkey") == F.col("pu_uid"), "left_semi")
-        .join(o97, F.col("o_custkey") == F.col("c_custkey"), "left")
-        .agg(
-            F.min("c_custkey").alias("min_cust"),
-            F.min("o_orderkey").alias("min_order"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -3811,9 +1932,9 @@ def job_q69(spark: SparkSession, sf_dir: str) -> DataFrame:
 # predicate TYPE the reference's TableScan vocabulary declares
 # (types.hpp:160-178) appears at least once: =, <>, <, <=, >, >=, BETWEEN,
 # IN, NOT IN, LIKE, NOT LIKE, IS NOT NULL, plus an OR-group.
-@register(
+register_sql(
     "job_q70",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(event_type) AS min_event,
@@ -3861,89 +1982,15 @@ def job_q69(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q70(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, supp, part, events = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region",
-        "supplier", "part", "events"
-    )
-    cn = nation.filter(F.col("n_name") != "NATION_13").select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cn_reg"))
-    sn = nation.filter(~F.col("n_name").like("%_4")).select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_regionkey").alias("sn_reg"))
-    cr = region.filter(F.col("r_name").isNotNull()).select(
-        F.col("r_regionkey").alias("cr_key"))
-    sr = region.filter(F.col("r_name").isin("ASIA", "EUROPE", "AMERICA", "AFRICA")).select(
-        F.col("r_regionkey").alias("sr_key"))
-    ev = events.filter(
-        ~F.col("event_type").isin("error")
-        & F.col("value").between(0, 1000)
-        & (F.col("ts") >= F.lit("2024-01-01"))
-    )
-    return (
-        li.filter(
-            F.col("l_quantity").between(1, 49)
-            & (F.col("l_extendedprice") > 950)
-            & F.col("l_discount").between(0.0, 0.09)
-            & (F.col("l_tax") <= 0.08)
-            & (F.col("l_returnflag") != "A")
-            & F.col("l_linestatus").isin("O", "F")
-            & _ts_range("l_shipdate", "1995-03-01", "2001-09-01")
-        )
-        .join(
-            orders.filter(
-                F.col("o_totalprice").between(1000, 480000)
-                & F.col("o_orderstatus").isin("O", "F")
-                & ~F.col("o_orderpriority").like("4%")
-                & (F.col("o_orderdate") >= F.lit("1995-02-01"))
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            cust.filter(
-                F.col("c_acctbal").between(-990, 9990)
-                & (F.col("c_mktsegment") != "JEWELRY")
-                & F.col("c_name").like("Customer#00000%")
-                & ((F.col("c_acctbal") > 5000) | (F.col("c_mktsegment") == "BUILDING"))
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(cr), F.col("cn_reg") == F.col("cr_key"))
-        .join(
-            supp.filter((F.col("s_acctbal") > -950)
-                        & F.col("s_name").like("Supplier#0000000%")),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(sr), F.col("sn_reg") == F.col("sr_key"))
-        .join(
-            part.filter(
-                F.col("p_size").isin(1, 2, 3, 5, 8, 13, 21, 34, 47)
-                & (F.col("p_type") != "LARGE")
-                & F.col("p_retailprice").between(901, 999)
-                & F.col("p_name").like("% %")
-                & ~F.col("p_name").like("new%")
-                & ~F.col("p_brand").isin("Brand#2", "Brand#4")
-            ),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .join(ev, F.col("c_custkey") == F.col("user_id"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("event_type").alias("min_event"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Co-occurrence self-link THROUGH the fact (JOB's movie-keyword-movie
 # traversal): part pairs bought together in one order, canonicalized
 # p1 < p2 — the fact table is the link relation, parts hang off both ends.
-@register(
+register_sql(
     "job_q71",
-    oracle="""
+    """
     SELECT CAST(MIN(l1.l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p1.p_name) AS min_promo,
            MIN(p2.p_name) AS min_economy,
@@ -3959,28 +2006,6 @@ def job_q70(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q71(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part, orders = _t(spark, sf_dir, "lineitem", "part", "orders")
-    l1 = li.select(F.col("l_orderkey").alias("l1_ok"), F.col("l_partkey").alias("l1_pk"))
-    l2 = li.select(F.col("l_orderkey").alias("l2_ok"), F.col("l_partkey").alias("l2_pk"))
-    p1 = part.filter(F.col("p_type") == "PROMO").select(
-        F.col("p_partkey").alias("p1_key"), F.col("p_name").alias("p1_name"))
-    p2 = part.filter(F.col("p_type") == "ECONOMY").select(
-        F.col("p_partkey").alias("p2_key"), F.col("p_name").alias("p2_name"))
-    return (
-        l1.join(l2, F.col("l1_ok") == F.col("l2_ok"))
-        .join(p1, F.col("l1_pk") == F.col("p1_key"))
-        .join(p2, (F.col("l2_pk") == F.col("p2_key"))
-              & (F.col("p1_key") < F.col("p2_key")))
-        .join(orders.filter(F.col("o_orderpriority") == "1-URGENT"),
-              F.col("l1_ok") == F.col("o_orderkey"))
-        .agg(
-            F.min("l1_ok").alias("min_orderkey"),
-            F.min("p1_name").alias("min_promo"),
-            F.min("p2_name").alias("min_economy"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -3988,9 +2013,9 @@ def job_q71(spark: SparkSession, sf_dir: str) -> DataFrame:
 # customers of the SAME nation (c1 < c2), each carrying their own order
 # subgraph — the bridge relation is the 25-row dimension, the optimal plan
 # reduces both wings before crossing them.
-@register(
+register_sql(
     "job_q72",
-    oracle="""
+    """
     SELECT CAST(MIN(c1.c_custkey) AS BIGINT) AS min_c1,
            CAST(MIN(c2.c_custkey) AS BIGINT) AS min_c2,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -4006,41 +2031,15 @@ def job_q71(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q72(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, nation, orders = _t(spark, sf_dir, "customer", "nation", "orders")
-    n7 = nation.filter(F.col("n_name") == "NATION_7").select(
-        F.col("n_nationkey").alias("nk"))
-    c1 = cust.select(F.col("c_custkey").alias("c1_key"),
-                     F.col("c_nationkey").alias("c1_nat"))
-    c2 = cust.select(F.col("c_custkey").alias("c2_key"),
-                     F.col("c_nationkey").alias("c2_nat"))
-    big = orders.filter(
-        _ts_range("o_orderdate", "1997-01-01", "1997-02-01")
-        & (F.col("o_totalprice") > 200000)
-    )
-    o1 = big.select(F.col("o_custkey").alias("o1_ck"))
-    o2 = big.select(F.col("o_custkey").alias("o2_ck"))
-    return (
-        c1.join(F.broadcast(n7), F.col("c1_nat") == F.col("nk"))
-        .join(c2, (F.col("c2_nat") == F.col("nk"))
-              & (F.col("c1_key") < F.col("c2_key")))
-        .join(o1, F.col("o1_ck") == F.col("c1_key"))
-        .join(o2, F.col("o2_ck") == F.col("c2_key"))
-        .agg(
-            F.min("c1_key").alias("min_c1"),
-            F.min("c2_key").alias("min_c2"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Interval-OVERLAP theta self-join: two orders by the same customer whose
 # 30-day windows overlap — a two-sided band edge (each side bounds the
 # other), the classic temporal-join shape.
-@register(
+register_sql(
     "job_q73",
-    oracle="""
+    """
     SELECT CAST(MIN(o1.o_orderkey) AS BIGINT) AS min_o1,
            CAST(MIN(o2.o_orderkey) AS BIGINT) AS min_o2,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -4056,39 +2055,14 @@ def job_q72(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q73(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, cust = _t(spark, sf_dir, "orders", "customer")
-    o98 = orders.filter(_ts_range("o_orderdate", "1998-01-01", "1999-01-01"))
-    o1 = o98.select(F.col("o_orderkey").alias("o1_ok"),
-                    F.col("o_custkey").alias("o1_ck"),
-                    F.col("o_orderdate").alias("o1_d"))
-    o2 = o98.select(F.col("o_orderkey").alias("o2_ok"),
-                    F.col("o_custkey").alias("o2_ck"),
-                    F.col("o_orderdate").alias("o2_d"))
-    return (
-        o1.join(
-            o2,
-            (F.col("o1_ck") == F.col("o2_ck"))
-            & (F.col("o1_ok") < F.col("o2_ok"))
-            & (F.col("o2_d") < F.col("o1_d") + F.expr("INTERVAL 30 DAY"))
-            & (F.col("o1_d") < F.col("o2_d") + F.expr("INTERVAL 30 DAY")),
-        )
-        .join(cust.filter(F.col("c_mktsegment") == "AUTOMOBILE"),
-              F.col("o1_ck") == F.col("c_custkey"))
-        .agg(
-            F.min("o1_ok").alias("min_o1"),
-            F.min("o2_ok").alias("min_o2"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Sequential (adjacent-position) self-join: consecutive linenumbers of one
 # order with differing part brands — the next-row-by-key join shape.
-@register(
+register_sql(
     "job_q74",
-    oracle="""
+    """
     SELECT CAST(MIN(l1.l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p1.p_brand) AS min_b1,
            MIN(p2.p_brand) AS min_b2,
@@ -4103,32 +2077,6 @@ def job_q73(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q74(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part = _t(spark, sf_dir, "lineitem", "part")
-    l1 = li.filter(F.col("l_quantity") > 45).select(
-        F.col("l_orderkey").alias("l1_ok"),
-        F.col("l_linenumber").alias("l1_ln"),
-        F.col("l_partkey").alias("l1_pk"))
-    l2 = li.select(F.col("l_orderkey").alias("l2_ok"),
-                   F.col("l_linenumber").alias("l2_ln"),
-                   F.col("l_partkey").alias("l2_pk"))
-    p1 = part.select(F.col("p_partkey").alias("p1_key"),
-                     F.col("p_brand").alias("p1_brand"))
-    p2 = part.select(F.col("p_partkey").alias("p2_key"),
-                     F.col("p_brand").alias("p2_brand"))
-    return (
-        l1.join(l2, (F.col("l1_ok") == F.col("l2_ok"))
-                & (F.col("l2_ln") == F.col("l1_ln") + 1))
-        .join(p1, F.col("l1_pk") == F.col("p1_key"))
-        .join(p2, (F.col("l2_pk") == F.col("p2_key"))
-              & (F.col("p1_brand") != F.col("p2_brand")))
-        .agg(
-            F.min("l1_ok").alias("min_orderkey"),
-            F.min("p1_brand").alias("min_b1"),
-            F.min("p2_brand").alias("min_b2"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -4136,9 +2084,9 @@ def job_q74(spark: SparkSession, sf_dir: str) -> DataFrame:
 # customer's own average — the correlated scalar decorrelates to a
 # per-customer aggregate joined back (subquery_to_join analog), with the
 # dim chain continuing above it.
-@register(
+register_sql(
     "job_q75",
-    oracle="""
+    """
     SELECT CAST(MIN(o.o_orderkey) AS BIGINT) AS min_orderkey,
            MIN(n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -4151,31 +2099,15 @@ def job_q74(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q75(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, cust, nation = _t(spark, sf_dir, "orders", "customer", "nation")
-    avg_per_cust = orders.groupBy(F.col("o_custkey").alias("a_ck")).agg(
-        F.avg("o_totalprice").alias("avg_price"))
-    return (
-        orders.join(avg_per_cust, F.col("o_custkey") == F.col("a_ck"))
-        .filter(F.col("o_totalprice") > 2 * F.col("avg_price"))
-        .join(cust.filter(F.col("c_mktsegment") == "BUILDING"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("o_orderkey").alias("min_orderkey"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # UNION-DISTINCT branch as a graph node (q27 used UNION ALL; the DISTINCT
 # variant forces a dedup exchange inside the branch because the two legs
 # genuinely overlap — urgent AND very-large 1997 orders exist).
-@register(
+register_sql(
     "job_q76",
-    oracle="""
+    """
     SELECT CAST(MIN(u.o_orderkey) AS BIGINT) AS min_orderkey,
            MIN(n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -4193,38 +2125,15 @@ def job_q75(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q76(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, cust, nation, region = _t(
-        spark, sf_dir, "orders", "customer", "nation", "region"
-    )
-    o97 = orders.filter(_ts_range("o_orderdate", "1997-01-01", "1998-01-01"))
-    u = (
-        o97.filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_orderkey", "o_custkey")
-        .union(o97.filter(F.col("o_totalprice") > 400000)
-               .select("o_orderkey", "o_custkey"))
-        .distinct()
-    )
-    return (
-        u.join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region.filter(F.col("r_name") == "ASIA")),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-        .agg(
-            F.min("o_orderkey").alias("min_orderkey"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # COMPUTED STRING KEY equi-join: customers and suppliers whose names share
 # a last digit — ten 1-char buckets; statistics on the raw columns say
 # nothing about the derived key (JOB's derived-attribute joins).
-@register(
+register_sql(
     "job_q77",
-    oracle="""
+    """
     SELECT CAST(MIN(c_custkey) AS BIGINT) AS min_cust,
            MIN(s_name) AS min_supp,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -4235,30 +2144,15 @@ def job_q76(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q77(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, supp, nation = _t(spark, sf_dir, "customer", "supplier", "nation")
-    c = cust.filter(F.col("c_acctbal") > 9500).withColumn(
-        "c_last", F.substring(F.col("c_name"), -1, 1))
-    s = supp.filter(F.col("s_acctbal") > 9000).withColumn(
-        "s_last", F.substring(F.col("s_name"), -1, 1))
-    return (
-        c.join(s, F.col("c_last") == F.col("s_last"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .agg(
-            F.min("c_custkey").alias("min_cust"),
-            F.min("s_name").alias("min_supp"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Nested EXISTS, depth 2: customer has a 1998 order that ITSELF contains a
 # heavy PROMO line — the inner semi must stay correlated to the MIDDLE
 # relation, not the outer (a decorrelation-ordering stressor).
-@register(
+register_sql(
     "job_q78",
-    oracle="""
+    """
     SELECT CAST(MIN(c_custkey) AS BIGINT) AS min_cust,
            MIN(n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -4275,40 +2169,15 @@ def job_q77(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q78(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, nation, orders, li, part = _t(
-        spark, sf_dir, "customer", "nation", "orders", "lineitem", "part"
-    )
-    heavy_promo = (
-        li.filter(F.col("l_quantity") > 40)
-        .join(part.filter(F.col("p_type") == "PROMO"),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .select(F.col("l_orderkey").alias("hp_ok"))
-    )
-    o98 = (
-        orders.filter(_ts_range("o_orderdate", "1998-01-01", "1999-01-01"))
-        .join(heavy_promo, F.col("o_orderkey") == F.col("hp_ok"), "left_semi")
-        .select(F.col("o_custkey").alias("q_ck"))
-    )
-    return (
-        cust.filter(F.col("c_acctbal") < 0)
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(o98, F.col("c_custkey") == F.col("q_ck"), "left_semi")
-        .agg(
-            F.min("c_custkey").alias("min_cust"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # COMPOSITE-key anti join: current 'N' lines of (part, supplier) pairings
 # that have NEVER had a return — the anti key is two columns, so the
 # exclusion set cannot be a single-column filter.
-@register(
+register_sql(
     "job_q79",
-    oracle="""
+    """
     SELECT CAST(MIN(l1.l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -4322,33 +2191,15 @@ def job_q78(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q79(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part = _t(spark, sf_dir, "lineitem", "part")
-    returned = li.filter(F.col("l_returnflag") == "R").select(
-        F.col("l_partkey").alias("r_pk"), F.col("l_suppkey").alias("r_sk"))
-    return (
-        li.filter((F.col("l_returnflag") == "N")
-                  & (F.col("l_shipdate") >= F.lit("2001-01-01")))
-        .join(returned,
-              (F.col("l_partkey") == F.col("r_pk"))
-              & (F.col("l_suppkey") == F.col("r_sk")),
-              "left_anti")
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Dims-only monster: EVERY predicate sits on a dimension; the two fact
 # tables are completely unfiltered — all reduction comes from dim joins,
 # the inverse of q48's fact-heavy selectivity profile.
-@register(
+register_sql(
     "job_q80",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(c_name) AS min_cust,
            MIN(p_name) AS min_part,
@@ -4371,56 +2222,15 @@ def job_q79(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q80(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, supp, part = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region",
-        "supplier", "part"
-    )
-    cn = nation.filter(F.col("n_name").isin(
-        "NATION_4", "NATION_9", "NATION_14", "NATION_19", "NATION_24")).select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cn_reg"))
-    cr = region.filter(F.col("r_name") == "MIDDLE EAST").select(
-        F.col("r_regionkey").alias("cr_key"))
-    sn = nation.filter(F.col("n_name").like("NATION_1%")).select(
-        F.col("n_nationkey").alias("sn_key"))
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            cust.filter((F.col("c_mktsegment") == "MACHINERY")
-                        & F.col("c_acctbal").between(0, 5000)),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(cr), F.col("cn_reg") == F.col("cr_key"))
-        .join(supp.filter((F.col("s_acctbal") > 0)
-                          & ~F.col("s_name").like("%88")),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .join(
-            part.filter(
-                (F.col("p_type") == "STANDARD")
-                & F.col("p_size").between(10, 35)
-                & F.col("p_brand").isin(
-                    "Brand#3", "Brand#7", "Brand#11", "Brand#15", "Brand#19")
-            ),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("c_name").alias("min_cust"),
-            F.min("p_name").alias("min_part"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # String-FUNCTION predicate chain: LENGTH + SUBSTR + containment LIKE —
 # none of these push to the scan as-is (function-wrapped columns), so the
 # optimizer must still reduce via the join order.
-@register(
+register_sql(
     "job_q81",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(s_name) AS min_supp,
@@ -4435,35 +2245,15 @@ def job_q80(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q81(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part, supp = _t(spark, sf_dir, "lineitem", "part", "supplier")
-    return (
-        li.join(
-            part.filter(
-                (F.length("p_name") > 8)
-                & F.col("p_name").like("%e%")
-                & F.substring("p_name", 1, 1).isin("s", "l")
-            ),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .join(supp.filter(F.col("s_name").like("Supplier#0000000%")),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("s_name").alias("min_supp"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Behavioral co-activity pairs: two DIFFERENT users purchasing the same
 # calendar day, bridged to their customer rows with a cross-copy equality
 # (same market segment) — events self-join + customer x2.
-@register(
+register_sql(
     "job_q82",
-    oracle="""
+    """
     SELECT CAST(MIN(e1.user_id) AS BIGINT) AS min_u1,
            CAST(MIN(e2.user_id) AS BIGINT) AS min_u2,
            MIN(c1.c_mktsegment) AS min_segment,
@@ -4479,40 +2269,15 @@ def job_q81(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q82(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events, cust = _t(spark, sf_dir, "events", "customer")
-    big = events.filter((F.col("event_type") == "purchase")
-                        & (F.col("value") > 100))
-    e1 = big.select(F.col("user_id").alias("e1_uid"),
-                    F.to_date("ts").alias("e1_day"))
-    e2 = big.select(F.col("user_id").alias("e2_uid"),
-                    F.to_date("ts").alias("e2_day"))
-    c1 = cust.select(F.col("c_custkey").alias("c1_key"),
-                     F.col("c_mktsegment").alias("c1_seg"))
-    c2 = cust.select(F.col("c_custkey").alias("c2_key"),
-                     F.col("c_mktsegment").alias("c2_seg"))
-    return (
-        e1.join(e2, (F.col("e1_day") == F.col("e2_day"))
-                & (F.col("e1_uid") < F.col("e2_uid")))
-        .join(c1, F.col("e1_uid") == F.col("c1_key"))
-        .join(c2, (F.col("e2_uid") == F.col("c2_key"))
-              & (F.col("c1_seg") == F.col("c2_seg")))
-        .agg(
-            F.min("e1_uid").alias("min_u1"),
-            F.min("e2_uid").alias("min_u2"),
-            F.min("c1_seg").alias("min_segment"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # DISTINCT dedup node INSIDE the graph: collapse (customer, part) pairs
 # before the dimension joins — the dedup exchange sits mid-plan and the
 # optimizer must not push joins below it.
-@register(
+register_sql(
     "job_q83",
-    oracle="""
+    """
     SELECT CAST(MIN(d.ck) AS BIGINT) AS min_cust,
            MIN(p_name) AS min_part,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -4525,33 +2290,14 @@ def job_q82(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q83(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, part = _t(spark, sf_dir, "lineitem", "orders", "customer", "part")
-    d = (
-        li.filter(F.col("l_shipdate") >= F.lit("2000-01-01"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(F.col("o_custkey").alias("ck"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
-    return (
-        d.join(cust.filter(F.col("c_acctbal") > 9000),
-               F.col("ck") == F.col("c_custkey"))
-        .join(part.filter(F.col("p_type") == "PROMO"),
-              F.col("pk") == F.col("p_partkey"))
-        .agg(
-            F.min("ck").alias("min_cust"),
-            F.min("p_name").alias("min_part"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Top-1-per-group derived node: each customer's single largest order
 # (ROW_NUMBER = 1 — Spark plans WindowGroupLimit) feeding the join chain.
-@register(
+register_sql(
     "job_q84",
-    oracle="""
+    """
     SELECT CAST(MIN(big.o_orderkey) AS BIGINT) AS min_orderkey,
            MIN(c_name) AS min_cust,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -4567,38 +2313,15 @@ def job_q83(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q84(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    orders, cust, li, part = _t(spark, sf_dir, "orders", "customer", "lineitem", "part")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    big = (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-    )
-    return (
-        big.join(cust.filter(F.col("c_mktsegment") == "FURNITURE"),
-                 F.col("o_custkey") == F.col("c_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(part.filter(F.col("p_size") > 40),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.min("o_orderkey").alias("min_orderkey"),
-            F.min("c_name").alias("min_cust"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # Combination variant: NOT LIKE on two dims + a quantity band + a semi
 # branch against events — the three predicate families q63/q58/q85 stress
 # individually, in ONE graph.
-@register(
+register_sql(
     "job_q85",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(n_name) AS min_nation,
@@ -4616,28 +2339,6 @@ def job_q84(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q85(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, part, events = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "part", "events"
-    )
-    signups = events.filter(F.col("event_type") == "signup").select(
-        F.col("user_id").alias("su_uid"))
-    return (
-        li.filter(F.col("l_quantity").between(35, 45))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(signups, F.col("c_custkey") == F.col("su_uid"), "left_semi")
-        .join(F.broadcast(nation.filter(~F.col("n_name").like("%_1"))),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(part.filter(~F.col("p_name").like("%ring")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -4647,9 +2348,9 @@ def job_q85(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the optimal join order, which is exactly what the benchmark measures).
 
 # family-1 variant: equality far-end filters (brand + segment + year).
-@register(
+register_sql(
     "job_q86",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(c_name) AS min_cust,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -4663,28 +2364,13 @@ def job_q85(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q86(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, part = _t(spark, sf_dir, "lineitem", "orders", "customer", "part")
-    return (
-        li.join(orders.filter(_ts_range("o_orderdate", "1999-01-01", "2000-01-01")),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(F.col("c_mktsegment") == "HOUSEHOLD"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(part.filter(F.col("p_brand") == "Brand#22"),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("c_name").alias("min_cust"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # family-6 variant: double dimension chains pinned AMERICA x AFRICA with a
 # narrow retail-price band replacing the year filter's selectivity.
-@register(
+register_sql(
     "job_q87",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(cn.n_name) AS min_cust_nation,
            MIN(sn.n_name) AS min_supp_nation,
@@ -4704,46 +2390,13 @@ def job_q86(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q87(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, supp, part = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region",
-        "supplier", "part"
-    )
-    cn = nation.select(F.col("n_nationkey").alias("cn_key"),
-                       F.col("n_name").alias("cn_name"),
-                       F.col("n_regionkey").alias("cn_reg"))
-    sn = nation.select(F.col("n_nationkey").alias("sn_key"),
-                       F.col("n_name").alias("sn_name"),
-                       F.col("n_regionkey").alias("sn_reg"))
-    cr = region.filter(F.col("r_name") == "AMERICA").select(
-        F.col("r_regionkey").alias("cr_key"))
-    sr = region.filter(F.col("r_name") == "AFRICA").select(
-        F.col("r_regionkey").alias("sr_key"))
-    return (
-        li.join(orders.filter(_ts_range("o_orderdate", "1996-01-01", "1997-01-01")),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(cr), F.col("cn_reg") == F.col("cr_key"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(sr), F.col("sn_reg") == F.col("sr_key"))
-        .join(part.filter(F.col("p_retailprice").between(940, 960)),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("cn_name").alias("min_cust_nation"),
-            F.min("sn_name").alias("min_supp_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # family-3 variant: IN-lists moved to type/priority, band on discount, and
 # a supplier balance cut.
-@register(
+register_sql(
     "job_q88",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(s_name) AS min_supp,
@@ -4759,30 +2412,13 @@ def job_q87(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q88(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, part, supp = _t(spark, sf_dir, "lineitem", "orders", "part", "supplier")
-    return (
-        li.filter(F.col("l_discount").between(0.08, 0.1))
-        .join(orders.filter(F.col("o_orderpriority").isin("3-MEDIUM", "4-NOT SPECIFIED")),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(part.filter(F.col("p_type").isin("SMALL", "LARGE")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp.filter(F.col("s_acctbal") < 2000),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("s_name").alias("min_supp"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # semi+anti variant over the BEHAVIORAL table: signed-up users with no
 # high-value error event — both branches against events, different preds.
-@register(
+register_sql(
     "job_q89",
-    oracle="""
+    """
     SELECT CAST(MIN(c_custkey) AS BIGINT) AS min_cust,
            MIN(n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -4797,34 +2433,13 @@ def job_q88(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q89(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, nation, region, events = _t(
-        spark, sf_dir, "customer", "nation", "region", "events"
-    )
-    signups = events.filter(F.col("event_type") == "signup").select(
-        F.col("user_id").alias("su_uid"))
-    bad = events.filter((F.col("event_type") == "error")
-                        & (F.col("value") > 250)).select(
-        F.col("user_id").alias("er_uid"))
-    return (
-        cust.join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region.filter(F.col("r_name") == "AFRICA")),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(signups, F.col("c_custkey") == F.col("su_uid"), "left_semi")
-        .join(bad, F.col("c_custkey") == F.col("er_uid"), "left_anti")
-        .agg(
-            F.min("c_custkey").alias("min_cust"),
-            F.min("n_name").alias("min_nation"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # family-18 variant: multiplicative theta edge (the follow-up order is
 # less than HALF the first) across a 1995->1996 year step.
-@register(
+register_sql(
     "job_q90",
-    oracle="""
+    """
     SELECT CAST(MIN(o1.o_orderkey) AS BIGINT) AS min_o1,
            CAST(MIN(o2.o_orderkey) AS BIGINT) AS min_o2,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -4838,34 +2453,12 @@ def job_q89(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q90(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, cust = _t(spark, sf_dir, "orders", "customer")
-    o1 = orders.filter(
-        _ts_range("o_orderdate", "1995-01-01", "1996-01-01")
-        & (F.col("o_totalprice") > 400000)
-    ).select(F.col("o_orderkey").alias("o1_ok"),
-             F.col("o_custkey").alias("o1_ck"),
-             F.col("o_totalprice").alias("o1_tp"))
-    o2 = orders.filter(_ts_range("o_orderdate", "1996-01-01", "1997-01-01")).select(
-        F.col("o_orderkey").alias("o2_ok"),
-        F.col("o_custkey").alias("o2_ck"),
-        F.col("o_totalprice").alias("o2_tp"))
-    return (
-        o1.join(o2, (F.col("o1_ck") == F.col("o2_ck"))
-                & (F.col("o2_tp") < F.col("o1_tp") * 0.5))
-        .join(cust, F.col("o1_ck") == F.col("c_custkey"))
-        .agg(
-            F.min("o1_ok").alias("min_o1"),
-            F.min("o2_ok").alias("min_o2"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # LIKE-chain f-variant: brand prefix + mid-word space pattern + name prefix.
-@register(
+register_sql(
     "job_q91",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(c_name) AS min_cust,
@@ -4882,31 +2475,13 @@ def job_q90(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q91(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part, orders, cust = _t(spark, sf_dir, "lineitem", "part", "orders", "customer")
-    return (
-        li.filter(F.col("l_returnflag") != "N")
-        .join(part.filter(F.col("p_brand").like("Brand#2%")
-                          & F.col("p_name").like("% r%")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .join(orders.filter(F.col("o_orderstatus") == "F"),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(F.col("c_name").like("Customer#00000%")),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.min("c_name").alias("min_cust"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # balanced monster variant: 18 predicates split evenly across facts and
 # dims, plus the shared-region clique edge (cn.reg = sn.reg).
-@register(
+register_sql(
     "job_q92",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -4927,49 +2502,13 @@ def job_q91(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q92(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, supp, part = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "supplier", "part"
-    )
-    cn = nation.select(F.col("n_nationkey").alias("cn_key"),
-                       F.col("n_regionkey").alias("cn_reg"))
-    sn = nation.select(F.col("n_nationkey").alias("sn_key"),
-                       F.col("n_regionkey").alias("sn_reg"))
-    return (
-        li.filter(
-            (F.col("l_quantity") > 25) & (F.col("l_discount") < 0.05)
-            & (F.col("l_returnflag") == "A")
-            & _ts_range("l_shipdate", "1997-06-01", "1998-06-01")
-        )
-        .join(orders.filter((F.col("o_totalprice") > 100000)
-                            & (F.col("o_orderstatus") == "F")),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter((F.col("c_acctbal") > 2000)
-                          & F.col("c_mktsegment").isin("BUILDING", "MACHINERY")),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(supp.filter(F.col("s_acctbal").between(1000, 8000)),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(sn),
-              (F.col("s_nationkey") == F.col("sn_key"))
-              & (F.col("cn_reg") == F.col("sn_reg")))
-        .join(part.filter((F.col("p_size") > 25)
-                          & (F.col("p_type") != "PROMO")
-                          & ~F.col("p_brand").like("%4")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.min("l_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # aggregate-node variant (family 20): per-supplier revenue derived relation
 # gated by a HAVING-like filter, then the dimension chain.
-@register(
+register_sql(
     "job_q93",
-    oracle="""
+    """
     SELECT CAST(MIN(s_suppkey) AS BIGINT) AS min_supp,
            MIN(n_name) AS min_nation,
            ROUND(MIN(r.rev), 2) AS min_rev,
@@ -4985,35 +2524,13 @@ def job_q92(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q93(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, supp, nation, region = _t(
-        spark, sf_dir, "lineitem", "supplier", "nation", "region"
-    )
-    r = (
-        li.filter(_ts_range("l_shipdate", "1998-01-01", "1999-01-01"))
-        .groupBy(F.col("l_suppkey").alias("sk"))
-        .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"))
-        .filter(F.col("rev") > 1000000)
-    )
-    return (
-        r.join(supp, F.col("sk") == F.col("s_suppkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region.filter(F.col("r_name") == "EUROPE")),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-        .agg(
-            F.min("s_suppkey").alias("min_supp"),
-            F.min("n_name").alias("min_nation"),
-            F.round(F.min("rev"), R2).alias("min_rev"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # cycle variant (family 22): domestic-supply cycle under a 2000 date band
 # and a price floor instead of LIKE predicates.
-@register(
+register_sql(
     "job_q94",
-    oracle="""
+    """
     SELECT CAST(MIN(o_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5027,32 +2544,14 @@ def job_q93(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q94(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders, li, supp, part = _t(
-        spark, sf_dir, "customer", "orders", "lineitem", "supplier", "part"
-    )
-    return (
-        cust.join(orders.filter(_ts_range("o_orderdate", "2000-01-01", "2001-01-01")),
-                  F.col("o_custkey") == F.col("c_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(supp, (F.col("l_suppkey") == F.col("s_suppkey"))
-              & (F.col("s_nationkey") == F.col("c_nationkey")))
-        .join(part.filter(F.col("p_retailprice") > 980),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.min("o_orderkey").alias("min_orderkey"),
-            F.min("p_name").alias("min_part"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
 # outer-mid-chain variant (family of q43): suppliers left-joined to one
 # month of their lines — null-extended suppliers (no Jan-2000 shipments)
 # must survive; COALESCE makes them countable.
-@register(
+register_sql(
     "job_q95",
-    oracle="""
+    """
     SELECT CAST(MIN(s_suppkey) AS BIGINT) AS min_supp,
            CAST(COUNT(*) AS BIGINT) AS cnt,
            CAST(COUNT(l_orderkey) AS BIGINT) AS matched
@@ -5065,23 +2564,6 @@ def job_q94(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q95(spark: SparkSession, sf_dir: str) -> DataFrame:
-    supp, nation, region, li = _t(
-        spark, sf_dir, "supplier", "nation", "region", "lineitem"
-    )
-    jan = li.filter(_ts_range("l_shipdate", "2000-01-01", "2000-02-01"))
-    return (
-        supp.filter(F.col("s_acctbal") > 3000)
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region.filter(F.col("r_name") == "AMERICA")),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(jan, F.col("l_suppkey") == F.col("s_suppkey"), "left")
-        .agg(
-            F.min("s_suppkey").alias("min_supp"),
-            F.count(F.lit(1)).alias("cnt"),
-            F.count("l_orderkey").alias("matched"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -5090,9 +2572,9 @@ def job_q95(spark: SparkSession, sf_dir: str) -> DataFrame:
 # structurally distinguishable graph/predicate combination, not a clone.
 
 # mid-chain-only selectivity: ALL filtering sits on orders, ends open.
-@register(
+register_sql(
     "job_q96",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5103,24 +2585,12 @@ def job_q95(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q96(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation = _t(spark, sf_dir, "lineitem", "orders", "customer", "nation")
-    return (
-        li.join(orders.filter((F.col("o_orderpriority") == "5-LOW")
-                              & (F.col("o_totalprice") < 20000)),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .agg(F.min("l_orderkey").alias("min_orderkey"),
-             F.min("n_name").alias("min_nation"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # IN + NOT IN mixed on one dim, IN on another.
-@register(
+register_sql(
     "job_q97",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5132,26 +2602,12 @@ def job_q96(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q97(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part, supp, nation = _t(spark, sf_dir, "lineitem", "part", "supplier", "nation")
-    return (
-        li.join(part.filter(F.col("p_brand").isin("Brand#6", "Brand#16")
-                            & ~F.col("p_size").isin(1, 2, 3)),
-                F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation.filter(F.col("n_name").isin(
-            "NATION_3", "NATION_8", "NATION_13"))),
-            F.col("s_nationkey") == F.col("n_nationkey"))
-        .agg(F.min("l_orderkey").alias("min_orderkey"),
-             F.min("p_name").alias("min_part"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # same-region BOTH sides + nation inequality (intra-EUROPE cross-border).
-@register(
+register_sql(
     "job_q98",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(cn.n_name) AS min_cust_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5168,39 +2624,12 @@ def job_q97(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q98(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, supp = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region", "supplier"
-    )
-    cn = nation.select(F.col("n_nationkey").alias("cn_key"),
-                       F.col("n_name").alias("cn_name"),
-                       F.col("n_regionkey").alias("cn_reg"))
-    sn = nation.select(F.col("n_nationkey").alias("sn_key"),
-                       F.col("n_regionkey").alias("sn_reg"))
-    cr = region.filter(F.col("r_name") == "EUROPE").select(
-        F.col("r_regionkey").alias("cr_key"))
-    sr = region.filter(F.col("r_name") == "EUROPE").select(
-        F.col("r_regionkey").alias("sr_key"))
-    return (
-        li.filter(_ts_range("l_shipdate", "1999-06-01", "1999-09-01"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(cr), F.col("cn_reg") == F.col("cr_key"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(sn), (F.col("s_nationkey") == F.col("sn_key"))
-              & (F.col("cn_key") != F.col("sn_key")))
-        .join(F.broadcast(sr), F.col("sn_reg") == F.col("sr_key"))
-        .agg(F.min("l_orderkey").alias("min_orderkey"),
-             F.min("cn_name").alias("min_cust_nation"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # semi on one dim, anti on another, both from the fact.
-@register(
+register_sql(
     "job_q99",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            CAST(COUNT(*) AS BIGINT) AS cnt
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -5210,26 +2639,12 @@ def job_q98(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q99(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, part, supp = _t(spark, sf_dir, "lineitem", "orders", "part", "supplier")
-    med = part.filter(F.col("p_type") == "MEDIUM").select(
-        F.col("p_partkey").alias("m_pk"))
-    neg = supp.filter(F.col("s_acctbal") < 0).select(
-        F.col("s_suppkey").alias("n_sk"))
-    return (
-        li.join(orders.filter(F.col("o_orderdate") >= F.lit("2001-01-01")),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(med, F.col("l_partkey") == F.col("m_pk"), "left_semi")
-        .join(neg, F.col("l_suppkey") == F.col("n_sk"), "left_anti")
-        .agg(F.min("l_orderkey").alias("min_orderkey"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # date theta INSIDE the join condition: late shipments (> order + 60 days).
-@register(
+register_sql(
     "job_q100",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(c_name) AS min_cust,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5240,26 +2655,12 @@ def job_q99(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q100(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
-    return (
-        li.join(
-            orders.filter(F.col("o_orderpriority") == "1-URGENT"),
-            (F.col("l_orderkey") == F.col("o_orderkey"))
-            & (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAY")),
-        )
-        .join(cust.filter(F.col("c_mktsegment") == "BUILDING"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .agg(F.min("l_orderkey").alias("min_orderkey"),
-             F.min("c_name").alias("min_cust"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # rare-adjective LIKE + supplier suffix + singleton IN.
-@register(
+register_sql(
     "job_q101",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5271,25 +2672,12 @@ def job_q100(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q101(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part, supp, orders = _t(spark, sf_dir, "lineitem", "part", "supplier", "orders")
-    return (
-        li.join(part.filter(F.col("p_name").like("cold%")),
-                F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp.filter(F.col("s_name").like("%5")),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(orders.filter(F.col("o_orderpriority").isin("2-HIGH")),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .agg(F.min("l_orderkey").alias("min_orderkey"),
-             F.min("p_name").alias("min_part"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # behavioral leg with a value band, joined into the relational chain.
-@register(
+register_sql(
     "job_q102",
-    oracle="""
+    """
     SELECT CAST(MIN(event_id) AS BIGINT) AS min_event,
            CAST(MIN(o_orderkey) AS BIGINT) AS min_orderkey,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5301,26 +2689,12 @@ def job_q101(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q102(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events, cust, orders, nation = _t(
-        spark, sf_dir, "events", "customer", "orders", "nation"
-    )
-    return (
-        events.filter((F.col("event_type") == "click") & (F.col("value") > 350))
-        .join(cust, F.col("user_id") == F.col("c_custkey"))
-        .join(orders.filter(_ts_range("o_orderdate", "2000-01-01", "2001-01-01")),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .agg(F.min("event_id").alias("min_event"),
-             F.min("o_orderkey").alias("min_orderkey"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # orders x3 variant keyed on STATUS (not year): one P, one O, one F.
-@register(
+register_sql(
     "job_q103",
-    oracle="""
+    """
     SELECT CAST(MIN(c_custkey) AS BIGINT) AS min_cust,
            CAST(MIN(o1.o_orderkey) AS BIGINT) AS min_p_order,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5334,29 +2708,12 @@ def job_q102(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q103(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = _t(spark, sf_dir, "customer", "orders")
-    big = orders.filter(F.col("o_totalprice") > 300000)
-
-    def st(tag, status):
-        return big.filter(F.col("o_orderstatus") == status).select(
-            F.col("o_custkey").alias(f"{tag}_ck"),
-            F.col("o_orderkey").alias(f"{tag}_ok"))
-
-    return (
-        cust.join(st("o1", "P"), F.col("o1_ck") == F.col("c_custkey"))
-        .join(st("o2", "O"), F.col("o2_ck") == F.col("c_custkey"))
-        .join(st("o3", "F"), F.col("o3_ck") == F.col("c_custkey"))
-        .agg(F.min("c_custkey").alias("min_cust"),
-             F.min("o1_ok").alias("min_p_order"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # anti whose exclusion predicate is itself a DISJUNCTION.
-@register(
+register_sql(
     "job_q104",
-    oracle="""
+    """
     SELECT CAST(MIN(c_custkey) AS BIGINT) AS min_cust,
            MIN(n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5368,27 +2725,14 @@ def job_q103(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q104(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, nation, orders = _t(spark, sf_dir, "customer", "nation", "orders")
-    excl = orders.filter((F.col("o_orderstatus") == "P")
-                         | (F.col("o_totalprice") > 450000)).select(
-        F.col("o_custkey").alias("x_ck"))
-    return (
-        cust.filter(F.col("c_acctbal") > 9000)
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(excl, F.col("c_custkey") == F.col("x_ck"), "left_anti")
-        .agg(F.min("c_custkey").alias("min_cust"),
-             F.min("n_name").alias("min_nation"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # CROSS-TABLE correlated scalar: supplier balance vs the average CUSTOMER
 # balance of the supplier's own nation — the correlation key bridges two
 # different dimension tables.
-@register(
+register_sql(
     "job_q105",
-    oracle="""
+    """
     SELECT CAST(MIN(s_suppkey) AS BIGINT) AS min_supp,
            MIN(n_name) AS min_nation,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5400,29 +2744,13 @@ def job_q104(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q105(spark: SparkSession, sf_dir: str) -> DataFrame:
-    supp, nation, cust = _t(spark, sf_dir, "supplier", "nation", "customer")
-    avg_bal = cust.groupBy(F.col("c_nationkey").alias("ab_nat")).agg(
-        F.avg("c_acctbal").alias("avg_bal"))
-    return (
-        # avg_bal is <= 25 rows (one per nation) but the static hint lint
-        # cannot prove an Aggregate bound — leave the strategy to CBO/AQE,
-        # which broadcasts it at runtime from observed size
-        supp.join(avg_bal, F.col("s_nationkey") == F.col("ab_nat"))
-        .filter(F.col("s_acctbal") > F.col("avg_bal"))
-        .join(F.broadcast(nation.filter(F.col("n_name").like("NATION_2%"))),
-              F.col("s_nationkey") == F.col("n_nationkey"))
-        .agg(F.min("s_suppkey").alias("min_supp"),
-             F.min("n_name").alias("min_nation"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # derived-month equality (function-wrapped date: December orders of any
 # year) + a tight price band — unpushable date predicate by design.
-@register(
+register_sql(
     "job_q106",
-    oracle="""
+    """
     SELECT CAST(MIN(o_orderkey) AS BIGINT) AS min_orderkey,
            MIN(c_name) AS min_cust,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5433,24 +2761,13 @@ def job_q105(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q106(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, cust = _t(spark, sf_dir, "orders", "customer")
-    return (
-        orders.filter((F.month("o_orderdate") == 12)
-                      & F.col("o_totalprice").between(350000, 450000))
-        .join(cust.filter(F.col("c_acctbal") < 500),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .agg(F.min("o_orderkey").alias("min_orderkey"),
-             F.min("c_name").alias("min_cust"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # all-dims star with regionkey literals on both nation copies and a
 # quantity EQUALITY (the rarest fact predicate form).
-@register(
+register_sql(
     "job_q107",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5466,36 +2783,13 @@ def job_q106(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q107(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, part, supp, nation = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "part", "supplier", "nation"
-    )
-    cn = nation.filter(F.col("n_regionkey") == 2).select(
-        F.col("n_nationkey").alias("cn_key"))
-    sn = nation.filter(F.col("n_regionkey") == 3).select(
-        F.col("n_nationkey").alias("sn_key"))
-    return (
-        li.filter(F.col("l_quantity") == 1)
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(F.col("c_acctbal") > 0),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(part.filter(F.col("p_size") < 25),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp.filter(F.col("s_acctbal") > 0),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .agg(F.min("l_orderkey").alias("min_orderkey"),
-             F.min("p_name").alias("min_part"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # same-part cross-ORDER self-join with a time-inversion theta (an earlier
 # ship in a later order) — two theta terms on different columns.
-@register(
+register_sql(
     "job_q108",
-    oracle="""
+    """
     SELECT CAST(MIN(l1.l_orderkey) AS BIGINT) AS min_o1,
            CAST(MIN(l2.l_orderkey) AS BIGINT) AS min_o2,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5509,33 +2803,14 @@ def job_q107(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q108(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, part = _t(spark, sf_dir, "lineitem", "part")
-    l1 = li.filter(F.col("l_shipdate") >= F.lit("2001-06-01")).select(
-        F.col("l_orderkey").alias("l1_ok"),
-        F.col("l_partkey").alias("l1_pk"),
-        F.col("l_shipdate").alias("l1_sd"))
-    l2 = li.select(F.col("l_orderkey").alias("l2_ok"),
-                   F.col("l_partkey").alias("l2_pk"),
-                   F.col("l_shipdate").alias("l2_sd"))
-    return (
-        l1.join(l2, (F.col("l1_pk") == F.col("l2_pk"))
-                & (F.col("l1_ok") < F.col("l2_ok"))
-                & (F.col("l2_sd") < F.col("l1_sd")))
-        .join(part.filter((F.col("p_type") == "PROMO") & (F.col("p_size") > 45)),
-              F.col("l1_pk") == F.col("p_partkey"))
-        .agg(F.min("l1_ok").alias("min_o1"),
-             F.min("l2_ok").alias("min_o2"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # aggregate OF an aggregate as the graph node: per-nation average of the
 # per-customer lifetime totals — two grouping levels before any dim join.
-@register(
+register_sql(
     "job_q109",
-    oracle="""
-    SELECT CAST(MIN(n_nationkey) AS BIGINT) AS min_nation_key,
+    """
+    SELECT CAST(MIN(n_nationkey) AS INT) AS min_nation_key,
            MIN(n_name) AS min_nation,
            ROUND(MIN(avg_tot), 2) AS min_avg_total,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5549,32 +2824,13 @@ def job_q108(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q109(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders, nation = _t(spark, sf_dir, "customer", "orders", "nation")
-    per_cust = (
-        cust.join(orders, F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("c_custkey", "c_nationkey")
-        .agg(F.sum("o_totalprice").alias("tot"))
-    )
-    per_nation = (
-        per_cust.groupBy(F.col("c_nationkey").alias("nk"))
-        .agg(F.avg("tot").alias("avg_tot"))
-        .filter(F.col("avg_tot") > 400000)
-    )
-    return (
-        per_nation.join(F.broadcast(nation), F.col("nk") == F.col("n_nationkey"))
-        .agg(F.min("n_nationkey").alias("min_nation_key"),
-             F.min("n_name").alias("min_nation"),
-             F.round(F.min("avg_tot"), R2).alias("min_avg_total"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # EXISTS whose inner body is a 2-way join WITH a LIKE — the semi branch
 # carries its own string predicate.
-@register(
+register_sql(
     "job_q110",
-    oracle="""
+    """
     SELECT CAST(MIN(p_partkey) AS BIGINT) AS min_part,
            MIN(p_name) AS min_name,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5586,28 +2842,13 @@ def job_q109(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q110(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part, li, supp = _t(spark, sf_dir, "part", "lineitem", "supplier")
-    inner = (
-        li.filter(F.col("l_quantity") > 30)
-        .join(supp.filter(F.col("s_name").like("%99")),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(F.col("l_partkey").alias("i_pk"))
-    )
-    return (
-        part.filter(F.col("p_name").like("new%"))
-        .join(inner, F.col("p_partkey") == F.col("i_pk"), "left_semi")
-        .agg(F.min("p_partkey").alias("min_part"),
-             F.min("p_name").alias("min_name"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # outer join BELOW a dim equality: the nation filter must still apply to
 # null-extended customers (it sits on the preserved side).
-@register(
+register_sql(
     "job_q111",
-    oracle="""
+    """
     SELECT CAST(MIN(c_custkey) AS BIGINT) AS min_cust,
            CAST(COUNT(*) AS BIGINT) AS cnt,
            CAST(COUNT(o_orderkey) AS BIGINT) AS matched
@@ -5619,23 +2860,12 @@ def job_q110(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q111(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders, nation = _t(spark, sf_dir, "customer", "orders", "nation")
-    early = orders.filter(_ts_range("o_orderdate", "1995-01-01", "1995-03-01"))
-    return (
-        cust.join(early, F.col("o_custkey") == F.col("c_custkey"), "left")
-        .join(F.broadcast(nation.filter(F.col("n_name") == "NATION_11")),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .agg(F.min("c_custkey").alias("min_cust"),
-             F.count(F.lit(1)).alias("cnt"),
-             F.count("o_orderkey").alias("matched"))
-    )
 
 
 # IN-subquery against a WINDOW-derived set (top-3 orders per status).
-@register(
+register_sql(
     "job_q112",
-    oracle="""
+    """
     SELECT CAST(MIN(o_orderkey) AS BIGINT) AS min_orderkey,
            ROUND(MIN(o_totalprice), 2) AS min_price,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -5648,33 +2878,13 @@ def job_q111(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q112(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    (orders,) = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderstatus").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    top3 = (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select(F.col("o_orderkey").alias("t_ok"))
-    )
-    return (
-        # top3 is <= 3 rows per status (rn <= 3) but the bound sits behind a
-        # window filter the hint lint cannot prove — AQE broadcasts the
-        # semi side at runtime from its observed size
-        orders.join(top3, F.col("o_orderkey") == F.col("t_ok"), "left_semi")
-        .agg(F.min("o_orderkey").alias("min_orderkey"),
-             F.round(F.min("o_totalprice"), R2).alias("min_price"),
-             F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 # closing kitchen sink: 8 relations + a behavioral semi + two NOT LIKEs +
 # a band + a suffix LIKE + an IN — the 113th query.
-@register(
+register_sql(
     "job_q113",
-    oracle="""
+    """
     SELECT CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
            MIN(p_name) AS min_part,
            MIN(cn.n_name) AS min_cust_nation,
@@ -5698,35 +2908,3 @@ def job_q112(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("job",),
 )
-def job_q113(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, nation, region, supp, part, events = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "region",
-        "supplier", "part", "events"
-    )
-    cn = nation.select(F.col("n_nationkey").alias("cn_key"),
-                       F.col("n_name").alias("cn_name"),
-                       F.col("n_regionkey").alias("cn_reg"))
-    cr = region.filter(F.col("r_name").isin("ASIA", "MIDDLE EAST")).select(
-        F.col("r_regionkey").alias("cr_key"))
-    sn = nation.filter(~F.col("n_name").like("%_2")).select(
-        F.col("n_nationkey").alias("sn_key"))
-    viewers = events.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("vw_uid"))
-    return (
-        li.filter(F.col("l_quantity").between(10, 20))
-        .join(orders.filter(F.col("o_totalprice") > 50000),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(~F.col("c_name").like("%7")),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(viewers, F.col("c_custkey") == F.col("vw_uid"), "left_semi")
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(cr), F.col("cn_reg") == F.col("cr_key"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .join(part.filter(F.col("p_name").like("%bolt")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .agg(F.min("l_orderkey").alias("min_orderkey"),
-             F.min("p_name").alias("min_part"),
-             F.min("cn_name").alias("min_cust_nation"),
-             F.count(F.lit(1)).alias("cnt"))
-    )

@@ -25,7 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from hyrise_spark.catalog import load_tables
-from hyrise_spark.registry import register
+from hyrise_spark.registry import register, register_sql
 
 
 def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
@@ -778,21 +778,16 @@ _RECURSIVE_MONTHS_SQL = """
 """
 
 
-@register(
+# Gap-filling month dimension: recursion generates the 12 month starts
+# of 1997, LEFT JOIN keeps zero-order months (plain GROUP BY cannot).
+#
+# Scale: the recursive branch generates 12 driver-light rows; only the
+# probe side (orders, filtered by the join range) is distributed.
+register_sql(
     "cte_recursive_month_series",
-    oracle=_RECURSIVE_MONTHS_SQL,
+    _RECURSIVE_MONTHS_SQL,
     tags=("cte", "recursive"),
 )
-def cte_recursive_month_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-filling month dimension: recursion generates the 12 month starts
-    of 1997, LEFT JOIN keeps zero-order months (plain GROUP BY cannot).
-
-    Scale: the recursive branch generates 12 driver-light rows; only the
-    probe side (orders, filtered by the join range) is distributed.
-    """
-    (orders,) = _t(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("orders")
-    return spark.sql(_RECURSIVE_MONTHS_SQL)
 
 
 _RECURSIVE_CHAIN_SQL = """
@@ -873,19 +868,14 @@ _LATERAL_TOPK_SQL = """
 """
 
 
-@register(
+# Top-2 customers per nation via a correlated LATERAL subquery — the
+# SQL-standard form of greatest-per-group (Catalyst decorrelates it to the
+# same window/top-k plan the DataFrame form produces).
+register_sql(
     "lateral_topk_per_group",
-    oracle=_LATERAL_TOPK_SQL,
+    _LATERAL_TOPK_SQL,
     tags=("lateral", "topk"),
 )
-def lateral_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-2 customers per nation via a correlated LATERAL subquery — the
-    SQL-standard form of greatest-per-group (Catalyst decorrelates it to the
-    same window/top-k plan the DataFrame form produces)."""
-    nation, cust = _t(spark, sf_dir, "nation", "customer")
-    nation.createOrReplaceTempView("nation")
-    cust.createOrReplaceTempView("customer")
-    return spark.sql(_LATERAL_TOPK_SQL)
 
 
 _LATERAL_AGG_SQL = """
@@ -899,19 +889,14 @@ _LATERAL_AGG_SQL = """
 """
 
 
-@register(
+# Per-part shipment stats through a correlated LATERAL aggregate
+# (decorrelates to an outer join against a pre-aggregation — the
+# SubqueryToJoinRule shape at LATERAL syntax level).
+register_sql(
     "lateral_correlated_agg",
-    oracle=_LATERAL_AGG_SQL,
+    _LATERAL_AGG_SQL,
     tags=("lateral", "aggregate"),
 )
-def lateral_correlated_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-part shipment stats through a correlated LATERAL aggregate
-    (decorrelates to an outer join against a pre-aggregation — the
-    SubqueryToJoinRule shape at LATERAL syntax level)."""
-    part, li = _t(spark, sf_dir, "part", "lineitem")
-    part.createOrReplaceTempView("part")
-    li.createOrReplaceTempView("lineitem")
-    return spark.sql(_LATERAL_AGG_SQL)
 
 
 # -- ASOF JOIN SQL dialect (DuckDB/QuestDB syntax; beyond the reference's
@@ -1018,17 +1003,14 @@ _GBA_SQL = """
 """
 
 
-@register(
+# GROUP BY ALL / ORDER BY ALL (DuckDB-origin dialect, native in both
+# Spark 4 and DuckDB): the IDENTICAL text runs on both engines — two
+# independent implementations of the clause inference.
+register_sql(
     "agg_group_by_all",
-    oracle=_GBA_SQL,
+    _GBA_SQL,
     tags=("aggregate", "sql"),
 )
-def agg_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY ALL / ORDER BY ALL (DuckDB-origin dialect, native in both
-    Spark 4 and DuckDB): the IDENTICAL text runs on both engines — two
-    independent implementations of the clause inference."""
-    load_tables(spark, sf_dir, ("lineitem",))
-    return spark.sql(_GBA_SQL)
 
 
 # -- round 9: dialect wave 3 (DISTINCT ON, star modifiers) -------------------
@@ -1167,17 +1149,14 @@ _STRING_FNS_SQL = """
 """
 
 
-@register(
+# String-function vocabulary differential: levenshtein, split_part,
+# translate, lpad, reverse, repeat, POSITION — all JVM-side built-ins
+# inside one whole-stage-codegen projection (no shuffle, no UDF).
+register_sql(
     "projection_string_functions",
-    oracle=_STRING_FNS_SQL,
+    _STRING_FNS_SQL,
     tags=("projection", "functions", "sql"),
 )
-def projection_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String-function vocabulary differential: levenshtein, split_part,
-    translate, lpad, reverse, repeat, POSITION — all JVM-side built-ins
-    inside one whole-stage-codegen projection (no shuffle, no UDF)."""
-    load_tables(spark, sf_dir, ("documents",))
-    return spark.sql(_STRING_FNS_SQL)
 
 
 # -- round 9: table-function + array surface ---------------------------------
@@ -1189,17 +1168,15 @@ _RANGE_TVF_SQL = """
 """
 
 
-@register(
+# range() table-valued function (the reference's closest analog is the
+# static/dummy table node, static_table_node.hpp): IDENTICAL text on both
+# engines incl. the `t(x)` derived-column alias. Spark plans a Range
+# operator — a generated, partitioned source with no scan at all.
+register_sql(
     "table_function_range",
-    oracle=_RANGE_TVF_SQL,
+    _RANGE_TVF_SQL,
     tags=("source", "tvf", "sql"),
 )
-def table_function_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """range() table-valued function (the reference's closest analog is the
-    static/dummy table node, static_table_node.hpp): IDENTICAL text on both
-    engines incl. the `t(x)` derived-column alias. Spark plans a Range
-    operator — a generated, partitioned source with no scan at all."""
-    return spark.sql(_RANGE_TVF_SQL)
 
 
 _UNNEST_ORACLE = """

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
 from hyrise_spark.catalog import load_tables
-from hyrise_spark.registry import register
+from hyrise_spark.registry import register, register_sql
 
 
 def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
@@ -377,17 +377,14 @@ _NAMED_WINDOW_SQL = """
 """
 
 
-@register(
+# WINDOW w AS (...): one named spec shared by several window functions —
+# the IDENTICAL text runs on both engines (independent implementations of
+# the name resolution + shared-frame semantics).
+register_sql(
     "window_named_clause",
-    oracle=_NAMED_WINDOW_SQL,
+    _NAMED_WINDOW_SQL,
     tags=("window", "sql"),
 )
-def window_named_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WINDOW w AS (...): one named spec shared by several window functions —
-    the IDENTICAL text runs on both engines (independent implementations of
-    the name resolution + shared-frame semantics)."""
-    load_tables(spark, sf_dir, ("lineitem",))
-    return spark.sql(_NAMED_WINDOW_SQL)
 
 
 # -- round 9: frame EXCLUDE CURRENT ROW (SQL:2011 frame exclusion) -----------
@@ -652,17 +649,14 @@ _WINDOW_MEDIAN_SQL = """
 """
 
 
-@register(
+# Exact per-partition MEDIAN as a window aggregate — same text on
+# both engines (independent implementations of the partition-only
+# window median).
+register_sql(
     "window_median_partition",
-    oracle=_WINDOW_MEDIAN_SQL,
+    _WINDOW_MEDIAN_SQL,
     tags=("window", "median", "sql"),
 )
-def window_median_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-partition MEDIAN as a window aggregate — same text on
-    both engines (independent implementations of the partition-only
-    window median)."""
-    load_tables(spark, sf_dir, ("lineitem",))
-    return spark.sql(_WINDOW_MEDIAN_SQL)
 
 
 # -- round 11: EXCLUDE GROUP / TIES under ROWS-mode frames -------------------

@@ -1,17 +1,32 @@
 """Query registry — the single source of truth for the driver contract.
 
 Every implemented operator/query from SURVEY.md §2 registers itself here with
-a DataFrame builder (Spark-first) and, when SQL-expressible, a DuckDB oracle
-SQL string. `__spark_entry__.py` re-exports this registry as
+a builder `(spark, sf_dir) -> DataFrame` and, when SQL-expressible, a DuckDB
+oracle SQL string. `__spark_entry__.py` re-exports this registry as
 `queries()` / `oracle_sql()`.
+
+Two ways in:
+
+  * `register_sql(name, text, tags)` — the default for any query Spark can
+    run from its SQL text. The text is the oracle AND the builder: the
+    builder loads the base tables the text names and returns
+    `spark.sql(text)`, so DuckDB and Spark run one text and there is no
+    second spelling to drift.
+  * `@register(name, oracle=..., tags=...)` over a hand-written builder —
+    only where a measured reason (a plan or a timing the text cannot reach,
+    a construct Spark SQL lacks, a materialization the text cannot express)
+    is written next to the builder.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from hyrise_spark.catalog import TESTDATA_TABLES, load_tables
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -22,6 +37,8 @@ class QueryDef:
     builder: QueryFn
     oracle: Optional[str]  # DuckDB SQL, or None -> rows-only check
     tags: tuple[str, ...] = field(default_factory=tuple)
+    # base tables a register_sql builder loads; None for hand builders
+    sql_tables: Optional[tuple[str, ...]] = None
 
 
 _REGISTRY: dict[str, QueryDef] = {}
@@ -37,6 +54,24 @@ def register(name: str, oracle: Optional[str] = None, tags: tuple[str, ...] = ()
         return fn
 
     return deco
+
+
+def register_sql(name: str, text: str, tags: tuple[str, ...] = ()) -> None:
+    """Register a query whose SQL text is both its DuckDB oracle and its
+    Spark builder.
+
+    The builder registers views for only the base tables named in the text,
+    then returns `spark.sql(text)`. Registering a view is not free: on a
+    4-core VM, all 10 base tables took ~50 ms per call and 4 took ~15 ms.
+    """
+    tables = tuple(t for t in TESTDATA_TABLES if re.search(rf"\b{t}\b", text))
+
+    def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
+        load_tables(spark, sf_dir, tables)
+        return spark.sql(text)
+
+    register(name, oracle=text, tags=tags)(builder)
+    _REGISTRY[name].sql_tables = tables
 
 
 def all_queries() -> dict[str, QueryDef]:

@@ -232,3 +232,31 @@ def test_gopher_rules_flag_separates(spark):
     # cap each exist in the corpus
     assert any(not (20 <= r.n_words <= 90) for r in rows)
     assert any(r.stop_hits < 2 for r in rows)
+
+
+def test_langid_metrics_same_rows_under_ansi(spark, tmp_path):
+    """A true label the classifier never predicts has tp + fp = 0: its
+    precision is NULL, not a DIVIDE_BY_ZERO error, so the query returns
+    the same rows with spark.sql.ansi.enabled on and off."""
+    from hyrise_spark.pipeline.text import text_langid_metrics
+
+    df = spark.createDataFrame(
+        [
+            (0, "the cat and a dog", "en", "s", 17),
+            (1, "the bird and a fish", "de", "s", 19),
+        ],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    path = str(tmp_path / "docs")
+    df.repartition(1).write.parquet(path + "/documents.parquet")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        off = text_langid_metrics(spark, path).collect()
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        on = text_langid_metrics(spark, path).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert on == off
+    de = next(r for r in off if r.lang == "de")
+    assert (de.tp, de.fp, de.fn) == (0, 0, 1) and de.precision is None

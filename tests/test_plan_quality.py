@@ -598,9 +598,37 @@ def _unbounded_global_windows(df) -> list[str]:
     return hits
 
 
+def _first_query_per_first_tag() -> list[str]:
+    """Default-run smoke subset of the two registry-wide sweeps below: the
+    lexicographically first query of each first tag (one per family, so a
+    plan-hygiene regression in a shared mechanism still shows without the
+    full 515-build sweep)."""
+    first: dict[str, str] = {}
+    for name in sorted(QUERIES):
+        tags = QUERIES[name].tags
+        first.setdefault(tags[0] if tags else "", name)
+    return sorted(first.values())
+
+
+_SMOKE_QUERIES = _first_query_per_first_tag()
+
+
+def test_smoke_subset_covers_register_sql():
+    assert any(QUERIES[n].sql_tables is not None for n in _SMOKE_QUERIES)
+
+
 @pytest.mark.slow  # registry-wide sweep (515 plan builds, ~4 min) — full run only
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_registry_plan_hygiene(spark, name):
+    _assert_plan_hygiene(spark, name)
+
+
+@pytest.mark.parametrize("name", _SMOKE_QUERIES)
+def test_registry_plan_hygiene_smoke(spark, name):
+    _assert_plan_hygiene(spark, name)
+
+
+def _assert_plan_hygiene(spark, name):
     """Every registered query, explain-only: (1) no CartesianProduct — the
     documented all-pairs baselines use a broadcast nested-loop with a
     constant-bounded build side, never a shuffled cartesian; (2) no row-wise
@@ -790,6 +818,15 @@ def _unbounded_broadcast_hints(df) -> list[str]:
 @pytest.mark.slow  # registry-wide sweep (515 plan builds, ~1.5 min) — full run only
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_registry_no_unbounded_broadcast_hints(spark, name):
+    _assert_no_unbounded_broadcast_hints(spark, name)
+
+
+@pytest.mark.parametrize("name", _SMOKE_QUERIES)
+def test_registry_no_unbounded_broadcast_hints_smoke(spark, name):
+    _assert_no_unbounded_broadcast_hints(spark, name)
+
+
+def _assert_no_unbounded_broadcast_hints(spark, name):
     """Every registered query: no broadcast hint may force a frame that
     scales with data volume into the 8 GB broadcast dead-end. Bounded
     frames (limits, scalar aggs, nation/region, literal codebooks) may keep

@@ -18,6 +18,7 @@ oracle sweep already pays.
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 
 from pyspark.sql import types as T
@@ -45,3 +46,30 @@ def test_no_complex_types_in_registered_outputs(spark):
         "(stringify with array_join/to_json at the boundary):\n"
         + "\n".join(offenders)
     )
+
+
+QUERIES = all_queries()
+_SQL_QUERIES = sorted(n for n, qd in QUERIES.items() if qd.sql_tables is not None)
+
+
+@pytest.fixture(scope="module")
+def isolated_spark(spark):
+    """A session with its own temp-view namespace (same SparkContext): a
+    text can only see the views its own builder registered."""
+    return spark.newSession()
+
+
+@pytest.mark.parametrize("name", _SQL_QUERIES)
+def test_register_sql_text_reads_only_its_own_views(isolated_spark, duck, name):
+    """register_sql builders: every table the text names is a view the
+    builder itself registers (never one left over from an earlier builder),
+    and Spark's output column names equal DuckDB's for the same text.
+    Analysis only on both engines — no job runs."""
+    qd = QUERIES[name]
+    for t in isolated_spark.catalog.listTables():
+        if t.isTemporary:
+            isolated_spark.catalog.dropTempView(t.name)
+    df = qd.builder(isolated_spark, SF_DIR)
+    views = {t.name for t in isolated_spark.catalog.listTables() if t.isTemporary}
+    assert duckdb.get_table_names(qd.oracle) <= views
+    assert df.columns == duck.sql(qd.oracle).columns
