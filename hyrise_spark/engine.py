@@ -20,7 +20,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hyrise_spark.catalog import Catalog
+from hyrise_spark.catalog import Catalog, read_parquet
 
 _IMPORT_RE = re.compile(
     r"^\s*IMPORT\s+FROM\s+'(?P<path>[^']+)'\s+INTO\s+(?P<table>\w+)\s*$", re.I
@@ -3785,7 +3785,7 @@ class Engine:
         if f in ("BINARY", "BIN"):
             return read_bin(self.spark, path)
         if f == "PARQUET":
-            return self.spark.read.parquet(path)
+            return read_parquet(self.spark, path)
         if f in ("JSONL", "JSON", "NDJSON"):
             # schema-on-read json-lines ingest (beyond the reference's
             # FileType enum, file_type.hpp:9 — but the universal

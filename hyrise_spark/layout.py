@@ -23,6 +23,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hyrise_spark.catalog import read_parquet
+
 
 def _drop_managed(spark: SparkSession, table_name: str) -> None:
     """Drop a managed table AND its warehouse directory.
@@ -200,7 +202,7 @@ def compact_parquet(
         os.path.getsize(f) for f in glob.glob(os.path.join(src, "*.parquet"))
     ) or 1
     n = max(1, math.ceil(total / target_file_bytes))
-    spark.read.parquet(src).repartition(n).write.mode("overwrite").parquet(dst)
+    read_parquet(spark, src).repartition(n).write.mode("overwrite").parquet(dst)
     return n
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 import hyrise_spark.plans.ssb  # noqa: F401  (registers the oracles we reuse)
 import hyrise_spark.plans.tpch  # noqa: F401
-from hyrise_spark.catalog import load_tables
+from hyrise_spark.catalog import load_tables, read_parquet
 from hyrise_spark.registry import _REGISTRY, register
 
 R2 = 2
@@ -48,7 +48,7 @@ def ensure_date_sorted(spark: SparkSession, sf_dir: str) -> str:
 
 @register("tpch_q6_datesorted", oracle=_REGISTRY["tpch_q6"].oracle, tags=("tpch", "datesorted"))
 def tpch_q6_datesorted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(ensure_date_sorted(spark, sf_dir))
+    li = read_parquet(spark, ensure_date_sorted(spark, sf_dir))
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -62,7 +62,7 @@ def tpch_q6_datesorted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("ssb_q1_1_datesorted", oracle=_REGISTRY["ssb_q1_1"].oracle, tags=("ssb", "datesorted"))
 def ssb_q1_1_datesorted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(ensure_date_sorted(spark, sf_dir))
+    li = read_parquet(spark, ensure_date_sorted(spark, sf_dir))
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1997-01-01"))
@@ -115,7 +115,7 @@ def ensure_zordered(spark: SparkSession, sf_dir: str) -> str:
     tags=("scan", "zordered"),
 )
 def scan_multidim_zordered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(ensure_zordered(spark, sf_dir))
+    li = read_parquet(spark, ensure_zordered(spark, sf_dir))
     return (
         li.filter(
             F.col("l_partkey").between(50, 120) & F.col("l_suppkey").between(2, 6)

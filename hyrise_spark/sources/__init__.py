@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hyrise_spark.catalog import read_parquet
 from hyrise_spark.sources.tbl import read_tbl, write_tbl
 from hyrise_spark.sources.csv_meta import read_csv_with_meta, write_csv_with_meta
 
@@ -32,7 +33,7 @@ def read_any(spark: SparkSession, path: str) -> DataFrame:
     if path.endswith(".csv"):
         return read_csv_with_meta(spark, path)
     if path.endswith(".parquet"):
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     if path.endswith((".jsonl", ".ndjson", ".json")):
         return spark.read.json(path)
     if path.endswith(".orc"):
@@ -46,16 +47,11 @@ def read_any(spark: SparkSession, path: str) -> DataFrame:
         # parquet (dir, or file starting with the PAR1 magic) also shipped
         # under .bin before round 4.
         if os.path.isdir(path):
-            return spark.read.parquet(path)
+            return read_parquet(spark, path)
         with open(path, "rb") as fh:
             if fh.read(4) == b"PAR1":
-                return spark.read.parquet(path)
+                return read_parquet(spark, path)
         return read_bin(spark, path)
-    if path.endswith((".json", ".jsonl", ".ndjson")):
-        # line-delimited JSON (the training-data interchange default)
-        return spark.read.json(path)
-    if path.endswith(".orc"):
-        return spark.read.orc(path)
     raise ValueError(
         f"cannot infer file type of {path!r} (want .tbl/.csv/.parquet/.json/.orc)"
     )

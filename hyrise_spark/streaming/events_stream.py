@@ -26,6 +26,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from hyrise_spark.catalog import read_parquet
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -527,7 +529,7 @@ def rollup_maintaining_sink(events: DataFrame, path: str):
         batch_df.write.mode("overwrite").parquet(f"{ingest_dir}/epoch={epoch_id}")
         # the epoch=N layout reads back as a partition column — drop it so
         # the log's schema stays the event schema
-        log = spark.read.parquet(ingest_dir).drop("epoch")
+        log = read_parquet(spark, ingest_dir).drop("epoch")
         refresh_daily_rollup(spark, log, path, days)
 
     return events.writeStream.foreachBatch(refresh).trigger(availableNow=True)
