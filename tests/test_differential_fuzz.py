@@ -140,7 +140,7 @@ def date_predicate(draw) -> str:
         y2, m2 = (y + 1, 1) if m == 12 else (y, m + 1)
         return (f"o_orderdate >= TIMESTAMP '{y}-{m:02d}-01' "
                 f"AND o_orderdate < TIMESTAMP '{y2}-{m2:02d}-01'")
-    if kind == 2:  # OR of two per-year month ranges (the _month_ranges shape)
+    if kind == 2:  # OR of two per-year month ranges (the _any_year_month shape, tpcds_real.py)
         y2 = draw(st.integers(1995, 2001))
         m_end = f"{y + 1}-01-01" if m == 12 else f"{y}-{m + 1:02d}-01"
         m_end2 = f"{y2 + 1}-01-01" if m == 12 else f"{y2}-{m + 1:02d}-01"

@@ -467,12 +467,13 @@ def test_date_filters_reach_scan(spark, name):
 
 
 # Queries allowed to have a date-function filter with no pushed range:
-# tpcds_q68's dayofmonth(o_orderdate) <= 3 would need an OR of 108 per-month
-# ranges to push — measured ~8 us/row (q68 0.39 s -> 1.5 s) while pruning
-# NOTHING here because TIMESTAMP_NTZ columns get no parquet row-group
-# filtering in Spark 4.1 (pinned by
-# test_layout.py::test_date_sorted_layout_skips_row_groups). The scale
-# answer is the write_date_sorted DATE relayout, not the predicate rewrite.
+# tpcds_q68's EXTRACT(DAY FROM o_orderdate) <= 3 would need an OR of 108
+# per-month ranges to push, which prunes NOTHING here because TIMESTAMP_NTZ
+# columns get no parquet row-group filtering in Spark 4.1 (pinned by
+# test_layout.py::test_date_sorted_layout_skips_row_groups). The measured
+# cost of that OR sits next to the q68 text in plans/tpcds_real.py. The
+# scale answer is the write_date_sorted DATE relayout, not the predicate
+# rewrite.
 _DATE_FN_FILTER_ALLOWLIST: set[str] = {
     "tpcds_q68",
     # job_q106's month(o_orderdate) = 12 ("any December") is the JOB

@@ -18,6 +18,8 @@ oracle sweep already pays.
 
 from __future__ import annotations
 
+import re
+
 import duckdb
 import pytest
 
@@ -73,3 +75,110 @@ def test_register_sql_text_reads_only_its_own_views(isolated_spark, duck, name):
     views = {t.name for t in isolated_spark.catalog.listTables() if t.isTemporary}
     assert duckdb.get_table_names(qd.oracle) <= views
     assert df.columns == duck.sql(qd.oracle).columns
+
+
+# Spellings that parse in both engines but do not mean the same thing in
+# both (or that Spark rejects). Each entry: the pattern, then the portable
+# spelling that gives one value in both engines.
+_DIALECT_TRAPS = [
+    (
+        re.compile(r"EXTRACT\s*\(\s*(DOW|DAYOFWEEK|ISODOW)\b", re.I),
+        "weekday: write EXTRACT(DAY FROM col - TIMESTAMP '1970-01-04') % 7 "
+        "(0 = Sunday); DuckDB's DOW counts 0-6 from Sunday, Spark's 1-7",
+    ),
+    (
+        re.compile(r"\b(dayofweek|weekday)\s*\(", re.I),
+        "weekday: write EXTRACT(DAY FROM col - TIMESTAMP '1970-01-04') % 7 "
+        "(0 = Sunday); dayofweek() counts 0-6 in DuckDB and 1-7 in Spark",
+    ),
+    (
+        re.compile(r"\bdate_?diff\s*\(\s*'", re.I),
+        "day difference: write EXTRACT(DAY FROM b - a); Spark rejects a "
+        "quoted date_diff unit",
+    ),
+    (
+        re.compile(r"(?<![\w.])(\d+\.\d*\s*/\s*\d|\d+\s*/\s*\d+\.\d)"),
+        "fraction: write CAST(2 AS DOUBLE) / 3; Spark types a decimal-literal "
+        "division such as 2.0 / 3.0 as DECIMAL(8,6) = 0.666667, DuckDB as DOUBLE",
+    ),
+]
+
+
+def _dialect_trap(text: str) -> str | None:
+    for pattern, fix in _DIALECT_TRAPS:
+        m = pattern.search(text)
+        if m:
+            return f"{m.group(0)!r} — {fix}"
+    return None
+
+
+@pytest.mark.parametrize("name", _SQL_QUERIES)
+def test_register_sql_text_uses_portable_spellings(name):
+    """A register_sql text runs verbatim in both engines, so a spelling
+    whose value differs between them breaks the oracle silently (the
+    parent TPC-DS oracles hit all four: q2/q43/q46 weekday, q50/q62/q99
+    date_diff, q21's 2.0 / 3.0 dropping a boundary row)."""
+    trap = _dialect_trap(QUERIES[name].oracle)
+    assert trap is None, f"{name}: {trap}"
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        "SELECT EXTRACT(DOW FROM o_orderdate) FROM orders",
+        "SELECT extract(isodow from o_orderdate) FROM orders",
+        "SELECT dayofweek(o_orderdate) FROM orders",
+        "SELECT date_diff('day', o_orderdate, l_shipdate) FROM orders",
+        "SELECT * FROM t WHERE a / b >= 2.0 / 3.0",
+        "SELECT * FROM t WHERE a / b >= 2 / 3.0",
+    ],
+)
+def test_dialect_lint_catches_each_trap(text):
+    assert _dialect_trap(text) is not None
+
+
+def test_dialect_lint_passes_portable_spellings():
+    assert _dialect_trap(
+        "SELECT EXTRACT(DAY FROM o_orderdate - TIMESTAMP '1970-01-04') % 7,"
+        " EXTRACT(DAY FROM l_shipdate - o_orderdate), CAST(2 AS DOUBLE) / 3,"
+        " ROUND(x, 2) / COUNT(*), l_extendedprice * 0.5 FROM lineitem"
+    ) is None
+
+
+def test_portable_spellings_agree_between_engines(spark, duck):
+    """The three portable spellings give the same value in Spark and DuckDB
+    on every lineitem x orders row, and each equals the engine's own native
+    form (DuckDB dayofweek / date_diff, Spark dayofweek - 1 / datediff)."""
+    from hyrise_spark.catalog import load_tables
+
+    portable = """
+        SELECT l_orderkey, l_linenumber,
+               EXTRACT(DAY FROM o_orderdate - TIMESTAMP '1970-01-04') % 7 AS dow,
+               EXTRACT(DAY FROM l_shipdate - o_orderdate) AS ship_days,
+               CAST(2 AS DOUBLE) / 3 AS frac
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    """
+    session = spark.newSession()
+    load_tables(session, SF_DIR, ("lineitem", "orders"))
+    s_rows = sorted(tuple(r) for r in session.sql(portable).collect())
+    d_rows = sorted(duck.sql(portable).fetchall())
+    assert s_rows and s_rows == d_rows
+    assert s_rows[0][4] == 2 / 3
+
+    def native_mismatches(native_dow: str, native_days: str) -> str:
+        return f"""
+            SELECT CAST(SUM(CASE WHEN
+                     EXTRACT(DAY FROM o_orderdate - TIMESTAMP '1970-01-04') % 7 <> {native_dow}
+                     OR EXTRACT(DAY FROM l_shipdate - o_orderdate) <> {native_days}
+                   THEN 1 ELSE 0 END) AS BIGINT)
+            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        """
+
+    assert duck.sql(native_mismatches(
+        "dayofweek(o_orderdate)", "date_diff('day', o_orderdate, l_shipdate)"
+    )).fetchone()[0] == 0
+    assert session.sql(native_mismatches(
+        "dayofweek(o_orderdate) - 1", "datediff(l_shipdate, o_orderdate)"
+    )).collect()[0][0] == 0
+    # the trap itself: Spark's decimal-literal division is not 2/3
+    assert float(session.sql("SELECT 2.0 / 3.0 AS f").collect()[0][0]) == 0.666667
