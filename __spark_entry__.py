@@ -32,9 +32,9 @@ if _REPO not in sys.path:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1 pricing summary) on /root/testdata/sf0.001."""
-    from hyrise_spark.plans.tpch import tpch_q1
+    from hyrise_spark.registry import all_queries
 
-    return tpch_q1(spark, "/root/testdata/sf0.001")
+    return all_queries()["tpch_q1"].builder(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1458,9 +1458,9 @@ def curate_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partial-agg aggregate or an anti-join on the key — no rule materializes
 # violating ROWS (the report is counts; a drill-down query filters on the
 # same predicate).
-@register(
+register_sql(
     "pipeline_data_expectations",
-    oracle="""
+    """
     SELECT * FROM (
       SELECT 'l_quantity_in_1_50' AS rule,
              CAST(COUNT(*) AS BIGINT) AS checked,
@@ -1500,42 +1500,6 @@ def curate_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("pipeline", "quality", "expectations"),
 )
-def pipeline_data_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tabs = load_tables(spark, sf_dir, ("lineitem", "orders"))
-    li, orders = tabs["lineitem"], tabs["orders"]
-
-    def rule(df: DataFrame, name: str, ok) -> DataFrame:
-        return df.agg(
-            F.lit(name).alias("rule"),
-            F.count(F.lit(1)).alias("checked"),
-            F.sum(F.when(ok, 0).otherwise(1)).alias("violations"),
-        ).select("rule", "checked", F.col("violations").cast("long"))
-
-    fk = li.join(
-        orders.select("o_orderkey"),
-        li.l_orderkey == F.col("o_orderkey"),
-        "left",
-    )
-    uniq = orders.agg(
-        F.lit("orders_orderkey_unique").alias("rule"),
-        F.count(F.lit(1)).alias("checked"),
-        (F.count(F.lit(1)) - F.count_distinct(F.col("o_orderkey")))
-        .cast("long")
-        .alias("violations"),
-    )
-    return (
-        rule(li, "l_quantity_in_1_50", F.col("l_quantity").between(1, 50))
-        .unionByName(rule(li, "l_returnflag_in_domain",
-                          F.col("l_returnflag").isin("A", "N", "R")))
-        .unionByName(rule(fk, "lineitem_orderkey_fk",
-                          F.col("o_orderkey").isNotNull()))
-        .unionByName(uniq)
-        .unionByName(rule(li, "extendedprice_positive",
-                          F.col("l_extendedprice") > 0))
-        .unionByName(rule(li, "discount_le_tax_plus_half",
-                          F.col("l_discount") <= F.col("l_tax") + 0.5))
-        .orderBy("rule")
-    )
 
 
 # ---------------------------------------------------------------------------

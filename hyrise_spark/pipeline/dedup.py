@@ -78,6 +78,10 @@ def _normalize_spark() -> Column:
 
 # ---------------------------------------------------------------------------
 # Exact dedup: canonical-form fingerprint groupBy; keeper = min doc_id.
+# The builder stays: DuckDB needs regexp_replace's 'g' flag to replace every
+# match, while Spark reads a fourth argument as a start position and returns
+# NULL for 'g', so the text run through spark.sql returns other rows than
+# the builder (at sf0.01 and sf0.1).
 @register(
     "dedup_exact",
     oracle=f"""

@@ -186,6 +186,10 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Document fingerprinting: md5 of the normalized text (lowercase, collapse
 # whitespace, strip punctuation) — the canonical-form hash used for exact
 # dedup at corpus scale. md5 exists in both engines with identical output.
+# The builder stays: the oracle's regexp_replace(..., 'g') is DuckDB's
+# replace-all flag, but Spark reads a fourth argument as a start position
+# and returns NULL, so the text run through spark.sql returns other rows
+# (measured at sf0.01 and sf0.1).
 @register(
     "text_fingerprint",
     oracle="""

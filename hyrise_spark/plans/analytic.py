@@ -22,9 +22,9 @@ def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     return [tabs[n] for n in names]
 
 
-@register(
+register_sql(
     "agg_rollup",
-    oracle="""
+    """
     SELECT l_returnflag, l_linestatus,
            ROUND(SUM(l_quantity), 2) AS sum_qty, COUNT(*) AS n
     FROM lineitem
@@ -32,16 +32,11 @@ def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     """,
     tags=("aggregate", "rollup"),
 )
-def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"), F.count(F.lit(1)).alias("n")
-    )
 
 
-@register(
+register_sql(
     "agg_cube",
-    oracle="""
+    """
     SELECT o_orderstatus, o_orderpriority,
            ROUND(SUM(o_totalprice), 2) AS total, COUNT(*) AS n
     FROM orders
@@ -49,11 +44,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("aggregate", "cube"),
 )
-def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
-    return orders.cube("o_orderstatus", "o_orderpriority").agg(
-        F.round(F.sum("o_totalprice"), 2).alias("total"), F.count(F.lit(1)).alias("n")
-    )
 
 
 register_sql(
@@ -68,9 +58,9 @@ register_sql(
 
 
 # Pivot: avg-free (deterministic SUM) wide table of order counts by status.
-@register(
+register_sql(
     "pivot_status_by_priority",
-    oracle="""
+    """
     SELECT o_orderpriority,
            CAST(COALESCE(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 END), 0) AS BIGINT) AS F,
            CAST(COALESCE(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 END), 0) AS BIGINT) AS O,
@@ -80,26 +70,12 @@ register_sql(
     """,
     tags=("pivot",),
 )
-def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
-    return (
-        orders.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(F.count(F.lit(1)))
-        .fillna(0, subset=["F", "O", "P"])
-        .select(
-            "o_orderpriority",
-            F.col("F").cast("long").alias("F"),
-            F.col("O").cast("long").alias("O"),
-            F.col("P").cast("long").alias("P"),
-        )
-    )
 
 
 # Unpivot (melt/stack): wide -> long over part price/size attributes.
-@register(
+register_sql(
     "unpivot_part_attrs",
-    oracle="""
+    """
     SELECT p_partkey, attr, val FROM (
       SELECT p_partkey, 'retailprice' AS attr, p_retailprice AS val FROM part
       UNION ALL
@@ -108,17 +84,6 @@ def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("unpivot",),
 )
-def unpivot_part_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (part,) = _t(spark, sf_dir, "part")
-    return (
-        part.filter(F.col("p_partkey") < 100)
-        .select(
-            "p_partkey",
-            F.col("p_retailprice").alias("retailprice"),
-            F.col("p_size").cast("double").alias("size"),
-        )
-        .unpivot("p_partkey", ["retailprice", "size"], "attr", "val")
-    )
 
 
 # Approximate sketches: output is estimator-specific -> rows-only check here;
@@ -287,9 +252,9 @@ def sketch_bloom_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corr), while Welford-style streaming floats are order-sensitive.
 
 
-@register(
+register_sql(
     "aggregate_corr_moments",
-    oracle="""
+    """
     WITH m AS (
       SELECT l_returnflag,
              CAST(COUNT(*) AS BIGINT) AS n,
@@ -318,37 +283,6 @@ def sketch_bloom_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("aggregate", "statistics"),
 )
-def aggregate_corr_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """corr / covar_samp / regr_slope of (l_quantity, l_discount) per
-    return flag, via exact integer moment sums (values live on small
-    integer lattices: quantity 1..50, discount cents 0..10). One
-    partial-agg pass; the derived statistics are a per-group scalar
-    expression. Moment magnitudes stay far inside int64 at bench scales;
-    production at 10^11+ rows widens the sums to DECIMAL(38,0) — same
-    plan."""
-    (li,) = _t(spark, sf_dir, "lineitem")
-    x = F.round(F.col("l_quantity")).cast("long")
-    y = F.round(F.col("l_discount") * 100).cast("long")
-    m = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * y).alias("sxy"),
-        F.sum(x * x).alias("sx2"),
-        F.sum(y * y).alias("sy2"),
-    )
-    nd = F.col("n").cast("double")
-    sxd, syd = F.col("sx").cast("double"), F.col("sy").cast("double")
-    cov_num = nd * F.col("sxy") - sxd * F.col("sy")
-    varx = nd * F.col("sx2") - sxd * F.col("sx")
-    vary = nd * F.col("sy2") - syd * F.col("sy")
-    return m.select(
-        "l_returnflag",
-        "n",
-        F.round(cov_num / (F.sqrt(varx) * F.sqrt(vary)), 6).alias("corr_qty_disc"),
-        F.round(cov_num / (nd * (nd - 1)), 6).alias("covar_samp_qty_disc"),
-        F.round(cov_num / varx, 6).alias("regr_slope_disc_on_qty"),
-    ).orderBy("l_returnflag")
 
 
 # ---------------------------------------------------------------------------
@@ -365,9 +299,9 @@ def aggregate_corr_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PCTS = (25, 50, 75, 90)
 
 
-@register(
+register_sql(
     "aggregate_percentile_disc",
-    oracle=f"""
+    f"""
     WITH hist AS (
       SELECT l_returnflag, CAST(ROUND(l_quantity) AS BIGINT) AS q,
              CAST(COUNT(*) AS BIGINT) AS cnt
@@ -391,39 +325,6 @@ _PCTS = (25, 50, 75, 90)
     """,
     tags=("aggregate", "percentile"),
 )
-def aggregate_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact p25/p50/p75/p90 of l_quantity per return flag, rank-defined
-    (smallest value with cum * 100 >= pct * n — all-integer, no
-    interpolation convention to disagree on). Windows run over the
-    histogram (<= 50 rows per group), not the data."""
-    from pyspark.sql import Window
-
-    (li,) = _t(spark, sf_dir, "lineitem")
-    # FLOOR(x+0.5) == ROUND(x) (integral-valued positive doubles) without
-    # ROUND's per-row BigDecimal path — see aggregate_percentile_cont.
-    hist = li.groupBy(
-        "l_returnflag", F.floor(F.col("l_quantity") + F.lit(0.5)).alias("q")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    w_cum = (
-        Window.partitionBy("l_returnflag")
-        .orderBy("q")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy("l_returnflag")
-    cum = hist.select(
-        "l_returnflag",
-        "q",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(w_all).alias("n"),
-    )
-    p = spark.createDataFrame([(p,) for p in _PCTS], "pct int")
-    return (
-        cum.crossJoin(F.broadcast(p))  # 4-row literal frame
-        .filter(F.col("cum") * 100 >= F.col("pct") * F.col("n"))
-        .groupBy("l_returnflag", "pct")
-        .agg(F.min("q").alias("val"))
-        .orderBy("l_returnflag", "pct")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -487,7 +388,12 @@ def aggregate_mode_manual(spark: SparkSession, sf_dir: str) -> DataFrame:
     built-in mode() functions break ties arbitrarily, so the query states
     the histogram-argmax explicitly: value-count histogram (partial agg),
     per-group max count, min value at that count. Everything after the
-    first groupBy is histogram-sized."""
+    first groupBy is histogram-sized.
+
+    Kept over its oracle text, which Catalyst plans with the histogram
+    aggregation per read of h: 6 Exchanges against 5 here (4 final + 1 in
+    the hub) at sf0.01 and sf0.1, and 1.13x the time in an interleaved A/B
+    at sf0.1 (0.720 vs 0.636 s)."""
     (li,) = _t(spark, sf_dir, "lineitem")
     # h is a hub (the max branch AND the join read it): truncate so the
     # lineitem scan + histogram agg run once, not per branch. Histogram-sized.
@@ -545,7 +451,12 @@ def skyline_price_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain, then one equi-join back to the base rows — no all-pairs
     dominance join anywhere, and no window ever sees raw-row cardinality.
     The price lattice (cents) is exact: p_retailprice sits on a 0.1 grid,
-    so round(*100) is the same integer in both engines."""
+    so round(*100) is the same integer in both engines.
+
+    Kept over the oracle's NOT EXISTS dominance text, which plans a
+    BroadcastNestedLoopJoin — all pairs of parts, quadratic in the part
+    count. It ran 0.93x this builder at sf0.1 (0.732 vs 0.783 s), where
+    there are only 20k parts."""
     from pyspark.sql import Window
 
     part = load_tables(spark, sf_dir, ("part",))["part"]
@@ -674,9 +585,9 @@ def aggregate_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # margins), so both engines agree exactly.
 
 
-@register(
+register_sql(
     "aggregate_ordered_set",
-    oracle="""
+    """
     SELECT l_returnflag,
            percentile_cont(0.5) WITHIN GROUP (ORDER BY l_quantity) AS median_qty,
            CAST(percentile_disc(0.9) WITHIN GROUP (ORDER BY l_quantity)
@@ -689,28 +600,6 @@ def aggregate_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("aggregate", "ordered-set"),
 )
-def aggregate_ordered_set(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """percentile_cont / percentile_disc / mode per return flag.
-
-    Scale: Spark evaluates percentile_cont/disc as a partial-agg sort-based
-    aggregate per group (no global sort); mode is a two-level count. Group
-    cardinality is 3 — output constant-size."""
-    (li,) = _t(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("__hs_ordered_set_li")
-    return spark.sql(
-        """
-        SELECT l_returnflag,
-               percentile_cont(0.5) WITHIN GROUP (ORDER BY l_quantity)
-                 AS median_qty,
-               CAST(percentile_disc(0.9) WITHIN GROUP (ORDER BY l_quantity)
-                    AS BIGINT) AS p90_qty,
-               mode() WITHIN GROUP (ORDER BY l_linestatus) AS mode_status,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM __hs_ordered_set_li
-        GROUP BY l_returnflag
-        ORDER BY l_returnflag
-        """
-    )
 
 
 # -- round 9: GROUPING()/GROUPING_ID marker functions (SQL:1999 T431) --------
@@ -861,7 +750,11 @@ def aggregate_percentile_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
     position-joins + pivot (4 extra jobs and their exchanges). The
     interpolation arithmetic (r = pct/100.0 * (n-1), v_lo + (r-k)*(v_hi -
     v_lo)) is kept expression-identical so the IEEE result matches the
-    oracle bit-for-bit."""
+    oracle bit-for-bit.
+
+    Kept over the oracle's PERCENTILE_CONT text, which plans one Exchange
+    fewer (2 vs 3) but ran 1.44x the time in an interleaved A/B at sf0.1
+    (5.79 vs 4.02 s)."""
     from pyspark.sql import Window
 
     (li,) = _t(spark, sf_dir, "lineitem")
@@ -1029,9 +922,9 @@ register_sql(
 # exact value, and the OUTPUT is the boolean "estimate within bounds" —
 # hash-checkable TRUE on both engines, so the estimator contract itself
 # (not the engine-specific estimate) becomes a hash-green registry row.
-@register(
+register_sql(
     "sketch_approx_distinct_bounds",
-    oracle="""
+    """
     SELECT l_returnflag,
            ABS(approx_count_distinct(l_orderkey) - COUNT(DISTINCT l_orderkey))
              <= CAST(CEIL(3 * 0.05 * COUNT(DISTINCT l_orderkey)) AS BIGINT)
@@ -1042,25 +935,6 @@ register_sql(
     """,
     tags=("sketch",),
 )
-def sketch_approx_distinct_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL error-bound contract: |approx - exact| <= 3·rsd·exact per group
-    (rsd = 0.05 — three standard deviations; DuckDB's own HLL sits well
-    inside the same envelope). The estimate itself stays rows-only in
-    sketch_approx_distinct; THIS row is the hash-green bound proof."""
-    (li,) = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.approx_count_distinct("l_orderkey", 0.05).alias("a"),
-            F.countDistinct("l_orderkey").alias("e"),
-        )
-        .select(
-            "l_returnflag",
-            (F.abs(F.col("a") - F.col("e"))
-             <= F.ceil(3 * 0.05 * F.col("e")).cast("bigint")).alias("within"),
-        )
-        .orderBy("l_returnflag")
-    )
 
 
 @register(

@@ -149,9 +149,9 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Funnel: users who did view -> click -> purchase in order (min-ts chain).
-@register(
+register_sql(
     "events_funnel",
-    oracle="""
+    """
     WITH per_user AS (
       SELECT user_id,
              MIN(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
@@ -169,32 +169,6 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("events", "funnel"),
 )
-def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
-    per_user = events.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
-        F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("t_click"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("t_purchase"),
-    )
-    return per_user.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum(F.when(F.col("t_view").isNotNull(), 1).otherwise(0)).cast("long").alias("viewed"),
-        F.sum(
-            F.when(F.col("t_view").isNotNull() & (F.col("t_click") > F.col("t_view")), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("clicked_after_view"),
-        F.sum(
-            F.when(
-                F.col("t_view").isNotNull()
-                & (F.col("t_click") > F.col("t_view"))
-                & (F.col("t_purchase") > F.col("t_click")),
-                1,
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("purchased_after_click"),
-    )
 
 
 # JSON extraction from the props column (semi-structured payloads; net-new —
@@ -338,12 +312,14 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # trailing frame (n, sum, sum-of-squares), so both engines compute identical
 # doubles from identical integers; stddev_samp itself is avoided because the
 # engines' accumulation algorithms (naive vs Welford) differ in low bits.
+# Scale: one partial-agg groupBy to daily counts, then a window partitioned
+# per user — thousands of independent partitions, no global ordering.
 _ZS_MIN_BASELINE = 3  # days of history required before scoring
 
 
-@register(
+register_sql(
     "events_anomaly_zscore",
-    oracle=f"""
+    f"""
     WITH daily AS (
       SELECT user_id, CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS cnt
       FROM events GROUP BY user_id, CAST(ts AS DATE)
@@ -369,50 +345,6 @@ _ZS_MIN_BASELINE = 3  # days of history required before scoring
     """,
     tags=("events", "anomaly"),
 )
-def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user daily-count z-score against the user's own trailing 7-day
-    frame (excluding the current day); days with z > 2 flag as anomalies.
-
-    Scale: one partial-agg groupBy to daily counts (shuffle carries
-    (user, day) rows), then a window partitioned per user — thousands of
-    independent partitions, no global ordering. The frame statistics are
-    integer sums, so the score is reproducible across engines and cluster
-    sizes bit-for-bit.
-    """
-    (events,) = _t(spark, sf_dir, "events")
-    daily = (
-        events.select("user_id", F.to_date("ts").alias("day"))
-        .groupBy("user_id", "day")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("day")
-        .rowsBetween(-7, -1)
-    )
-    framed = daily.select(
-        "user_id", "day", "cnt",
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum("cnt").over(w).alias("s1"),
-        F.sum(F.col("cnt") * F.col("cnt")).over(w).alias("s2"),
-    )
-    mean = F.col("s1").cast("double") / F.col("n")
-    var = (F.col("s2") - F.col("s1").cast("double") * F.col("s1") / F.col("n")) / (
-        F.col("n") - 1
-    )
-    z = (F.col("cnt") - mean) / F.sqrt(var)
-    return (
-        framed.filter(
-            (F.col("n") >= _ZS_MIN_BASELINE)
-            & (F.col("s2") * F.col("n") > F.col("s1") * F.col("s1"))
-        )
-        .select(
-            "user_id", "day", "cnt",
-            F.col("n").cast("long").alias("n_baseline"),
-            F.round(z, 4).alias("z"),
-            (z > 2.0).alias("is_anomaly"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -874,14 +806,18 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the window anchored at its first step — view -> click -> purchase with
 # purchase.ts <= view.ts + T. Unlike `events_funnel` (min-timestamp
 # approximation over a user's whole history), this admits ANY qualifying
-# chain, which is the product-analytics semantics.
+# chain, which is the product-analytics semantics. Scale: every join is keyed
+# on user_id with a range predicate on top — never cross-user; the (view x
+# click) pairs collapse to the EARLIEST qualifying click per view (the
+# purchase deadline is anchored at the VIEW), and the purchase step is a
+# semi join, so no intermediate exceeds one row per view event.
 
 _WF_WINDOW = "12 HOUR"  # calibrated: levels 150/136/36 on the test corpus
 
 
-@register(
+register_sql(
     "events_window_funnel",
-    oracle=f"""
+    f"""
     WITH v AS (SELECT user_id, ts FROM events WHERE event_type = 'view'),
     c AS (SELECT user_id, ts FROM events WHERE event_type = 'click'),
     p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
@@ -912,65 +848,6 @@ _WF_WINDOW = "12 HOUR"  # calibrated: levels 150/136/36 on the test corpus
     """,
     tags=("events", "funnel"),
 )
-def events_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user max funnel level reached inside a {_WF_WINDOW} window.
-
-    Scale: every join is keyed on user_id with a range predicate on top —
-    never cross-user. The (view x click) pairs collapse to the EARLIEST
-    qualifying click per view before the purchase step (if any chain
-    exists through some click c, it also exists through the earliest
-    click c' <= c — the purchase deadline is anchored at the VIEW), so
-    no intermediate ever exceeds one row per view event; the purchase
-    step is a LEFT SEMI join (no row multiplication). No windows, no
-    all-pairs."""
-    (events,) = _t(spark, sf_dir, "events")
-
-    def step(t: str) -> DataFrame:
-        return events.filter(F.col("event_type") == t).select("user_id", "ts")
-
-    v, c, p = step("view"), step("click"), step("purchase")
-    win = F.expr(f"v_ts + INTERVAL {_WF_WINDOW}")
-    vc = (
-        v.select("user_id", F.col("ts").alias("v_ts"))
-        .join(
-            c.select(F.col("user_id").alias("cu"), F.col("ts").alias("c_ts")),
-            (F.col("user_id") == F.col("cu"))
-            & (F.col("c_ts") > F.col("v_ts"))
-            & (F.col("c_ts") <= win),
-        )
-        .groupBy("user_id", "v_ts")
-        .agg(F.min("c_ts").alias("c_ts"))
-    )
-    l2 = vc.select("user_id").distinct().withColumn("at2", F.lit(1))
-    l3 = (
-        vc.join(
-            p.select(F.col("user_id").alias("pu"), F.col("ts").alias("p_ts")),
-            (F.col("user_id") == F.col("pu"))
-            & (F.col("p_ts") > F.col("c_ts"))
-            & (F.col("p_ts") <= win),
-            "left_semi",
-        )
-        .select("user_id")
-        .distinct()
-        .withColumn("at3", F.lit(1))
-    )
-    l1 = v.select("user_id").distinct().withColumn("at1", F.lit(1))
-    u = events.select("user_id").distinct()
-    return (
-        u.join(l1, "user_id", "left")
-        .join(l2, "user_id", "left")
-        .join(l3, "user_id", "left")
-        .select(
-            "user_id",
-            F.when(F.col("at3") == 1, 3)
-            .when(F.col("at2") == 1, 2)
-            .when(F.col("at1") == 1, 1)
-            .otherwise(0)
-            .cast("int")
-            .alias("funnel_level"),
-        )
-        .orderBy("user_id")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1020,7 +897,11 @@ def events_trajectory_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     by > {_TRAJ_MAX_DF} users dropped before the self-join — the shared
     `capped_setsim_pairs` core (same skew guard as the shingle dedup, one
     implementation); signature sets are per-user bounded (days x bands).
-    Never all-pairs."""
+    Never all-pairs.
+
+    Kept over the oracle text, which plans 23 Exchanges against 7 here at
+    sf0.01 and sf0.1 and ran 1.27x in an interleaved A/B at sf0.1 (1.76 vs
+    1.38 s)."""
     from hyrise_spark.pipeline.dedup import capped_setsim_pairs
 
     (events,) = _t(spark, sf_dir, "events")
@@ -1720,13 +1601,14 @@ def events_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # medians are LOWER medians found on per-type value histograms (the same
 # cum*2 >= n trick as events_interarrival_stats — no global sort), and
 # the flag test multiplies through by 10^4 (3 * 1.4826 = 4.4478) so both
-# engines compare exact integers.
+# engines compare exact integers. Plan: two histogram-median passes, one
+# broadcast-joined flag filter, one bounded top-k.
 _MAD_TOPK = 50
 
 
-@register(
+register_sql(
     "events_anomaly_mad",
-    oracle=f"""
+    f"""
     WITH x AS (
       SELECT event_id, event_type,
              CAST(ROUND(value * 100) AS BIGINT) AS cents
@@ -1773,58 +1655,6 @@ _MAD_TOPK = 50
     """,
     tags=("events", "anomaly", "robust"),
 )
-def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-50 Hampel outliers per the 3-MAD rule. Plan: two
-    histogram-median passes (per-type value histogram + per-type
-    deviation histogram — windows over histogram-sized frames, never
-    event-sized sorts), one broadcast-joined flag filter, one bounded
-    top-k."""
-    (events,) = _t(spark, sf_dir, "events")
-    x = events.select(
-        "event_id",
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-
-    def _lower_median(df: DataFrame, col: str, out: str) -> DataFrame:
-        vc = df.groupBy("event_type", col).agg(F.count(F.lit(1)).alias("c"))
-        w = Window.partitionBy("event_type").orderBy(col)
-        wn = Window.partitionBy("event_type")
-        cum = vc.select(
-            "event_type",
-            col,
-            F.sum("c").over(w).alias("cs"),
-            F.sum("c").over(wn).alias("n"),
-        )
-        return (
-            cum.filter(F.col("cs") * 2 >= F.col("n"))
-            .groupBy("event_type")
-            .agg(F.min(col).cast("long").alias(out))
-        )
-
-    med = _lower_median(x, "cents", "med")
-    dev = x.join(med, "event_type").select(
-        "event_id",
-        "event_type",
-        "cents",
-        F.abs(F.col("cents") - F.col("med")).alias("d"),
-        "med",
-    )
-    mad = _lower_median(dev, "d", "mad")
-    return (
-        dev.join(mad, "event_type")
-        .filter(F.col("d") * 10000 > 44478 * F.col("mad"))
-        .select(
-            "event_id",
-            "event_type",
-            F.col("cents").cast("long"),
-            F.col("med").cast("long"),
-            F.col("d").cast("long").alias("abs_dev"),
-            "mad",
-        )
-        .orderBy(F.col("abs_dev").desc(), "event_id")
-        .limit(_MAD_TOPK)
-    )
 
 
 # ---------------------------------------------------------------------------

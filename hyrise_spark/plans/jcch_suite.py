@@ -13,9 +13,10 @@ key; THIS module is the suite itself:
   -> 25 customers, 75% of customers -> one nation) as physical parquet, so
   the skew lives in real row groups and AQE's runtime skew detection sees
   genuine partition imbalance.
-* Each `bench_jcch_qNN` entry runs the UNCHANGED tpch_qNN plan builder
-  against the skewed directory — the point is that the canonical plans
-  survive pathological keys via AQE skew-join splitting (session.py enables
+* Each `bench_jcch_qNN` entry runs the UNCHANGED tpch_qNN builder against
+  the skewed directory: for a `register_sql` query that is the tpch_qNN
+  text over views of the skewed copy's tables — the point is that the
+  canonical plans survive pathological keys via AQE skew-join splitting (session.py enables
   spark.sql.adaptive.skewJoin) plus broadcast dims, with the explicit
   salted paths (operators/joins.py::salted_join) as the documented fallback
   for keys beyond AQE's split granularity.
@@ -42,7 +43,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-import hyrise_spark.plans.tpch  # noqa: F401  (registers the builders/oracles)
+import hyrise_spark.plans.tpch  # noqa: F401  (registers the tpch texts)
 from hyrise_spark.layout import write_jcch_skewed
 from hyrise_spark.registry import _REGISTRY, register
 

@@ -12,6 +12,16 @@ Flight shapes preserved:
   Q3.x  customer-geo x supplier-geo revenue by (c_nation, s_nation, year)
   Q4.x  "profit" across all dims at decreasing granularity
 
+Each query is ONE SQL text, registered with `register_sql`: DuckDB runs it
+as the oracle and Spark runs it through `spark.sql`. Date filters are
+half-open ranges on the raw column (`col >= TIMESTAMP 'Y-01-01' AND col <
+TIMESTAMP 'Y+1-01-01'`), never EXTRACT(YEAR ...) = Y: the raw-column bounds
+reach the parquet scan's PushedFilters, as hyrise's ChunkPruningRule needs
+the raw column (src/lib/optimizer/strategy/chunk_pruning_rule.cpp), while a
+function-wrapped filter reads the whole fact. EXTRACT stays in the GROUP BY
+projections, where it prunes nothing. ssb_q1_1_datesorted
+(tpch_datesorted.py) reuses the Q1.1 text as its oracle.
+
 Scale notes (100 TB): flight 1 is pure scan+filter+agg — filters push to
 parquet (PushedFilters) and the aggregate is a partial+final single pass.
 Flights 2-4 join the fact table only against dimensions whose size is
@@ -22,65 +32,27 @@ final small groupBy (AQE coalesces post-shuffle partitions).
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
-
-from hyrise_spark.catalog import load_tables
-from hyrise_spark.registry import register
-
-R2 = 2
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_tables(spark, sf_dir, names)
-    return [tabs[n] for n in names]
-
-
-def _ts_range(col: str, start: str, end: str):
-    """Half-open timestamp range — pushable to the parquet scan, unlike
-    EXTRACT/year() which wrap the column in a function and defeat pushdown."""
-    return (F.col(col) >= F.lit(start)) & (F.col(col) < F.lit(end))
-
-
-def _geo(spark: SparkSession, sf_dir: str, region: str | None = None) -> DataFrame:
-    """nation joined to region -> (n_nationkey, n_name, r_name), optionally filtered."""
-    nation, reg = _t(spark, sf_dir, "nation", "region")
-    if region is not None:
-        reg = reg.filter(F.col("r_name") == region)
-    return nation.join(reg, F.col("n_regionkey") == F.col("r_regionkey")).select(
-        "n_nationkey", "n_name", "r_name"
-    )
+from hyrise_spark.registry import register_sql
 
 
 # --------------------------------------------------------------------------
 # Flight 1 — revenue bands (scan + filter + global SUM; no dimension joins).
-@register(
+register_sql(
     "ssb_q1_1",
-    oracle="""
+    """
     SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue
     FROM lineitem
-    WHERE EXTRACT(YEAR FROM l_shipdate) = 1997
+    WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
       AND l_discount BETWEEN 0.01 AND 0.03
       AND l_quantity < 25
     """,
     tags=("ssb", "scan", "aggregate"),
 )
-def ssb_q1_1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01"))
-            & F.col("l_discount").between(0.01, 0.03)
-            & (F.col("l_quantity") < 25)
-        )
-        .agg(F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), R2).alias("revenue"))
-    )
 
 
-@register(
+register_sql(
     "ssb_q1_2",
-    oracle="""
+    """
     SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue
     FROM lineitem
     WHERE l_shipdate >= DATE '1997-01-01' AND l_shipdate < DATE '1997-02-01'
@@ -89,22 +61,11 @@ def ssb_q1_1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("ssb", "scan", "aggregate"),
 )
-def ssb_q1_2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= "1997-01-01")
-            & (F.col("l_shipdate") < "1997-02-01")
-            & F.col("l_discount").between(0.04, 0.06)
-            & F.col("l_quantity").between(26, 35)
-        )
-        .agg(F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), R2).alias("revenue"))
-    )
 
 
-@register(
+register_sql(
     "ssb_q1_3",
-    oracle="""
+    """
     SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue
     FROM lineitem
     WHERE l_shipdate >= DATE '1997-02-01' AND l_shipdate < DATE '1997-02-15'
@@ -113,35 +74,11 @@ def ssb_q1_2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("ssb", "scan", "aggregate"),
 )
-def ssb_q1_3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= "1997-02-01")
-            & (F.col("l_shipdate") < "1997-02-15")
-            & F.col("l_discount").between(0.05, 0.07)
-            & F.col("l_quantity").between(26, 35)
-        )
-        .agg(F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), R2).alias("revenue"))
-    )
 
 
 # --------------------------------------------------------------------------
 # Flight 2 — part-category x supplier-region revenue by (year, brand).
-def _flight2(spark, sf_dir, part_pred, region: str) -> DataFrame:
-    li, part, supp = _t(spark, sf_dir, "lineitem", "part", "supplier")
-    geo = _geo(spark, sf_dir, region)
-    return (
-        li.join(part.filter(part_pred), F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(geo, F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(F.year("l_shipdate").alias("d_year"), F.col("p_brand"))
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), R2).alias("revenue"))
-        .select("d_year", "p_brand", "revenue")
-    )
-
-
-_FLIGHT2_ORACLE = """
+_FLIGHT2_SQL = """
     SELECT CAST(EXTRACT(YEAR FROM l_shipdate) AS INTEGER) AS d_year, p_brand,
            ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
     FROM lineitem
@@ -154,68 +91,32 @@ _FLIGHT2_ORACLE = """
 """
 
 
-@register(
+register_sql(
     "ssb_q2_1",
-    oracle=_FLIGHT2_ORACLE.format(part_pred="p_type = 'SMALL'", region="ASIA"),
+    _FLIGHT2_SQL.format(part_pred="p_type = 'SMALL'", region="ASIA"),
     tags=("ssb", "join", "aggregate"),
 )
-def ssb_q2_1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _flight2(spark, sf_dir, F.col("p_type") == "SMALL", "ASIA")
 
 
-@register(
+register_sql(
     "ssb_q2_2",
-    oracle=_FLIGHT2_ORACLE.format(
+    _FLIGHT2_SQL.format(
         part_pred="p_brand BETWEEN 'Brand#12' AND 'Brand#18'", region="EUROPE"
     ),
     tags=("ssb", "join", "aggregate"),
 )
-def ssb_q2_2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _flight2(spark, sf_dir, F.col("p_brand").between("Brand#12", "Brand#18"), "EUROPE")
 
 
-@register(
+register_sql(
     "ssb_q2_3",
-    oracle=_FLIGHT2_ORACLE.format(part_pred="p_brand = 'Brand#14'", region="AMERICA"),
+    _FLIGHT2_SQL.format(part_pred="p_brand = 'Brand#14'", region="AMERICA"),
     tags=("ssb", "join", "aggregate"),
 )
-def ssb_q2_3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _flight2(spark, sf_dir, F.col("p_brand") == "Brand#14", "AMERICA")
 
 
 # --------------------------------------------------------------------------
 # Flight 3 — customer-geo x supplier-geo revenue by (c_nation, s_nation, year).
-def _flight3(spark, sf_dir, cust_geo: DataFrame, supp_geo: DataFrame,
-             y_lo: int, y_hi: int) -> DataFrame:
-    li, orders, cust, supp = _t(spark, sf_dir, "lineitem", "orders", "customer", "supplier")
-    c_geo = cust_geo.select(
-        F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("c_nation")
-    )
-    s_geo = supp_geo.select(
-        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("s_nation")
-    )
-    # Half-open date range instead of year(o_orderdate) BETWEEN: the raw-column
-    # comparison reaches the parquet scan (PushedFilters + row-group pruning),
-    # while a year() wrapper would force a full orders read. Mirrors hyrise's
-    # ChunkPruningRule needing the raw column
-    # (reference: src/lib/optimizer/strategy/chunk_pruning_rule.cpp).
-    orders = orders.filter(
-        (F.col("o_orderdate") >= f"{y_lo}-01-01")
-        & (F.col("o_orderdate") < f"{y_hi + 1}-01-01")
-    )
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(c_geo, F.col("c_nationkey") == F.col("c_nk"))
-        .join(s_geo, F.col("s_nationkey") == F.col("s_nk"))
-        .groupBy("c_nation", "s_nation", F.year("o_orderdate").alias("d_year"))
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), R2).alias("revenue"))
-        .select("c_nation", "s_nation", "d_year", "revenue")
-    )
-
-
-_FLIGHT3_ORACLE = """
+_FLIGHT3_SQL = """
     SELECT cn.n_name AS c_nation, sn.n_name AS s_nation,
            CAST(EXTRACT(YEAR FROM o_orderdate) AS INTEGER) AS d_year,
            ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
@@ -228,57 +129,47 @@ _FLIGHT3_ORACLE = """
       JOIN nation sn ON s_nationkey = sn.n_nationkey
       JOIN region sr ON sn.n_regionkey = sr.r_regionkey
     WHERE {c_pred} AND {s_pred}
-      AND EXTRACT(YEAR FROM o_orderdate) BETWEEN {y_lo} AND {y_hi}
+      AND o_orderdate >= TIMESTAMP '{y_lo}-01-01'
+      AND o_orderdate < TIMESTAMP '{y_end}-01-01'
     GROUP BY 1, 2, 3
 """
 
 
-@register(
+register_sql(
     "ssb_q3_1",
-    oracle=_FLIGHT3_ORACLE.format(
-        c_pred="cr.r_name = 'ASIA'", s_pred="sr.r_name = 'ASIA'", y_lo=1996, y_hi=1999
+    _FLIGHT3_SQL.format(
+        c_pred="cr.r_name = 'ASIA'", s_pred="sr.r_name = 'ASIA'", y_lo=1996, y_end=2000
     ),
     tags=("ssb", "join", "aggregate"),
 )
-def ssb_q3_1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    geo_c = _geo(spark, sf_dir, "ASIA")
-    geo_s = _geo(spark, sf_dir, "ASIA")
-    return _flight3(spark, sf_dir, geo_c, geo_s, 1996, 1999)
 
 
-@register(
+register_sql(
     "ssb_q3_2",
-    oracle=_FLIGHT3_ORACLE.format(
+    _FLIGHT3_SQL.format(
         c_pred="cn.n_name IN ('NATION_3', 'NATION_5')",
         s_pred="sn.n_name IN ('NATION_3', 'NATION_5')",
-        y_lo=1996, y_hi=1999,
+        y_lo=1996, y_end=2000,
     ),
     tags=("ssb", "join", "aggregate"),
 )
-def ssb_q3_2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nations = ("NATION_3", "NATION_5")
-    geo = _geo(spark, sf_dir).filter(F.col("n_name").isin(*nations))
-    return _flight3(spark, sf_dir, geo, geo, 1996, 1999)
 
 
-@register(
+register_sql(
     "ssb_q3_3",
-    oracle=_FLIGHT3_ORACLE.format(
+    _FLIGHT3_SQL.format(
         c_pred="cn.n_name IN ('NATION_7', 'NATION_14')",
         s_pred="sn.n_name IN ('NATION_7', 'NATION_14')",
-        y_lo=1997, y_hi=1997,
+        y_lo=1997, y_end=1998,
     ),
     tags=("ssb", "join", "aggregate"),
 )
-def ssb_q3_3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nations = ("NATION_7", "NATION_14")
-    geo = _geo(spark, sf_dir).filter(F.col("n_name").isin(*nations))
-    return _flight3(spark, sf_dir, geo, geo, 1997, 1997)
 
 
-@register(
+# Narrowest flight-3 cut: one month (SSB Q3.4's d_yearmonth = 'Dec1997').
+register_sql(
     "ssb_q3_4",
-    oracle="""
+    """
     SELECT cn.n_name AS c_nation, sn.n_name AS s_nation,
            CAST(EXTRACT(YEAR FROM o_orderdate) AS INTEGER) AS d_year,
            ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
@@ -295,33 +186,6 @@ def ssb_q3_3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("ssb", "join", "aggregate"),
 )
-def ssb_q3_4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Narrowest flight-3 cut: one month (SSB Q3.4's d_yearmonth = 'Dec1997').
-    li, orders, cust, supp, nation = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "supplier", "nation"
-    )
-    nations = ("NATION_7", "NATION_14")
-    c_geo = nation.filter(F.col("n_name").isin(*nations)).select(
-        F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("c_nation")
-    )
-    s_geo = nation.filter(F.col("n_name").isin(*nations)).select(
-        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("s_nation")
-    )
-    return (
-        li.join(
-            orders.filter(
-                (F.col("o_orderdate") >= "1997-12-01") & (F.col("o_orderdate") < "1998-01-01")
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(c_geo, F.col("c_nationkey") == F.col("c_nk"))
-        .join(s_geo, F.col("s_nationkey") == F.col("s_nk"))
-        .groupBy("c_nation", "s_nation", F.year("o_orderdate").alias("d_year"))
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), R2).alias("revenue"))
-        .select("c_nation", "s_nation", "d_year", "revenue")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -331,16 +195,9 @@ def ssb_q3_4(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PROFIT_SQL = "SUM(l_extendedprice * (1 - l_discount) - l_quantity * p_retailprice / 10)"
 
 
-def _profit_col():
-    return F.sum(
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - F.col("l_quantity") * F.col("p_retailprice") / 10
-    )
-
-
-@register(
+register_sql(
     "ssb_q4_1",
-    oracle=f"""
+    f"""
     SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS INTEGER) AS d_year,
            cn.n_name AS c_nation,
            ROUND({_PROFIT_SQL}, 2) AS profit
@@ -359,31 +216,11 @@ def _profit_col():
     """,
     tags=("ssb", "join", "aggregate"),
 )
-def ssb_q4_1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, supp, part = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "supplier", "part"
-    )
-    c_geo = _geo(spark, sf_dir, "AMERICA").select(
-        F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("c_nation")
-    )
-    s_geo = _geo(spark, sf_dir, "AMERICA").select(F.col("n_nationkey").alias("s_nk"))
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(part.filter(F.col("p_type").isin("SMALL", "MEDIUM")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .join(c_geo, F.col("c_nationkey") == F.col("c_nk"))
-        .join(s_geo, F.col("s_nationkey") == F.col("s_nk"))
-        .groupBy(F.year("o_orderdate").alias("d_year"), F.col("c_nation"))
-        .agg(F.round(_profit_col(), R2).alias("profit"))
-        .select("d_year", "c_nation", "profit")
-    )
 
 
-@register(
+register_sql(
     "ssb_q4_2",
-    oracle=f"""
+    f"""
     SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS INTEGER) AS d_year,
            sn.n_name AS s_nation, p_type,
            ROUND({_PROFIT_SQL}, 2) AS profit
@@ -397,38 +234,17 @@ def ssb_q4_1(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN nation sn ON s_nationkey = sn.n_nationkey
       JOIN region sr ON sn.n_regionkey = sr.r_regionkey
     WHERE cr.r_name = 'AMERICA' AND sr.r_name = 'AMERICA'
-      AND EXTRACT(YEAR FROM o_orderdate) IN (1997, 1998)
+      AND o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1999-01-01'
       AND p_type IN ('SMALL', 'MEDIUM')
     GROUP BY 1, 2, 3
     """,
     tags=("ssb", "join", "aggregate"),
 )
-def ssb_q4_2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, cust, supp, part = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "supplier", "part"
-    )
-    c_geo = _geo(spark, sf_dir, "AMERICA").select(F.col("n_nationkey").alias("c_nk"))
-    s_geo = _geo(spark, sf_dir, "AMERICA").select(
-        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("s_nation")
-    )
-    return (
-        li.join(orders.filter(_ts_range("o_orderdate", "1997-01-01", "1999-01-01")),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(part.filter(F.col("p_type").isin("SMALL", "MEDIUM")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .join(c_geo, F.col("c_nationkey") == F.col("c_nk"))
-        .join(s_geo, F.col("s_nationkey") == F.col("s_nk"))
-        .groupBy(F.year("o_orderdate").alias("d_year"), F.col("s_nation"), F.col("p_type"))
-        .agg(F.round(_profit_col(), R2).alias("profit"))
-        .select("d_year", "s_nation", "p_type", "profit")
-    )
 
 
-@register(
+register_sql(
     "ssb_q4_3",
-    oracle=f"""
+    f"""
     SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS INTEGER) AS d_year,
            sn.n_name AS s_nation, p_brand,
            ROUND({_PROFIT_SQL}, 2) AS profit
@@ -439,24 +255,8 @@ def ssb_q4_2(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN nation sn ON s_nationkey = sn.n_nationkey
     WHERE sn.n_name IN ('NATION_2', 'NATION_9')
       AND p_type = 'PROMO'
-      AND EXTRACT(YEAR FROM o_orderdate) = 1997
+      AND o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
     GROUP BY 1, 2, 3
     """,
     tags=("ssb", "join", "aggregate"),
 )
-def ssb_q4_3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders, supp, nation = _t(spark, sf_dir, "lineitem", "orders", "supplier", "nation")
-    s_geo = nation.filter(F.col("n_name").isin("NATION_2", "NATION_9")).select(
-        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("s_nation")
-    )
-    return (
-        li.join(orders.filter(_ts_range("o_orderdate", "1997-01-01", "1998-01-01")),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(part_filtered := _t(spark, sf_dir, "part")[0].filter(F.col("p_type") == "PROMO"),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .join(s_geo, F.col("s_nationkey") == F.col("s_nk"))
-        .groupBy(F.year("o_orderdate").alias("d_year"), F.col("s_nation"), F.col("p_brand"))
-        .agg(F.round(_profit_col(), R2).alias("profit"))
-        .select("d_year", "s_nation", "p_brand", "profit")
-    )

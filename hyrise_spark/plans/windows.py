@@ -15,23 +15,16 @@ implemented via the rank-rewrite (`window_groups_frame` below).
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.window import Window
 
 from hyrise_spark.catalog import load_tables
 from hyrise_spark.registry import register, register_sql
 
 
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_tables(spark, sf_dir, names)
-    return [tabs[n] for n in names]
-
-
 # All five ranking functions in one pass over a partitioned/ordered window.
-@register(
+register_sql(
     "window_ranking_functions",
-    oracle="""
+    """
     SELECT o_orderkey, o_custkey,
            ROW_NUMBER()   OVER w AS rn,
            RANK()         OVER w AS rnk,
@@ -44,24 +37,12 @@ def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     """,
     tags=("window",),
 )
-def window_ranking_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    return orders.filter(F.col("o_custkey") < 50).select(
-        "o_orderkey",
-        "o_custkey",
-        F.row_number().over(w).alias("rn"),
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-        F.round(F.percent_rank().over(w), 6).alias("prnk"),
-        F.round(F.cume_dist().over(w), 6).alias("cdist"),
-    )
 
 
 # Aggregates over a ROWS frame (running totals / moving averages).
-@register(
+register_sql(
     "window_rows_frame",
-    oracle="""
+    """
     SELECT l_orderkey, l_linenumber,
            ROUND(SUM(l_quantity) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_qty,
@@ -78,31 +59,12 @@ def window_ranking_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("window", "frame"),
 )
-def window_rows_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
-    w_run = (
-        Window.partitionBy("l_orderkey")
-        .orderBy("l_linenumber")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_mov = Window.partitionBy("l_orderkey").orderBy("l_linenumber").rowsBetween(-1, 1)
-    w_all = Window.partitionBy("l_orderkey")
-    return li.filter(F.col("l_orderkey") < 1000).select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round(F.sum("l_quantity").over(w_run), 2).alias("running_qty"),
-        (
-            F.round(F.sum("l_extendedprice").over(w_mov), 2)
-            / F.count(F.lit(1)).over(w_mov)
-        ).alias("moving_avg_price"),
-        F.count(F.lit(1)).over(w_all).alias("n_lines"),
-    )
 
 
 # RANGE frame keyed on a numeric ORDER BY (value-based bounds).
-@register(
+register_sql(
     "window_range_frame",
-    oracle="""
+    """
     SELECT o_orderkey, o_custkey,
            COUNT(*) OVER (PARTITION BY o_custkey ORDER BY CAST(o_totalprice AS DOUBLE)
                  RANGE BETWEEN 50000 PRECEDING AND 50000 FOLLOWING) AS near_price_cnt
@@ -111,23 +73,13 @@ def window_rows_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("window", "frame"),
 )
-def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(F.col("o_totalprice").cast("double"))
-        .rangeBetween(-50000, 50000)
-    )
-    return orders.filter(F.col("o_custkey") < 30).select(
-        "o_orderkey", "o_custkey", F.count(F.lit(1)).over(w).alias("near_price_cnt")
-    )
 
 
 # LAG/LEAD + FIRST_VALUE/LAST_VALUE (value window functions; beyond the
 # reference's enumerated five — declared-surface superset).
-@register(
+register_sql(
     "window_value_functions",
-    oracle="""
+    """
     SELECT o_custkey, o_orderkey,
            LAG(o_orderkey)  OVER w AS prev_order,
            LEAD(o_orderkey) OVER w AS next_order,
@@ -140,25 +92,13 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("window",),
 )
-def window_value_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return orders.filter(F.col("o_custkey") < 40).select(
-        "o_custkey",
-        "o_orderkey",
-        F.lag("o_orderkey").over(w).alias("prev_order"),
-        F.lead("o_orderkey").over(w).alias("next_order"),
-        F.first("o_orderkey").over(w).alias("first_order"),
-        F.last("o_orderkey").over(w_full).alias("last_order"),
-    )
 
 
 # Top-K per group via row_number (the reference's Sort+Limit has no per-group
 # equivalent; this is the idiomatic Spark pattern).
-@register(
+register_sql(
     "window_topk_per_group",
-    oracle="""
+    """
     SELECT c_nationkey, c_custkey, ROUND(c_acctbal, 2) AS c_acctbal FROM (
       SELECT c_nationkey, c_custkey, c_acctbal,
              ROW_NUMBER() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS rn
@@ -167,31 +107,17 @@ def window_value_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("window", "topk"),
 )
-def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (cust,) = _t(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey").orderBy(F.col("c_acctbal").desc(), F.col("c_custkey"))
-    return (
-        cust.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("c_nationkey", "c_custkey", F.round("c_acctbal", 2).alias("c_acctbal"))
-    )
 
 
 # NTILE bucketing (window_function_expression.hpp aggregate-as-window family).
-@register(
+register_sql(
     "window_ntile",
-    oracle="""
+    """
     SELECT o_orderkey, NTILE(4) OVER (ORDER BY o_totalprice, o_orderkey) AS quartile
     FROM orders WHERE o_orderkey < 400
     """,
     tags=("window",),
 )
-def window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
-    w = Window.orderBy("o_totalprice", "o_orderkey")
-    return orders.filter(F.col("o_orderkey") < 400).select(
-        "o_orderkey", F.ntile(4).over(w).alias("quartile")
-    )
 
 
 # GROUPS frames (window_expression.hpp:30 FrameType::Groups): Spark has no
@@ -202,9 +128,9 @@ def window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # GROUPS mode either, so the oracle applies the SAME rank-based rewrite —
 # the rewrite is engine-portable, and the differential check proves the two
 # implementations of it agree (tie-group sums, running peer-group counts).
-@register(
+register_sql(
     "window_groups_frame",
-    oracle="""
+    """
     WITH ranked AS (
       SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_returnflag,
              DENSE_RANK() OVER (PARTITION BY l_returnflag ORDER BY l_quantity) AS dr
@@ -222,26 +148,6 @@ def window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("window", "groups"),
 )
-def window_groups_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
-    base = li.filter(F.col("l_orderkey") < 300)
-    order_w = Window.partitionBy("l_returnflag").orderBy("l_quantity")
-    ranked = base.withColumn("__dr", F.dense_rank().over(order_w))
-    by_rank = Window.partitionBy("l_returnflag").orderBy("__dr")
-    return (
-        ranked.select(
-            "l_orderkey",
-            "l_linenumber",
-            "l_quantity",
-            F.round(
-                F.sum("l_extendedprice").over(by_rank.rangeBetween(-1, 1)), 2
-            ).alias("grp_sum"),
-            F.count(F.lit(1))
-            .over(by_rank.rangeBetween(Window.unboundedPreceding, 0))
-            .alias("grp_running_cnt"),
-        )
-        .orderBy("l_orderkey", "l_linenumber")
-    )
 
 
 # -- GROUPS frame as actual SQL text (engine.py::_groups_frame_sql) ----------
@@ -287,7 +193,9 @@ def window_groups_frame_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The actual `GROUPS BETWEEN` SQL text (SQL:2011 frame mode the
     reference declares, window_expression.hpp:30) routed through the
     engine's dense-rank rewrite — closes the declared-surface asymmetry
-    where the DataFrame form existed but the SQL text did not parse."""
+    where the DataFrame form existed but the SQL text did not parse. The
+    builder stays although Spark can run the oracle: the oracle is the rank
+    rewrite, and the query under test is the GROUPS text through Engine."""
     from hyrise_spark.engine import Engine
 
     load_tables(spark, sf_dir, ("lineitem",))

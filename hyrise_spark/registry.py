@@ -11,10 +11,12 @@ Two ways in:
     run from its SQL text. The text is the oracle AND the builder: the
     builder loads the base tables the text names and returns
     `spark.sql(text)`, so DuckDB and Spark run one text and there is no
-    second spelling to drift. The JOB suite (plans/job.py) and the TPC-DS
-    suite (plans/tpcds_real.py, plans/tpcds.py) are registered this way,
-    as are the same-text relational, analytic, window, events and curate
-    queries; TPC-H and SSB still use hand builders.
+    second spelling to drift. The TPC-H, SSB, JOB and TPC-DS suites
+    (plans/tpch.py, ssb.py, job.py, tpcds_real.py, tpcds.py) are registered
+    this way, as are the relational, analytic, window, events, TPC-C and
+    curate queries whose Spark side is the same text. The layout variants
+    (bucketed, date-sorted, date-partitioned, JCC-H) keep thin builders
+    that point one of these texts' oracles at a relaid copy.
   * `@register(name, oracle=..., tags=...)` over a hand-written builder —
     only where a measured reason (a plan or a timing the text cannot reach,
     a construct Spark SQL lacks, a materialization the text cannot express)

@@ -261,7 +261,7 @@ def test_streaming_anomaly_zscore_matches_batch(spark, tmp_path):
     still-open last day per user is the only difference between the two."""
     import pyarrow.parquet as pq
 
-    from hyrise_spark.plans.events import events_anomaly_zscore
+    from hyrise_spark.registry import all_queries
     from hyrise_spark.streaming.events_stream import streaming_anomaly_zscore
 
     # sf-dir layout with events.parquet as a DIRECTORY of time-ordered part
@@ -284,7 +284,7 @@ def test_streaming_anomaly_zscore_matches_batch(spark, tmp_path):
         for r in spark.table("zs_stream_out").collect()
     }
 
-    batch = events_anomaly_zscore(spark, str(sf)).collect()
+    batch = all_queries()["events_anomaly_zscore"].builder(spark, str(sf)).collect()
     last_day = {
         r.user_id: str(r.d)
         for r in spark.read.parquet(str(d))
