@@ -479,107 +479,24 @@ def run_tpcc(
     txns_per_client: int = 25,
     districts: int = 4,
     customers: int = 16,
+    shards: int = 1,
     seed: int = 8,
 ) -> dict:
     """N client threads x txns_per_client weighted-mix procedures, then the
-    consistency audit. Returns the committed-txn throughput profile."""
-    import random
-    import threading
+    consistency audit. Returns the committed-txn throughput profile.
 
-    from hyrise_spark.engine import Engine
+    `shards` > 1 is key-partitioned multi-writer TPC-C: shard engines own
+    disjoint district partitions (shard = d % shards), each with its OWN
+    statement lock, transaction pin, and version chains over suffix-named
+    tables; one shard is the documented single-writer engine over the
+    unsuffixed tables.
 
-    engine = Engine(spark)
-    tpcc_setup(engine, districts, customers)
-    lock = threading.Lock()  # single-writer: see module note above
-    counts = {p: 0 for p in _TPCC_IMPLS}
-    lat: dict[str, list[float]] = {p: [] for p in _TPCC_IMPLS}
-    rolled_back = 0
-    weights = [w for _, w in _TPCC_MIX]
-    names = [n for n, _ in _TPCC_MIX]
-
-    errors = 0
-
-    def client(cid: int) -> None:
-        nonlocal rolled_back, errors
-        rng = random.Random(seed * 1000 + cid)
-        for _ in range(txns_per_client):
-            proc = rng.choices(names, weights=weights, k=1)[0]
-            t0 = time.perf_counter()
-            failed = False
-            with lock:
-                try:
-                    committed = _TPCC_IMPLS[proc](engine, rng, districts,
-                                                  customers)
-                except Exception:  # noqa: BLE001 — client resilience:
-                    # a failed procedure must ROLLBACK (never leave the
-                    # engine's transaction pin held — one wedged pin
-                    # starves every later client on the write fence) and
-                    # count as an error; the audit still gates the run
-                    try:
-                        engine.execute("ROLLBACK")
-                    except Exception:  # noqa: BLE001
-                        pass
-                    committed, failed = False, True
-            dt = time.perf_counter() - t0
-            with lock:
-                lat[proc].append(dt)
-                if failed:
-                    errors += 1
-                elif committed:
-                    counts[proc] += 1
-                else:
-                    rolled_back += 1
-
-    t_total = time.perf_counter()
-    threads = [threading.Thread(target=client, args=(i,)) for i in range(clients)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    wall = time.perf_counter() - t_total
-    audit = tpcc_consistency_audit(engine, districts)
-    committed = sum(counts.values())
-    per_proc = {
-        p: {
-            "committed": counts[p],
-            "median_s": round(sorted(lat[p])[len(lat[p]) // 2], 4) if lat[p] else None,
-        }
-        for p in _TPCC_IMPLS
-    }
-    return {
-        "mode": "tpcc",
-        "clients": clients,
-        "txns_per_client": txns_per_client,
-        "committed": committed,
-        "rolled_back": rolled_back,
-        "errors": errors,
-        "tps": round(committed / wall, 3),
-        "wall_s": round(wall, 3),
-        "per_proc": per_proc,
-        "consistency": audit,
-        "consistency_ok": all(audit.values()) and errors == 0,
-    }
-
-
-def run_tpcc_sharded(
-    spark: SparkSession,
-    clients: int = 8,
-    txns_per_client: int = 25,
-    districts: int = 4,
-    customers: int = 16,
-    shards: int = 4,
-    seed: int = 8,
-) -> dict:
-    """Key-partitioned multi-writer TPC-C: shard engines own disjoint
-    district partitions (shard = d % shards), each with its OWN statement
-    lock, transaction pin, and version chains over suffix-named tables.
-
-    This is the scale path the single-writer ceiling points at (BASELINE.md
-    / SCALE.md): TPC-C is DESIGNED so a transaction touches one warehouse,
-    so per-warehouse writers never contend — the same partition-level
-    commit independence a multi-writer table format (per-partition
-    optimistic commits) provides at warehouse scale. The reference gets
-    the equivalent from row-level MVCC inside one process
+    Sharding is the scale path the single-writer ceiling points at
+    (BASELINE.md / SCALE.md): TPC-C is DESIGNED so a transaction touches
+    one warehouse, so per-warehouse writers never contend — the same
+    partition-level commit independence a multi-writer table format
+    (per-partition optimistic commits) provides at warehouse scale. The
+    reference gets the equivalent from row-level MVCC inside one process
     (transaction_manager.hpp); here each shard is a full single-writer
     engine and ROUTING replaces row-level locks: a procedure's district
     decides its engine before any lock is taken. The consistency audit
@@ -593,10 +510,12 @@ def run_tpcc_sharded(
     if districts % shards != 0:
         raise ValueError(f"--districts ({districts}) must be a multiple of "
                          f"--tpcc-shards ({shards})")
+    sfx = [f"_s{i}" if shards > 1 else "" for i in range(shards)]
     engines = [Engine(spark) for _ in range(shards)]
+    # single-writer per shard: see module note above
     locks = [threading.Lock() for _ in range(shards)]
     for s_id, eng in enumerate(engines):
-        tpcc_setup(eng, districts, customers, sfx=f"_s{s_id}",
+        tpcc_setup(eng, districts, customers, sfx=sfx[s_id],
                    shards=shards, shard=s_id)
     counts = {p: 0 for p in _TPCC_IMPLS}
     lat: dict[str, list[float]] = {p: [] for p in _TPCC_IMPLS}
@@ -627,9 +546,12 @@ def run_tpcc_sharded(
                 try:
                     committed = _TPCC_IMPLS[proc](
                         engines[s_id], rng, districts, customers,
-                        sfx=f"_s{s_id}", **kw)
-                except Exception:  # noqa: BLE001 — same client-resilience
-                    # contract as run_tpcc: ROLLBACK, count, keep going
+                        sfx=sfx[s_id], **kw)
+                except Exception:  # noqa: BLE001 — client resilience:
+                    # a failed procedure must ROLLBACK (never leave the
+                    # engine's transaction pin held — one wedged pin
+                    # starves every later client on the write fence) and
+                    # count as an error; the audit still gates the run
                     try:
                         engines[s_id].execute("ROLLBACK")
                     except Exception:  # noqa: BLE001
@@ -653,7 +575,7 @@ def run_tpcc_sharded(
         t.join()
     wall = time.perf_counter() - t_total
     shard_audits = [
-        tpcc_consistency_audit(eng, districts, sfx=f"_s{s_id}")
+        tpcc_consistency_audit(eng, districts, sfx=sfx[s_id])
         for s_id, eng in enumerate(engines)
     ]
     audit = {
@@ -668,7 +590,7 @@ def run_tpcc_sharded(
         for p in _TPCC_IMPLS
     }
     return {
-        "mode": "tpcc_sharded",
+        "mode": "tpcc" if shards == 1 else "tpcc_sharded",
         "shards": shards,
         "clients": clients,
         "txns_per_client": txns_per_client,
@@ -681,6 +603,10 @@ def run_tpcc_sharded(
         "consistency": audit,
         "consistency_ok": all(audit.values()) and errors == 0,
     }
+
+
+# the sharded runner's former name, kept for its callers
+run_tpcc_sharded = run_tpcc
 
 
 # ---------------------------------------------------------------------------
@@ -913,17 +839,11 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(result))
         return 0 if result["verified_ok"] else 1
     if args.tpcc:
-        if args.tpcc_shards > 1:
-            result = run_tpcc_sharded(
-                spark, clients=args.clients, txns_per_client=args.txns,
-                districts=args.districts, customers=args.customers,
-                shards=args.tpcc_shards,
-            )
-        else:
-            result = run_tpcc(
-                spark, clients=args.clients, txns_per_client=args.txns,
-                districts=args.districts, customers=args.customers,
-            )
+        result = run_tpcc(
+            spark, clients=args.clients, txns_per_client=args.txns,
+            districts=args.districts, customers=args.customers,
+            shards=args.tpcc_shards,
+        )
         print(json.dumps(result))
         return 0 if result["consistency_ok"] else 1
     if not args.queries or not args.tables:

@@ -38,6 +38,8 @@ import sys
 
 from pyspark.sql import SparkSession
 
+from hyrise_spark.sqltext import split_statements
+
 
 class Console:
     PROMPT = "hyrise_spark> "
@@ -101,7 +103,7 @@ class Console:
     def cmd_script(self, path: str) -> str:
         out = []
         with open(path) as fh:
-            for stmt in self.engine._split(fh.read()):
+            for stmt in split_statements(fh.read()):
                 out.append(self.run_sql(stmt))
         return "\n".join(out)
 

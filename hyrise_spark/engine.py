@@ -21,6 +21,14 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from hyrise_spark.catalog import Catalog, read_parquet
+from hyrise_spark.sqltext import (
+    find_top_level,
+    mask,
+    match_paren,
+    split_statements,
+    split_top_level,
+    sub_outside,
+)
 
 _IMPORT_RE = re.compile(
     r"^\s*IMPORT\s+FROM\s+'(?P<path>[^']+)'\s+INTO\s+(?P<table>\w+)\s*$", re.I
@@ -100,21 +108,6 @@ _EXECUTE_RE = re.compile(
 _ENGINE_SEQ = itertools.count()
 
 
-def _strip_str_literals(s: str) -> str:
-    """Blank out '...' string literal contents so keyword probes (e.g. the
-    GROUPS BETWEEN dialect check) cannot match inside a literal."""
-    return re.sub(r"'[^']*'", "''", s)
-
-
-def _mask_str_literals(s: str) -> str:
-    """LENGTH-PRESERVING variant of _strip_str_literals: literal contents
-    become spaces, so positional scanners (paren matchers, aggregate-call
-    finders) can search the MASKED text and slice the ORIGINAL by the same
-    offsets — a literal containing "SUM(x) OVER (... EXCLUDE GROUP)" must
-    never be rewritten (ADVICE r11)."""
-    return re.sub(r"'[^']*'", lambda m: "'" + " " * (len(m[0]) - 2) + "'", s)
-
-
 def _parse_literal(tok: str):
     """One EXECUTE argument literal -> Python value."""
     t = tok.strip()
@@ -173,6 +166,28 @@ _RELEASE_RE = re.compile(
     r"^\s*RELEASE\s+(?:SAVEPOINT\s+)?(?P<name>\w+)\s*$", re.I
 )
 _META_REF_RE = re.compile(r"\bmeta_\w+", re.I)
+# Engine-dialect markers. Each one routes a SELECT to its rewrite in
+# _dispatch (which EXPLAIN shares); they are searched on the literal- and
+# comment-free mask (sqltext.mask), never on the raw text.
+_GROUPS_FRAME_RE = re.compile(r"\bGROUPS\s+BETWEEN\b", re.I)
+_FRAME_EXCLUDE_RE = re.compile(
+    r"\bEXCLUDE\s+(?:CURRENT\s+ROW|GROUP|TIES|NO\s+OTHERS)\b", re.I)
+_WINDOW_FILTER_RE = re.compile(r"\bFILTER\s*\(\s*WHERE\b", re.I)
+_DISTINCT_AGG_RE = re.compile(
+    r"\b(?:COUNT|SUM|AVG|MIN|MAX)\s*\(\s*DISTINCT\b", re.I)
+_OVER_RE = re.compile(r"\bOVER\b", re.I)
+_NAMED_WINDOW_RE = re.compile(r"\bWINDOW\s+[A-Za-z_]\w*\s+AS\s*\(", re.I)
+_OVER_NAME_RE = re.compile(r"\bOVER\s+([A-Za-z_]\w*)", re.I)
+_STAR_MODIFIER_RE = re.compile(
+    r"\*\s+(?:EXCLUDE\s*(?:\(|\w)|REPLACE\s*\()", re.I)
+_DISTINCT_ON_RE = re.compile(r"^\s*SELECT\s+DISTINCT\s+ON\s*\(", re.I)
+_SUBQUERY_RE = re.compile(r"\(\s*SELECT\b", re.I)
+_EXPLAIN_RE = re.compile(
+    r"^\s*EXPLAIN\s+(?:(?P<analyze>ANALYZE)"
+    r"|(?P<mode>FORMATTED|EXTENDED|CODEGEN|COST))?\s*"
+    r"(?P<body>(?:SELECT|WITH)\b.+)$",
+    re.I | re.S,
+)
 # ASOF JOIN (DuckDB/QuestDB dialect; beyond the reference's join vocabulary,
 # types.hpp:210). Shape: one equi-key + one time inequality in ON; the
 # inequality's comparison picks the direction (l.ts >= r.ts -> latest
@@ -295,7 +310,9 @@ class Engine:
     # -- statement routing --------------------------------------------------
     def execute(self, sql: str, args: dict | list | None = None) -> DataFrame | None:
         result: DataFrame | None = None
-        for stmt in self._split(sql):
+        # SQLPipeline's multi-statement handling; comments go here, so no
+        # routing regex below ever sees one
+        for stmt in split_statements(sql):
             result = self._logged_execute(stmt, args)
         return result
 
@@ -324,26 +341,6 @@ class Engine:
             entry["duration_ms"] = int((_time.perf_counter() - t0) * 1000)
             log.append(entry)
             del log[:-1000]
-
-    @staticmethod
-    def _split(sql: str) -> list[str]:
-        # Split on ';' outside quotes (SQLPipeline's multi-statement handling).
-        parts, buf, quote = [], [], None
-        for ch in sql:
-            if quote:
-                buf.append(ch)
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"'):
-                quote = ch
-                buf.append(ch)
-            elif ch == ";":
-                parts.append("".join(buf))
-                buf = []
-            else:
-                buf.append(ch)
-        parts.append("".join(buf))
-        return [p.strip() for p in parts if p.strip()]
 
     # statements that mutate state or control transactions — fenced while
     # ANOTHER thread's transaction is open (see _execute_one)
@@ -439,7 +436,6 @@ class Engine:
     # parameterless, and not over the dynamic meta_* tables (whose content
     # changes without a catalog mutation — meta_log, meta_system_utilization)
     _CACHEABLE_RE = re.compile(r"^\s*(?:SELECT|WITH|VALUES)\b", re.I)
-    _META_REF_RE = re.compile(r"\bmeta_\w+", re.I)
 
     def _cached_dispatch(self, stmt: str, args) -> DataFrame | None:
         """SQLPlanCache analog (sql_plan_cache.hpp): return the cached
@@ -453,7 +449,7 @@ class Engine:
         if (self._txn is not None
                 or self._in_snap_read
                 or not self._CACHEABLE_RE.match(stmt)
-                or self._META_REF_RE.search(stmt)
+                or _META_REF_RE.search(stmt)
                 or _NONDET_RE.search(stmt)):
             # While a transaction is open (or resolving a snapshot read) the
             # session carries TWO visibilities — owner sees uncommitted,
@@ -679,7 +675,7 @@ class Engine:
         if m and m["name"] in self._prepared:
             raw = (m["args"] or "").strip()
             vals = (
-                [_parse_literal(t) for t in self._split_assignments(raw)]
+                [_parse_literal(t) for t in split_top_level(raw)]
                 if raw
                 else []
             )
@@ -689,7 +685,7 @@ class Engine:
             rest, ret = self._split_returning(m["rest"])
             if rest is None:  # e.g. 'INSERT INTO t RETURNING x' — no body
                 raise ValueError(f"cannot parse INSERT statement: {stmt.strip()!r}")
-            k = self._find_top_level(rest, "CONFLICT")
+            k = find_top_level(rest, "CONFLICT")
             if k != -1 and re.search(r"\bON\s*$", rest[:k], re.I):
                 if ret:
                     raise ValueError(
@@ -721,7 +717,7 @@ class Engine:
                     if ret:
                         raise ValueError("RETURNING unsupported with USING")
                     src = um["src"]
-                    w = self._find_top_level(src, "WHERE")
+                    w = find_top_level(src, "WHERE")
                     if w == -1:
                         raise ValueError("DELETE ... USING requires a WHERE join condition")
                     src, jcond = src[:w].rstrip(), src[w + len("WHERE"):].strip()
@@ -739,8 +735,8 @@ class Engine:
             rest, ret = self._split_returning(m["rest"])
             if rest is None:  # e.g. 'UPDATE t RETURNING x' — no SET clause
                 raise ValueError(f"cannot parse UPDATE statement: {stmt.strip()!r}")
-            f = self._find_top_level(rest, "FROM")
-            w = self._find_top_level(rest, "WHERE")
+            f = find_top_level(rest, "FROM")
+            w = find_top_level(rest, "WHERE")
             if f != -1 and (w == -1 or f < w):
                 # UPDATE ... FROM (postgres/DuckDB): per-row update using the
                 # matching source row — MERGE's WHEN MATCHED UPDATE, with the
@@ -757,73 +753,43 @@ class Engine:
                     m["table"], None,
                     f"{src} ON {jcond} WHEN MATCHED THEN UPDATE SET {sets}",
                 )
-            sets, cond = self._split_top_level_where(rest)
-            return self._update(m["table"], sets, cond, args=args, returning=ret)
-        m = re.match(
-            r"^\s*EXPLAIN\s+ANALYZE\s+(?P<body>SELECT\b.+)$", stmt, re.I | re.S
-        )
+            sets, cond = (rest, None) if w == -1 else (
+                rest[:w], rest[w + len("WHERE"):].strip())
+            return self._update(m["table"], sets.strip(), cond, args=args,
+                                returning=ret)
+        m = _EXPLAIN_RE.match(stmt)
         if m:
-            # EXPLAIN ANALYZE (postgres dialect; beyond the reference, whose
-            # console offers `visualize` instead): EXECUTE the query to a
-            # noop sink, then report the plan that actually ran — with AQE
-            # this is the FINAL adaptive plan (isFinalPlan=true), i.e. the
-            # runtime-re-planned joins/partition coalescing a pre-execution
-            # EXPLAIN cannot show. Engine-dialect SELECTs route through the
-            # statement router like plain EXPLAIN.
-            df = self._execute_one(m["body"], args)
+            # EXPLAIN builds its query through this router, so the plan
+            # shown is the plan that runs: dialect rewrites, the hoisted
+            # correlated projection, materialized meta tables, the
+            # validated-UCC DISTINCT strip. It renders Spark's EXPLAIN
+            # result shape (one row, column `plan`), which works from psql
+            # too. _dispatch, not _execute_one: a plan-cache hit may be a
+            # frame that already ran, whose adaptive plan is the final one.
+            df = self._dispatch(m["body"], args)
             jqe = df._jdf.queryExecution()
-            # execute through THIS QueryExecution (a .write would clone the
-            # plan and leave this one unexecuted): rows stay on executors,
-            # only the count crosses to the driver
-            jqe.toRdd().count()
-            text = jqe.explainString(
-                self.spark._jvm.org.apache.spark.sql.execution.ExplainMode
-                .fromString("formatted")
-            )
-            return self.spark.createDataFrame([(text,)], "plan string")
-        m = re.match(
-            r"^\s*EXPLAIN\s+(?P<mode>FORMATTED|EXTENDED|CODEGEN|COST)?\s*"
-            r"(?P<body>(?:SELECT|WITH)\b.+)$",
-            stmt, re.I | re.S,
-        )
-        if m and (
-            # recursive UNION: Spark parses it but fails analysis — the
-            # engine's fixpoint frame is what an EXPLAIN should describe.
-            # (The UNION sits INSIDE the CTE parens, so this is a plain
-            # lookahead scan, not a top-level search.)
-            (re.match(r"^\s*WITH\s+RECURSIVE\b", m["body"], re.I)
-             and re.search(r"\bUNION\b(?!\s+ALL\b)",
-                           _strip_str_literals(m["body"]), re.I))
-            or self._find_top_level(m["body"], "QUALIFY") != -1
-            or self._find_top_level(m["body"], "ASOF") != -1
-            or re.search(r"\bGROUPS\s+BETWEEN\b",
-                         _strip_str_literals(m["body"]), re.I)
-            or re.match(r"^\s*SELECT\s+DISTINCT\s+ON\s*\(", m["body"], re.I)
-            or re.search(r"\bEXCLUDE\s+(?:CURRENT\s+ROW|GROUP|TIES|NO\s+OTHERS)\b"
-                         r"|\bFILTER\s*\(\s*WHERE\b[^)]*\)\s*OVER\b"
-                         r"|\*\s+(?:EXCLUDE\s*(?:\(|\w)|REPLACE\s*\()",
-                         _strip_str_literals(m["body"]), re.I)
-            or self._has_window_distinct(m["body"])
-            # correlated column in a subquery projection: valid syntax but
-            # Spark analysis fails — EXPLAIN must show the hoisted plan
-            or (re.search(r"\(\s*SELECT\b", _strip_str_literals(m["body"]),
-                          re.I)
-                and self._rewrite_correlated_scalar_projection(m["body"])
-                != m["body"])
-        ):
-            # EXPLAIN over the engine-dialect SELECT forms (ASOF/QUALIFY):
-            # spark.sql cannot parse them, so build the frame through the
-            # router (SELECTs are side-effect free) and render its plan in
-            # Spark's EXPLAIN result shape (one row, column `plan`) — works
-            # from psql too.
-            df = self._execute_one(m["body"], args)
             mode = (m["mode"] or "simple").lower()
-            text = df._jdf.queryExecution().explainString(
+            if m["analyze"]:
+                # EXPLAIN ANALYZE (postgres dialect; beyond the reference,
+                # whose console offers `visualize` instead): EXECUTE the
+                # query to a noop sink, then report the plan that actually
+                # ran — with AQE the FINAL adaptive plan (isFinalPlan=true),
+                # i.e. the runtime-re-planned joins/partition coalescing a
+                # pre-execution EXPLAIN cannot show. It executes through
+                # THIS QueryExecution (a .write would clone the plan and
+                # leave this one unexecuted): rows stay on executors, only
+                # the count crosses to the driver.
+                jqe.toRdd().count()
+                mode = "formatted"
+            text = jqe.explainString(
                 self.spark._jvm.org.apache.spark.sql.execution.ExplainMode
                 .fromString(mode)
             )
             return self.spark.createDataFrame([(text,)], "plan string")
-        if stmt.lower().lstrip().startswith("select") and "meta_" in stmt:
+        ms = mask(stmt)
+        lead = re.match(r"\s*(\w+)", ms)
+        verb = lead[1].upper() if lead else ""
+        if verb in ("SELECT", "WITH") and _META_REF_RE.search(ms):
             self._materialize_meta_tables(stmt)
         # quote-/paren-aware: 'ASOF' inside a string literal or subquery is
         # not this dialect (the QUALIFY check below gets the same treatment)
@@ -833,11 +799,11 @@ class Engine:
             stmt, re.I)
         if rm:
             copen = stmt.index("(", rm.end() - 1)
-            cclose = self._match_paren(stmt, copen)
+            cclose = match_paren(stmt, copen)
             if cclose == -1:
                 raise ValueError("WITH RECURSIVE: unbalanced CTE body")
             body = stmt[copen + 1:cclose]
-            u = self._find_top_level(body, "UNION")
+            u = find_top_level(body, "UNION")
             is_distinct_union = (
                 u != -1
                 and not re.match(r"\s*ALL\b", body[u + len("UNION"):], re.I)
@@ -854,7 +820,7 @@ class Engine:
                     rm["name"], rm["cols"], body[:u],
                     body[u + len("UNION"):], rest)
             # UNION ALL form: Spark runs it natively
-        a = self._find_top_level(stmt, "ASOF")
+        a = find_top_level(stmt, "ASOF")
         if a != -1 and re.match(r"ASOF\s+(?:LEFT\s+)?JOIN\b", stmt[a:], re.I):
             m = _ASOF_RE.match(stmt)
             if not m:
@@ -863,33 +829,24 @@ class Engine:
                     " ASOF [LEFT] JOIN <r> [AS b] ON <equi-key AND time-inequality>"
                 )
             return self._asof_join_sql(m)
-        if (stmt.lstrip().upper().startswith("SELECT")
-                and self._find_top_level(stmt, "QUALIFY") != -1):
+        if verb == "SELECT" and find_top_level(stmt, "QUALIFY") != -1:
             return self._qualify_sql(stmt)
-        if (stmt.lstrip().upper().startswith("SELECT")
-                and re.search(r"\bGROUPS\s+BETWEEN\b", _strip_str_literals(stmt),
-                              re.I)):
+        if verb == "SELECT" and _GROUPS_FRAME_RE.search(ms):
             return self._groups_frame_sql(stmt)
-        if re.match(r"^\s*SELECT\s+DISTINCT\s+ON\s*\(", stmt, re.I):
+        if _DISTINCT_ON_RE.match(ms):
             return self._distinct_on_sql(stmt)
-        if (stmt.lstrip().upper().startswith("SELECT")
-                and (re.search(r"\bEXCLUDE\s+(?:CURRENT\s+ROW|GROUP|TIES|"
-                               r"NO\s+OTHERS)\b"
-                               r"|\bFILTER\s*\(\s*WHERE\b[^)]*\)\s*OVER\b",
-                               _strip_str_literals(stmt), re.I)
-                     or self._has_window_distinct(stmt))):
+        if verb == "SELECT" and (_FRAME_EXCLUDE_RE.search(ms)
+                                 or _WINDOW_FILTER_RE.search(ms)
+                                 or _DISTINCT_AGG_RE.search(ms)) \
+                and _OVER_RE.search(ms):
             return self._window_dialect_sql(stmt)
-        if (stmt.lstrip().upper().startswith("SELECT")
-                and re.search(r"\*\s+(?:EXCLUDE\s*(?:\(|\w)|REPLACE\s*\()",
-                              _strip_str_literals(stmt), re.I)):
+        if verb == "SELECT" and _STAR_MODIFIER_RE.search(ms):
             return self._star_modifiers_sql(stmt)
-        if (re.match(r"^\s*(?:SELECT|WITH)\b", stmt, re.I)
-                and re.search(r"\(\s*SELECT\b", _strip_str_literals(stmt),
-                              re.I)):
+        if verb in ("SELECT", "WITH") and _SUBQUERY_RE.search(ms):
             # corpus lines 385-386: outer column inside a scalar
             # subquery's projection — hoist it out (no-op when n/a)
             stmt = self._rewrite_correlated_scalar_projection(stmt)
-        if self.catalog.validated_uccs and stmt.lower().lstrip().startswith("select"):
+        if self.catalog.validated_uccs and verb == "SELECT":
             # redundant-DISTINCT elimination over validated UCCs — the
             # ucc_discovery_plugin's group-by reduction
             # (ucc_discovery_plugin.cpp:348); saves HashAggregate + Exchange
@@ -984,7 +941,7 @@ class Engine:
         # a trailing WHERE (swallowed into the regex's cond) is a POST-match
         # filter in asof semantics: it must not change WHICH right row
         # matches, so it is evaluated on the matched row, not folded into ON
-        w = self._find_top_level(cond, "WHERE")
+        w = find_top_level(cond, "WHERE")
         where = None
         if w != -1:
             cond, where = cond[:w].rstrip(), cond[w + len("WHERE"):].strip()
@@ -1073,20 +1030,20 @@ class Engine:
         frames over grouped output would need the aggregation inside the
         subquery — not a GROUPS-specific problem; wrap manually)."""
         for kw in ("GROUP", "HAVING"):
-            if self._find_top_level(stmt, kw) != -1:
+            if find_top_level(stmt, kw) != -1:
                 raise ValueError(
                     "GROUPS frame rewrite supports windowed SELECTs without "
                     "top-level GROUP BY/HAVING — wrap the aggregation in a "
                     "subquery"
                 )
-        f = self._find_top_level(stmt, "FROM")
+        f = find_top_level(stmt, "FROM")
         if f == -1:
             raise ValueError("GROUPS frame: no top-level FROM")
         head, tail = stmt[:f], stmt[f:]
         # trailing top-level ORDER BY / LIMIT belong to the OUTER query
         outer = ""
         for kw in ("ORDER", "LIMIT"):
-            k = self._find_top_level(tail, kw)
+            k = find_top_level(tail, kw)
             if k != -1:  # ORDER first: a LIMIT after it rides along
                 tail, outer = tail[:k].rstrip(), tail[k:]
                 break
@@ -1101,11 +1058,9 @@ class Engine:
             if not m:
                 out.append(head[i:])
                 break
-            # balanced-paren scan for the spec body
-            j, depth = m.end(), 1
-            while j < len(head) and depth:
-                depth += {"(": 1, ")": -1}.get(head[j], 0)
-                j += 1
+            j = match_paren(head, m.end() - 1) + 1
+            if j == 0:
+                raise ValueError("GROUPS frame: unbalanced OVER spec")
             spec = head[m.end():j - 1]
             sm = re.match(
                 r"^\s*(?:PARTITION\s+BY\s+(?P<pb>.*?))?\s*"
@@ -1190,17 +1145,17 @@ class Engine:
         import pyspark.sql.functions as F
 
         stmt = self._rewrite_window_dialect(stmt)  # dialect forms compose
-        q = self._find_top_level(stmt, "QUALIFY")
+        q = find_top_level(stmt, "QUALIFY")
         head, tail = stmt[:q].rstrip(), stmt[q + len("QUALIFY"):].strip()
         pred, rest = tail, ""
         for kw in ("ORDER", "LIMIT"):
-            k = self._find_top_level(tail, kw)
+            k = find_top_level(tail, kw)
             if k != -1 and (not rest or k < len(pred)):
                 pred, rest = tail[:k].rstrip(), tail[k:]
         try:
             df = self.spark.sql(f"SELECT * FROM ({head}) WHERE {pred}")
         except Exception:  # noqa: BLE001 — window fn in pred: inject instead
-            f = self._find_top_level(head, "FROM")
+            f = find_top_level(head, "FROM")
             if f == -1:
                 raise
             # SELECT DISTINCT: the injected flag must not join the dedup key
@@ -1221,26 +1176,6 @@ class Engine:
             df = self.spark.sql(f"SELECT * FROM {qv} {rest}")
         return df
 
-    @staticmethod
-    def _match_paren(s: str, i: int) -> int:
-        """Index of the ')' closing the '(' at s[i] (quote-aware), or -1."""
-        depth, quote, n = 0, None, len(s)
-        while i < n:
-            ch = s[i]
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"'):
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    return i
-            i += 1
-        return -1
-
     def _distinct_on_sql(self, stmt: str) -> DataFrame:
         """DISTINCT ON (postgres / DuckDB dialect; the reference's DISTINCT
         surface is plain SELECT DISTINCT, sql_translator.cpp:436): keep ONE
@@ -1259,23 +1194,23 @@ class Engine:
         stmt = self._rewrite_window_dialect(stmt)  # dialect forms compose
         m = re.match(r"^\s*SELECT\s+DISTINCT\s+ON\s*", stmt, re.I)
         p = stmt.find("(", m.end())
-        q = self._match_paren(stmt, p)
+        q = match_paren(stmt, p)
         if q == -1:
             raise ValueError("DISTINCT ON: unbalanced key list")
         keys = stmt[p + 1:q].strip()
         body = stmt[q + 1:]
-        f = self._find_top_level(body, "FROM")
+        f = find_top_level(body, "FROM")
         if f == -1:
             raise ValueError("DISTINCT ON: no top-level FROM")
         sel = body[:f].strip()
         rest = body[f:]
-        if self._find_top_level(rest, "GROUP") != -1:
+        if find_top_level(rest, "GROUP") != -1:
             raise ValueError("DISTINCT ON with GROUP BY is not supported")
         order, limit = "", ""
-        k = self._find_top_level(rest, "ORDER")
+        k = find_top_level(rest, "ORDER")
         if k != -1:
             order, rest = rest[k:].strip(), rest[:k].rstrip()
-        k = self._find_top_level(order or rest, "LIMIT")
+        k = find_top_level(order or rest, "LIMIT")
         if k != -1:
             if order:
                 order, limit = order[:k].rstrip(), order[k:].strip()
@@ -1291,11 +1226,11 @@ class Engine:
         if sel == "*":
             out = "* EXCEPT (__don_rn)"
         else:
-            for i, item in enumerate(self._split_top_level_commas(sel)):
+            for i, item in enumerate(split_top_level(sel)):
                 item = item.strip()
                 # anywhere in the item, incl. nested in CAST/ROUND parens
                 if not re.search(r"\bOVER\s*\(",
-                                 _strip_str_literals(item), re.I):
+                                 mask(item), re.I):
                     out_items.append(item)
                     continue
                 am = re.match(r"^(?P<expr>.+)\s+AS\s+(?P<alias>\w+)\s*$",
@@ -1329,7 +1264,7 @@ class Engine:
             return self.spark.sql(self._rewrite_window_dialect(stmt))
         except Exception as e:  # analysis-time accumulator/element clash
             if ("DATATYPE_MISMATCH" not in str(e)
-                    or not self._has_window_distinct(stmt)):
+                    or not self._has_window_distinct(mask(stmt))):
                 raise
             self._fold_force_double = True
             try:
@@ -1348,36 +1283,31 @@ class Engine:
         the clause is dropped — SQL:2011 allows the EXCLUDE to live INSIDE
         `WINDOW w AS (...)`, which the expression-level rewrites below
         could otherwise never reach (and Spark's parser would reject the
-        surviving clause text). Marker-free statements keep their WINDOW
-        clause untouched — Spark runs those natively."""
-        stripped = _strip_str_literals(stmt)
-        if (re.search(r"\bWINDOW\s+[A-Za-z_]\w*\s+AS\s*\(", stripped, re.I)
-                and re.search(
-                    r"\bEXCLUDE\s+(?:CURRENT\s+ROW|GROUP|TIES|NO\s+OTHERS)\b"
-                    r"|\bFILTER\s*\(\s*WHERE\b", stripped, re.I)):
+        surviving clause text); a DISTINCT aggregate over `OVER w` is then
+        rewritten like one over an inline spec. Marker-free statements
+        keep their WINDOW clause untouched — Spark runs those natively."""
+        ms = mask(stmt)
+        if _NAMED_WINDOW_RE.search(ms) and (
+                _FRAME_EXCLUDE_RE.search(ms) or _WINDOW_FILTER_RE.search(ms)
+                or _DISTINCT_AGG_RE.search(ms)):
             stmt = self._inline_named_windows(stmt)
-        if re.search(r"\bFILTER\s*\(\s*WHERE\b", _strip_str_literals(stmt),
-                     re.I):
+        if _WINDOW_FILTER_RE.search(mask(stmt)):
             stmt = self._rewrite_window_filter(stmt)
-        if re.search(r"\bEXCLUDE\s+(?:CURRENT\s+ROW|GROUP|TIES|NO\s+OTHERS)\b",
-                     _strip_str_literals(stmt), re.I):
+        if _FRAME_EXCLUDE_RE.search(mask(stmt)):
             stmt = self._rewrite_frame_exclusion(stmt)
-        if re.search(r"\b(?:COUNT|SUM|AVG|MIN|MAX)\s*\(\s*DISTINCT\b",
-                     _strip_str_literals(stmt), re.I) and re.search(
-                     r"\bOVER\b", _strip_str_literals(stmt), re.I):
+        if self._has_window_distinct(mask(stmt)):
             stmt = self._rewrite_window_distinct(stmt)
         return stmt
 
     def _inline_named_windows(self, stmt: str) -> str:
         """Inline every `OVER w` against the statement's top-level WINDOW
         clause and DROP the clause. Parsing runs over the literal mask;
-        specs that reference another named window raise (same restriction
-        as _named_window_spec). Returns the statement unchanged when no
-        parsable clause exists."""
-        w = self._find_top_level(stmt, "WINDOW")
+        specs that reference another named window raise. Returns the
+        statement unchanged when no parsable clause exists."""
+        w = find_top_level(stmt, "WINDOW")
         if w == -1:
             return stmt
-        masked = _mask_str_literals(stmt)
+        masked = mask(stmt)
         specs: dict[str, str] = {}
         i = w + len("WINDOW")
         clause_end = i
@@ -1386,7 +1316,7 @@ class Engine:
             if not dm:
                 break
             popen = i + dm.end() - 1
-            pclose = self._match_paren(masked, popen)
+            pclose = match_paren(masked, popen)
             if pclose == -1:
                 raise ValueError("named window: unbalanced WINDOW spec")
             spec = stmt[popen + 1:pclose].strip()
@@ -1404,62 +1334,23 @@ class Engine:
         if not specs:
             return stmt
         out = stmt[:w] + " " + stmt[clause_end:]
-        mo = _mask_str_literals(out)
-        pieces, j = [], 0
-        for m in re.finditer(r"\bOVER\s+([A-Za-z_]\w*)", mo, re.I):
-            spec = specs.get(m.group(1).lower())
-            if spec is None:
-                continue
-            pieces.append(out[j:m.start()])
-            pieces.append(f"OVER ({spec})")
-            j = m.end()
-        pieces.append(out[j:])
-        return "".join(pieces)
+
+        def inline(m: "re.Match[str]") -> str:
+            spec = specs.get(m[1].lower())
+            return m[0] if spec is None else f"OVER ({spec})"
+
+        return sub_outside(_OVER_NAME_RE, inline, out)
 
     @staticmethod
-    def _has_window_distinct(stmt: str) -> bool:
-        """True when the statement contains a DISTINCT aggregate AND a
-        window (OVER) anywhere — the paren-insensitive dispatch probe for
-        the collect_set rewrite (ADVICE r9: the old `[^)]*` probe missed
+    def _has_window_distinct(ms: str) -> bool:
+        """True when the masked statement contains a DISTINCT aggregate AND
+        a window (OVER) anywhere — the paren-insensitive probe for the
+        collect_set rewrite (ADVICE r9: the old `[^)]*` probe missed
         nested-paren args like SUM(DISTINCT CAST(x AS BIGINT)) OVER).
         The rewriter itself does exact paren matching and no-ops on plain
         GROUP BY distincts, so a false positive here only re-routes a
         native statement through spark.sql unchanged."""
-        s = _strip_str_literals(stmt)
-        return bool(
-            re.search(r"\b(?:COUNT|SUM|AVG|MIN|MAX)\s*\(\s*DISTINCT\b",
-                      s, re.I)
-            and re.search(r"\bOVER\b", s, re.I)
-        )
-
-    def _named_window_spec(self, stmt: str, wname: str) -> str:
-        """Resolve `OVER w` against the statement's top-level WINDOW clause
-        (`WINDOW w AS (spec) [, ...]`) and return the spec text."""
-        w = self._find_top_level(stmt, "WINDOW")
-        if w == -1:
-            raise ValueError(
-                f"window DISTINCT: named window '{wname}' has no WINDOW "
-                "clause in this statement")
-        clause = stmt[w + len("WINDOW"):]
-        for part in self._split_top_level_commas(clause):
-            dm = re.match(r"\s*([A-Za-z_]\w*)\s+AS\s*\(", part, re.I)
-            if not dm or dm[1].lower() != wname.lower():
-                continue
-            popen = part.index("(", dm.end() - 1)
-            pclose = self._match_paren(part, popen)
-            if pclose == -1:
-                raise ValueError("window DISTINCT: unbalanced WINDOW spec")
-            spec = part[popen + 1:pclose].strip()
-            if re.match(r"^[A-Za-z_]\w*\s*(?:$|ORDER|ROWS|RANGE|GROUPS)",
-                        spec, re.I):
-                raise ValueError(
-                    "window DISTINCT: WINDOW specs that reference another "
-                    f"named window ('{spec.split()[0]}') are not supported "
-                    "with DISTINCT aggregates")
-            return spec
-        raise ValueError(
-            f"window DISTINCT: named window '{wname}' is not defined in "
-            "the WINDOW clause")
+        return bool(_DISTINCT_AGG_RE.search(ms) and _OVER_RE.search(ms))
 
     def _rewrite_window_distinct(self, stmt: str) -> str:
         """DISTINCT window aggregates (DuckDB/postgres run
@@ -1487,7 +1378,11 @@ class Engine:
         out, i = [], 0
         # search/paren-match over the length-preserving literal mask
         # (round 12: same hardening as the exclusion scanner, ADVICE r11)
-        masked = _mask_str_literals(stmt)
+        masked = mask(stmt)
+        # the fold type sniff reads only the views this statement names: a
+        # same-named column of an unrelated view must not break the
+        # unanimous answer
+        views = set(re.findall(r"[a-z_]\w*", masked.lower()))
         pat = re.compile(
             r"(?P<fn>COUNT|SUM|AVG|MIN|MAX)\s*\(\s*DISTINCT\b", re.I)
         while True:
@@ -1496,34 +1391,33 @@ class Engine:
                 out.append(stmt[i:])
                 break
             op = masked.index("(", m.start())
-            close = self._match_paren(masked, op)
+            close = match_paren(masked, op)
             if close == -1:
                 raise ValueError("window DISTINCT: unbalanced aggregate")
             om = re.match(r"\s*OVER\s*\(", masked[close + 1:], re.I)
-            nm = (None if om else
-                  re.match(r"\s*OVER\s+(?P<w>[A-Za-z_]\w*)",
-                           masked[close + 1:], re.I))
-            if not om and not nm:  # GROUP BY DISTINCT agg — native in Spark
+            if not om:
+                # named windows were inlined by _rewrite_window_dialect, so
+                # a name left here has no spec in the WINDOW clause
+                nm = re.match(r"\s*OVER\s+([A-Za-z_]\w*)",
+                              masked[close + 1:], re.I)
+                if nm:
+                    raise ValueError(
+                        f"window DISTINCT: named window '{nm[1]}' is not "
+                        "defined in the WINDOW clause")
+                # GROUP BY DISTINCT agg — native in Spark
                 out.append(stmt[i:close + 1])
                 i = close + 1
                 continue
             fn = m["fn"].upper()
             arg = stmt[m.end():close].strip()
-            if nm:
-                # named window (OVER w): resolve the WINDOW clause and
-                # inline its spec into the rewritten expression; the
-                # statement's own WINDOW clause stays for other consumers
-                spec = self._named_window_spec(stmt, nm["w"])
-                oclose = close + nm.end()  # last char of the window name
-            else:
-                oopen = close + 1 + om.end() - 1
-                oclose = self._match_paren(masked, oopen)
-                if oclose == -1:
-                    raise ValueError("window DISTINCT: unbalanced OVER spec")
-                spec = stmt[oopen + 1:oclose]
+            oopen = close + 1 + om.end() - 1
+            oclose = match_paren(masked, oopen)
+            if oclose == -1:
+                raise ValueError("window DISTINCT: unbalanced OVER spec")
+            spec = stmt[oopen + 1:oclose]
             em = re.search(
                 r"\s*EXCLUDE\s+(?P<mode>CURRENT\s+ROW|GROUP|TIES|"
-                r"NO\s+OTHERS)\s*$", _mask_str_literals(spec), re.I)
+                r"NO\s+OTHERS)\s*$", mask(spec), re.I)
             exmode = None
             if em:  # mask is length-preserving: em offsets index `spec`
                 exmode = re.sub(r"\s+", " ", em["mode"].upper())
@@ -1531,7 +1425,8 @@ class Engine:
                 if exmode == "NO OTHERS":
                     exmode = None  # SQL:2011's explicit default
             if exmode is not None:
-                expr = self._distinct_exclusion_expr(fn, arg, spec, exmode)
+                expr = self._distinct_exclusion_expr(fn, arg, spec, exmode,
+                                                     views)
             elif fn in ("MIN", "MAX"):
                 expr = f"{fn}({arg}) OVER ({spec})"
             else:
@@ -1539,7 +1434,7 @@ class Engine:
                 if fn == "COUNT":
                     expr = f"CAST(SIZE({dset}) AS BIGINT)"
                 else:
-                    acc0, step = self._distinct_fold_acc0(arg)
+                    acc0, step = self._distinct_fold_acc0(arg, views)
                     expr = self._guarded_fold_expr(fn, dset, acc0, step)
             out.append(stmt[i:m.start()])
             out.append(expr)
@@ -1547,7 +1442,7 @@ class Engine:
         return "".join(out)
 
     def _distinct_exclusion_expr(self, fn: str, arg: str, spec: str,
-                                 mode: str) -> str:
+                                 mode: str, views: set[str]) -> str:
         """DISTINCT window aggregates composed with SQL:2011 frame
         exclusion (round 12; previously a ValueError at the exclusion
         rewriter). The frame's VALUE MULTISET decides everything:
@@ -1590,7 +1485,7 @@ class Engine:
         multiset must fit one row's window state, the same documented
         bound as the plain DISTINCT rewrite; all windows share the
         spec's partition/order — ONE Window operator."""
-        ms = _mask_str_literals(spec)
+        ms = mask(spec)
         bm = re.search(
             r"\b(?P<m>ROWS|RANGE)\s+BETWEEN\s+(?P<lo>.+?)\s+AND\s+"
             r"(?P<hi>.+?)\s*$", ms, re.I)
@@ -1664,7 +1559,7 @@ class Engine:
             return f"ARRAY_{fn}({surv})"
         if fn == "COUNT":
             return f"CAST(SIZE({surv}) AS BIGINT)"
-        acc0, step = self._distinct_fold_acc0(arg)
+        acc0, step = self._distinct_fold_acc0(arg, views)
         return self._guarded_fold_expr(fn, surv, acc0, step)
 
     @staticmethod
@@ -1698,16 +1593,9 @@ class Engine:
         while folding and the finish lambda supplies the empty->NULL (and
         AVG's /n) semantics. The element count stays INT (like SIZE) so
         AVG's division types — and therefore decimal result scales — are
-        unchanged."""
-        m = re.fullmatch(r"\s*\(\s*acc\s*,\s*v\s*\)\s*->\s*(.+)", step,
-                         re.S)
-        if m is None:  # foreign step shape — keep the legacy guarded form
-            ssum = f"AGGREGATE({arr}, {acc0}, {step})"
-            cnt = f"SIZE({arr})"
-            if fn == "SUM":
-                return f"(CASE WHEN {cnt} = 0 THEN NULL ELSE {ssum} END)"
-            return f"(CASE WHEN {cnt} = 0 THEN NULL ELSE {ssum} / {cnt} END)"
-        body = re.sub(r"\bacc\b", "acc.s", m.group(1))
+        unchanged. `step` is `(acc, v) -> <expr>`, the form every
+        _distinct_fold_acc0 accumulator has."""
+        body = re.sub(r"\bacc\b", "acc.s", step.split("->", 1)[1].strip())
         start = f"NAMED_STRUCT('s', {acc0}, 'n', 0)"
         merge = f"(acc, v) -> NAMED_STRUCT('s', {body}, 'n', acc.n + 1)"
         fin = ("acc -> CASE WHEN acc.n = 0 THEN NULL ELSE acc.s END"
@@ -1745,7 +1633,8 @@ class Engine:
             f" AS DECIMAL(37,{s}))",
         )
 
-    def _distinct_fold_acc0(self, arg: str) -> tuple[str, str]:
+    def _distinct_fold_acc0(self, arg: str,
+                            views: set[str] | None = None) -> tuple[str, str]:
         """(accumulator zero, step lambda) for the SUM/AVG(DISTINCT)
         collect_set fold, chosen from the ARGUMENT's type — never from the
         session decimal flag (ADVICE r10: Spark's AGGREGATE raises
@@ -1756,7 +1645,8 @@ class Engine:
         - explicit integral cast    -> BIGINT (exact integer lattice)
         - explicit DECIMAL(p,s) cast -> DECIMAL(38,s), the arg's OWN scale
         - bare (optionally qualified) column -> the resolved type from the
-          registered views, but only when it is unambiguous: all-integral
+          registered views named in `views` (lower case; None: every
+          registered view), but only when it is unambiguous: all-integral
           folds in BIGINT, all-decimal in DECIMAL(38, max s); any float /
           mixed / unresolved match falls through
         - anything else -> DOUBLE (always type-legal: Spark widens every
@@ -1781,7 +1671,7 @@ class Engine:
             return self._decimal_fold(int(m.group(2)))
         cm = re.fullmatch(r"(?:[A-Za-z_]\w*\.)?([A-Za-z_]\w*)", arg.strip())
         if cm:
-            types = self._registered_column_types(cm.group(1))
+            types = self._registered_column_types(cm.group(1), views)
             if types:
                 from pyspark.sql import types as T
 
@@ -1791,9 +1681,10 @@ class Engine:
                     return "CAST(0 AS BIGINT)", "(acc, v) -> acc + v"
                 if all(isinstance(t, T.DecimalType) for t in types):
                     return self._decimal_fold(max(t.scale for t in types))
-        return self._expr_fold_acc0(arg)
+        return self._expr_fold_acc0(arg, views)
 
-    def _expr_fold_acc0(self, arg: str) -> tuple[str, str]:
+    def _expr_fold_acc0(self, arg: str,
+                        views: set[str] | None) -> tuple[str, str]:
         """Type sniff for simple ARITHMETIC expression args (ADVICE r11:
         `SUM(DISTINCT price * 2) OVER ...` on a decimal column fell to the
         DOUBLE fold, risking last-ulp drift vs DuckDB's exact decimal
@@ -1812,7 +1703,7 @@ class Engine:
         unresolved/ambiguous column fall through to the DOUBLE fold
         (exact below 2^53 — documented rows-only risk beyond)."""
         double = ("CAST(0 AS DOUBLE)", "(acc, v) -> acc + v")
-        s = _strip_str_literals(arg)
+        s = mask(arg)
         if not re.fullmatch(r"[\w\s.+\-*()]+", s) or "/" in s:
             return double
         idents = re.findall(r"(?:[A-Za-z_]\w*\.)?([A-Za-z_]\w*)", s)
@@ -1826,7 +1717,7 @@ class Engine:
         scales: list[int] = []
         all_int = True
         for name in idents:
-            types = self._registered_column_types(name)
+            types = self._registered_column_types(name, views)
             if not types:
                 return double
             if all(isinstance(t, T.DecimalType) for t in types):
@@ -1843,14 +1734,17 @@ class Engine:
             return double
         return self._decimal_fold(scale)
 
-    def _registered_column_types(self, col: str) -> list:
-        """Resolved Spark types of every registered view column named
-        `col` (case-insensitive). Best-effort: statement-local aliases and
-        derived tables are invisible here, which is why the caller only
-        trusts an UNANIMOUS answer."""
+    def _registered_column_types(self, col: str,
+                                 views: set[str] | None) -> list:
+        """Resolved Spark types of every column named `col`
+        (case-insensitive) of the registered views in `views` (None: all
+        of them). Best-effort: statement-local aliases and derived tables
+        are invisible here, which is why the caller only trusts an
+        UNANIMOUS answer."""
         out: list = []
         try:
-            names = [t.name for t in self.spark.catalog.listTables()]
+            names = [t.name for t in self.spark.catalog.listTables()
+                     if views is None or t.name.lower() in views]
         except Exception:
             return out
         low = col.lower()
@@ -1882,7 +1776,7 @@ class Engine:
             if not m:
                 out.append(stmt[i:])
                 break
-            fclose = self._match_paren(stmt, m.end() - 1)
+            fclose = match_paren(stmt, m.end() - 1)
             if fclose == -1:
                 raise ValueError("window FILTER: unbalanced clause")
             # only rewrite the windowed form — GROUP BY FILTER is native
@@ -1953,14 +1847,14 @@ class Engine:
         # so aggregate names, parens and EXCLUDE keywords inside string
         # literals are invisible (ADVICE r11); OUTPUT slices come from the
         # original text at the same offsets.
-        masked = _mask_str_literals(stmt)
+        masked = mask(stmt)
         pat = re.compile(r"\b(?P<fn>SUM|COUNT|AVG|MIN|MAX)\s*\(", re.I)
         while True:
             m = pat.search(masked, i)
             if not m:
                 out.append(stmt[i:])
                 break
-            aclose = self._match_paren(masked, m.end() - 1)
+            aclose = match_paren(masked, m.end() - 1)
             if aclose == -1:
                 raise ValueError("frame exclusion: unbalanced aggregate")
             om = re.match(r"\s+OVER\s*\(", masked[aclose + 1:], re.I)
@@ -1969,7 +1863,7 @@ class Engine:
                 i = m.end()
                 continue
             oopen = aclose + 1 + om.end() - 1
-            close = self._match_paren(masked, oopen)
+            close = match_paren(masked, oopen)
             if close == -1:
                 raise ValueError("frame exclusion: unbalanced OVER spec")
             spec = stmt[oopen + 1:close]
@@ -2378,7 +2272,7 @@ class Engine:
             if bm.group(1).upper() != "RANGE":
                 return None
             return spec[bm.start("lo"):bm.end("lo")]
-        ms = _mask_str_literals(spec)
+        ms = mask(spec)
         fm = Engine._SHORTHAND_FRAME_RE.search(ms)
         if fm:
             if fm.group("kw").upper() != "RANGE":
@@ -2474,7 +2368,7 @@ class Engine:
         # cannot change the column set)
         src = rest[len("FROM"):]
         for kw in ("WHERE", "GROUP", "ORDER", "LIMIT"):
-            k = self._find_top_level(src, kw)
+            k = find_top_level(src, kw)
             if k != -1:
                 src = src[:k]
         cols = self.spark.sql(f"SELECT * FROM {src} LIMIT 0").columns
@@ -2485,7 +2379,7 @@ class Engine:
         if unknown:
             raise ValueError(f"EXCLUDE: no such column(s): {sorted(unknown)}")
         repl = {}
-        for part in self._split_top_level_commas(m["rep"] or ""):
+        for part in split_top_level(m["rep"] or ""):
             rm = re.match(r"^(?P<expr>.+)\s+AS\s+(?P<col>\w+)\s*$",
                           part.strip(), re.I | re.S)
             if not rm:
@@ -2522,36 +2416,16 @@ class Engine:
         "LATERAL ON AS USING AND OR NOT ASOF".split()
     )
 
-    @staticmethod
-    def _next_subquery_open(s: str, start: int) -> int:
-        """Index of the next `(SELECT` at/after `start` outside string
-        literals, or -1."""
-        quote, i, n = None, 0, len(s)
-        while i < n:
-            ch = s[i]
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"'):
-                quote = ch
-            elif (
-                ch == "("
-                and i >= start
-                and re.match(r"\(\s*SELECT\b", s[i:], re.I)
-            ):
-                return i
-            i += 1
-        return -1
-
     def _rewrite_correlated_scalar_projection(self, stmt: str) -> str:
         """Hoist qualified outer-column terms out of scalar-subquery
         projections (text-level, paren-balanced, innermost-first)."""
         out, i = stmt, 0
         while True:
-            popen = self._next_subquery_open(out, i)
-            if popen == -1:
+            sm = _SUBQUERY_RE.search(mask(out), i)
+            if sm is None:
                 return out
-            pclose = self._match_paren(out, popen)
+            popen = sm.start()
+            pclose = match_paren(out, popen)
             if pclose == -1:
                 return out
             # derived tables / IN-lists after FROM are not scalar contexts
@@ -2575,21 +2449,21 @@ class Engine:
         m = re.match(r"^\s*SELECT\s+", sub, re.I)
         if not m or re.match(r"^\s*SELECT\s+DISTINCT\b", sub, re.I):
             return sub
-        f = self._find_top_level(sub, "FROM")
-        if f == -1 or self._find_top_level(sub, "GROUP", f) != -1:
+        f = find_top_level(sub, "FROM")
+        if f == -1 or find_top_level(sub, "GROUP", f) != -1:
             return sub
         for setop in ("UNION", "INTERSECT", "EXCEPT"):
-            if self._find_top_level(sub, setop, f) != -1:
+            if find_top_level(sub, setop, f) != -1:
                 return sub
         proj, rest = sub[m.end():f], sub[f:]
-        if len(self._split_top_level_commas(proj)) != 1:
+        if len(split_top_level(proj)) != 1:
             return sub  # multi-column subquery is never scalar
         # the subquery's own relation names/aliases: every identifier in
         # its FROM clause text (conservative — a false "internal" match
         # just leaves the statement unrewritten, failing as before)
         clause_end = len(rest)
         for kw in ("WHERE", "HAVING", "ORDER", "LIMIT"):
-            k = self._find_top_level(rest, kw)
+            k = find_top_level(rest, kw)
             if k != -1:
                 clause_end = min(clause_end, k)
         own = {
@@ -2598,7 +2472,7 @@ class Engine:
         } - self._FROM_CLAUSE_KEYWORDS
         # drop one trailing top-level alias (unobservable on a scalar sub)
         alias = re.search(r"\s+AS\s+[A-Za-z_]\w*\s*$", proj, re.I)
-        if alias and self._find_top_level(proj, "AS", alias.start()) != -1:
+        if alias and find_top_level(proj, "AS", alias.start()) != -1:
             proj = proj[:alias.start()]
         # additive hoisting is only sound over a pure +/- expression: a
         # top-level comparison / logical / concat operator (ADVICE r10:
@@ -2621,7 +2495,7 @@ class Engine:
             (s if n or s == "-" else "") + t
             for n, (s, t) in enumerate(kept)
         )
-        if not self._AGG_FN_RE.search(_strip_str_literals(remaining)):
+        if not self._AGG_FN_RE.search(mask(remaining)):
             return sub
         tail = "".join(f" {s} {t}" for s, t in hoisted)
         # the caller re-wraps in the original parens, so this yields
@@ -2634,25 +2508,11 @@ class Engine:
         operator that binds looser than +/- : comparisons (= < > <> != etc.),
         string concat ||, or the logical/predicate keywords. Guard for
         `_hoist_outer_terms` (ADVICE r10)."""
-        depth, quote = 0, None
-        buf = []
-        for ch in s:
-            if quote:
-                if ch == quote:
-                    quote = None
-                buf.append(" ")
-            elif ch in ("'", '"'):
-                quote = ch
-                buf.append(" ")
-            elif ch == "(":
-                depth += 1
-                buf.append(" ")
-            elif ch == ")":
-                depth -= 1
-                buf.append(" ")
-            else:
-                buf.append(ch if depth == 0 else " ")
-        top = "".join(buf)
+        top, depth = [], 0
+        for ch in mask(s):
+            depth += (ch == "(") - (ch == ")")
+            top.append(ch if depth == 0 and ch not in "()" else " ")
+        top = "".join(top)
         if re.search(r"[=<>!]|\|\|", top):
             return True
         return bool(re.search(
@@ -2663,49 +2523,17 @@ class Engine:
         """Split at top-level binary +/- into (sign, text) pairs; a +/-
         directly after another operator or at the start is unary and stays
         inside its term."""
-        terms, depth, quote, start, sign = [], 0, None, 0, "+"
-        prev_nonspace = ""
-        for i, ch in enumerate(s):
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"'):
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif (
-                ch in "+-"
-                and depth == 0
-                and prev_nonspace not in ("", "+", "-", "*", "/", "%", "(", ",")
-            ):
+        terms, depth, start, sign, prev = [], 0, 0, "+", ""
+        for i, ch in enumerate(mask(s)):
+            depth += (ch == "(") - (ch == ")")
+            if (ch in "+-" and depth == 0
+                    and prev not in ("", "+", "-", "*", "/", "%", "(", ",")):
                 terms.append((sign, s[start:i]))
                 sign, start = ch, i + 1
             if not ch.isspace():
-                prev_nonspace = ch
+                prev = ch
         terms.append((sign, s[start:]))
         return terms
-
-    @staticmethod
-    def _split_top_level_commas(s: str) -> list[str]:
-        parts, depth, quote, start = [], 0, None, 0
-        for i, ch in enumerate(s):
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"'):
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                parts.append(s[start:i])
-                start = i + 1
-        if s[start:].strip():
-            parts.append(s[start:])
-        return parts
 
     # -- transactions (transaction_manager.hpp analog on the version ring) --
     # The reference's TransactionContext tracks read/write sets against MVCC
@@ -3047,11 +2875,11 @@ class Engine:
     def _split_returning(self, text: str | None) -> tuple[str | None, str | None]:
         """Split a DML statement tail at a top-level RETURNING clause
         (postgres/DuckDB dialect): -> (head, returning-list | None).
-        Quote-/paren-aware via _find_top_level, so a literal containing the
+        Quote-/paren-aware via find_top_level, so a literal containing the
         word is untouched."""
         if not text:
             return text, None
-        i = self._find_top_level(text, "RETURNING")
+        i = find_top_level(text, "RETURNING")
         if i == -1:
             return text, None
         return text[:i].rstrip() or None, text[i + len("RETURNING"):].strip()
@@ -3243,7 +3071,7 @@ class Engine:
             return self._change_meta_settings("update", sets=sets, cond=cond)
         cur = self.catalog.get_table(table)
         assignments: dict[str, str] = {}
-        for part in self._split_assignments(sets):
+        for part in split_top_level(sets):
             col, expr = part.split("=", 1)
             assignments[col.strip()] = expr.strip()
         # Build one SELECT over a snapshot view: CASE keeps 3VL (NULL match ->
@@ -3315,22 +3143,7 @@ class Engine:
 
         # substitute only OUTSIDE string literals — the phrase inside a
         # quoted literal is data, not a table reference
-        out, i, n = [], 0, len(stmt)
-        while i < n:
-            ch = stmt[i]
-            if ch in ("'", '"'):
-                j = i + 1
-                while j < n and stmt[j] != ch:
-                    j += 1
-                out.append(stmt[i : j + 1])
-                i = j + 1
-            else:
-                j = i
-                while j < n and stmt[j] not in ("'", '"'):
-                    j += 1
-                out.append(_VERSION_RE.sub(sub, stmt[i:j]))
-                i = j
-        return "".join(out)
+        return sub_outside(_VERSION_RE, sub, stmt)
 
     # -- ALTER TABLE (beyond the reference, whose dialect has no ALTER —
     # sql_translator.cpp handles no hsql::kStmtAlter; standard warehouse
@@ -3399,74 +3212,14 @@ class Engine:
     # MATCHED [AND guard] THEN UPDATE SET ... | DELETE, plus one WHEN NOT
     # MATCHED THEN INSERT [(cols)] VALUES (...). Snapshot semantics like the
     # other DML verbs: every branch reads the pre-merge target state.
-    @staticmethod
-    def _scan_balanced(s: str, i: int) -> int:
-        """Given s[i] == '(', return the index just past the matching ')'."""
-        depth, quote, n = 0, None, len(s)
-        while i < n:
-            ch = s[i]
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"'):
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    return i + 1
-            i += 1
-        raise ValueError("MERGE: unbalanced parentheses in USING source")
-
-    @staticmethod
-    def _find_top_level(s: str, word: str, start: int = 0) -> int:
-        """First index of whole-word `word` outside parens/quotes AND outside
-        CASE...END expressions (a CASE's own WHEN/THEN must not split MERGE
-        clauses), or -1."""
-        depth, case_depth, quote, i, n, w = 0, 0, None, start, len(s), len(word)
-        up, word = s.upper(), word.upper()
-
-        def _is_word_at(j: int, tok: str) -> bool:
-            if up[j : j + len(tok)] != tok:
-                return False
-            before = j == 0 or not (s[j - 1].isalnum() or s[j - 1] == "_")
-            after = j + len(tok) >= n or not (
-                s[j + len(tok)].isalnum() or s[j + len(tok)] == "_"
-            )
-            return before and after
-
-        while i < n:
-            ch = s[i]
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"'):
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0:
-                if _is_word_at(i, "CASE"):
-                    case_depth += 1
-                    i += 4
-                    continue
-                if case_depth > 0 and _is_word_at(i, "END"):
-                    case_depth -= 1
-                    i += 3
-                    continue
-                if case_depth == 0 and _is_word_at(i, word):
-                    return i
-            i += 1
-        return -1
-
     def _merge(self, table: str, talias: str | None, rest: str):
         if not self.catalog.has_table(table):
             raise ValueError(f"MERGE target table {table!r} is not registered")
         rest = rest.strip()
         if rest.startswith("("):
-            end = self._scan_balanced(rest, 0)
+            end = match_paren(rest, 0) + 1
+            if end == 0:
+                raise ValueError("MERGE: unbalanced parentheses in USING source")
             src, rest = rest[:end], rest[end:].lstrip()
         else:
             m = re.match(r"^\w+", rest)
@@ -3480,13 +3233,13 @@ class Engine:
         if not re.match(r"^ON\b", rest, re.I):
             raise ValueError("MERGE: expected ON <condition> after USING source")
         rest = rest[2:].lstrip()
-        wi = self._find_top_level(rest, "WHEN")
+        wi = find_top_level(rest, "WHEN")
         if wi < 0:
             raise ValueError("MERGE: at least one WHEN clause is required")
         cond, rest = rest[:wi].strip(), rest[wi:]
         clauses: list[str] = []
         while rest:
-            nxt = self._find_top_level(rest, "WHEN", 4)
+            nxt = find_top_level(rest, "WHEN", 4)
             clause, rest = (rest[:nxt], rest[nxt:]) if nxt > 0 else (rest, "")
             clauses.append(clause.strip())
         ins_vals = None
@@ -3496,7 +3249,7 @@ class Engine:
         matched: list[tuple[str, str | None, str | None]] = []
         for cl in clauses:
             body = cl[4:].lstrip()  # strip WHEN
-            ti = self._find_top_level(body, "THEN")
+            ti = find_top_level(body, "THEN")
             if ti < 0:
                 raise ValueError(f"MERGE: WHEN clause missing THEN: {cl!r}")
             head, action = body[:ti].strip(), body[ti + 4 :].strip()
@@ -3526,7 +3279,7 @@ class Engine:
                 ins_cols = (
                     [c.strip() for c in im["cols"].split(",")] if im["cols"] else None
                 )
-                ins_vals = self._split_assignments(im["vals"])
+                ins_vals = split_top_level(im["vals"])
             elif re.match(r"^UPDATE\s+SET\s+", action, re.I):
                 sets = re.sub(r"^UPDATE\s+SET\s+", "", action, count=1, flags=re.I)
                 matched.append(("update", guard, sets))
@@ -3580,7 +3333,7 @@ class Engine:
             for kind, _, sets in matched:
                 d: dict[str, str] = {}
                 if kind == "update":
-                    for part in self._split_assignments(sets):
+                    for part in split_top_level(sets):
                         col, expr = part.split("=", 1)
                         d[col.strip()] = expr.strip()
                     unknown = [c for c in d if c not in cur.columns]
@@ -3641,57 +3394,6 @@ class Engine:
         self._after_dml(table)
         return None
 
-    @staticmethod
-    def _split_top_level_where(rest: str) -> tuple[str, str | None]:
-        """Split `SET <assignments> [WHERE <cond>]` at the first WHERE that is
-        outside parentheses and quotes — a WHERE inside a scalar subquery in
-        the SET list must NOT split (the router-fragility case: `UPDATE t SET
-        x = (SELECT ... WHERE ...) WHERE k = 1`)."""
-        depth, quote, i, n = 0, None, 0, len(rest)
-        while i < n:
-            ch = rest[i]
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"'):
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and rest[i : i + 5].upper() == "WHERE":
-                before_ok = i == 0 or rest[i - 1].isspace()
-                after_ok = i + 5 >= n or rest[i + 5].isspace()
-                if before_ok and after_ok:
-                    return rest[:i].strip(), rest[i + 5 :].strip()
-            i += 1
-        return rest.strip(), None
-
-    @staticmethod
-    def _split_assignments(sets: str) -> list[str]:
-        parts, buf, depth, quote = [], [], 0, None
-        for ch in sets:
-            if quote:
-                buf.append(ch)
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"'):
-                quote = ch
-                buf.append(ch)
-            elif ch == "(":
-                depth += 1
-                buf.append(ch)
-            elif ch == ")":
-                depth -= 1
-                buf.append(ch)
-            elif ch == "," and depth == 0:
-                parts.append("".join(buf))
-                buf = []
-            else:
-                buf.append(ch)
-        parts.append("".join(buf))
-        return [p for p in (s.strip() for s in parts) if p]
-
     # -- ChangeMetaTable (change_meta_table.hpp:26) -------------------------
     # DML against `meta_settings` mutates SESSION CONFS, mirroring the
     # reference's writable settings meta table: INSERT adds a conf, UPDATE
@@ -3720,7 +3422,7 @@ class Engine:
                     pass  # static confs can't be unset; leave them
             return None
         assignments: dict[str, str] = {}
-        for part in self._split_assignments(sets):
+        for part in split_top_level(sets):
             col, expr = part.split("=", 1)
             assignments[col.strip()] = expr.strip()
         if set(assignments) != {"value"}:

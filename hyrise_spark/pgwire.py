@@ -54,6 +54,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 from .engine import Engine
+from .sqltext import sub_outside
 
 _SSL_REQUEST = 80877103
 _GSSENC_REQUEST = 80877104
@@ -286,31 +287,10 @@ def _copy_csv_field(v: Any) -> str:
 
 def _dollar_to_named(sql: str) -> str:
     """$N placeholders -> Spark named parameter markers :pN (named, not
-    positional `?`, so repeated/reordered $N bind correctly). Quote-aware:
-    a $N inside a single-quoted string literal is text, not a parameter."""
-    out, i, n = [], 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":  # copy the literal verbatim ('' stays an escaped quote)
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i:j + 1])
-            i = j + 1
-            continue
-        m = _DOLLAR_PARAM.match(sql, i)
-        if m:
-            out.append(f":p{m.group(1)}")
-            i = m.end()
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+    positional `?`, so repeated/reordered $N bind correctly). A $N inside
+    a string literal, quoted identifier or comment is text, not a
+    parameter."""
+    return sub_outside(_DOLLAR_PARAM, lambda m: f":p{m[1]}", sql)
 
 
 def _convert_param(text: str | None, oid: int):

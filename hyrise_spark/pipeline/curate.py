@@ -1048,7 +1048,6 @@ def curate_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # broadcasts it back onto the docs. No per-language data-sized window (a
 # giant-language NTILE would put all of English into one partition at
 # 100 TB — exactly the skew trap this shape avoids).
-_CCNET_TERTILES = (1, 2)
 
 
 @register(
@@ -1517,7 +1516,6 @@ register_sql(
 # boundary doc. The acceptance test is the same deterministic md5-of-
 # doc_id uniform used by every sampler in this module: a pure filter,
 # reproducible shard-by-shard at 100 TB, no RNG state to coordinate.
-_TEMP_ALPHA_NOTE = "alpha = 0.5 (sqrt lattice)"
 _TEMP_BUDGET_FRAC = 0.5  # target corpus = 50% of the total token count
 
 _TEMP_RATE_SQL = f"""

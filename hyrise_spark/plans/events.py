@@ -1757,7 +1757,6 @@ def events_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bounded by ITEMS-PER-USER (catalog-bounded, here <= 20), never by the
 # user count — the standard co-occurrence shape. The output is at most
 # items^2 / 2 rows (a 20-item catalog -> <= 190).
-_COOC_BUCKETS = 20   # item catalog: props.k (0..99) -> k DIV 5
 _COOC_MIN_N = 5      # minimum pair support
 _COOC_TOPK = 30
 

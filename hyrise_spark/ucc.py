@@ -42,6 +42,8 @@ import re
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from hyrise_spark.sqltext import split_top_level
+
 # Candidate extraction from logged SQL text (the LQP-cache walk analog).
 _GROUP_BY_RE = re.compile(
     r"\bGROUP\s+BY\s+(?P<cols>[\w\.\s,]+?)(?:\bHAVING\b|\bORDER\b|\bLIMIT\b|$)",
@@ -164,22 +166,6 @@ _BLOCKERS_RE = re.compile(r"\b(JOIN|GROUP\s+BY|UNION|INTERSECT|EXCEPT)\b", re.IG
 _BARE_COLUMN_RE = re.compile(r"(?:\w+\.)?\w+|\*", re.ASCII)
 
 
-def _split_depth0(s: str) -> list[str]:
-    """Split a select list on commas at parenthesis depth 0 only, so
-    `substr(c, k, 2)` stays one item instead of three."""
-    items, depth, start = [], 0, 0
-    for i, ch in enumerate(s):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            items.append(s[start:i])
-            start = i + 1
-    items.append(s[start:])
-    return items
-
-
 def maybe_strip_redundant_distinct(stmt: str, catalog) -> str:
     """If `stmt` is `SELECT DISTINCT cols FROM t [WHERE ...]` and the
     selected columns contain a validated UCC of t, DISTINCT is a no-op —
@@ -194,7 +180,7 @@ def maybe_strip_redundant_distinct(stmt: str, catalog) -> str:
     if not m:
         return stmt
     table = m["table"].lower()
-    items = [it.strip() for it in _split_depth0(m["cols"])]
+    items = split_top_level(m["cols"])
     if not all(_BARE_COLUMN_RE.fullmatch(it) for it in items):
         return stmt
     cols = {it.split(".")[-1].lower() for it in items}

@@ -227,6 +227,37 @@ def test_window_sum_distinct_decimal_fold_exact(spark, decimal_mode, duck_decima
         assert Decimal(gv) == Decimal(wv), (gk, gv, wv)
 
 
+def test_window_sum_distinct_fold_ignores_unrelated_views(spark, decimal_mode, duck_decimal):
+    """The fold's column-type sniff reads only the views the statement
+    names: an unrelated view with a DOUBLE `l_extendedprice` used to break
+    the unanimous DECIMAL answer, so the fold fell back to DOUBLE and the
+    result depended on which views earlier statements left behind."""
+    from decimal import Decimal
+
+    from hyrise_spark.engine import Engine
+
+    spark.sql("SELECT CAST(1.5 AS DOUBLE) AS l_extendedprice") \
+        .createOrReplaceTempView("fold_decoy_double")
+    catalog.load_tables(spark, SF_DIR, ("lineitem",), decimal=True)[
+        "lineitem"
+    ].createOrReplaceTempView("lineitem")
+    sql = ("SELECT l_orderkey, SUM(DISTINCT l_extendedprice) OVER "
+           "(PARTITION BY l_returnflag) AS s FROM lineitem "
+           "WHERE l_orderkey < 500")
+    try:
+        got = sorted(
+            (r.l_orderkey, str(r.s)) for r in Engine(spark).execute(sql).collect()
+        )
+    finally:
+        spark.catalog.dropTempView("fold_decoy_double")
+    want = sorted(
+        (int(k), str(v)) for k, v in duck_decimal.execute(sql).fetchall()
+    )
+    assert [g[0] for g in got] == [w[0] for w in want]
+    for (gk, gv), (_, wv) in zip(got, want):
+        assert Decimal(gv) == Decimal(wv), (gk, gv, wv)
+
+
 def test_window_sum_distinct_double_arg_in_decimal_mode(spark, decimal_mode, duck_decimal):
     """ADVICE r10 regression: the DISTINCT-window fold accumulator comes
     from the ARGUMENT's type, not the session flag. `l_quantity` stays

@@ -1936,3 +1936,98 @@ def test_groups_frame_composes_with_distinct_aggregate(engine, spark, duck):
     res = duck.execute(dsql)
     want = canon([d[0].lower() for d in res.description], res.fetchall())
     assert got == want
+
+
+# -- one SQL lexer (sqltext.py): comments never hide a statement's shape ----
+def test_comment_before_dml_routes_as_write(engine):
+    """A leading comment used to hide INSERT/UPDATE from the DML router
+    (spark.sql then failed with UNSUPPORTED_INSERT.RDD_BASED)."""
+    engine.execute("CREATE TABLE cmt_dml AS SELECT 1 AS k")
+    before = engine.catalog.mutation_counter
+    engine.execute("-- add a row\nINSERT INTO cmt_dml VALUES (10)")
+    engine.execute("/* c */ UPDATE cmt_dml SET k = k + 1 WHERE k = 10")
+    assert engine.catalog.mutation_counter >= before + 2
+    got = sorted(r["k"] for r in engine.execute("SELECT k FROM cmt_dml").collect())
+    assert got == [1, 11]
+    engine.execute("DROP TABLE cmt_dml")
+
+
+def test_comment_before_dialect_select_is_rewritten(engine, spark):
+    """A comment before a window-DISTINCT SELECT used to skip the dialect
+    rewrite (DISTINCT_WINDOW_FUNCTION_UNSUPPORTED)."""
+    spark.createDataFrame([(1, 1), (1, 2), (1, 2), (2, 2)], "k int, v int") \
+        .createOrReplaceTempView("cmt_win")
+    df = engine.execute("-- q\nSELECT k, COUNT(DISTINCT v) OVER (PARTITION BY k)"
+                        " AS c FROM cmt_win")
+    assert sorted(tuple(r) for r in df.collect()) == [(1, 2)] * 3 + [(2, 1)]
+
+
+def test_comment_holding_semicolon_and_quote(engine, spark):
+    """A ';' inside a comment used to split the statement there, and a
+    quote inside a comment glued the following statements together."""
+    spark.createDataFrame([(1,), (2,)], "k int").createOrReplaceTempView("cmt_t")
+    df = engine.execute("SELECT k FROM cmt_t -- note; tail\n WHERE k = 1")
+    assert [r["k"] for r in df.collect()] == [1]
+    df = engine.execute("SELECT 1 AS x; -- it's a comment\nSELECT 2 AS x; SELECT 3 AS x")
+    assert df.collect()[0]["x"] == 3
+
+
+def test_commented_select_uses_plan_cache(engine):
+    """A leading comment no longer keeps a SELECT out of the plan cache."""
+    sql = "-- revenue report\nSELECT 41 + 1 AS x"
+    first = engine.execute(sql)
+    assert engine.execute(sql) is first
+    assert engine._plan_cache.hits == 1
+
+
+def test_explain_meta_table_select(engine):
+    """EXPLAIN builds its query through the router, so the meta tables
+    are materialized as for the SELECT itself (the native EXPLAIN returned
+    'Error occurred during query planning')."""
+    plan = engine.execute("EXPLAIN SELECT * FROM meta_tables").collect()[0]["plan"]
+    assert "Physical Plan" in plan
+    assert "Error occurred" not in plan
+
+
+def test_hinted_join_keeps_broadcast_hint(engine, spark):
+    """`/*+ ... */` hints survive the comment stripping: with automatic
+    broadcasts off, only the hint can plan a BroadcastHashJoin."""
+    spark.createDataFrame([(i, i % 3) for i in range(20)], "k int, g int") \
+        .createOrReplaceTempView("hint_f")
+    spark.createDataFrame([(i, f"g{i}") for i in range(3)], "g int, n string") \
+        .createOrReplaceTempView("hint_d")
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    old = {k: spark.conf.get(k, None) for k in keys}
+    body = " f.k, d.n FROM hint_f f JOIN hint_d d ON f.g = d.g"
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        plain = engine.execute("SELECT" + body)._jdf.queryExecution() \
+            .executedPlan().toString()
+        hinted = engine.execute("-- lookup join\nSELECT /*+ BROADCAST(d) */"
+                                + body)._jdf.queryExecution() \
+            .executedPlan().toString()
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert "BroadcastHashJoin" not in plain
+    assert "BroadcastHashJoin" in hinted
+
+
+def test_explain_shows_validated_ucc_distinct_strip(engine):
+    """EXPLAIN shows the plan that runs: the validated-UCC rewrite strips
+    a redundant DISTINCT, so no aggregate appears (the native EXPLAIN
+    planned the unrewritten text)."""
+    engine.execute("CREATE TABLE ucc_ex AS SELECT CAST(id AS INT) AS k FROM RANGE(10)")
+    try:
+        engine.catalog.validated_uccs = {("ucc_ex", "k")}
+        plan = engine.execute("EXPLAIN SELECT DISTINCT k FROM ucc_ex") \
+            .collect()[0]["plan"]
+        assert "HashAggregate" not in plan
+    finally:
+        engine.catalog.validated_uccs = set()
+        engine.execute("DROP TABLE ucc_ex")

@@ -1236,3 +1236,13 @@ def test_cross_connection_dml_invalidates_plan_cache(server):
         a.close()
         b.close()
         _psql(server, "DROP TABLE pg_xinv")
+
+
+def test_dollar_in_comment_or_quoted_identifier_is_not_bound():
+    """$N inside a comment or a "..." identifier is text, not a parameter
+    (the former scanner skipped only '...' literals)."""
+    from hyrise_spark.pgwire import _dollar_to_named
+
+    sql = 'SELECT $1 AS "cost $2" -- $3\n, \'$4\' /* $5 */ FROM t WHERE k = $2'
+    assert _dollar_to_named(sql) == (
+        'SELECT :p1 AS "cost $2" -- $3\n, \'$4\' /* $5 */ FROM t WHERE k = :p2')
