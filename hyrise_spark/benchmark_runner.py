@@ -605,10 +605,6 @@ def run_tpcc(
     }
 
 
-# the sharded runner's former name, kept for its callers
-run_tpcc_sharded = run_tpcc
-
-
 # ---------------------------------------------------------------------------
 # TPC-H refresh functions RF1/RF2 — the part of the TPC-H *benchmark* the
 # reference explicitly declares unsupported (tpch_benchmark.cpp:33-36: "it

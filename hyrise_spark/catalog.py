@@ -329,6 +329,37 @@ class Catalog:
         # an older epoch can never be served)
         self.mutation_counter: int = 0
 
+    # -- transaction pins ----------------------------------------------------
+    # The catalog state a BEGIN pin, a savepoint or a committed-only read
+    # swaps. Every value is a reference to an immutable lazy plan (or a
+    # name/number), so a copy costs dict and list copies, never data. New
+    # per-table state goes here, or ROLLBACK leaves it at its in-transaction
+    # value. The compaction trash is not state: files stay on disk whatever
+    # is rolled back (the engine's rollback settles it).
+    _STATE = ("_tables", "_views", "history", "history_base", "dml_depth",
+              "compact_paths", "validated_uccs")
+
+    @staticmethod
+    def _copy_state(st: dict) -> dict:
+        # the catalog appends to and trims history and compact_paths lists
+        # in place, so those lists are copied too
+        return {
+            f: set(v) if isinstance(v, set) else {
+                k: list(x) if isinstance(x, list) else x for k, x in v.items()
+            }
+            for f, v in st.items()
+        }
+
+    def state(self) -> dict:
+        """A copy of the catalog state, for `set_state` to install later."""
+        return self._copy_state({f: getattr(self, f) for f in self._STATE})
+
+    def set_state(self, st: dict) -> None:
+        """Install (a copy of) a `state()` result. Spark's temp views are the
+        caller's to bring in line: only it knows what was live before."""
+        for f, v in self._copy_state(st).items():
+            setattr(self, f, v)
+
     # -- tables ------------------------------------------------------------
     _HISTORY_CAP = 8  # snapshots kept per table (lazy plans, not data)
 
@@ -356,25 +387,22 @@ class Catalog:
         self.validated_uccs = {
             (t, c) for (t, c) in self.validated_uccs if t != name.lower()
         }
-        # SQL views re-resolve against CURRENT table state (lqp_view analog:
-        # the reference stores the view's LQP and re-instantiates per query).
-        # Temp views captured the old plan eagerly — re-register the views
-        # that (transitively) reference the replaced table, in creation order
-        # so views-over-views resolve. Name-mention is the dependency test:
-        # cheap, and a false positive only costs one extra re-plan. A dangling
-        # view (its base table was dropped) must not fail UNRELATED DML: it
-        # keeps its stale registration and errors only when actually queried.
-        import re
+        self.refresh_views({name})
 
-        dirty = {name}
-        for vname, vsql in self._views.items():
-            if not any(re.search(rf"\b{re.escape(d)}\b", vsql, re.I) for d in dirty):
-                continue
-            dirty.add(vname)
-            try:
-                self.spark.sql(vsql).createOrReplaceTempView(vname)
-            except Exception:  # noqa: BLE001 — dangling view, surfaced on use
-                pass
+    def recreate_table(self, name: str, df: DataFrame) -> None:
+        """CREATE OR REPLACE TABLE: drop `name`, then add `df` under it. The
+        new plan may read the old table's compaction parquet (trail[-1]), so
+        the trail moves onto the new entry instead of queueing for the
+        physical purge while the replacement still reads it."""
+        carried = list(self.compact_paths.get(name, ()))
+        self.drop_table(name)
+        self.add_table(name, df)
+        if carried:
+            self.compact_paths[name] = carried
+            cset = set(carried)
+            self._compact_trash = [
+                p for p in self._compact_trash if p not in cset
+            ]
 
     def current_version(self, name: str) -> int:
         return self.history_base.get(name, 0) + len(self.history.get(name, [1])) - 1
@@ -544,6 +572,30 @@ class Catalog:
         return sorted(self._tables)
 
     # -- views (stored logical plans) --------------------------------------
+    def refresh_views(self, dirty) -> None:
+        """Re-register the views named in `dirty` and every view that
+        (transitively) mentions a dirty name, in creation order so
+        views-over-views resolve. SQL views re-resolve against CURRENT table
+        state (lqp_view analog: the reference stores the view's LQP and
+        re-instantiates per query), but a temp view captured its plan
+        eagerly. Name-mention is the dependency test: cheap, and a false
+        positive only costs one extra re-plan. A dangling view (its base
+        table was dropped) must not fail UNRELATED statements: it keeps its
+        stale registration and errors only when actually queried."""
+        import re
+
+        dirty = set(dirty)
+        for vname, vsql in self._views.items():
+            if vname not in dirty and not any(
+                re.search(rf"\b{re.escape(d)}\b", vsql, re.I) for d in dirty
+            ):
+                continue
+            dirty.add(vname)
+            try:
+                self.spark.sql(vsql).createOrReplaceTempView(vname)
+            except Exception:  # noqa: BLE001 — dangling view, surfaced on use
+                pass
+
     def add_view(self, name: str, sql: str) -> None:
         if name in self._views or name in self._tables:
             raise ValueError(f"view/table {name!r} already exists")

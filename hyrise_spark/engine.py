@@ -610,20 +610,7 @@ class Engine:
                 # CREATE OR REPLACE TABLE (DuckDB dialect): the defining
                 # query reads the OLD table state (snapshot semantics), so
                 # resolve the plan BEFORE the drop
-                df = self.spark.sql(m["sql"])
-                # the defining plan may read the old table's compaction
-                # parquet (trail[-1]) — carry the trail onto the new entry
-                # instead of letting drop_table queue it for physical purge
-                # while still referenced by the live replacement
-                carried = list(self.catalog.compact_paths.get(m["name"], ()))
-                self.catalog.drop_table(m["name"])
-                self.catalog.add_table(m["name"], df)
-                if carried:
-                    self.catalog.compact_paths[m["name"]] = carried
-                    cset = set(carried)
-                    self.catalog._compact_trash = [
-                        p for p in self.catalog._compact_trash if p not in cset
-                    ]
+                self.catalog.recreate_table(m["name"], self.spark.sql(m["sql"]))
                 return None
             self.catalog.add_table(m["name"], self.spark.sql(m["sql"]))
             return None
@@ -2547,58 +2534,73 @@ class Engine:
     # COPY TO/Export files and compaction rewrites stay on disk (a rolled-
     # back compaction's file is queued for purge_compaction_trail).
     def _snapshot(self) -> dict:
-        """Pin the full catalog/engine state: dicts of references to lazy,
+        """Pin the catalog/engine state: dicts of references to lazy,
         immutable DataFrame plans — no data is copied."""
-        cat = self.catalog
         return {
-            "tables": dict(cat._tables),
-            "views": dict(cat._views),
-            "history": {k: list(v) for k, v in cat.history.items()},
-            "history_base": dict(cat.history_base),
-            "dml_depth": dict(cat.dml_depth),
-            "compact_paths": {k: list(v) for k, v in cat.compact_paths.items()},
-            "compact_trash": list(cat._compact_trash),
-            "validated_uccs": set(cat.validated_uccs),
+            "catalog": self.catalog.state(),
+            "compact_trash": list(self.catalog._compact_trash),
             "functions": dict(self._functions),
             "matviews": dict(self._matviews),
             "prepared": dict(self._prepared),
         }
 
-    def _restore(self, snap: dict) -> None:
-        """Put the catalog/engine back at `snap` (abort.hpp analog: every
-        statement applied since the pin un-happens).
+    def _install(self, snap: dict) -> None:
+        """Put the catalog/engine at `snap` and bring Spark's session
+        registry in line with it. ROLLBACK and ROLLBACK TO SAVEPOINT install
+        their pin (abort.hpp analog: every statement applied since the pin
+        un-happens, _restore). A read from another connection while a
+        transaction is open installs the BEGIN pin, dispatches, and installs
+        the live state back (_snapshot_read): the reference's Validate
+        visibility, where every scan validates row versions against the
+        snapshot commit-id so a concurrent reader sees committed state only
+        (validate.hpp:20, transaction_manager.hpp). `spark.sql` analyzes
+        eagerly, so the read's DataFrame has the pinned plans baked in and
+        stays valid after the swap back and after the owner's COMMIT or
+        ROLLBACK: every pinned plan is immutable.
 
-        Cost is O(objects the transaction TOUCHED), not O(catalog): the pin
-        stores references to immutable plans, so an untouched table is the
-        very same object and needs no temp-view churn (measured: the naive
+        Only what differs from the state being replaced is touched: temp
+        views and temp functions `snap` lacks are dropped, tables whose plan
+        is not the identical object are re-registered, views whose SQL
+        changed or that mention a changed name re-resolve, and SQL function
+        bodies that differ re-run. The cost is therefore O(objects the
+        transaction touched), not O(catalog) (measured: the naive
         re-register-everything form cost ~4.5 ms/table — 1.8 s to roll back
         a no-op transaction in a 400-table catalog)."""
         cat = self.catalog
-        live_tables = dict(cat._tables)
-        live_views = dict(cat._views)
-        live_functions = dict(self._functions)
-        # un-register session objects created since the pin
-        for name in set(cat._tables) - set(snap["tables"]):
-            try:
-                self.spark.catalog.dropTempView(name)
-            except Exception:  # noqa: BLE001 — already gone
-                pass
-        for name in set(cat._views) - set(snap["views"]):
-            try:
-                self.spark.catalog.dropTempView(name)
-            except Exception:  # noqa: BLE001 — already gone
-                pass
-        for name in set(self._functions) - set(snap["functions"]):
+        old_tables, old_views, old_fns = cat._tables, cat._views, self._functions
+        cat.set_state(snap["catalog"])
+        self._functions = dict(snap["functions"])
+        self._matviews = dict(snap["matviews"])
+        self._prepared = dict(snap["prepared"])
+        for name in ((old_tables.keys() | old_views.keys())
+                     - cat._tables.keys() - cat._views.keys()):
+            self.spark.catalog.dropTempView(name)
+        for name in old_fns.keys() - self._functions.keys():
             self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
+        changed = [
+            n for n, df in cat._tables.items() if old_tables.get(n) is not df
+        ]
+        for name in changed:
+            cat._tables[name].createOrReplaceTempView(name)
+        cat.refresh_views(changed + [
+            v for v, sql in cat._views.items() if old_views.get(v) != sql
+        ])
+        for name, create_sql in list(self._functions.items()):
+            if old_fns.get(name) != create_sql:
+                self._dispatch(create_sql, None)
+
+    def _restore(self, snap: dict) -> None:
+        """ROLLBACK [TO SAVEPOINT]: settle the compaction trash against the
+        pin, then install it."""
+        cat = self.catalog
+        pinned_paths = snap["catalog"]["compact_paths"]
         # Trash is restored from the pin so paths a DROP TABLE (or trail
         # eviction) queued DURING the transaction do not survive the
         # rollback — the restored table's plans still read those files, and
         # a later purge_compaction_trail would rmtree data the user believes
         # was never dropped. Then: a compaction file WRITTEN since the pin
         # is unreferenced after restore — queue it for the physical purge.
-        restored_refs = {
-            p for trail in snap["compact_paths"].values() for p in trail
-        }
+        restored_refs = {p for trail in pinned_paths.values() for p in trail}
         snap_trash = set(snap["compact_trash"])
         trash = list(snap["compact_trash"])
         # files queued pre-txn stay queued; files queued during the txn stay
@@ -2608,179 +2610,25 @@ class Engine:
             if p not in snap_trash and p not in restored_refs
         )
         for t, trail in cat.compact_paths.items():
-            kept = set(snap["compact_paths"].get(t, []))
+            kept = set(pinned_paths.get(t, []))
             trash.extend(
                 p for p in trail if p not in kept and p not in restored_refs
             )
         cat._compact_trash = trash
-        cat._tables = dict(snap["tables"])
-        cat._views = dict(snap["views"])
-        cat.history = {k: list(v) for k, v in snap["history"].items()}
-        cat.history_base = dict(snap["history_base"])
-        cat.dml_depth = dict(snap["dml_depth"])
-        cat.compact_paths = {k: list(v) for k, v in snap["compact_paths"].items()}
-        cat.validated_uccs = set(snap["validated_uccs"])
-        self._matviews = dict(snap["matviews"])
-        self._prepared = dict(snap["prepared"])
-        # re-register only tables whose live plan diverged from the pin
-        # (identity compare: untouched tables are the same object)
-        changed = [
-            n for n, df in cat._tables.items() if live_tables.get(n) is not df
-        ]
-        for name in changed:
-            cat._tables[name].createOrReplaceTempView(name)
-        # views re-resolve if their SQL changed, they were dropped in the
-        # txn, or they (transitively) mention a changed table — the same
-        # name-mention dependency rule replace_table uses, walked in
-        # creation order so views-over-views resolve
-        dirty = set(changed) | {
-            v for v in cat._views if live_views.get(v) != cat._views[v]
-        }
-        for vname, vsql in cat._views.items():
-            if vname in dirty or any(
-                re.search(rf"\b{re.escape(d)}\b", vsql, re.I) for d in dirty
-            ):
-                dirty.add(vname)
-                try:
-                    self.spark.sql(vsql).createOrReplaceTempView(vname)
-                except Exception:  # noqa: BLE001 — dangling view, on use
-                    pass
-        # functions: re-run only pinned definitions the txn replaced/dropped
-        self._functions = {}
-        for fname, create_sql in snap["functions"].items():
-            if live_functions.get(fname) == create_sql:
-                self._functions[fname] = create_sql
-            else:
-                self._execute_one(create_sql, None)
+        self._install(snap)
 
     # -- committed-only reads for concurrent connections ---------------------
     def _snapshot_read(self, stmt: str, args) -> DataFrame | None:
         """Resolve a non-owner connection's read against the BEGIN pin
-        instead of the live catalog — the reference's Validate visibility
-        (validate.hpp:20: every scan validates row versions against the
-        snapshot commit-id, so a concurrent reader sees committed state
-        only; transaction_manager.hpp).
-
-        Mechanics: under the statement lock, swap the catalog/engine dicts
-        and any DIVERGED temp views to the pin (references to immutable lazy
-        plans — no data moves), dispatch the statement (`spark.sql` analyzes
-        eagerly, so view resolution bakes the snapshot plans into the
-        returned DataFrame), then swap back. Cost is O(objects the open
-        transaction touched); an untouched table is the identical object and
-        needs no view churn. The returned plan stays valid after the swap-
-        back — and after the owner's later COMMIT/ROLLBACK — because every
-        pinned plan is immutable."""
-        snap = self._txn["snap"]
-        cat = self.catalog
-        live_tables, live_views = cat._tables, cat._views
-        snap_t, snap_v = snap["tables"], snap["views"]
-        # temp-view deltas: tables whose live plan diverged from the pin
-        # (includes tables the txn dropped), and tables the txn created
-        diverged = [n for n, df in snap_t.items()
-                    if live_tables.get(n) is not df]
-        created = [n for n in live_tables if n not in snap_t]
-        # views to re-register at the pin: redefined/dropped in the txn, or
-        # (transitively) mentioning a diverged table — same dependency walk
-        # as _restore, in creation order so views-over-views resolve
-        dirty = set(diverged) | {
-            v for v in snap_v if live_views.get(v) != snap_v[v]
-        }
-        created_views = [v for v in live_views if v not in snap_v]
-        # SQL scalar functions: Spark temp functions resolve globally, so a
-        # function the txn created/replaced/dropped must be re-registered at
-        # its pinned definition for the read (and put back after) — same
-        # committed-only rule as tables/views
-        live_fns, snap_fns = self._functions, snap["functions"]
-        diverged_fns = {n for n in snap_fns if live_fns.get(n) != snap_fns[n]}
-        created_fns = [n for n in live_fns if n not in snap_fns]
-        saved = (cat._tables, cat._views, cat.history, cat.history_base,
-                 cat.dml_depth, cat.compact_paths, cat.validated_uccs,
-                 self._matviews, self._prepared, self._functions)
-        reg_views: list[str] = []
+        instead of the live catalog (see _install)."""
+        live = self._snapshot()
         self._in_snap_read = True
         try:
-            cat._tables = dict(snap_t)
-            cat._views = dict(snap_v)
-            cat.history = {k: list(v) for k, v in snap["history"].items()}
-            cat.history_base = dict(snap["history_base"])
-            cat.dml_depth = dict(snap["dml_depth"])
-            cat.compact_paths = {
-                k: list(v) for k, v in snap["compact_paths"].items()
-            }
-            cat.validated_uccs = set(snap["validated_uccs"])
-            self._matviews = dict(snap["matviews"])
-            self._prepared = dict(snap["prepared"])
-            for n in diverged:
-                snap_t[n].createOrReplaceTempView(n)
-            for n in created:
-                try:
-                    self.spark.catalog.dropTempView(n)
-                except Exception:  # noqa: BLE001 — never registered
-                    pass
-            for vname, vsql in snap_v.items():
-                if vname in dirty or any(
-                    re.search(rf"\b{re.escape(d)}\b", vsql, re.I)
-                    for d in dirty
-                ):
-                    dirty.add(vname)
-                    reg_views.append(vname)
-                    try:
-                        self.spark.sql(vsql).createOrReplaceTempView(vname)
-                    except Exception:  # noqa: BLE001 — dangling view
-                        pass
-            for v in created_views:
-                try:
-                    self.spark.catalog.dropTempView(v)
-                except Exception:  # noqa: BLE001
-                    pass
-            self._functions = dict(snap_fns)
-            for n in diverged_fns:
-                self._dispatch(snap_fns[n], None)  # re-register pinned body
-            for n in created_fns:
-                self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {n}")
+            self._install(self._txn["snap"])
             return self._dispatch(stmt, args)
         finally:
             self._in_snap_read = False
-            (cat._tables, cat._views, cat.history, cat.history_base,
-             cat.dml_depth, cat.compact_paths, cat.validated_uccs,
-             self._matviews, self._prepared, self._functions) = saved
-            for n in diverged:
-                if n in cat._tables:
-                    cat._tables[n].createOrReplaceTempView(n)
-                else:
-                    try:
-                        self.spark.catalog.dropTempView(n)
-                    except Exception:  # noqa: BLE001
-                        pass
-            for n in created:
-                cat._tables[n].createOrReplaceTempView(n)
-            for v in reg_views:
-                if v in cat._views:
-                    try:
-                        self.spark.sql(
-                            cat._views[v]
-                        ).createOrReplaceTempView(v)
-                    except Exception:  # noqa: BLE001 — dangling view
-                        pass
-                else:
-                    try:
-                        self.spark.catalog.dropTempView(v)
-                    except Exception:  # noqa: BLE001
-                        pass
-            for v in created_views:
-                try:
-                    self.spark.sql(
-                        cat._views[v]
-                    ).createOrReplaceTempView(v)
-                except Exception:  # noqa: BLE001 — dangling view
-                    pass
-            for n in diverged_fns:
-                if n in self._functions:
-                    self._dispatch(self._functions[n], None)
-                else:  # dropped before the txn? pinned body removed above
-                    self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {n}")
-            for n in created_fns:
-                self._dispatch(self._functions[n], None)
+            self._install(live)
 
     def _begin(self) -> None:
         import warnings
@@ -3550,11 +3398,11 @@ class Engine:
     # -- plan introspection (console `visualize` analog, SURVEY §3.3) -------
     def explain(self, sql: str, mode: str = "formatted") -> str:
         """Return the physical plan text for a SQL statement (the reference's
-        LQP/PQP visualizer maps to Catalyst's explain output)."""
-        df = self.spark.sql(sql)
-        return df._jdf.queryExecution().explainString(
-            self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
-        )
+        LQP/PQP visualizer maps to Catalyst's explain output): the `plan`
+        cell of `EXPLAIN <mode> <sql>`, so the query builds through the
+        router and dialect statements and meta tables explain as they run."""
+        kw = "" if mode.lower() == "simple" else mode
+        return self.execute(f"EXPLAIN {kw} {sql}").collect()[0]["plan"]
 
     def _summarize(self, table: str) -> DataFrame:
         """`SUMMARIZE t` (DuckDB dialect; the reference's closest analog is

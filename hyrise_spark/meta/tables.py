@@ -609,7 +609,7 @@ def meta_transactions(spark: SparkSession, catalog) -> DataFrame:
     return spark.createDataFrame(
         [(
             "in_transaction",
-            len(txn["snap"]["tables"]),
+            len(txn["snap"]["catalog"]["_tables"]),
             ",".join(n for n, _ in txn["savepoints"]),
         )],
         schema,

@@ -21,6 +21,8 @@ import shutil
 import subprocess
 from pyspark.sql import DataFrame, SparkSession
 
+from hyrise_spark.sqltext import split_statements
+
 
 def _escape(s: str) -> str:
     return s.replace("\\", "\\\\").replace('"', '\\"').replace("\n", "\\n")
@@ -115,8 +117,12 @@ def write_plan_image(df: DataFrame, path: str, which: str = "pqp") -> str:
 
 
 def visualize_sql(spark: SparkSession, engine, sql: str, which: str = "pqp") -> str:
-    """Console entry: build the statement through the Engine (so views and
-    meta tables resolve identically) and return DOT text."""
-    if engine is not None:
-        engine._materialize_meta_tables(sql)
-    return plan_dot(spark.sql(sql), which)
+    """Console entry: build the query through the Engine's router (so
+    dialect statements, views and meta tables resolve as they run) and
+    return DOT text. The router runs what it is given, so a write is
+    refused rather than applied."""
+    if engine is None:
+        return plan_dot(spark.sql(sql), which)
+    if any(engine._is_write_stmt(s) for s in split_statements(sql)):
+        raise ValueError("visualize: only a query has a plan to draw")
+    return plan_dot(engine.execute(sql), which)

@@ -87,3 +87,46 @@ def test_write_plan_image_writes_dot_without_graphviz(spark, tmp_path):
     out = write_plan_image(df, str(tmp_path / "plan.dot"), which="pqp")
     text = open(out).read()
     assert text.startswith("digraph plan {") and "Range" in text
+
+
+def test_visualize_sql_builds_dialect_select_through_router(spark):
+    """`visualize_sql` builds its frame through the Engine's router, so a
+    QUALIFY select draws its rewritten plan (`spark.sql` raised
+    PARSE_SYNTAX_ERROR)."""
+    from hyrise_spark.engine import Engine
+    from hyrise_spark.visualize import visualize_sql
+
+    spark.sql("SELECT 0 AS k, 10 AS t").createOrReplaceTempView("vzq_l")
+    dot = visualize_sql(
+        spark, Engine(spark),
+        "SELECT t, ROW_NUMBER() OVER (ORDER BY t) AS rn FROM vzq_l QUALIFY rn = 1",
+    )
+    assert dot.startswith("digraph plan {") and "Window" in dot
+
+
+def test_visualize_sql_draws_meta_table_plans(spark):
+    """Through the router, SHOW TABLES is the meta_tables SELECT it is
+    rewritten to, so `visualize_sql` draws that scan rather than Spark's own
+    SHOW TABLES command; a meta-table SELECT draws as well."""
+    from hyrise_spark.engine import Engine
+    from hyrise_spark.visualize import visualize_sql
+
+    eng = Engine(spark)
+    dot = visualize_sql(spark, eng, "SHOW TABLES")
+    assert dot.startswith("digraph plan {")
+    assert "CommandResult" not in dot and "Scan" in dot
+    dot = visualize_sql(spark, eng, "SELECT table_name FROM meta_tables")
+    assert dot.startswith("digraph plan {")
+
+
+def test_visualize_sql_refuses_writes(spark):
+    """The router runs what it is given, so a write is refused, not applied."""
+    import pytest
+
+    from hyrise_spark.engine import Engine
+    from hyrise_spark.visualize import visualize_sql
+
+    eng = Engine(spark)
+    with pytest.raises(ValueError, match="only a query"):
+        visualize_sql(spark, eng, "CREATE TABLE vzq_t AS SELECT 1 AS x")
+    assert not eng.catalog.has_table("vzq_t")

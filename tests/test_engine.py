@@ -1199,6 +1199,46 @@ def test_snapshot_read_pins_sql_functions(engine):
     e.execute("DROP FUNCTION sf_f; DROP TABLE sf_t")
 
 
+def _session_registry(spark):
+    """The session's temp views and temp functions, by name."""
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    fns = {f.name for f in spark.catalog.listFunctions() if f.isTemporary}
+    return views, fns
+
+
+def test_snapshot_read_and_rollback_leave_registry_sets_exact(engine, spark):
+    """Spark's session registry follows the installed state exactly: a
+    snapshot read from another connection leaves the owner's temp views
+    and temp functions as they were before the read, and ROLLBACK leaves
+    those of the pre-BEGIN state. The transaction creates a table, drops a
+    view, redefines a view and replaces a SQL function."""
+    e = engine
+    e.execute("CREATE TABLE rg_t AS SELECT 3 AS x")
+    e.execute("CREATE VIEW rg_drop AS SELECT x FROM rg_t")
+    e.execute("CREATE VIEW rg_v AS SELECT x + 1 AS y FROM rg_t")
+    e.execute("CREATE FUNCTION rg_f(a INT) RETURNS INT RETURN a * 2")
+    pre_begin = _session_registry(spark)
+
+    e.execute("BEGIN")
+    e.execute("CREATE TABLE rg_new AS SELECT 5 AS n")
+    e.execute("DROP VIEW rg_drop")
+    e.execute("CREATE OR REPLACE VIEW rg_v AS SELECT x + 100 AS y FROM rg_t")
+    e.execute("CREATE OR REPLACE FUNCTION rg_f(a INT) RETURNS INT RETURN a * 3")
+    pre_read = _session_registry(spark)
+    assert "rg_new" in pre_read[0] and "rg_drop" not in pre_read[0]
+
+    assert _on_thread(lambda: e.execute(
+        "SELECT rg_f(y) AS z FROM rg_v").collect()[0]["z"]) == 8
+    assert _session_registry(spark) == pre_read
+    assert e.execute("SELECT rg_f(y) AS z FROM rg_v").collect()[0]["z"] == 309
+
+    e.execute("ROLLBACK")
+    assert _session_registry(spark) == pre_begin
+    assert e.execute("SELECT rg_f(x) AS z FROM rg_drop").collect()[0]["z"] == 6
+    e.execute("DROP VIEW rg_drop; DROP VIEW rg_v; DROP FUNCTION rg_f;"
+              " DROP TABLE rg_t")
+
+
 def test_disconnect_rollback_invalidates_plan_cache(engine):
     """Review regression: the implicit teardown rollback bypasses the SQL
     ROLLBACK path, but must still move the cache epoch — a plan cached
@@ -2031,3 +2071,23 @@ def test_explain_shows_validated_ucc_distinct_strip(engine):
     finally:
         engine.catalog.validated_uccs = set()
         engine.execute("DROP TABLE ucc_ex")
+
+
+def test_explain_api_builds_dialect_select_through_router(engine, spark):
+    """`Engine.explain` (the console's `visualize` text mode) is the plan
+    cell of `EXPLAIN <mode> <sql>`, so a QUALIFY select explains as it runs
+    (building it with `spark.sql` raised PARSE_SYNTAX_ERROR)."""
+    spark.sql("SELECT 0 AS k, 10 AS t").createOrReplaceTempView("exq_l")
+    plan = engine.explain(
+        "SELECT t, ROW_NUMBER() OVER (ORDER BY t) AS rn FROM exq_l QUALIFY rn = 1"
+    )
+    assert "Physical Plan" in plan and "Window" in plan
+
+
+def test_explain_api_materializes_meta_tables(engine, spark):
+    """`Engine.explain` of a meta-table SELECT materializes the meta table
+    as the SELECT itself does (`spark.sql` raised TABLE_OR_VIEW_NOT_FOUND)."""
+    spark.catalog.dropTempView("meta_tables")  # left behind by other tests
+    plan = engine.explain("SELECT * FROM meta_tables")
+    assert "Physical Plan" in plan
+    assert "Error occurred" not in plan

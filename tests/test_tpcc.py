@@ -277,9 +277,9 @@ def test_tpcc_sharded_mode_consistency_and_full_commit(spark):
     engines with independent locks/txn pins run the full mix concurrently;
     every transaction completes (committed + forced rollbacks, zero
     errors) and every shard's consistency audit passes."""
-    from hyrise_spark.benchmark_runner import run_tpcc_sharded
+    from hyrise_spark.benchmark_runner import run_tpcc
 
-    out = run_tpcc_sharded(
+    out = run_tpcc(
         spark, clients=4, txns_per_client=6, districts=4, customers=16,
         shards=2, seed=11,
     )
@@ -290,7 +290,7 @@ def test_tpcc_sharded_mode_consistency_and_full_commit(spark):
 
 
 def test_tpcc_sharded_rejects_undivisible_districts(spark):
-    from hyrise_spark.benchmark_runner import run_tpcc_sharded
+    from hyrise_spark.benchmark_runner import run_tpcc
 
     with pytest.raises(ValueError, match="multiple"):
-        run_tpcc_sharded(spark, districts=3, shards=2)
+        run_tpcc(spark, districts=3, shards=2)
