@@ -350,14 +350,18 @@ class Catalog:
             for f, v in st.items()
         }
 
-    def state(self) -> dict:
-        """A copy of the catalog state, for `set_state` to install later."""
-        return self._copy_state({f: getattr(self, f) for f in self._STATE})
+    def state(self, copy: bool = True) -> dict:
+        """The catalog state, for `set_state` to install later: a copy, or
+        with copy=False the live objects themselves (for a state that is
+        installed back once and not mutated in between)."""
+        st = {f: getattr(self, f) for f in self._STATE}
+        return self._copy_state(st) if copy else st
 
-    def set_state(self, st: dict) -> None:
-        """Install (a copy of) a `state()` result. Spark's temp views are the
-        caller's to bring in line: only it knows what was live before."""
-        for f, v in self._copy_state(st).items():
+    def set_state(self, st: dict, copy: bool = True) -> None:
+        """Install a `state()` result: a copy of it, or with copy=False the
+        given objects, which the catalog then owns. Spark's temp views are
+        the caller's to bring in line: only it knows what was live before."""
+        for f, v in (self._copy_state(st) if copy else st).items():
             setattr(self, f, v)
 
     # -- tables ------------------------------------------------------------

@@ -122,7 +122,7 @@ class Console:
             return self.engine.explain(sql)
         from hyrise_spark.visualize import visualize_sql
 
-        return visualize_sql(self.spark, self.engine, sql, which)
+        return visualize_sql(self.engine, sql, which)
 
     def cmd_setting(self, rest: str) -> str:
         name, _, value = rest.partition(" ")

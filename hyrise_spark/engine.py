@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import itertools
 import re
+from copy import copy as _shallow_copy
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -2533,18 +2534,20 @@ class Engine:
     # Physical side effects are NOT transactional, same as the reference:
     # COPY TO/Export files and compaction rewrites stay on disk (a rolled-
     # back compaction's file is queued for purge_compaction_trail).
-    def _snapshot(self) -> dict:
+    def _snapshot(self, copy: bool = True) -> dict:
         """Pin the catalog/engine state: dicts of references to lazy,
-        immutable DataFrame plans — no data is copied."""
+        immutable DataFrame plans — no data is copied. copy=False hands back
+        the live containers themselves (see _install)."""
+        own = _shallow_copy if copy else (lambda x: x)
         return {
-            "catalog": self.catalog.state(),
-            "compact_trash": list(self.catalog._compact_trash),
-            "functions": dict(self._functions),
-            "matviews": dict(self._matviews),
-            "prepared": dict(self._prepared),
+            "catalog": self.catalog.state(copy),
+            "compact_trash": own(self.catalog._compact_trash),
+            "functions": own(self._functions),
+            "matviews": own(self._matviews),
+            "prepared": own(self._prepared),
         }
 
-    def _install(self, snap: dict) -> None:
+    def _install(self, snap: dict, copy: bool = True) -> None:
         """Put the catalog/engine at `snap` and bring Spark's session
         registry in line with it. ROLLBACK and ROLLBACK TO SAVEPOINT install
         their pin (abort.hpp analog: every statement applied since the pin
@@ -2565,13 +2568,19 @@ class Engine:
         bodies that differ re-run. The cost is therefore O(objects the
         transaction touched), not O(catalog) (measured: the naive
         re-register-everything form cost ~4.5 ms/table — 1.8 s to roll back
-        a no-op transaction in a 400-table catalog)."""
+        a no-op transaction in a 400-table catalog).
+
+        A pin is installed as a copy, so it can be installed again (the next
+        snapshot read, a second ROLLBACK TO the same savepoint). copy=False
+        installs `snap`'s own containers: for the live state a snapshot read
+        sets aside with `_snapshot(copy=False)` and puts back once."""
         cat = self.catalog
+        own = _shallow_copy if copy else (lambda x: x)
         old_tables, old_views, old_fns = cat._tables, cat._views, self._functions
-        cat.set_state(snap["catalog"])
-        self._functions = dict(snap["functions"])
-        self._matviews = dict(snap["matviews"])
-        self._prepared = dict(snap["prepared"])
+        cat.set_state(snap["catalog"], copy)
+        self._functions = own(snap["functions"])
+        self._matviews = own(snap["matviews"])
+        self._prepared = own(snap["prepared"])
         for name in ((old_tables.keys() | old_views.keys())
                      - cat._tables.keys() - cat._views.keys()):
             self.spark.catalog.dropTempView(name)
@@ -2621,14 +2630,16 @@ class Engine:
     def _snapshot_read(self, stmt: str, args) -> DataFrame | None:
         """Resolve a non-owner connection's read against the BEGIN pin
         instead of the live catalog (see _install)."""
-        live = self._snapshot()
+        # the live containers are set aside, not copied: the pin's copy is
+        # what the read can touch, and live goes back exactly once
+        live = self._snapshot(copy=False)
         self._in_snap_read = True
         try:
             self._install(self._txn["snap"])
             return self._dispatch(stmt, args)
         finally:
             self._in_snap_read = False
-            self._install(live)
+            self._install(live, copy=False)
 
     def _begin(self) -> None:
         import warnings
@@ -3396,13 +3407,30 @@ class Engine:
             raise ValueError(f"unsupported COPY format {fmt!r}")
 
     # -- plan introspection (console `visualize` analog, SURVEY §3.3) -------
+    _QUERY_STMT_RE = re.compile(r"^\s*(?:SELECT|WITH|VALUES|SHOW|DESCRIBE|DESC)\b",
+                                re.I)
+
+    def query_statement(self, sql: str) -> str:
+        """The one query in `sql`, for the plan views to build through the
+        router. The router runs what it is given, so any other text (a
+        write, EXPORT, PREPARE, or a second statement) is refused before
+        anything runs."""
+        stmts = split_statements(sql)
+        if len(stmts) != 1 or not self._QUERY_STMT_RE.match(stmts[0]):
+            raise ValueError(
+                "only a single query (SELECT, WITH, VALUES, SHOW, DESCRIBE) "
+                f"has a plan to show: {sql!r}"
+            )
+        return stmts[0]
+
     def explain(self, sql: str, mode: str = "formatted") -> str:
-        """Return the physical plan text for a SQL statement (the reference's
+        """Return the physical plan text for a SQL query (the reference's
         LQP/PQP visualizer maps to Catalyst's explain output): the `plan`
         cell of `EXPLAIN <mode> <sql>`, so the query builds through the
         router and dialect statements and meta tables explain as they run."""
         kw = "" if mode.lower() == "simple" else mode
-        return self.execute(f"EXPLAIN {kw} {sql}").collect()[0]["plan"]
+        stmt = self.query_statement(sql)
+        return self.execute(f"EXPLAIN {kw} {stmt}").collect()[0]["plan"]
 
     def _summarize(self, table: str) -> DataFrame:
         """`SUMMARIZE t` (DuckDB dialect; the reference's closest analog is

@@ -19,9 +19,7 @@ from __future__ import annotations
 
 import shutil
 import subprocess
-from pyspark.sql import DataFrame, SparkSession
-
-from hyrise_spark.sqltext import split_statements
+from pyspark.sql import DataFrame
 
 
 def _escape(s: str) -> str:
@@ -116,13 +114,9 @@ def write_plan_image(df: DataFrame, path: str, which: str = "pqp") -> str:
     return out
 
 
-def visualize_sql(spark: SparkSession, engine, sql: str, which: str = "pqp") -> str:
+def visualize_sql(engine, sql: str, which: str = "pqp") -> str:
     """Console entry: build the query through the Engine's router (so
     dialect statements, views and meta tables resolve as they run) and
-    return DOT text. The router runs what it is given, so a write is
-    refused rather than applied."""
-    if engine is None:
-        return plan_dot(spark.sql(sql), which)
-    if any(engine._is_write_stmt(s) for s in split_statements(sql)):
-        raise ValueError("visualize: only a query has a plan to draw")
-    return plan_dot(engine.execute(sql), which)
+    return DOT text. The router runs what it is given, so anything but one
+    query is refused before it runs (Engine.query_statement)."""
+    return plan_dot(engine.execute(engine.query_statement(sql)), which)

@@ -98,7 +98,7 @@ def test_visualize_sql_builds_dialect_select_through_router(spark):
 
     spark.sql("SELECT 0 AS k, 10 AS t").createOrReplaceTempView("vzq_l")
     dot = visualize_sql(
-        spark, Engine(spark),
+        Engine(spark),
         "SELECT t, ROW_NUMBER() OVER (ORDER BY t) AS rn FROM vzq_l QUALIFY rn = 1",
     )
     assert dot.startswith("digraph plan {") and "Window" in dot
@@ -112,21 +112,32 @@ def test_visualize_sql_draws_meta_table_plans(spark):
     from hyrise_spark.visualize import visualize_sql
 
     eng = Engine(spark)
-    dot = visualize_sql(spark, eng, "SHOW TABLES")
+    dot = visualize_sql(eng, "SHOW TABLES")
     assert dot.startswith("digraph plan {")
     assert "CommandResult" not in dot and "Scan" in dot
-    dot = visualize_sql(spark, eng, "SELECT table_name FROM meta_tables")
+    dot = visualize_sql(eng, "SELECT table_name FROM meta_tables")
     assert dot.startswith("digraph plan {")
 
 
-def test_visualize_sql_refuses_writes(spark):
-    """The router runs what it is given, so a write is refused, not applied."""
+def test_visualize_sql_refuses_all_but_one_query(spark, tmp_path):
+    """The router runs what it is given, so a write, an EXPORT or a second
+    statement is refused before anything runs, not applied."""
+    import os
+
     import pytest
 
     from hyrise_spark.engine import Engine
     from hyrise_spark.visualize import visualize_sql
 
     eng = Engine(spark)
-    with pytest.raises(ValueError, match="only a query"):
-        visualize_sql(spark, eng, "CREATE TABLE vzq_t AS SELECT 1 AS x")
+    eng.execute("CREATE TABLE vzq_w AS SELECT 1 AS x")
+    out = tmp_path / "vzq_w.csv"
+    for sql in ("CREATE TABLE vzq_t AS SELECT 1 AS x",
+                "SELECT 1; INSERT INTO vzq_w VALUES (2)",
+                "INSERT INTO vzq_w VALUES (2); SELECT * FROM vzq_w",
+                f"EXPORT vzq_w TO '{out}'"):
+        with pytest.raises(ValueError, match="only a single query"):
+            visualize_sql(eng, sql)
     assert not eng.catalog.has_table("vzq_t")
+    assert eng.execute("SELECT COUNT(*) AS n FROM vzq_w").collect()[0].n == 1
+    assert not os.path.exists(out)

@@ -2091,3 +2091,21 @@ def test_explain_api_materializes_meta_tables(engine, spark):
     plan = engine.explain("SELECT * FROM meta_tables")
     assert "Physical Plan" in plan
     assert "Error occurred" not in plan
+
+
+def test_explain_api_refuses_all_but_one_query(engine):
+    """The router runs what it is given, so `Engine.explain` refuses a
+    second statement or a write before anything runs: nothing is applied."""
+    engine.execute("CREATE TABLE exq_w AS SELECT 1 AS x")
+    try:
+        for sql in ("SELECT 1; INSERT INTO exq_w VALUES (1)",
+                    "INSERT INTO exq_w VALUES (1); SELECT * FROM exq_w",
+                    "INSERT INTO exq_w VALUES (1)",
+                    "PREPARE exq_p AS SELECT 1"):
+            with pytest.raises(ValueError, match="only a single query"):
+                engine.explain(sql)
+        assert engine.execute("SELECT COUNT(*) AS n FROM exq_w").collect()[0].n == 1
+        assert "exq_p" not in engine._prepared
+        assert "Physical Plan" in engine.explain("SELECT x FROM exq_w;")
+    finally:
+        engine.execute("DROP TABLE exq_w")
