@@ -324,10 +324,32 @@ class Catalog:
         # here must come from the operator, not the engine.
         self.compact_paths: dict[str, list[str]] = {}
         self._compact_trash: list[str] = []
-        # bumped on EVERY catalog mutation; the engine's statement cache
-        # keys entry validity on it (plan_cache.py — an entry stored under
-        # an older epoch can never be served)
+        # Plan-cache validity (plan_cache.py). A cached plan stays valid
+        # while `epoch` and the version of every table it reads are
+        # unchanged. Writes to one table (replace_table, compact_table) bump
+        # that table's version; a change a cached plan cannot be traced to
+        # one table through (DDL, views, ROLLBACK, the compaction purge, and
+        # the engine's SET, function and meta_* statements) bumps the epoch.
+        # Both are monotonic counters, never part of a transaction pin.
+        self.epoch: int = 0
+        self.table_versions: dict[str, int] = {}
+        # bumped on EVERY catalog mutation (either of the above)
         self.mutation_counter: int = 0
+
+    # -- plan-cache validity -------------------------------------------------
+    def bump_epoch(self) -> None:
+        self.epoch += 1
+        self.mutation_counter += 1
+
+    def bump_table(self, name: str) -> None:
+        key = name.lower()
+        self.table_versions[key] = self.table_versions.get(key, 0) + 1
+        self.mutation_counter += 1
+
+    def stamp(self, names: tuple[str, ...]) -> tuple:
+        """The validity stamp of a plan reading the (lower-case) `names`:
+        equal stamps mean no change the plan could see."""
+        return self.epoch, tuple(self.table_versions.get(n, 0) for n in names)
 
     # -- transaction pins ----------------------------------------------------
     # The catalog state a BEGIN pin, a savepoint or a committed-only read
@@ -360,7 +382,9 @@ class Catalog:
     def set_state(self, st: dict, copy: bool = True) -> None:
         """Install a `state()` result: a copy of it, or with copy=False the
         given objects, which the catalog then owns. Spark's temp views are
-        the caller's to bring in line: only it knows what was live before."""
+        the caller's to bring in line: only it knows what was live before.
+        So is the plan-cache epoch: a ROLLBACK bumps it, a snapshot read
+        puts the live state back before any cached plan is looked up."""
         for f, v in (self._copy_state(st) if copy else st).items():
             setattr(self, f, v)
 
@@ -370,14 +394,14 @@ class Catalog:
     def add_table(self, name: str, df: DataFrame) -> None:
         if name in self._tables:
             raise ValueError(f"table {name!r} already exists")
-        self.mutation_counter += 1
+        self.bump_epoch()
         self._tables[name] = df
         self.history[name] = [df]
         self.history_base[name] = 0
         df.createOrReplaceTempView(name)
 
     def replace_table(self, name: str, df: DataFrame) -> None:
-        self.mutation_counter += 1
+        self.bump_table(name)
         self._tables[name] = df
         hist = self.history.setdefault(name, [])
         if name not in self.history_base:
@@ -437,7 +461,7 @@ class Catalog:
         compaction files the renamed table's plan still reads."""
         if name not in self._tables:
             raise KeyError(f"table {name!r} does not exist")
-        self.mutation_counter += 1
+        self.bump_epoch()
         self._tables[new] = self._tables.pop(name)
         for d in (self.history, self.history_base, self.dml_depth, self.compact_paths):
             if name in d:
@@ -456,8 +480,7 @@ class Catalog:
         Returns the number of directories removed."""
         import shutil
 
-        self.mutation_counter += 1
-
+        self.bump_epoch()
         n = len(self._compact_trash)
         for old in self._compact_trash:
             shutil.rmtree(old, ignore_errors=True)
@@ -467,7 +490,7 @@ class Catalog:
     def drop_table(self, name: str) -> None:
         if name not in self._tables:
             raise KeyError(f"table {name!r} does not exist")
-        self.mutation_counter += 1
+        self.bump_epoch()
         del self._tables[name]
         self.dml_depth.pop(name, None)
         self.history.pop(name, None)
@@ -493,7 +516,7 @@ class Catalog:
         FileScan instead of the accumulated DML lineage). Distributed write —
         no driver-side collect; at warehouse scale this is the same rewrite
         a table format's compaction job performs."""
-        self.mutation_counter += 1
+        self.bump_table(name)
         df = self._tables[name]
         if self._compact_dir is None:
             # rewrite under the session's warehouse dir (repo-local) — the
@@ -603,14 +626,26 @@ class Catalog:
     def add_view(self, name: str, sql: str) -> None:
         if name in self._views or name in self._tables:
             raise ValueError(f"view/table {name!r} already exists")
-        self.mutation_counter += 1
+        self.bump_epoch()
         self._views[name] = sql
         self.spark.sql(sql).createOrReplaceTempView(name)
+
+    def replace_view(self, name: str, sql: str) -> None:
+        """CREATE OR REPLACE VIEW: new SQL under the same name. The view
+        keeps its place in the creation order, so a pin install that
+        re-resolves views in that order (Engine._install) still binds the
+        views over it after it, and those views re-resolve now."""
+        if name not in self._views:
+            raise KeyError(f"view {name!r} does not exist")
+        self.spark.sql(sql)  # a bad definition fails before anything changes
+        self.bump_epoch()
+        self._views[name] = sql
+        self.refresh_views({name})
 
     def drop_view(self, name: str) -> None:
         if name not in self._views:
             raise KeyError(f"view {name!r} does not exist")
-        self.mutation_counter += 1
+        self.bump_epoch()
         del self._views[name]
         self.spark.catalog.dropTempView(name)
 

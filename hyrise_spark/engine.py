@@ -104,6 +104,10 @@ _PREPARE_RE = re.compile(
 _EXECUTE_RE = re.compile(
     r"^\s*EXECUTE\s+(?P<name>\w+)\s*(?:\((?P<args>.*)\))?\s*$", re.I | re.S
 )
+# postgres: DEALLOCATE [PREPARE] name | ALL
+_DEALLOCATE_RE = re.compile(
+    r"^\s*DEALLOCATE\s+(?:PREPARE\s+)?(?P<name>\w+)\s*$", re.I
+)
 
 
 _ENGINE_SEQ = itertools.count()
@@ -226,6 +230,40 @@ _NONDET_RE = re.compile(
     r"\b(?:rand|randn|random|uuid|shuffle|monotonically_increasing_id)\s*\(",
     re.I,
 )
+# Time functions Spark's optimizer folds to a literal (ComputeCurrentTime):
+# an optimized plan kept for re-execution (Engine.fetch) would freeze them.
+_TIME_FN_RE = re.compile(
+    r"\b(?:current_timestamp|current_date|current_time|localtimestamp|now"
+    r"|curdate|unix_timestamp)\b",
+    re.I,
+)
+# Executed-plan nodes that keep state between executions: a re-executed
+# Exchange reuses its shuffle files, a BroadcastExchange its relation, a
+# Subquery its result, and an AdaptiveSparkPlan its materialized query
+# stages (ReusedExchange, SubqueryBroadcast, ... match too).
+_STATEFUL_NODE_RE = re.compile(r"Exchange|Subquery|AdaptiveSparkPlan|QueryStage")
+_NAME_RE = re.compile(r"[A-Za-z_]\w*")
+# Spark-native temp views (no catalog entry) keep their SQL text and
+# re-resolve its names on every read; see _read_closure
+_SESSION_VIEW_RE = re.compile(
+    r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?TEMP(?:ORARY)?\s+VIEW\s+"
+    r"(?:IF\s+NOT\s+EXISTS\s+)?(?:\w+\s*\.\s*)?`?(?P<name>\w+)",
+    re.I,
+)
+
+
+def _keeps_state(plan) -> bool:
+    """Does the executed plan `plan` (a JVM SparkPlan) hold a node, or an
+    expression subquery, that keeps state between executions?"""
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        if (_STATEFUL_NODE_RE.search(node.nodeName())
+                or not node.subqueries().isEmpty()):
+            return True
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return False
 
 
 class Engine:
@@ -233,6 +271,7 @@ class Engine:
 
     def __init__(self, spark: SparkSession):
         import threading
+        import weakref
 
         self.spark = spark
         self.catalog = Catalog(spark)
@@ -268,6 +307,13 @@ class Engine:
         from hyrise_spark.plan_cache import GDFSCache
 
         self._plan_cache = GDFSCache(capacity=1024)
+        # cached statement frame -> {max_rows: its limited frame} for the
+        # physical-plan reuse in fetch(); weak, so an entry the cache
+        # dropped goes once no caller holds its frame
+        self._physical: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+        self._physical_lock = threading.Lock()
+        # Spark-native temp views created through the router: name -> text
+        self._session_views: dict[str, str] = {}
         # meta_transactions / meta_plan_cache read engine state through the
         # catalog (the meta builders only see the catalog)
         self.catalog.txn_status = lambda: self._txn
@@ -347,7 +393,24 @@ class Engine:
     # ANOTHER thread's transaction is open (see _execute_one)
     _WRITE_STMT_RE = re.compile(
         r"^\s*(?:INSERT|UPDATE|DELETE|MERGE|CREATE|DROP|ALTER|TRUNCATE|"
-        r"IMPORT|COPY|BEGIN|START|COMMIT|ROLLBACK|SAVEPOINT|RELEASE)\b",
+        r"IMPORT|COPY|BEGIN|START|COMMIT|ROLLBACK|SAVEPOINT|RELEASE|"
+        r"PREPARE|DEALLOCATE|VACUUM)\b",
+        re.I,
+    )
+    # Statements that leave the plan-cache epoch alone: reads, transaction
+    # control (a ROLLBACK bumps it in _restore), prepared-statement
+    # bookkeeping (the cache keys on a prepared statement's text, and its
+    # EXECUTE runs that text through _execute_one), VACUUM, and DML or
+    # ALTER on one table, which bumps that table's version in
+    # Catalog.replace_table / compact_table (a RENAME bumps the epoch
+    # there). Every other statement — DDL, SET/RESET, functions, writes to
+    # meta_* tables, anything passed through to Spark — bumps the epoch.
+    _KEEPS_EPOCH_RE = re.compile(
+        r"^\s*(?:SELECT|WITH|VALUES|SHOW|DESCRIBE|DESC|EXPLAIN|SUMMARIZE|"
+        r"BEGIN|START|COMMIT|ROLLBACK|SAVEPOINT|RELEASE|PREPARE|DEALLOCATE|"
+        r"EXECUTE\s+(?!IMMEDIATE\b)|VACUUM|"
+        r"(?:INSERT\s+INTO|UPDATE|DELETE\s+FROM|MERGE\s+INTO|"
+        r"TRUNCATE(?:\s+TABLE)?|ALTER\s+TABLE)\s+(?!meta_)\w+)\b",
         re.I,
     )
 
@@ -374,15 +437,13 @@ class Engine:
                 fenced = (txn is not None
                           and txn.get("owner") != self._owner_token()
                           and not self._in_snap_read)
-                if not fenced:
-                    if self._is_write_stmt(stmt):
-                        # any statement that can mutate state moves the epoch
-                        # the plan cache keys validity on (over-approximate:
-                        # BEGIN/COMMIT bump too — a wasted invalidation,
-                        # never a stale serve)
-                        self.catalog.mutation_counter += 1
-                    return self._cached_dispatch(stmt, args)
-                if not self._is_write_stmt(stmt):
+                if not (fenced and self._is_write_stmt(stmt)):
+                    # a statement that may change what a cached plan reads,
+                    # and that no table version tracks, moves the epoch
+                    if not self._KEEPS_EPOCH_RE.match(stmt):
+                        self.catalog.bump_epoch()
+                    if not fenced:
+                        return self._cached_dispatch(stmt, args)
                     # Reads from OTHER connections get committed-only
                     # visibility: they are resolved against the BEGIN pin,
                     # not the live catalog — the reference's Validate
@@ -440,13 +501,13 @@ class Engine:
 
     def _cached_dispatch(self, stmt: str, args) -> DataFrame | None:
         """SQLPlanCache analog (sql_plan_cache.hpp): return the cached
-        analyzed DataFrame for an identical statement under an unchanged
-        catalog epoch; otherwise dispatch and cache. The cached value is an
-        immutable lazy plan — Spark re-optimizes and re-executes it per
-        action, so a hit skips exactly the parse + dialect-rewrite +
-        Catalyst-analysis cost (the driver-side dominant cost of repeated
-        wide-expression statements), never data freshness: every mutating
-        statement bumps `catalog.mutation_counter` first."""
+        analyzed DataFrame for an identical statement while nothing it reads
+        has changed; otherwise dispatch and cache. The cached value is an
+        immutable lazy plan, so a hit skips exactly the parse +
+        dialect-rewrite + Catalyst-analysis cost (the driver-side dominant
+        cost of repeated wide-expression statements), never data freshness:
+        the entry's stamp covers the catalog epoch and the version of every
+        table its statement can read (plan_cache.py)."""
         if (self._txn is not None
                 or self._in_snap_read
                 or not self._CACHEABLE_RE.match(stmt)
@@ -454,7 +515,7 @@ class Engine:
                 or _NONDET_RE.search(stmt)):
             # While a transaction is open (or resolving a snapshot read) the
             # session carries TWO visibilities — owner sees uncommitted,
-            # others see the pin — and the epoch cannot distinguish them:
+            # others see the pin — and the stamp cannot distinguish them:
             # a plan cached by one would leak the wrong state to the other.
             # Bypass entirely; autocommit statements repopulate after COMMIT.
             return self._dispatch(stmt, args)
@@ -467,19 +528,77 @@ class Engine:
             key = stmt + "\x00" + repr(sorted(args.items()))
         else:
             key = stmt + "\x00" + repr(list(args))
-        epoch = self.catalog.mutation_counter
-        df = self._plan_cache.get(key, epoch)
+        df = self._plan_cache.get(key, self.catalog.stamp)
         if df is not None:
             return df
         import time as _time
 
+        names, text = self._read_closure(stmt)
+        stamp = self.catalog.stamp(names)
         t0 = _time.perf_counter()
         df = self._dispatch(stmt, args)
         if df is not None:
             self._plan_cache.put(
-                key, df, epoch, (_time.perf_counter() - t0) * 1000.0
+                key, df, stamp, (_time.perf_counter() - t0) * 1000.0,
+                deps=names,
             )
+            if not _TIME_FN_RE.search(text):
+                with self._physical_lock:
+                    self._physical[df] = {}
         return df
+
+    def _read_closure(self, stmt: str) -> tuple[tuple[str, ...], str]:
+        """(every lower-case name `stmt` can read, the text they come from):
+        the statement's identifiers, closed over the SQL of the catalog
+        views, Spark-native temp views and SQL functions it names. Keywords,
+        columns and words inside literals come along; an extra name only
+        costs an extra invalidation, a missing one would serve a stale
+        plan."""
+        bodies = {k.lower(): v for k, v in self.catalog._views.items()}
+        bodies.update(self._session_views)
+        bodies.update(self._functions)
+        texts, seen = [stmt], set()
+        for text in texts:  # grows while it is walked: the closure
+            for w in _NAME_RE.findall(text):
+                w = w.lower()
+                if w not in seen:
+                    seen.add(w)
+                    if w in bodies:
+                        texts.append(bodies[w])
+        return tuple(sorted(seen)), "\n".join(texts)
+
+    def fetch(self, df: DataFrame, max_rows: int) -> list:
+        """At most `max_rows` rows of a statement's result: the collect
+        behind the line-JSON server and both pgwire result paths.
+
+        The first fetch of a cached statement (_cached_dispatch) keeps its
+        limited Dataset, and a plan-cache hit collects that Dataset again:
+        Spark re-executes the optimized, planned physical plan it already
+        has, so the hit skips optimization, physical planning and scan
+        set-up too (the SQLPhysicalPlanCache half of sql_plan_cache.hpp).
+        Reuse is safe only for a plan that keeps nothing between
+        executions, so the Dataset is kept only when its executed plan has
+        no Exchange, broadcast, reused exchange, subquery or adaptive node
+        (_keeps_state), and only for statements that fold no time
+        function. Each reuse still runs its job and reads the data; no
+        result is ever reused."""
+        with self._physical_lock:
+            kept = self._physical.get(df)
+        if kept is None:
+            return df.limit(max_rows).collect()
+        limited = kept.get(max_rows)
+        if limited is not None:
+            self._plan_cache.note_physical_hit()
+            return limited.collect()
+        limited = df.limit(max_rows)
+        rows = limited.collect()
+        stateful = _keeps_state(limited._jdf.queryExecution().executedPlan())
+        with self._physical_lock:
+            if stateful:
+                self._physical.pop(df, None)
+            else:
+                kept[max_rows] = limited
+        return rows
 
     def _dispatch(self, stmt: str, args) -> DataFrame | None:
         if re.search(r"\bVERSION\s+AS\s+OF\b", stmt, re.I):
@@ -588,8 +707,9 @@ class Engine:
                 # 371): rename through a derived-table alias
                 sql = f"SELECT * FROM ({sql}) AS __v({m['cols']})"
             if m["orrepl"] and self.catalog.has_view(m["name"]):
-                self.catalog.drop_view(m["name"])
-            self.catalog.add_view(m["name"], sql)
+                self.catalog.replace_view(m["name"], sql)
+            else:
+                self.catalog.add_view(m["name"], sql)
             return None
         m = _DROP_VIEW_RE.match(stmt)
         if m:
@@ -658,6 +778,14 @@ class Engine:
         if m:
             # hyrise doubles quotes inside the statement string literal
             self.prepare(m["name"], m["sql"].replace("''", "'"))
+            return None
+        m = _DEALLOCATE_RE.match(stmt)
+        if m:
+            if m["name"].upper() == "ALL":
+                self._prepared.clear()
+            elif self._prepared.pop(m["name"], None) is None:
+                raise ValueError(
+                    f"prepared statement {m['name']!r} does not exist")
             return None
         m = _EXECUTE_RE.match(stmt)
         if m and m["name"] in self._prepared:
@@ -841,6 +969,9 @@ class Engine:
             from hyrise_spark.ucc import maybe_strip_redundant_distinct
 
             stmt = maybe_strip_redundant_distinct(stmt, self.catalog)
+        m = _SESSION_VIEW_RE.match(stmt)
+        if m:
+            self._session_views[m["name"].lower()] = stmt
         if args is not None:
             return self.spark.sql(stmt, args=args)
         return self.spark.sql(stmt)
@@ -2600,8 +2731,12 @@ class Engine:
 
     def _restore(self, snap: dict) -> None:
         """ROLLBACK [TO SAVEPOINT]: settle the compaction trash against the
-        pin, then install it."""
+        pin, then install it. The install swaps tables, views and functions
+        at once, which no table version follows, so the plan-cache epoch
+        moves here (a rollback on connection teardown comes here without
+        passing _execute_one)."""
         cat = self.catalog
+        cat.bump_epoch()
         pinned_paths = snap["catalog"]["compact_paths"]
         # Trash is restored from the pin so paths a DROP TABLE (or trail
         # eviction) queued DURING the transaction do not survive the
@@ -2673,9 +2808,6 @@ class Engine:
             )
             return
         txn, self._txn = self._txn, None
-        # direct callers (connection teardown) bypass _execute_one's bump:
-        # the restore changes state, so cached plans must invalidate here too
-        self.catalog.mutation_counter += 1
         self._restore(txn["snap"])
         with self._txn_cv:
             self._txn_cv.notify_all()  # wake writers queued on lock_timeout

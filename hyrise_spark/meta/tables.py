@@ -619,7 +619,9 @@ def meta_transactions(spark: SparkSession, catalog) -> DataFrame:
 def meta_plan_cache(spark: SparkSession, catalog) -> DataFrame:
     """Plan-cache observability (sql_plan_cache.hpp + gdfs_cache.hpp
     analog): one summary row — hit/miss/eviction/invalidation counters,
-    live entry count, capacity, and the current GDFS inflation value L."""
+    live entry count, capacity, the current GDFS inflation value L, and
+    `physical_hits`: the hits whose fetch re-executed the cached physical
+    plan (Engine.fetch) instead of optimizing and planning anew."""
     schema = StructType(
         [
             StructField("hits", LongType()),
@@ -629,14 +631,15 @@ def meta_plan_cache(spark: SparkSession, catalog) -> DataFrame:
             StructField("entries", LongType()),
             StructField("capacity", LongType()),
             StructField("inflation", DoubleType()),
+            StructField("physical_hits", LongType()),
         ]
     )
     pc = getattr(catalog, "plan_cache", None)
     if pc is None:
-        return spark.createDataFrame([(0, 0, 0, 0, 0, 0, 0.0)], schema)
+        return spark.createDataFrame([(0, 0, 0, 0, 0, 0, 0.0, 0)], schema)
     return spark.createDataFrame(
         [(pc.hits, pc.misses, pc.evictions, pc.invalidations,
-          len(pc), pc.capacity, float(pc.inflation))],
+          len(pc), pc.capacity, float(pc.inflation), pc.physical_hits)],
         schema,
     )
 

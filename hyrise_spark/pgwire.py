@@ -551,7 +551,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
             self._send(sock, _msg(b"C", _cstr(portal["tag"])))
             return
         if portal["rows"] is None:  # materialize once; fetches resume from pos
-            portal["rows"] = portal["df"].limit(server.max_rows).collect()
+            portal["rows"] = server.engine.fetch(portal["df"], server.max_rows)
         rows, pos = portal["rows"], portal["pos"]
         batch = rows[pos:] if max_rows <= 0 else rows[pos:pos + max_rows]
         dtypes = portal["df"].dtypes
@@ -576,7 +576,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
             tag = sql.strip().split()[0].upper() if sql.strip() else "OK"
             self._send(sock, _msg(b"C", _cstr(tag)))
             return
-        rows = df.limit(server.max_rows).collect()
+        rows = server.engine.fetch(df, server.max_rows)
         self._send_row_description(sock, df)
         self._send_data_rows(sock, rows)
         self._send(sock, _msg(b"C", _cstr(f"SELECT {len(rows)}")))

@@ -17,28 +17,48 @@ Catalyst work, independent of data size). A cache hit returns the same
 immutable lazy plan; Spark re-optimizes/executes it per action, so data
 freshness within an unchanged catalog is untouched.
 
-Validity is epoch-based: the engine bumps `catalog.mutation_counter` on
-every state mutation (DDL/DML statements, transaction control, direct
-catalog API calls); an entry stored under an older epoch is invalidated on
-lookup. That makes staleness impossible by construction — any statement
-that could have changed what a SELECT reads moved the epoch.
+The physical-plan half lives in `Engine.fetch`: the first fetch of a cached
+statement keeps its limited Dataset, and a hit re-executes that Dataset's
+optimized and executed plan instead of building a new one — but only when
+the plan holds no state between executions (no Exchange, broadcast, reused
+exchange, subquery or adaptive node, whose first run leaves shuffle files,
+a broadcast relation or a subquery result behind) and the statement folds
+no time function (Spark turns `now()` into a literal while optimizing).
+Each such hit still runs its job and reads the data: what is reused is a
+plan, never a result. `physical_hits` counts them.
+
+Validity is per relation. The catalog keeps a version per table, bumped
+by the writes to that table (every DML and ALTER path goes through
+`Catalog.replace_table`, compaction through `compact_table`), and an epoch,
+bumped by every change a plan cannot be traced to one table through: DDL,
+view and function changes, ROLLBACK [TO SAVEPOINT], the compaction purge,
+SET/RESET and writes to meta_* tables. An entry stores the names its
+statement can read — every identifier of its text, closed over the SQL of
+the views and functions it names, an over-approximation that never misses
+one — with the stamp `(epoch, versions of those names)` taken when it was
+built; a lookup whose current stamp differs drops the entry. A write to one
+table therefore leaves the cached reads of every other table valid.
+While a transaction is open the engine bypasses the cache (two
+visibilities share one session), so BEGIN and COMMIT move nothing: the
+transaction's writes already moved their tables.
 """
 
 from __future__ import annotations
 
 import threading
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 
 @dataclass
 class _Entry:
     value: Any
-    epoch: int
+    epoch: Any  # the validity stamp the entry was built under
     cost: float  # analysis wall-time, ms (GDFS cost term)
     size: float = 1.0
     frequency: int = 1
     priority: float = 0.0
+    deps: tuple = ()  # what the stamp is computed over (the names read)
 
 
 @dataclass
@@ -51,17 +71,20 @@ class GDFSCache:
     misses: int = 0
     evictions: int = 0
     invalidations: int = 0
+    physical_hits: int = 0  # hits that re-executed a cached physical plan
     inflation: float = 0.0  # the GDFS "L"
     _entries: dict[str, _Entry] = field(default_factory=dict)
     _lock: threading.Lock = field(default_factory=threading.Lock)
 
-    def get(self, key: str, epoch: int) -> Any | None:
+    def get(self, key: str, epoch: Any | Callable[[tuple], Any]) -> Any | None:
+        """The value stored under `key` if its stamp equals `epoch` — the
+        current stamp, or a function computing it from the entry's deps."""
         with self._lock:
             e = self._entries.get(key)
             if e is None:
                 self.misses += 1
                 return None
-            if e.epoch != epoch:
+            if e.epoch != (epoch(e.deps) if callable(epoch) else epoch):
                 # stored under an older catalog state — drop it
                 del self._entries[key]
                 self.invalidations += 1
@@ -72,8 +95,8 @@ class GDFSCache:
             e.priority = self.inflation + e.frequency * e.cost / e.size
             return e.value
 
-    def put(self, key: str, value: Any, epoch: int, cost: float,
-            size: float = 1.0) -> None:
+    def put(self, key: str, value: Any, epoch: Any, cost: float,
+            size: float = 1.0, deps: tuple = ()) -> None:
         with self._lock:
             if self.capacity <= 0:
                 return
@@ -84,8 +107,12 @@ class GDFSCache:
                 self.evictions += 1
             self._entries[key] = _Entry(
                 value=value, epoch=epoch, cost=cost, size=size,
-                priority=self.inflation + cost / size,
+                priority=self.inflation + cost / size, deps=deps,
             )
+
+    def note_physical_hit(self) -> None:
+        with self._lock:
+            self.physical_hits += 1
 
     def clear(self) -> int:
         with self._lock:

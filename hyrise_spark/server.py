@@ -18,6 +18,14 @@ construction while execution itself is distributed. Row results funnel
 through the driver by design — this is the interactive entry point, not a
 bulk export path (Export/`sources/` writers cover that); `max_rows` caps the
 transfer exactly like the console's paging.
+
+Rows come out of `Engine.fetch`, the one collect this server and both pgwire
+result paths share. On a plan-cache hit it re-executes the physical plan of
+the statement's first fetch when that plan is exchange-free (no Exchange,
+broadcast, subquery or adaptive node) and folds no time function, skipping
+optimization and physical planning; such a plan keeps nothing between
+executions, so every fetch still runs its job and reads the data, and no
+result is ever reused.
 """
 
 from __future__ import annotations
@@ -79,7 +87,7 @@ class _Handler(socketserver.StreamRequestHandler):
                 if df is None:
                     resp = {"status": "ok", "columns": [], "rows": []}
                 else:
-                    rows = df.limit(server.max_rows).collect()
+                    rows = server.engine.fetch(df, server.max_rows)
                     resp = {
                         "status": "ok",
                         "columns": df.columns,

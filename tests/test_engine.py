@@ -2109,3 +2109,58 @@ def test_explain_api_refuses_all_but_one_query(engine):
         assert "Physical Plan" in engine.explain("SELECT x FROM exq_w;")
     finally:
         engine.execute("DROP TABLE exq_w")
+
+
+def test_create_or_replace_view_re_resolves_dependents(engine):
+    """CREATE OR REPLACE VIEW used to drop and re-add the view: the views
+    over it kept the old definition, and the view moved to the end of the
+    creation order, so a pin install re-resolved its dependents before it
+    and bound them to the pinned definition."""
+    e = engine
+    e.execute("CREATE VIEW rpv_a AS SELECT 1 AS x; CREATE VIEW rpv_b AS SELECT x FROM rpv_a")
+    try:
+        q = "SELECT x FROM rpv_b"
+        assert e.execute(q).collect()[0]["x"] == 1
+        assert e.execute(q).collect()[0]["x"] == 1  # cached
+        e.execute("CREATE OR REPLACE VIEW rpv_a AS SELECT 2 AS x")
+        assert e.execute("SELECT x FROM rpv_a").collect()[0]["x"] == 2
+        h0 = e._plan_cache.hits
+        assert e.execute(q).collect()[0]["x"] == 2
+        assert e._plan_cache.hits == h0  # the replace invalidated the read
+        assert list(e.catalog._views) == ["rpv_a", "rpv_b"]
+
+        e.execute("BEGIN; CREATE OR REPLACE VIEW rpv_a AS SELECT 3 AS x")
+        # another connection's snapshot read sees the pin; the owner, after
+        # the swap back, sees its own replace through the dependent view
+        assert _on_thread(lambda: e.execute(q).collect()[0]["x"]) == 2
+        assert e.execute(q).collect()[0]["x"] == 3
+        e.execute("ROLLBACK")
+        assert e.execute(q).collect()[0]["x"] == 2
+    finally:
+        e.execute("DROP VIEW IF EXISTS rpv_b; DROP VIEW IF EXISTS rpv_a")
+
+
+def test_fenced_prepare_deallocate_vacuum_hit_write_fence(engine):
+    """PREPARE, DEALLOCATE and VACUUM change engine state. From a connection
+    fenced by another's open transaction they used to take the snapshot-read
+    path, whose swap back discarded their effect: the PREPARE returned None,
+    and a later EXECUTE failed to parse. Now they are refused like any
+    write, and take effect once the transaction has ended."""
+    e = engine
+    e.execute("CREATE TABLE fpv AS SELECT CAST(id AS INT) AS x FROM RANGE(3)")
+    e.execute("PREPARE fpv_old FROM 'SELECT COUNT(*) AS n FROM fpv'")
+    try:
+        e.execute("BEGIN; INSERT INTO fpv VALUES (10)")
+        for sql in ("PREPARE fpv_q FROM 'SELECT MAX(x) AS m FROM fpv'",
+                    "DEALLOCATE fpv_old", "VACUUM fpv"):
+            assert "another connection" in _on_thread(lambda: _try_exec(e, sql)), sql
+        assert "fpv_q" not in e._prepared and "fpv_old" in e._prepared
+        e.execute("COMMIT")
+        _on_thread(lambda: e.execute(
+            "PREPARE fpv_q FROM 'SELECT MAX(x) AS m FROM fpv'; DEALLOCATE fpv_old"))
+        assert "fpv_q" in e._prepared and "fpv_old" not in e._prepared
+        assert _on_thread(lambda: e.execute("EXECUTE fpv_q").collect()[0]["m"]) == 10
+        with pytest.raises(ValueError, match="does not exist"):
+            e.execute("DEALLOCATE fpv_old")
+    finally:
+        e.execute("DEALLOCATE ALL; DROP TABLE fpv")

@@ -5,9 +5,16 @@ eviction; repeated identical statements skip parsing/translation
 (sql_pipeline_statement.cpp consults SQLPhysicalPlanCache). Here the
 cached value is the eagerly-analyzed DataFrame: a hit returns the same
 immutable lazy plan and skips parse + dialect rewrite + Catalyst analysis.
-Validity is epoch-based on catalog.mutation_counter — any mutating
-statement (or direct catalog API call) moves the epoch, so a stale serve
-is impossible by construction.
+`Engine.fetch` adds the physical half: a hit re-executes the physical plan
+of the statement's first fetch when that plan keeps no state between
+executions (no exchange, subquery or adaptive node) and folds no time
+function — a reused plan, never a reused result.
+
+Validity is per relation: an entry stays valid while the catalog epoch and
+the version of every table its statement can read (closed over views, SQL
+functions and prepared texts) are unchanged. A write to one table
+invalidates the reads of that table only; DDL, view and function changes,
+ROLLBACK, SET and meta_* writes move the epoch and invalidate everything.
 """
 from __future__ import annotations
 
@@ -242,3 +249,208 @@ def test_dialect_statements_are_cacheable(spark):
         assert engine._plan_cache.hits == before + 1
     finally:
         engine.execute("DROP TABLE pc_d")
+
+
+# -- per-relation validity ----------------------------------------------------
+
+def _served(engine, q):
+    """Run `q` through the cache; True when it was a hit."""
+    h0 = engine._plan_cache.hits
+    engine.execute(q).collect()
+    return engine._plan_cache.hits == h0 + 1
+
+
+def test_write_to_one_table_keeps_hits_on_others(engine):
+    """A write to table A invalidates every cached read that can reach A —
+    directly, through a view (the engine's, or a Spark temp view created
+    through the engine, which keeps its SQL text), through a SQL function
+    or through EXECUTE of a statement prepared over A — and keeps the hits
+    on reads of B."""
+    engine.execute(
+        "CREATE TABLE rv_a AS SELECT CAST(id AS INT) AS x FROM RANGE(5);"
+        "CREATE TABLE rv_b AS SELECT CAST(id AS INT) AS y FROM RANGE(3);"
+        "CREATE VIEW rv_va AS SELECT x FROM rv_a WHERE x > 1;"
+        "CREATE TEMPORARY VIEW rv_tv AS SELECT x FROM rv_a WHERE x >= 3;"
+        "CREATE FUNCTION rv_fa() RETURNS INT RETURN (SELECT MAX(x) FROM rv_a);"
+        "PREPARE rv_pa FROM 'SELECT COUNT(*) AS n FROM rv_a WHERE x < ?'")
+    try:
+        reads_a = ["SELECT SUM(x) AS s FROM rv_a", "SELECT COUNT(*) AS n FROM rv_va",
+                   "SELECT COUNT(*) AS n FROM rv_tv", "SELECT rv_fa() AS m"]
+        read_b = "SELECT SUM(y) AS s FROM rv_b"
+        for q in reads_a + [read_b]:
+            engine.execute(q).collect()  # fill
+        engine.execute("EXECUTE rv_pa (100)").collect()
+        assert all(_served(engine, q) for q in reads_a + [read_b])
+        assert _served(engine, "EXECUTE rv_pa (100)")
+
+        engine.execute("INSERT INTO rv_a VALUES (100)")
+        assert _served(engine, read_b), "a write to rv_a dropped a read of rv_b"
+        inv = engine._plan_cache.invalidations
+        got = [engine.execute(q).collect()[0][0] for q in reads_a]
+        assert got == [110, 4, 3, 100]
+        assert engine.execute("EXECUTE rv_pa (1000)").collect()[0]["n"] == 6
+        assert not _served(engine, "EXECUTE rv_pa (100)")
+        assert engine._plan_cache.invalidations == inv + 5
+    finally:
+        engine.spark.catalog.dropTempView("rv_tv")
+        engine.execute("DEALLOCATE rv_pa; DROP FUNCTION rv_fa; DROP VIEW rv_va;"
+                       " DROP TABLE rv_a; DROP TABLE rv_b")
+
+
+@pytest.mark.parametrize("change", [
+    "VACUUM rv_t",
+    "BEGIN; ROLLBACK",
+    "BEGIN; SAVEPOINT s; ROLLBACK TO SAVEPOINT s; COMMIT",
+    "CREATE OR REPLACE TABLE rv_t AS SELECT x FROM rv_t",
+    "ALTER TABLE rv_t ADD COLUMN z INT",
+    "SET spark.sql.shuffle.partitions = 3",
+    "CREATE TABLE rv_other AS SELECT 1 AS w",
+    "INSERT INTO meta_settings VALUES ('hyrise_spark.rv_probe', '1')",
+])
+def test_changes_invalidate(engine, change):
+    """Compaction, ROLLBACK [TO SAVEPOINT] (even of an empty transaction),
+    CREATE OR REPLACE TABLE, ALTER TABLE, SET, DDL on another table and a
+    meta_settings write each invalidate a cached read of the table."""
+    engine.execute("CREATE TABLE rv_t AS SELECT CAST(id AS INT) AS x FROM RANGE(4)")
+    q = "SELECT * FROM rv_t WHERE x > 0"
+    try:
+        engine.execute(q).collect()
+        assert _served(engine, q)
+        engine.execute(change)
+        inv = engine._plan_cache.invalidations
+        assert not _served(engine, q)
+        assert engine._plan_cache.invalidations == inv + 1
+    finally:
+        engine.execute("DROP TABLE IF EXISTS rv_other; DROP TABLE rv_t")
+
+
+def test_begin_commit_keep_hits_and_commit_shows_writes(engine):
+    """BEGIN and COMMIT move nothing; the transaction's own writes moved
+    their table, so a read of it re-plans after COMMIT and one of another
+    table keeps hitting."""
+    engine.execute("CREATE TABLE rv_c AS SELECT 1 AS x; CREATE TABLE rv_d AS SELECT 2 AS y")
+    try:
+        qc, qd = "SELECT x FROM rv_c", "SELECT y FROM rv_d"
+        for q in (qc, qd):
+            engine.execute(q).collect()
+        engine.execute("BEGIN; UPDATE rv_c SET x = 5; COMMIT")
+        assert _served(engine, qd)
+        assert engine.execute(qc).collect()[0]["x"] == 5
+    finally:
+        engine.execute("DROP TABLE rv_c; DROP TABLE rv_d")
+
+
+# -- physical-plan reuse (Engine.fetch) ----------------------------------------
+
+def test_fetch_reuses_exchange_free_plan(engine):
+    """A hit of an exchange-free point lookup re-executes the limited
+    Dataset of the first fetch (physical_hits, meta_plan_cache), and the
+    rows stay right after a write re-plans it."""
+    engine.execute("CREATE TABLE rv_p AS SELECT CAST(id AS INT) AS k,"
+                   " CAST(id * 10 AS INT) AS v FROM RANGE(50)")
+    q = "SELECT k, v FROM rv_p WHERE k = 7"
+    try:
+        pc = engine._plan_cache
+        assert engine.fetch(engine.execute(q), 100) == [(7, 70)]
+        p0 = pc.physical_hits
+        for _ in range(2):
+            assert engine.fetch(engine.execute(q), 100) == [(7, 70)]
+        assert pc.physical_hits == p0 + 2
+        row = engine.execute("SELECT physical_hits FROM meta_plan_cache").collect()[0]
+        assert row["physical_hits"] == pc.physical_hits
+        engine.execute("UPDATE rv_p SET v = 1 WHERE k = 7")
+        assert engine.fetch(engine.execute(q), 100) == [(7, 1)]
+        assert pc.physical_hits == p0 + 2  # the miss built a new plan
+    finally:
+        engine.execute("DROP TABLE rv_p")
+
+
+def test_time_functions_keep_only_the_analyzed_hit(engine):
+    """Spark folds current_timestamp()/now()/current_date to literals while
+    optimizing, so a reused physical plan would freeze them: such
+    statements hit the analyzed-plan cache, but every fetch plans anew."""
+    import time
+
+    q = ("SELECT current_timestamp() AS a, now() AS b, current_date AS c,"
+         " CAST(unix_timestamp() AS BIGINT) AS d")
+    pc = engine._plan_cache
+    first = engine.fetch(engine.execute(q), 10)[0]
+    h0, p0 = pc.hits, pc.physical_hits
+    time.sleep(0.05)
+    second = engine.fetch(engine.execute(q), 10)[0]
+    assert pc.hits == h0 + 1 and pc.physical_hits == p0
+    assert second["a"] > first["a"] and second["b"] > first["b"]
+
+
+def test_concurrent_fetches_of_one_cached_lookup(engine):
+    """Two threads re-executing the same cached physical plan at once both
+    get the right rows."""
+    import threading
+
+    engine.execute("CREATE TABLE rv_q AS SELECT CAST(id AS INT) AS k,"
+                   " CAST(id + 1 AS INT) AS v FROM RANGE(200)")
+    q = "SELECT k, v FROM rv_q WHERE k IN (3, 150) ORDER BY k"
+    try:
+        engine.fetch(engine.execute(q), 100)  # first fetch keeps the plan
+        p0 = engine._plan_cache.physical_hits
+        barrier, out = threading.Barrier(2), []
+
+        def reader():
+            barrier.wait()
+            for _ in range(5):
+                out.append(engine.fetch(engine.execute(q), 100))
+
+        threads = [threading.Thread(target=reader) for _ in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert out == [[(3, 4), (150, 151)]] * 10
+        assert engine._plan_cache.physical_hits == p0 + 10
+    finally:
+        engine.execute("DROP TABLE rv_q")
+
+
+def _jobs(spark, group: str) -> tuple[int, int]:
+    """(jobs, completed stages) started under the job group `group`."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    ids = sc.statusTracker().getJobIdsForGroup(group)
+    return len(ids), sum(store.job(j).numCompletedStages() for j in ids)
+
+
+def test_hits_run_the_same_jobs_as_misses(engine, spark):
+    """No result is reused: a hit of a join, an aggregate or a scalar
+    subquery (whose plans hold exchanges or a subquery and are re-planned)
+    runs as many jobs and stages as its miss, and a reused exchange-free
+    plan still runs one job per fetch."""
+    engine.execute(
+        "CREATE TABLE rv_j1 AS SELECT CAST(id AS INT) AS k, CAST(id % 7 AS INT) AS g"
+        " FROM RANGE(300);"
+        "CREATE TABLE rv_j2 AS SELECT CAST(id AS INT) AS k, CAST(id * 2 AS INT) AS w"
+        " FROM RANGE(300)")
+    sc = spark.sparkContext
+    try:
+        stmts = [
+            "SELECT a.g, SUM(b.w) AS s FROM rv_j1 a JOIN rv_j2 b ON a.k = b.k"
+            " GROUP BY a.g ORDER BY a.g",
+            "SELECT g, COUNT(*) AS n FROM rv_j1 GROUP BY g ORDER BY g",
+            "SELECT k, w FROM rv_j2 WHERE k = (SELECT MAX(g) FROM rv_j1)",
+            "SELECT k, w FROM rv_j2 WHERE k = 11",
+        ]
+        for i, q in enumerate(stmts):
+            counts, results = [], []
+            for r in range(3):  # miss, then two hits
+                group = f"rv_jobs_{i}_{r}"
+                sc.setJobGroup(group, group)
+                results.append(engine.fetch(engine.execute(q), 1000))
+                sc.setJobGroup("", "")
+                counts.append(_jobs(spark, group))
+            assert results[0] == results[1] == results[2]
+            assert counts[0] == counts[1] == counts[2], (q, counts)
+            assert counts[0][0] >= 1
+        assert engine._plan_cache.physical_hits >= 2  # the point lookup's hits
+    finally:
+        engine.execute("DROP TABLE rv_j1; DROP TABLE rv_j2")
