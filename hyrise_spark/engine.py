@@ -242,7 +242,10 @@ _TIME_FN_RE = re.compile(
 # Subquery its result, and an AdaptiveSparkPlan its materialized query
 # stages (ReusedExchange, SubqueryBroadcast, ... match too).
 _STATEFUL_NODE_RE = re.compile(r"Exchange|Subquery|AdaptiveSparkPlan|QueryStage")
-_NAME_RE = re.compile(r"[A-Za-z_]\w*")
+_NAME_RE = re.compile(r"\w+")
+# leading verbs of the statements _dispatch passes to Spark that only read
+_QUERY_VERBS = frozenset(
+    ("SELECT", "WITH", "VALUES", "TABLE", "FROM", "SHOW", "DESCRIBE", "DESC"))
 # Spark-native temp views (no catalog entry) keep their SQL text and
 # re-resolve its names on every read; see _read_closure
 _SESSION_VIEW_RE = re.compile(
@@ -307,9 +310,10 @@ class Engine:
         from hyrise_spark.plan_cache import GDFSCache
 
         self._plan_cache = GDFSCache(capacity=1024)
-        # cached statement frame -> {max_rows: its limited frame} for the
-        # physical-plan reuse in fetch(); weak, so an entry the cache
-        # dropped goes once no caller holds its frame
+        # cached statement frame -> () until its first fetch, then
+        # (max_rows, its limited frame) for the physical-plan reuse in
+        # fetch(); weak, so an entry the cache dropped goes once no caller
+        # holds its frame
         self._physical: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
         self._physical_lock = threading.Lock()
         # Spark-native temp views created through the router: name -> text
@@ -397,22 +401,6 @@ class Engine:
         r"PREPARE|DEALLOCATE|VACUUM)\b",
         re.I,
     )
-    # Statements that leave the plan-cache epoch alone: reads, transaction
-    # control (a ROLLBACK bumps it in _restore), prepared-statement
-    # bookkeeping (the cache keys on a prepared statement's text, and its
-    # EXECUTE runs that text through _execute_one), VACUUM, and DML or
-    # ALTER on one table, which bumps that table's version in
-    # Catalog.replace_table / compact_table (a RENAME bumps the epoch
-    # there). Every other statement — DDL, SET/RESET, functions, writes to
-    # meta_* tables, anything passed through to Spark — bumps the epoch.
-    _KEEPS_EPOCH_RE = re.compile(
-        r"^\s*(?:SELECT|WITH|VALUES|SHOW|DESCRIBE|DESC|EXPLAIN|SUMMARIZE|"
-        r"BEGIN|START|COMMIT|ROLLBACK|SAVEPOINT|RELEASE|PREPARE|DEALLOCATE|"
-        r"EXECUTE\s+(?!IMMEDIATE\b)|VACUUM|"
-        r"(?:INSERT\s+INTO|UPDATE|DELETE\s+FROM|MERGE\s+INTO|"
-        r"TRUNCATE(?:\s+TABLE)?|ALTER\s+TABLE)\s+(?!meta_)\w+)\b",
-        re.I,
-    )
 
     def _is_write_stmt(self, stmt: str) -> bool:
         """Can `stmt` mutate engine state? Beyond the verb regex: EXECUTE
@@ -437,13 +425,9 @@ class Engine:
                 fenced = (txn is not None
                           and txn.get("owner") != self._owner_token()
                           and not self._in_snap_read)
-                if not (fenced and self._is_write_stmt(stmt)):
-                    # a statement that may change what a cached plan reads,
-                    # and that no table version tracks, moves the epoch
-                    if not self._KEEPS_EPOCH_RE.match(stmt):
-                        self.catalog.bump_epoch()
-                    if not fenced:
-                        return self._cached_dispatch(stmt, args)
+                if not fenced:
+                    return self._cached_dispatch(stmt, args)
+                if not self._is_write_stmt(stmt):
                     # Reads from OTHER connections get committed-only
                     # visibility: they are resolved against the BEGIN pin,
                     # not the live catalog — the reference's Validate
@@ -544,7 +528,7 @@ class Engine:
             )
             if not _TIME_FN_RE.search(text):
                 with self._physical_lock:
-                    self._physical[df] = {}
+                    self._physical[df] = ()
         return df
 
     def _read_closure(self, stmt: str) -> tuple[tuple[str, ...], str]:
@@ -584,12 +568,11 @@ class Engine:
         result is ever reused."""
         with self._physical_lock:
             kept = self._physical.get(df)
-        if kept is None:
+        if kept is None:  # not a cached statement, or its plan keeps state
             return df.limit(max_rows).collect()
-        limited = kept.get(max_rows)
-        if limited is not None:
+        if kept and kept[0] == max_rows:
             self._plan_cache.note_physical_hit()
-            return limited.collect()
+            return kept[1].collect()
         limited = df.limit(max_rows)
         rows = limited.collect()
         stateful = _keeps_state(limited._jdf.queryExecution().executedPlan())
@@ -597,7 +580,7 @@ class Engine:
             if stateful:
                 self._physical.pop(df, None)
             else:
-                kept[max_rows] = limited
+                self._physical[df] = (max_rows, limited)
         return rows
 
     def _dispatch(self, stmt: str, args) -> DataFrame | None:
@@ -765,12 +748,14 @@ class Engine:
                 f"CREATE OR REPLACE TEMPORARY FUNCTION {m['name']}{m['rest']}"
             )
             self._functions[m["name"].lower()] = stmt.strip()
+            self.catalog.bump_epoch()
             return None
         m = _DROP_FUNCTION_RE.match(stmt)
         if m:
             if m["name"].lower() in self._functions:
                 self.spark.sql(f"DROP TEMPORARY FUNCTION {m['name']}")
                 del self._functions[m["name"].lower()]
+                self.catalog.bump_epoch()
             elif not m["ifex"]:
                 raise ValueError(f"no such function: {m['name']}")
             return None
@@ -969,9 +954,14 @@ class Engine:
             from hyrise_spark.ucc import maybe_strip_redundant_distinct
 
             stmt = maybe_strip_redundant_distinct(stmt, self.catalog)
-        m = _SESSION_VIEW_RE.match(stmt)
-        if m:
-            self._session_views[m["name"].lower()] = stmt
+        if verb not in _QUERY_VERBS:
+            # a statement passed through to Spark that is not a query (SET,
+            # RESET, USE, a native temp view or function, ...) changes state
+            # no table version tracks
+            self.catalog.bump_epoch()
+            m = _SESSION_VIEW_RE.match(stmt)
+            if m:
+                self._session_views[m["name"].lower()] = stmt
         if args is not None:
             return self.spark.sql(stmt, args=args)
         return self.spark.sql(stmt)
@@ -3395,6 +3385,7 @@ class Engine:
 
         from hyrise_spark.meta.tables import meta_settings
 
+        self.catalog.bump_epoch()  # session confs shape analysis and plans
         if kind == "insert":
             rest = rest.strip()
             src = f"SELECT * FROM ({rest})" if rest.upper().startswith("VALUES") else rest
@@ -3431,6 +3422,7 @@ class Engine:
     def _exec_meta_function(self, rest: str):
         from hyrise_spark.meta.tables import EXEC_FUNCTIONS
 
+        self.catalog.bump_epoch()  # an admin function may change anything
         rest = rest.strip()
         src = f"SELECT * FROM ({rest})" if rest.upper().startswith("VALUES") else rest
         for r in self.spark.sql(src).toDF("plugin_name", "function_name").collect():
@@ -3500,6 +3492,8 @@ class Engine:
         from hyrise_spark.sources.hybin import write_bin
         from hyrise_spark.sources.tbl import write_tbl
 
+        # a cached plan may read the files written here
+        self.catalog.bump_epoch()
         if partition_by:
             # hive-layout export (dir per key): the distributed write path —
             # every executor writes its partitions' files; nothing collects

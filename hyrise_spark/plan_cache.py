@@ -32,7 +32,10 @@ by the writes to that table (every DML and ALTER path goes through
 `Catalog.replace_table`, compaction through `compact_table`), and an epoch,
 bumped by every change a plan cannot be traced to one table through: DDL,
 view and function changes, ROLLBACK [TO SAVEPOINT], the compaction purge,
-SET/RESET and writes to meta_* tables. An entry stores the names its
+writes to meta_* tables, exports (a plan may read the files), and every
+other non-query statement the engine hands to Spark (SET, RESET, USE, ...).
+Each bump sits where its change is made: in the `Catalog` method or the
+engine handler. An entry stores the names its
 statement can read — every identifier of its text, closed over the SQL of
 the views and functions it names, an over-approximation that never misses
 one — with the stamp `(epoch, versions of those names)` taken when it was
@@ -53,7 +56,7 @@ from typing import Any, Callable
 @dataclass
 class _Entry:
     value: Any
-    epoch: Any  # the validity stamp the entry was built under
+    stamp: Any  # the validity stamp the entry was built under
     cost: float  # analysis wall-time, ms (GDFS cost term)
     size: float = 1.0
     frequency: int = 1
@@ -76,15 +79,15 @@ class GDFSCache:
     _entries: dict[str, _Entry] = field(default_factory=dict)
     _lock: threading.Lock = field(default_factory=threading.Lock)
 
-    def get(self, key: str, epoch: Any | Callable[[tuple], Any]) -> Any | None:
-        """The value stored under `key` if its stamp equals `epoch` — the
-        current stamp, or a function computing it from the entry's deps."""
+    def get(self, key: str, stamp: Callable[[tuple], Any]) -> Any | None:
+        """The value stored under `key` if the stamp it was stored with
+        equals `stamp(deps)`, the current stamp of the entry's deps."""
         with self._lock:
             e = self._entries.get(key)
             if e is None:
                 self.misses += 1
                 return None
-            if e.epoch != (epoch(e.deps) if callable(epoch) else epoch):
+            if e.stamp != stamp(e.deps):
                 # stored under an older catalog state — drop it
                 del self._entries[key]
                 self.invalidations += 1
@@ -95,7 +98,7 @@ class GDFSCache:
             e.priority = self.inflation + e.frequency * e.cost / e.size
             return e.value
 
-    def put(self, key: str, value: Any, epoch: Any, cost: float,
+    def put(self, key: str, value: Any, stamp: Any, cost: float,
             size: float = 1.0, deps: tuple = ()) -> None:
         with self._lock:
             if self.capacity <= 0:
@@ -106,7 +109,7 @@ class GDFSCache:
                 del self._entries[victim]
                 self.evictions += 1
             self._entries[key] = _Entry(
-                value=value, epoch=epoch, cost=cost, size=size,
+                value=value, stamp=stamp, cost=cost, size=size,
                 priority=self.inflation + cost / size, deps=deps,
             )
 

@@ -28,13 +28,13 @@ from hyrise_spark.plan_cache import GDFSCache
 
 def test_gdfs_hit_miss_counters_and_epoch_invalidation():
     c = GDFSCache(capacity=4)
-    assert c.get("q1", epoch=0) is None
+    assert c.get("q1", lambda _: 0) is None
     assert c.misses == 1
-    c.put("q1", "plan1", epoch=0, cost=10.0)
-    assert c.get("q1", epoch=0) == "plan1"
+    c.put("q1", "plan1", stamp=0, cost=10.0)
+    assert c.get("q1", lambda _: 0) == "plan1"
     assert c.hits == 1
     # epoch moved -> entry invalidated, counted, dropped
-    assert c.get("q1", epoch=1) is None
+    assert c.get("q1", lambda _: 1) is None
     assert c.invalidations == 1 and c.misses == 2
     assert len(c) == 0
 
@@ -44,16 +44,16 @@ def test_gdfs_evicts_minimum_priority_and_inflates():
     eviction removes the min-priority entry and raises L to it, so a hot or
     expensive entry outlives a cold cheap one even when older."""
     c = GDFSCache(capacity=2)
-    c.put("cheap", "a", epoch=0, cost=1.0)
-    c.put("costly", "b", epoch=0, cost=100.0)
+    c.put("cheap", "a", stamp=0, cost=1.0)
+    c.put("costly", "b", stamp=0, cost=100.0)
     # heat up 'cheap' a lot: frequency compensates for low cost
     for _ in range(5):
-        assert c.get("cheap", 0) == "a"
+        assert c.get("cheap", lambda _: 0) == "a"
     # inserting a third entry evicts the MIN priority one
     pri_cheap = c._entries["cheap"].priority
     pri_costly = c._entries["costly"].priority
     victim = "cheap" if pri_cheap < pri_costly else "costly"
-    c.put("new", "c", epoch=0, cost=1.0)
+    c.put("new", "c", stamp=0, cost=1.0)
     assert victim not in c._entries
     assert c.evictions == 1
     assert c.inflation == pytest.approx(min(pri_cheap, pri_costly))
@@ -65,18 +65,18 @@ def test_gdfs_frequency_beats_recency():
     """A frequently-hit entry survives a newer one-shot entry (the F in
     GDFS) — plain LRU would evict it."""
     c = GDFSCache(capacity=2)
-    c.put("hot", "h", epoch=0, cost=10.0)
+    c.put("hot", "h", stamp=0, cost=10.0)
     for _ in range(10):
-        c.get("hot", 0)
-    c.put("cold", "c1", epoch=0, cost=10.0)
-    c.put("newer", "c2", epoch=0, cost=10.0)  # evicts 'cold', not 'hot'
+        c.get("hot", lambda _: 0)
+    c.put("cold", "c1", stamp=0, cost=10.0)
+    c.put("newer", "c2", stamp=0, cost=10.0)  # evicts 'cold', not 'hot'
     assert "hot" in c._entries and "cold" not in c._entries
 
 
 def test_gdfs_capacity_zero_disables():
     c = GDFSCache(capacity=0)
-    c.put("q", "v", epoch=0, cost=1.0)
-    assert c.get("q", 0) is None and len(c) == 0
+    c.put("q", "v", stamp=0, cost=1.0)
+    assert c.get("q", lambda _: 0) is None and len(c) == 0
 
 
 # -- engine integration -------------------------------------------------------
@@ -306,11 +306,15 @@ def test_write_to_one_table_keeps_hits_on_others(engine):
     "SET spark.sql.shuffle.partitions = 3",
     "CREATE TABLE rv_other AS SELECT 1 AS w",
     "INSERT INTO meta_settings VALUES ('hyrise_spark.rv_probe', '1')",
+    "CREATE FUNCTION rv_fn() RETURNS INT RETURN 1",
+    "INSERT INTO meta_exec VALUES ('engine', 'clear_statement_log')",
+    "CREATE TEMPORARY VIEW rv_tmp AS SELECT 1 AS w",
 ])
 def test_changes_invalidate(engine, change):
     """Compaction, ROLLBACK [TO SAVEPOINT] (even of an empty transaction),
-    CREATE OR REPLACE TABLE, ALTER TABLE, SET, DDL on another table and a
-    meta_settings write each invalidate a cached read of the table."""
+    CREATE OR REPLACE TABLE, ALTER TABLE, SET, DDL on another table, a
+    meta_settings or meta_exec write, a SQL function and a statement passed
+    through to Spark each invalidate a cached read of the table."""
     engine.execute("CREATE TABLE rv_t AS SELECT CAST(id AS INT) AS x FROM RANGE(4)")
     q = "SELECT * FROM rv_t WHERE x > 0"
     try:
@@ -321,7 +325,25 @@ def test_changes_invalidate(engine, change):
         assert not _served(engine, q)
         assert engine._plan_cache.invalidations == inv + 1
     finally:
-        engine.execute("DROP TABLE IF EXISTS rv_other; DROP TABLE rv_t")
+        engine.spark.catalog.dropTempView("rv_tmp")
+        engine.execute("DROP FUNCTION IF EXISTS rv_fn;"
+                       " DROP TABLE IF EXISTS rv_other; DROP TABLE rv_t")
+
+
+def test_name_starting_with_a_digit_is_read(engine):
+    """Spark's identifiers may start with a digit: a write to `2024_rv`
+    invalidates a cached read of it, and the read shows the new row."""
+    engine.execute("CREATE TABLE 2024_rv AS SELECT 1 AS x")
+    q = "SELECT SUM(x) AS s FROM 2024_rv"
+    try:
+        assert engine.execute(q).collect()[0]["s"] == 1
+        assert _served(engine, q)
+        engine.execute("INSERT INTO 2024_rv VALUES (5)")
+        h0 = engine._plan_cache.hits
+        assert engine.execute(q).collect()[0]["s"] == 6
+        assert engine._plan_cache.hits == h0
+    finally:
+        engine.execute("DROP TABLE 2024_rv")
 
 
 def test_begin_commit_keep_hits_and_commit_shows_writes(engine):
@@ -358,9 +380,14 @@ def test_fetch_reuses_exchange_free_plan(engine):
         assert pc.physical_hits == p0 + 2
         row = engine.execute("SELECT physical_hits FROM meta_plan_cache").collect()[0]
         assert row["physical_hits"] == pc.physical_hits
+        # another row limit builds a new limited plan, then reuses that one
+        assert engine.fetch(engine.execute(q), 5) == [(7, 70)]
+        assert pc.physical_hits == p0 + 2
+        assert engine.fetch(engine.execute(q), 5) == [(7, 70)]
+        assert pc.physical_hits == p0 + 3
         engine.execute("UPDATE rv_p SET v = 1 WHERE k = 7")
         assert engine.fetch(engine.execute(q), 100) == [(7, 1)]
-        assert pc.physical_hits == p0 + 2  # the miss built a new plan
+        assert pc.physical_hits == p0 + 3  # the miss built a new plan
     finally:
         engine.execute("DROP TABLE rv_p")
 
