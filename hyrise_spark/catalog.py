@@ -290,7 +290,9 @@ COMPACT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 class Catalog:
     """Named tables + views, mirroring StorageManager's add/drop/has surface
     (storage_manager.hpp: add_table/drop_table/get_table/has_table and the
-    *_view equivalents)."""
+    *_view equivalents). Names are folded to lower case at every public
+    table and view method, as postgres folds unquoted names and as Spark
+    resolves them: `CaseT` and `caset` are one table."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -392,6 +394,7 @@ class Catalog:
     _HISTORY_CAP = 8  # snapshots kept per table (lazy plans, not data)
 
     def add_table(self, name: str, df: DataFrame) -> None:
+        name = name.lower()
         if name in self._tables:
             raise ValueError(f"table {name!r} already exists")
         self.bump_epoch()
@@ -401,6 +404,7 @@ class Catalog:
         df.createOrReplaceTempView(name)
 
     def replace_table(self, name: str, df: DataFrame) -> None:
+        name = name.lower()
         self.bump_table(name)
         self._tables[name] = df
         hist = self.history.setdefault(name, [])
@@ -413,7 +417,7 @@ class Catalog:
             self.history_base[name] += overflow
         df.createOrReplaceTempView(name)
         self.validated_uccs = {
-            (t, c) for (t, c) in self.validated_uccs if t != name.lower()
+            (t, c) for (t, c) in self.validated_uccs if t != name
         }
         self.refresh_views({name})
 
@@ -422,6 +426,7 @@ class Catalog:
         new plan may read the old table's compaction parquet (trail[-1]), so
         the trail moves onto the new entry instead of queueing for the
         physical purge while the replacement still reads it."""
+        name = name.lower()
         carried = list(self.compact_paths.get(name, ()))
         self.drop_table(name)
         self.add_table(name, df)
@@ -433,12 +438,14 @@ class Catalog:
             ]
 
     def current_version(self, name: str) -> int:
+        name = name.lower()
         return self.history_base.get(name, 0) + len(self.history.get(name, [1])) - 1
 
     def get_version(self, name: str, version: int) -> DataFrame:
         """Snapshot of `name` as of write-version `version` (0 = creation).
         Raises if the version is newer than the table or already evicted
         from the bounded history ring."""
+        name = name.lower()
         if name not in self._tables:
             raise KeyError(f"table {name!r} does not exist")
         base = self.history_base.get(name, 0)
@@ -459,6 +466,7 @@ class Catalog:
         """ALTER TABLE ... RENAME TO: re-key ALL per-table state (history,
         depth, compaction trail). A drop+add would physically delete the
         compaction files the renamed table's plan still reads."""
+        name, new = name.lower(), new.lower()
         if name not in self._tables:
             raise KeyError(f"table {name!r} does not exist")
         self.bump_epoch()
@@ -467,8 +475,7 @@ class Catalog:
             if name in d:
                 d[new] = d.pop(name)
         self.validated_uccs = {
-            (new.lower() if t == name.lower() else t, c)
-            for (t, c) in self.validated_uccs
+            (new if t == name else t, c) for (t, c) in self.validated_uccs
         }
         self.spark.catalog.dropTempView(name)
         self._tables[new].createOrReplaceTempView(new)
@@ -488,6 +495,7 @@ class Catalog:
         return n
 
     def drop_table(self, name: str) -> None:
+        name = name.lower()
         if name not in self._tables:
             raise KeyError(f"table {name!r} does not exist")
         self.bump_epoch()
@@ -499,13 +507,14 @@ class Catalog:
         # purge — another plan may still read those files
         self._compact_trash.extend(self.compact_paths.pop(name, []))
         self.validated_uccs = {
-            (t, c) for (t, c) in self.validated_uccs if t != name.lower()
+            (t, c) for (t, c) in self.validated_uccs if t != name
         }
         self.spark.catalog.dropTempView(name)
 
     # -- MVCC-GC analog (mvcc_delete_plugin.hpp, see module note above) ------
     def note_dml(self, name: str) -> int:
         """Record one DML statement against `name`; returns the new depth."""
+        name = name.lower()
         self.dml_depth[name] = self.dml_depth.get(name, 0) + 1
         return self.dml_depth[name]
 
@@ -516,6 +525,7 @@ class Catalog:
         FileScan instead of the accumulated DML lineage). Distributed write —
         no driver-side collect; at warehouse scale this is the same rewrite
         a table format's compaction job performs."""
+        name = name.lower()
         self.bump_table(name)
         df = self._tables[name]
         if self._compact_dir is None:
@@ -590,10 +600,10 @@ class Catalog:
             self._compact_trash.append(trail.pop(0))
 
     def get_table(self, name: str) -> DataFrame:
-        return self._tables[name]
+        return self._tables[name.lower()]
 
     def has_table(self, name: str) -> bool:
-        return name in self._tables
+        return name.lower() in self._tables
 
     def table_names(self) -> list[str]:
         return sorted(self._tables)
@@ -611,7 +621,7 @@ class Catalog:
         stale registration and errors only when actually queried."""
         import re
 
-        dirty = set(dirty)
+        dirty = {d.lower() for d in dirty}
         for vname, vsql in self._views.items():
             if vname not in dirty and not any(
                 re.search(rf"\b{re.escape(d)}\b", vsql, re.I) for d in dirty
@@ -624,6 +634,7 @@ class Catalog:
                 pass
 
     def add_view(self, name: str, sql: str) -> None:
+        name = name.lower()
         if name in self._views or name in self._tables:
             raise ValueError(f"view/table {name!r} already exists")
         self.bump_epoch()
@@ -635,6 +646,7 @@ class Catalog:
         keeps its place in the creation order, so a pin install that
         re-resolves views in that order (Engine._install) still binds the
         views over it after it, and those views re-resolve now."""
+        name = name.lower()
         if name not in self._views:
             raise KeyError(f"view {name!r} does not exist")
         self.spark.sql(sql)  # a bad definition fails before anything changes
@@ -643,6 +655,7 @@ class Catalog:
         self.refresh_views({name})
 
     def drop_view(self, name: str) -> None:
+        name = name.lower()
         if name not in self._views:
             raise KeyError(f"view {name!r} does not exist")
         self.bump_epoch()
@@ -650,7 +663,7 @@ class Catalog:
         self.spark.catalog.dropTempView(name)
 
     def has_view(self, name: str) -> bool:
-        return name in self._views
+        return name.lower() in self._views
 
     def view_names(self) -> list[str]:
         return sorted(self._views)

@@ -15,9 +15,16 @@ what Spark's dialect doesn't route natively for the reference surface:
 
 from __future__ import annotations
 
+import datetime
 import itertools
 import re
+import threading
+import time
+import uuid
+import warnings
+import weakref
 from copy import copy as _shallow_copy
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -128,6 +135,17 @@ def _parse_literal(tok: str):
 _INSERT_RE = re.compile(
     r"^\s*INSERT\s+INTO\s+(?P<table>\w+)\s+(?P<rest>.+)$", re.I | re.S
 )
+_INSERT_COLS_RE = re.compile(r"^\(\s*(?P<cols>\w+(?:\s*,\s*\w+)*)\s*\)\s*(?P<rest>.+)$", re.S)
+
+
+def _insert_columns(body: str) -> tuple[list[str] | None, str]:
+    """An INSERT body's optional column list, and the VALUES/SELECT after
+    it: `(b, id) VALUES ...` -> (["b", "id"], "VALUES ..."). A
+    parenthesized `(SELECT ...)` is a source, not a column list."""
+    m = _INSERT_COLS_RE.match(body)
+    if m and m["cols"].split(",")[0].strip().upper() != "SELECT":
+        return [c.strip() for c in m["cols"].split(",")], m["rest"].strip()
+    return None, body
 _DELETE_RE = re.compile(
     r"^\s*DELETE\s+FROM\s+(?P<table>\w+)(?:\s+(?P<rest>.+))?\s*$", re.I | re.S
 )
@@ -158,10 +176,11 @@ _MERGE_RE = re.compile(
     r"\s+USING\s+(?P<rest>.+)$",
     re.I | re.S,
 )
-_TXN_RE = re.compile(
-    r"^\s*(?:BEGIN|START\s+TRANSACTION|COMMIT|ROLLBACK)(?:\s+(?:TRANSACTION|WORK))?\s*$",
-    re.I,
-)
+_TXN_TAIL = r"(?:\s+(?:TRANSACTION|WORK))?\s*$"
+_BEGIN_RE = re.compile(r"^\s*BEGIN" + _TXN_TAIL, re.I)
+_START_RE = re.compile(r"^\s*START\s+TRANSACTION" + _TXN_TAIL, re.I)
+_COMMIT_RE = re.compile(r"^\s*COMMIT" + _TXN_TAIL, re.I)
+_ROLLBACK_TXN_RE = re.compile(r"^\s*ROLLBACK" + _TXN_TAIL, re.I)
 _SAVEPOINT_RE = re.compile(r"^\s*SAVEPOINT\s+(?P<name>\w+)\s*$", re.I)
 _ROLLBACK_TO_RE = re.compile(
     r"^\s*ROLLBACK(?:\s+(?:TRANSACTION|WORK))?\s+TO\s+(?:SAVEPOINT\s+)?(?P<name>\w+)\s*$",
@@ -170,6 +189,14 @@ _ROLLBACK_TO_RE = re.compile(
 _RELEASE_RE = re.compile(
     r"^\s*RELEASE\s+(?:SAVEPOINT\s+)?(?P<name>\w+)\s*$", re.I
 )
+_VACUUM_RE = re.compile(r"^\s*VACUUM\s+(?P<table>\w+)\s*$", re.I)
+# SHOW TABLES / SHOW COLUMNS t — the reference rewrites these onto its meta
+# tables (sql_translator.cpp:1583-1597); same mapping here
+_SHOW_TABLES_RE = re.compile(r"^\s*SHOW\s+TABLES\s*$", re.I)
+_SHOW_COLUMNS_RE = re.compile(
+    r"^\s*SHOW\s+COLUMNS\s+(?:FROM\s+)?(?P<t>\w+)\s*$", re.I)
+_SUMMARIZE_RE = re.compile(
+    r"^\s*SUMMARIZE\s+(?:(?P<table>\w+)\s*$|(?P<query>SELECT\b.+))", re.I | re.S)
 _META_REF_RE = re.compile(r"\bmeta_\w+", re.I)
 # Engine-dialect markers. Each one routes a SELECT to its rewrite in
 # _dispatch (which EXPLAIN shares); they are searched on the literal- and
@@ -188,9 +215,8 @@ _STAR_MODIFIER_RE = re.compile(
 _DISTINCT_ON_RE = re.compile(r"^\s*SELECT\s+DISTINCT\s+ON\s*\(", re.I)
 _SUBQUERY_RE = re.compile(r"\(\s*SELECT\b", re.I)
 _EXPLAIN_RE = re.compile(
-    r"^\s*EXPLAIN\s+(?:(?P<analyze>ANALYZE)"
-    r"|(?P<mode>FORMATTED|EXTENDED|CODEGEN|COST))?\s*"
-    r"(?P<body>(?:SELECT|WITH)\b.+)$",
+    r"^\s*EXPLAIN\s+(?:(?:(?P<analyze>ANALYZE)"
+    r"|(?P<mode>FORMATTED|EXTENDED|CODEGEN|COST))\b)?\s*(?P<body>.+)$",
     re.I | re.S,
 )
 # ASOF JOIN (DuckDB/QuestDB dialect; beyond the reference's join vocabulary,
@@ -219,9 +245,6 @@ _DROP_FUNCTION_RE = re.compile(
     r"^\s*DROP\s+(?:TEMPORARY\s+)?FUNCTION\s+(?P<ifex>IF\s+EXISTS\s+)?(?P<name>\w+)\s*$",
     re.I,
 )
-# single source of truth for ROLLBACK detection — used both for the meta_log
-# status tag and the unsupported-operation warning
-_ROLLBACK_RE = re.compile(r"^\s*ROLLBACK\b", re.I)
 # Nondeterministic SQL functions inside DML: a lazy snapshot plan would
 # re-roll them on every later action (and RETURNING would see a different
 # roll than the table swap). Statements matching this pin their evaluation
@@ -243,9 +266,6 @@ _TIME_FN_RE = re.compile(
 # stages (ReusedExchange, SubqueryBroadcast, ... match too).
 _STATEFUL_NODE_RE = re.compile(r"Exchange|Subquery|AdaptiveSparkPlan|QueryStage")
 _NAME_RE = re.compile(r"\w+")
-# leading verbs of the statements _dispatch passes to Spark that only read
-_QUERY_VERBS = frozenset(
-    ("SELECT", "WITH", "VALUES", "TABLE", "FROM", "SHOW", "DESCRIBE", "DESC"))
 # Spark-native temp views (no catalog entry) keep their SQL text and
 # re-resolve its names on every read; see _read_closure
 _SESSION_VIEW_RE = re.compile(
@@ -253,6 +273,82 @@ _SESSION_VIEW_RE = re.compile(
     r"(?:IF\s+NOT\s+EXISTS\s+)?(?:\w+\s*\.\s*)?`?(?P<name>\w+)",
     re.I,
 )
+
+# -- statement routing ----------------------------------------------------------
+# Hyrise decides what a statement is once (SQLTranslator switches on the
+# parsed statement type, sql_translator.cpp:355-383). Here its first word,
+# read from the mask ("(" opens a parenthesized query), picks one row of
+# _ROUTES, and every reader takes the answer from Engine._route: the write
+# fence, the plan-cache gate, the plan views, the epoch bump of a Spark
+# pass-through, the meta_log ROLLBACK tag and pgwire's CommandComplete tag.
+# A row is (words, kind, cases); the first case (pattern, handler[, kind])
+# that matches names the Engine method that runs the statement, and may
+# refine the kind. A statement no case matches goes to Spark as written.
+_LEAD_RE = re.compile(r"\s*(\(|\w+)")
+_ROUTES = (
+    # query: reads. Behind another connection's open transaction they read
+    # its BEGIN pin (_snapshot_read). The texts Spark plans (_query) are
+    # cached; SHOW, DESCRIBE, SUMMARIZE and EXPLAIN are cheap to plan or
+    # compute their rows when they run, so they are not.
+    (("SELECT", "WITH", "VALUES", "TABLE", "FROM", "("), "query", ((re.compile(""), "_query"),)),
+    (("EXPLAIN",), "query", ((_EXPLAIN_RE, "_explain"),)),
+    (("SHOW",), "query", ((_SHOW_TABLES_RE, "_show"), (_SHOW_COLUMNS_RE, "_show"))),
+    (("DESCRIBE", "DESC"), "query", ()),
+    (("SUMMARIZE",), "query", ((_SUMMARIZE_RE, "_summarize"),)),
+    # write: change catalog state. Fenced behind another connection's open
+    # transaction: the engine has one transaction slot, and a write resolved
+    # against the pin would be dropped with it. Never cached; the handler
+    # moves the version of the table it writes, or the epoch.
+    (("INSERT",), "write", ((_INSERT_RE, "_insert_stmt"),)),
+    (("UPDATE",), "write", ((_UPDATE_RE, "_update_stmt"),)),
+    (("DELETE",), "write", ((_DELETE_RE, "_delete_stmt"),)),
+    (("TRUNCATE",), "write", ((_TRUNCATE_RE, "_delete_stmt"),)),
+    (("MERGE",), "write", ((_MERGE_RE, "_merge_stmt"),)),
+    (("ALTER",), "write", ((_ALTER_RE, "_alter"),)),
+    (("CREATE",), "write", (
+        (_CREATE_MATVIEW_RE, "_create_matview"), (_CREATE_VIEW_RE, "_create_view"),
+        (_CREATE_TABLE_RE, "_create_table"), (_CREATE_TABLE_SCHEMA_RE, "_create_table"),
+        (_CREATE_FUNCTION_RE, "_create_function"))),
+    (("DROP",), "write", (
+        (_DROP_MATVIEW_RE, "_drop_matview"), (_DROP_VIEW_RE, "_drop_view"),
+        (_DROP_TABLE_RE, "_drop_table"), (_DROP_FUNCTION_RE, "_drop_function"))),
+    (("REFRESH",), "write", ((_REFRESH_MATVIEW_RE, "_refresh_matview"),)),
+    (("VACUUM",), "write", ((_VACUUM_RE, "_vacuum"),)),
+    (("IMPORT",), "write", ((_IMPORT_RE, "_import"),)),
+    (("COPY",), "write", ((_COPY_FROM_RE, "_import"), (_COPY_TO_RE, "_export", "export"))),
+    # txn: act on the one transaction slot, so fenced like a write
+    (("BEGIN",), "txn", ((_BEGIN_RE, "_txn_stmt"),)),
+    (("START",), "txn", ((_START_RE, "_txn_stmt"),)),
+    (("COMMIT",), "txn", ((_COMMIT_RE, "_txn_stmt"),)),
+    (("ROLLBACK",), "txn",
+     ((_ROLLBACK_TXN_RE, "_txn_stmt"), (_ROLLBACK_TO_RE, "_rollback_to_savepoint"))),
+    (("SAVEPOINT",), "txn", ((_SAVEPOINT_RE, "_savepoint"),)),
+    (("RELEASE",), "txn", ((_RELEASE_RE, "_release_savepoint"),)),
+    # session: the prepared statements are pinned state too, so fenced
+    (("PREPARE",), "session", ((_PREPARE_RE, "_prepare_stmt"),)),
+    (("DEALLOCATE",), "session", ((_DEALLOCATE_RE, "_deallocate"),)),
+    # None: EXECUTE of a prepared statement has the kind of the prepared
+    # text, of any other name that of a pass-through
+    (("EXECUTE",), None, ((_EXECUTE_RE, "_execute_stmt"),)),
+    # export: writes files, not catalog state, so like a read it sees the
+    # pin (postgres runs COPY TO during another session's transaction);
+    # the write moves the epoch, as a cached plan may read the file
+    (("EXPORT",), "export", ((_EXPORT_RE, "_export"),)),
+)
+_ROUTE_BY_WORD = {w: (kind, cases) for words, kind, cases in _ROUTES for w in words}
+# passthrough, any other text Spark runs (SET, RESET, USE, ...): pinned like
+# a read, never cached, and it moves the epoch (_spark), as the state it
+# changes (a conf, the current database, a temp view) has no table version
+_PASSTHROUGH = ("passthrough", ())
+
+
+class Route(NamedTuple):
+    verb: str  # the first word, upper case
+    kind: str  # query, write, txn, session, export or passthrough
+    handler: str | None  # the Engine method that runs it; None: Spark
+    match: "re.Match[str] | None"  # the handler's pattern on `text`
+    text: str
+    mask: str  # sqltext.mask(text)
 
 
 def _keeps_state(plan) -> bool:
@@ -273,9 +369,6 @@ class Engine:
     """`execute(sql)` -> last statement's DataFrame (or None for DDL)."""
 
     def __init__(self, spark: SparkSession):
-        import threading
-        import weakref
-
         self.spark = spark
         self.catalog = Catalog(spark)
         self._prepared: dict[str, str] = {}
@@ -334,8 +427,6 @@ class Engine:
     def begin_client_session(self) -> str:
         """Bind the calling thread (one pgwire connection = one handler
         thread) to a fresh client token; returns it for end_client_session."""
-        import uuid
-
         tok = uuid.uuid4().hex
         self._client_local.token = tok
         return tok
@@ -354,8 +445,6 @@ class Engine:
         tok = getattr(self._client_local, "token", None)
         if tok is not None:
             return tok
-        import threading
-
         return ("thread", threading.get_ident())
 
     # -- statement routing --------------------------------------------------
@@ -370,9 +459,6 @@ class Engine:
     def _logged_execute(self, stmt: str, args) -> DataFrame | None:
         """Run one statement and append to the meta_log ring buffer
         (meta_log_table.hpp analog — driver-side, capped at 1000 entries)."""
-        import datetime
-        import time as _time
-
         log = self.catalog.statement_log
         entry = {
             "timestamp": datetime.datetime.now(datetime.timezone.utc).isoformat(),
@@ -380,67 +466,60 @@ class Engine:
             "status": "ok",
             "duration_ms": 0,
         }
-        if _ROLLBACK_RE.match(stmt) and self._txn is None:
-            entry["status"] = "noop"  # nothing open to abort (warned)
-        t0 = _time.perf_counter()
+        t0 = time.perf_counter()
         try:
-            return self._execute_one(stmt, args)
+            return self._execute_one(stmt, args, entry)
         except Exception:
             entry["status"] = "error"
             raise
         finally:
-            entry["duration_ms"] = int((_time.perf_counter() - t0) * 1000)
+            entry["duration_ms"] = int((time.perf_counter() - t0) * 1000)
             log.append(entry)
             del log[:-1000]
 
-    # statements that mutate state or control transactions — fenced while
-    # ANOTHER thread's transaction is open (see _execute_one)
-    _WRITE_STMT_RE = re.compile(
-        r"^\s*(?:INSERT|UPDATE|DELETE|MERGE|CREATE|DROP|ALTER|TRUNCATE|"
-        r"IMPORT|COPY|BEGIN|START|COMMIT|ROLLBACK|SAVEPOINT|RELEASE|"
-        r"PREPARE|DEALLOCATE|VACUUM)\b",
-        re.I,
-    )
+    def _route(self, stmt: str) -> Route:
+        """Classify `stmt` by its first word (_ROUTES)."""
+        ms = mask(stmt)
+        lead = _LEAD_RE.match(ms)
+        verb = lead[1].upper() if lead else ""
+        kind, cases = _ROUTE_BY_WORD.get(verb, _PASSTHROUGH)
+        handler = m = None
+        for case in cases:
+            m = case[0].match(stmt)
+            if m:
+                handler = case[1]
+                kind = case[2] if len(case) > 2 else kind
+                break
+        if kind is None:  # EXECUTE: the kind of the prepared text
+            text = m and self._prepared.get(m["name"])
+            kind, handler = ((self._route(text).kind, handler) if text
+                             else ("passthrough", None))
+        return Route(verb, kind, handler, m, stmt, ms)
 
-    def _is_write_stmt(self, stmt: str) -> bool:
-        """Can `stmt` mutate engine state? Beyond the verb regex: EXECUTE
-        classifies by the PREPARED statement's text (a fenced connection's
-        prepared INSERT must hit the write fence, not the snapshot-read
-        path, where its effect would be silently discarded on swap-back),
-        and REFRESH MATERIALIZED VIEW re-materializes stored state."""
-        if self._WRITE_STMT_RE.match(stmt):
-            return True
-        m = _EXECUTE_RE.match(stmt)
-        if m and m["name"] in self._prepared:
-            return bool(self._WRITE_STMT_RE.match(self._prepared[m["name"]]))
-        return bool(re.match(r"^\s*REFRESH\b", stmt, re.I))
+    def command_tag(self, sql: str) -> str:
+        """pgwire's CommandComplete tag: the last statement's first word."""
+        stmts = split_statements(sql)
+        return (self._route(stmts[-1]).verb if stmts else "") or "OK"
 
-    def _execute_one(self, stmt: str, args) -> DataFrame | None:
-        import time as _time
-
+    def _execute_one(self, stmt: str, args, entry: dict | None = None) -> DataFrame | None:
+        """Run one statement; `entry` is its meta_log entry, if logged."""
         deadline = None
         while True:
             with self._stmt_lock:
+                route = self._route(stmt)
                 txn = self._txn
+                if entry is not None and txn is None and route.verb == "ROLLBACK":
+                    entry["status"] = "noop"  # nothing open to abort (warned)
                 fenced = (txn is not None
                           and txn.get("owner") != self._owner_token()
                           and not self._in_snap_read)
                 if not fenced:
-                    return self._cached_dispatch(stmt, args)
-                if not self._is_write_stmt(stmt):
-                    # Reads from OTHER connections get committed-only
-                    # visibility: they are resolved against the BEGIN pin,
-                    # not the live catalog — the reference's Validate
-                    # semantics (validate.hpp:20 — every scan validates
-                    # against the snapshot commit-id;
-                    # transaction_manager.hpp).
-                    return self._snapshot_read(stmt, args)
-                # postgres scopes a transaction to its connection; this
-                # single-writer engine has ONE slot, so writes (and txn
-                # control) from another connection while it is pinned would
-                # silently join — or abort — someone else's transaction.
-                # Writers queue up to `hyrise_spark.lock_timeout` ms (pg's
-                # lock_timeout knob; default 0 = reject immediately).
+                    return self._cached_dispatch(route, args)
+                if route.kind not in ("write", "txn", "session"):
+                    return self._snapshot_read(route, args)  # see _ROUTES
+                # fenced (see _ROUTES): writers queue up to
+                # `hyrise_spark.lock_timeout` ms (pg's lock_timeout knob;
+                # default 0 = reject immediately)
                 if deadline is None:
                     t_ms = self._lock_timeout_ms()
                     if t_ms <= 0:
@@ -451,13 +530,13 @@ class Engine:
                             "it commits or rolls back (or set "
                             "hyrise_spark.lock_timeout to wait)"
                         )
-                    deadline = _time.monotonic() + t_ms / 1000.0
+                    deadline = time.monotonic() + t_ms / 1000.0
             # wait OUTSIDE the statement lock (the owner needs it to
             # commit/rollback); woken by _commit/_rollback's notify_all
             with self._txn_cv:
                 if self._txn is txn:
-                    self._txn_cv.wait(max(0.0, deadline - _time.monotonic()))
-            if _time.monotonic() >= deadline:
+                    self._txn_cv.wait(max(0.0, deadline - time.monotonic()))
+            if time.monotonic() >= deadline:
                 with self._stmt_lock:
                     still = (self._txn is not None
                              and self._txn.get("owner") != self._owner_token())
@@ -478,12 +557,7 @@ class Engine:
         except ValueError:
             return 0
 
-    # statements eligible for the plan cache: read-only, deterministic,
-    # parameterless, and not over the dynamic meta_* tables (whose content
-    # changes without a catalog mutation — meta_log, meta_system_utilization)
-    _CACHEABLE_RE = re.compile(r"^\s*(?:SELECT|WITH|VALUES)\b", re.I)
-
-    def _cached_dispatch(self, stmt: str, args) -> DataFrame | None:
+    def _cached_dispatch(self, route: Route, args) -> DataFrame | None:
         """SQLPlanCache analog (sql_plan_cache.hpp): return the cached
         analyzed DataFrame for an identical statement while nothing it reads
         has changed; otherwise dispatch and cache. The cached value is an
@@ -491,10 +565,13 @@ class Engine:
         dialect-rewrite + Catalyst-analysis cost (the driver-side dominant
         cost of repeated wide-expression statements), never data freshness:
         the entry's stamp covers the catalog epoch and the version of every
-        table its statement can read (plan_cache.py)."""
+        table its statement can read (plan_cache.py). Only queries Spark
+        plans are cached, none over the meta_* tables (whose content changes
+        without a catalog mutation) or with a nondeterministic function."""
+        stmt = route.text
         if (self._txn is not None
                 or self._in_snap_read
-                or not self._CACHEABLE_RE.match(stmt)
+                or route.handler != "_query"
                 or _META_REF_RE.search(stmt)
                 or _NONDET_RE.search(stmt)):
             # While a transaction is open (or resolving a snapshot read) the
@@ -502,7 +579,7 @@ class Engine:
             # others see the pin — and the stamp cannot distinguish them:
             # a plan cached by one would leak the wrong state to the other.
             # Bypass entirely; autocommit statements repopulate after COMMIT.
-            return self._dispatch(stmt, args)
+            return self._dispatch(stmt, args, route)
         # Parameterized statements cache per (text, bound values) — the
         # reference's prepared-plan cache keys the same way
         # (sql_plan_cache.hpp serves repeated EXECUTEs of one PREPARE).
@@ -515,15 +592,13 @@ class Engine:
         df = self._plan_cache.get(key, self.catalog.stamp)
         if df is not None:
             return df
-        import time as _time
-
         names, text = self._read_closure(stmt)
         stamp = self.catalog.stamp(names)
-        t0 = _time.perf_counter()
-        df = self._dispatch(stmt, args)
+        t0 = time.perf_counter()
+        df = self._dispatch(stmt, args, route)
         if df is not None:
             self._plan_cache.put(
-                key, df, stamp, (_time.perf_counter() - t0) * 1000.0,
+                key, df, stamp, (time.perf_counter() - t0) * 1000.0,
                 deps=names,
             )
             if not _TIME_FN_RE.search(text):
@@ -538,7 +613,7 @@ class Engine:
         columns and words inside literals come along; an extra name only
         costs an extra invalidation, a missing one would serve a stale
         plan."""
-        bodies = {k.lower(): v for k, v in self.catalog._views.items()}
+        bodies = dict(self.catalog._views)
         bodies.update(self._session_views)
         bodies.update(self._functions)
         texts, seen = [stmt], set()
@@ -583,313 +658,28 @@ class Engine:
                 self._physical[df] = (max_rows, limited)
         return rows
 
-    def _dispatch(self, stmt: str, args) -> DataFrame | None:
-        if re.search(r"\bVERSION\s+AS\s+OF\b", stmt, re.I):
-            stmt = self._resolve_versions(stmt)
-        if _TXN_RE.match(stmt):
-            # BEGIN/COMMIT/ROLLBACK are routed like the reference's
-            # (sql_translator.cpp:377-380 -> transaction_manager.hpp). Here
-            # the transaction is implemented ON the snapshot version ring:
-            # BEGIN pins the whole catalog state (table plans are lazy and
-            # immutable, so the pin is a dict of references, not data);
-            # COMMIT drops the pin; ROLLBACK restores it — every statement
-            # applied inside the transaction, including its appended history
-            # versions, un-happens. Concurrent sessions cannot observe the
-            # in-flight state: their reads are served from the BEGIN pin
-            # (_snapshot_read), giving the reference's committed-only
-            # snapshot visibility (validate.hpp:20); their writes are fenced
-            # (_execute_one) until commit/rollback.
-            u = stmt.lstrip().upper()
-            if u.startswith(("BEGIN", "START")):
-                self._begin()
-            elif u.startswith("COMMIT"):
-                self._commit()
-            else:
-                self._rollback()
-            return None
-        m = _SAVEPOINT_RE.match(stmt)
-        if m:
-            self._savepoint(m["name"])
-            return None
-        m = _ROLLBACK_TO_RE.match(stmt)
-        if m:
-            self._rollback_to_savepoint(m["name"])
-            return None
-        m = _RELEASE_RE.match(stmt)
-        if m:
-            self._release_savepoint(m["name"])
-            return None
-        m = re.match(r"^\s*VACUUM\s+(?P<table>\w+)\s*$", stmt, re.I)
-        if m:
-            # postgres-parity spelling of the MvccDeletePlugin-analog manual
-            # compaction (mvcc_delete_plugin.hpp; also reachable via
-            # meta_exec ('mvcc','compact_tables')): rewrite the table's
-            # snapshot lineage to flat parquet
-            name = m["table"].lower()
-            if not self.catalog.has_table(name):
-                raise ValueError(f"VACUUM: no such table: {m['table']}")
-            self.catalog.compact_table(name)
-            return None
-        m = _IMPORT_RE.match(stmt)
-        if m:
-            return self.import_table(m["path"], m["table"])
-        m = _COPY_FROM_RE.match(stmt)
-        if m:
-            return self.import_table(m["path"], m["table"], fmt=m["fmt"])
-        m = _COPY_TO_RE.match(stmt)
-        if m:
-            parts = m["pcols"] or m["pcol"]
-            pby = ([c.strip() for c in parts.split(",") if c.strip()]
-                   if parts else None)
-            if m["query"] is not None:
-                # COPY (query) TO: build the frame through the router so
-                # dialect SELECTs export too (side-effect free)
-                df = self._dispatch(m["query"].strip(), args)
-                self.export_frame(df, m["path"], fmt=m["fmt"],
-                                  partition_by=pby)
-            else:
-                self.export_table(m["table"], m["path"], fmt=m["fmt"],
-                                  partition_by=pby)
-            return None
-        m = _EXPORT_RE.match(stmt)
-        if m:
-            self.export_table(m["table"], m["path"])
-            return None
-        m = _CREATE_MATVIEW_RE.match(stmt)
-        if m:
-            name = m["name"].lower()
-            # materialize NOW: snapshot semantics — localCheckpoint cuts the
-            # lineage to the base tables, so later base-table DML does not
-            # leak into the stored result (stale-until-REFRESH contract)
-            df = self.spark.sql(m["sql"]).localCheckpoint(eager=True)
-            self.catalog.add_table(m["name"], df)
-            self._matviews[name] = m["sql"]
-            return None
-        m = _REFRESH_MATVIEW_RE.match(stmt)
-        if m:
-            name = m["name"].lower()
-            if name not in self._matviews:
-                raise ValueError(f"no such materialized view: {m['name']}")
-            df = self.spark.sql(self._matviews[name]).localCheckpoint(eager=True)
-            self.catalog.replace_table(m["name"], df)
-            return None
-        m = _DROP_MATVIEW_RE.match(stmt)
-        if m:
-            name = m["name"].lower()
-            if name in self._matviews:
-                del self._matviews[name]
-                self.catalog.drop_table(m["name"])
-            elif not m["ifex"]:
-                raise ValueError(f"no such materialized view: {m['name']}")
-            return None
-        m = _CREATE_VIEW_RE.match(stmt)
-        if m:
-            sql = m["sql"]
-            if m["cols"]:
-                # explicit view column list (count_view3-style, corpus line
-                # 371): rename through a derived-table alias
-                sql = f"SELECT * FROM ({sql}) AS __v({m['cols']})"
-            if m["orrepl"] and self.catalog.has_view(m["name"]):
-                self.catalog.replace_view(m["name"], sql)
-            else:
-                self.catalog.add_view(m["name"], sql)
-            return None
-        m = _DROP_VIEW_RE.match(stmt)
-        if m:
-            if m["ifex"] and not self.catalog.has_view(m["name"]):
-                return None
-            self.catalog.drop_view(m["name"])
-            return None
-        m = _DROP_TABLE_RE.match(stmt)
-        if m:
-            if m["ifex"] and not self.catalog.has_table(m["name"]):
-                return None
-            self.catalog.drop_table(m["name"])
-            return None
-        m = _CREATE_TABLE_RE.match(stmt)
-        if m:
-            if m["ifnx"] and self.catalog.has_table(m["name"]):
-                return None
-            if m["orrepl"] and self.catalog.has_table(m["name"]):
-                # CREATE OR REPLACE TABLE (DuckDB dialect): the defining
-                # query reads the OLD table state (snapshot semantics), so
-                # resolve the plan BEFORE the drop
-                self.catalog.recreate_table(m["name"], self.spark.sql(m["sql"]))
-                return None
-            self.catalog.add_table(m["name"], self.spark.sql(m["sql"]))
-            return None
-        m = _CREATE_TABLE_SCHEMA_RE.match(stmt)
-        if m:
-            if m["ifnx"] and self.catalog.has_table(m["name"]):
-                return None
-            # VARCHAR(n)/CHAR(n) -> STRING: hyrise stores both as string
-            # (pmr_string), and Spark's char/varchar types cannot appear in a
-            # DataFrame schema without preserveCharVarcharTypeInfo
-            cols = re.sub(r"\b(?:VARCHAR|CHAR)\s*\(\s*\d+\s*\)", "STRING", m["cols"], flags=re.I)
-            empty = self.spark.createDataFrame([], schema=cols)
-            self.catalog.add_table(m["name"], empty)
-            return None
-        # SHOW TABLES / SHOW COLUMNS t — the reference rewrites these onto its
-        # meta tables (sql_translator.cpp:1583-1597); same mapping here
-        if re.match(r"^\s*SHOW\s+TABLES\s*$", stmt, re.I):
-            return self._execute_one("SELECT * FROM meta_tables", None)
-        m = re.match(r"^\s*SHOW\s+COLUMNS\s+(?:FROM\s+)?(?P<t>\w+)\s*$", stmt, re.I)
-        if m:
-            return self._execute_one(
-                f"SELECT * FROM meta_columns WHERE table_name = '{m['t']}'", None
-            )
-        m = re.match(r"^\s*SUMMARIZE\s+(?P<t>\w+\s*$|SELECT\b.+)", stmt,
-                     re.I | re.S)
-        if m:
-            return self._summarize(m["t"].strip())
-        m = _CREATE_FUNCTION_RE.match(stmt)
-        if m:
-            self.spark.sql(
-                f"CREATE OR REPLACE TEMPORARY FUNCTION {m['name']}{m['rest']}"
-            )
-            self._functions[m["name"].lower()] = stmt.strip()
+    def _dispatch(self, stmt: str, args, route: Route | None = None) -> DataFrame | None:
+        """Run `stmt` through the handler its route names, or Spark."""
+        r = route or self._route(stmt)
+        if _VERSION_RE.search(r.mask):
+            r = self._route(self._resolve_versions(stmt))
+        if r.handler is None:
+            return self._spark(r, args)
+        return getattr(self, r.handler)(r, args)
+
+    def _spark(self, r: Route, args) -> DataFrame:
+        """Spark runs the text as written. Any statement but a query changes
+        state no table version tracks, so it moves the epoch."""
+        if r.kind != "query":
             self.catalog.bump_epoch()
-            return None
-        m = _DROP_FUNCTION_RE.match(stmt)
-        if m:
-            if m["name"].lower() in self._functions:
-                self.spark.sql(f"DROP TEMPORARY FUNCTION {m['name']}")
-                del self._functions[m["name"].lower()]
-                self.catalog.bump_epoch()
-            elif not m["ifex"]:
-                raise ValueError(f"no such function: {m['name']}")
-            return None
-        m = _PREPARE_RE.match(stmt)
-        if m:
-            # hyrise doubles quotes inside the statement string literal
-            self.prepare(m["name"], m["sql"].replace("''", "'"))
-            return None
-        m = _DEALLOCATE_RE.match(stmt)
-        if m:
-            if m["name"].upper() == "ALL":
-                self._prepared.clear()
-            elif self._prepared.pop(m["name"], None) is None:
-                raise ValueError(
-                    f"prepared statement {m['name']!r} does not exist")
-            return None
-        m = _EXECUTE_RE.match(stmt)
-        if m and m["name"] in self._prepared:
-            raw = (m["args"] or "").strip()
-            vals = (
-                [_parse_literal(t) for t in split_top_level(raw)]
-                if raw
-                else []
-            )
-            return self.execute_prepared(m["name"], vals)
-        m = _INSERT_RE.match(stmt)
-        if m:
-            rest, ret = self._split_returning(m["rest"])
-            if rest is None:  # e.g. 'INSERT INTO t RETURNING x' — no body
-                raise ValueError(f"cannot parse INSERT statement: {stmt.strip()!r}")
-            k = find_top_level(rest, "CONFLICT")
-            if k != -1 and re.search(r"\bON\s*$", rest[:k], re.I):
-                if ret:
-                    raise ValueError(
-                        "RETURNING is not supported with ON CONFLICT "
-                        "(use MERGE for upsert-with-result)"
-                    )
-                head = rest[: re.search(r"\bON\s*$", rest[:k], re.I).start()]
-                return self._insert_on_conflict(m["table"], head, rest[k:], args)
-            return self._insert(m["table"], rest, args=args, returning=ret)
-        m = _MERGE_RE.match(stmt)
-        if m:
-            return self._merge(m["table"], m["talias"], m["rest"])
-        m = _TRUNCATE_RE.match(stmt)
-        if m:
-            return self._delete(m["table"], None)
-        m = _ALTER_RE.match(stmt)
-        if m:
-            return self._alter(m["table"], m["action"])
-        m = _DELETE_RE.match(stmt)
-        if m:
-            rest, ret = self._split_returning(m["rest"])
-            cond = None
-            if rest and rest.strip():
-                um = re.match(r"^\s*USING\s+(?P<src>.+)$", rest, re.I | re.S)
-                if um:
-                    # DELETE ... USING (postgres/DuckDB): delete target rows
-                    # with a match in the USING source — exactly MERGE's
-                    # WHEN MATCHED THEN DELETE
-                    if ret:
-                        raise ValueError("RETURNING unsupported with USING")
-                    src = um["src"]
-                    w = find_top_level(src, "WHERE")
-                    if w == -1:
-                        raise ValueError("DELETE ... USING requires a WHERE join condition")
-                    src, jcond = src[:w].rstrip(), src[w + len("WHERE"):].strip()
-                    return self._merge(
-                        m["table"], None,
-                        f"{src} ON {jcond} WHEN MATCHED THEN DELETE",
-                    )
-                wm = re.match(r"^\s*WHERE\s+(?P<cond>.+)$", rest, re.I | re.S)
-                if not wm:
-                    raise ValueError(f"DELETE: cannot parse trailing {rest!r}")
-                cond = wm["cond"]
-            return self._delete(m["table"], cond, args=args, returning=ret)
-        m = _UPDATE_RE.match(stmt)
-        if m:
-            rest, ret = self._split_returning(m["rest"])
-            if rest is None:  # e.g. 'UPDATE t RETURNING x' — no SET clause
-                raise ValueError(f"cannot parse UPDATE statement: {stmt.strip()!r}")
-            f = find_top_level(rest, "FROM")
-            w = find_top_level(rest, "WHERE")
-            if f != -1 and (w == -1 or f < w):
-                # UPDATE ... FROM (postgres/DuckDB): per-row update using the
-                # matching source row — MERGE's WHEN MATCHED UPDATE, with the
-                # stricter (deterministic) ANSI one-match cardinality check
-                # instead of postgres's arbitrary-row pick
-                if ret:
-                    raise ValueError("RETURNING unsupported with UPDATE ... FROM")
-                if w == -1:
-                    raise ValueError("UPDATE ... FROM requires a WHERE join condition")
-                sets = rest[:f].rstrip()
-                src = rest[f + len("FROM"):w].strip()
-                jcond = rest[w + len("WHERE"):].strip()
-                return self._merge(
-                    m["table"], None,
-                    f"{src} ON {jcond} WHEN MATCHED THEN UPDATE SET {sets}",
-                )
-            sets, cond = (rest, None) if w == -1 else (
-                rest[:w], rest[w + len("WHERE"):].strip())
-            return self._update(m["table"], sets.strip(), cond, args=args,
-                                returning=ret)
-        m = _EXPLAIN_RE.match(stmt)
-        if m:
-            # EXPLAIN builds its query through this router, so the plan
-            # shown is the plan that runs: dialect rewrites, the hoisted
-            # correlated projection, materialized meta tables, the
-            # validated-UCC DISTINCT strip. It renders Spark's EXPLAIN
-            # result shape (one row, column `plan`), which works from psql
-            # too. _dispatch, not _execute_one: a plan-cache hit may be a
-            # frame that already ran, whose adaptive plan is the final one.
-            df = self._dispatch(m["body"], args)
-            jqe = df._jdf.queryExecution()
-            mode = (m["mode"] or "simple").lower()
-            if m["analyze"]:
-                # EXPLAIN ANALYZE (postgres dialect; beyond the reference,
-                # whose console offers `visualize` instead): EXECUTE the
-                # query to a noop sink, then report the plan that actually
-                # ran — with AQE the FINAL adaptive plan (isFinalPlan=true),
-                # i.e. the runtime-re-planned joins/partition coalescing a
-                # pre-execution EXPLAIN cannot show. It executes through
-                # THIS QueryExecution (a .write would clone the plan and
-                # leave this one unexecuted): rows stay on executors, only
-                # the count crosses to the driver.
-                jqe.toRdd().count()
-                mode = "formatted"
-            text = jqe.explainString(
-                self.spark._jvm.org.apache.spark.sql.execution.ExplainMode
-                .fromString(mode)
-            )
-            return self.spark.createDataFrame([(text,)], "plan string")
-        ms = mask(stmt)
-        lead = re.match(r"\s*(\w+)", ms)
-        verb = lead[1].upper() if lead else ""
+            m = _SESSION_VIEW_RE.match(r.text)
+            if m:
+                self._session_views[m["name"].lower()] = r.text
+        return self.spark.sql(r.text, args=args)
+
+    def _query(self, r: Route, args) -> DataFrame:
+        """The query path: the engine's dialect rewrites, then Spark."""
+        stmt, ms, verb = r.text, r.mask, r.verb
         if verb in ("SELECT", "WITH") and _META_REF_RE.search(ms):
             self._materialize_meta_tables(stmt)
         # quote-/paren-aware: 'ASOF' inside a string literal or subquery is
@@ -954,17 +744,269 @@ class Engine:
             from hyrise_spark.ucc import maybe_strip_redundant_distinct
 
             stmt = maybe_strip_redundant_distinct(stmt, self.catalog)
-        if verb not in _QUERY_VERBS:
-            # a statement passed through to Spark that is not a query (SET,
-            # RESET, USE, a native temp view or function, ...) changes state
-            # no table version tracks
+        return self.spark.sql(stmt, args=args)
+
+    def _explain(self, r: Route, args) -> DataFrame:
+        """EXPLAIN builds its query through the router, so the plan shown
+        is the plan that runs: dialect rewrites, the hoisted correlated
+        projection, materialized meta tables, the validated-UCC DISTINCT
+        strip. It renders Spark's EXPLAIN result shape (one row, column
+        `plan`), which works from psql too. Any other body (a command, a
+        write) Spark explains itself."""
+        m = r.match
+        body = self._route(m["body"])
+        if body.handler != "_query":
+            return self.spark.sql(r.text, args=args)
+        # _dispatch, not _execute_one: a plan-cache hit may be a frame that
+        # already ran, whose adaptive plan is the final one
+        df = self._dispatch(body.text, args, body)
+        jqe = df._jdf.queryExecution()
+        mode = (m["mode"] or "simple").lower()
+        if m["analyze"]:
+            # EXPLAIN ANALYZE (postgres dialect; beyond the reference, whose
+            # console offers `visualize` instead): EXECUTE the query to a
+            # noop sink, then report the plan that actually ran — with AQE
+            # the FINAL adaptive plan (isFinalPlan=true), i.e. the
+            # runtime-re-planned joins/partition coalescing a pre-execution
+            # EXPLAIN cannot show. It executes through THIS QueryExecution
+            # (a .write would clone the plan and leave this one
+            # unexecuted): rows stay on executors, only the count crosses to
+            # the driver.
+            jqe.toRdd().count()
+            mode = "formatted"
+        text = jqe.explainString(
+            self.spark._jvm.org.apache.spark.sql.execution.ExplainMode
+            .fromString(mode)
+        )
+        return self.spark.createDataFrame([(text,)], "plan string")
+
+    def _show(self, r: Route, args) -> DataFrame:
+        t = r.match.groupdict().get("t")
+        return self._execute_one("SELECT * FROM meta_tables" if t is None else
+                                 "SELECT * FROM meta_columns WHERE table_name = "
+                                 f"'{t.lower()}'", None)
+
+    # -- transactions ---------------------------------------------------------
+    def _txn_stmt(self, r: Route, args) -> None:
+        """BEGIN/COMMIT/ROLLBACK are routed like the reference's
+        (sql_translator.cpp:377-380 -> transaction_manager.hpp). Here the
+        transaction is implemented ON the snapshot version ring: BEGIN pins
+        the whole catalog state (table plans are lazy and immutable, so the
+        pin is a dict of references, not data); COMMIT drops the pin;
+        ROLLBACK restores it — every statement applied inside the
+        transaction, including its appended history versions, un-happens.
+        Other connections read the BEGIN pin, the reference's committed-only
+        visibility (validate.hpp:20), and are fenced from writing."""
+        if r.verb in ("BEGIN", "START"):
+            self._begin()
+        elif r.verb == "COMMIT":
+            self._commit()
+        else:
+            self._rollback()
+
+    # -- DDL ------------------------------------------------------------------
+    def _vacuum(self, r: Route, args) -> None:
+        # postgres-parity spelling of the MvccDeletePlugin-analog manual
+        # compaction (mvcc_delete_plugin.hpp; also reachable via meta_exec
+        # ('mvcc','compact_tables')): rewrite the table's snapshot lineage
+        # to flat parquet
+        name = r.match["table"]
+        if not self.catalog.has_table(name):
+            raise ValueError(f"VACUUM: no such table: {name}")
+        self.catalog.compact_table(name)
+
+    def _import(self, r: Route, args) -> DataFrame:
+        g = r.match.groupdict()
+        return self.import_table(g["path"], g["table"], fmt=g.get("fmt"))
+
+    def _export(self, r: Route, args) -> None:
+        """EXPORT t TO 'path', COPY t|(query) TO 'path' [(FORMAT f, ...)]"""
+        g = r.match.groupdict()
+        parts = g.get("pcols") or g.get("pcol")
+        pby = ([c.strip() for c in parts.split(",") if c.strip()]
+               if parts else None)
+        if g.get("query") is not None:
+            # built through the router, so dialect SELECTs export too; not a
+            # write, which a fenced connection would run against the pin
+            body = self._route(g["query"].strip())
+            if body.kind != "query":
+                raise ValueError(f"COPY (...) TO exports a query, not {body.verb}")
+            df = self._dispatch(body.text, args, body)
+            self.export_frame(df, g["path"], fmt=g["fmt"], partition_by=pby)
+        else:
+            self.export_table(g["table"], g["path"], fmt=g.get("fmt"),
+                              partition_by=pby)
+
+    def _create_matview(self, r: Route, args) -> None:
+        m = r.match
+        # materialize NOW: snapshot semantics — localCheckpoint cuts the
+        # lineage to the base tables, so later base-table DML does not leak
+        # into the stored result (stale-until-REFRESH contract)
+        df = self.spark.sql(m["sql"]).localCheckpoint(eager=True)
+        self.catalog.add_table(m["name"], df)
+        self._matviews[m["name"].lower()] = m["sql"]
+
+    def _refresh_matview(self, r: Route, args) -> None:
+        name = r.match["name"]
+        sql = self._matviews.get(name.lower())
+        if sql is None:
+            raise ValueError(f"no such materialized view: {name}")
+        self.catalog.replace_table(name, self.spark.sql(sql).localCheckpoint(eager=True))
+
+    def _drop_matview(self, r: Route, args) -> None:
+        m = r.match
+        if self._matviews.pop(m["name"].lower(), None) is not None:
+            self.catalog.drop_table(m["name"])
+        elif not m["ifex"]:
+            raise ValueError(f"no such materialized view: {m['name']}")
+
+    def _create_view(self, r: Route, args) -> None:
+        m = r.match
+        sql = m["sql"]
+        if m["cols"]:
+            # explicit view column list (count_view3-style, corpus line
+            # 371): rename through a derived-table alias
+            sql = f"SELECT * FROM ({sql}) AS __v({m['cols']})"
+        if m["orrepl"] and self.catalog.has_view(m["name"]):
+            self.catalog.replace_view(m["name"], sql)
+        else:
+            self.catalog.add_view(m["name"], sql)
+
+    def _drop_view(self, r: Route, args) -> None:
+        if not r.match["ifex"] or self.catalog.has_view(r.match["name"]):
+            self.catalog.drop_view(r.match["name"])
+
+    def _drop_table(self, r: Route, args) -> None:
+        if not r.match["ifex"] or self.catalog.has_table(r.match["name"]):
+            self.catalog.drop_table(r.match["name"])
+
+    def _create_table(self, r: Route, args) -> None:
+        g = r.match.groupdict()
+        name = g["name"]
+        if g["ifnx"] and self.catalog.has_table(name):
+            return
+        if g.get("cols") is not None:
+            # an empty table from a schema. VARCHAR(n)/CHAR(n) -> STRING, as
+            # hyrise stores both (pmr_string); Spark's char/varchar types need
+            # preserveCharVarcharTypeInfo to appear in a DataFrame schema
+            cols = re.sub(r"\b(?:VARCHAR|CHAR)\s*\(\s*\d+\s*\)", "STRING", g["cols"],
+                          flags=re.I)
+            self.catalog.add_table(name, self.spark.createDataFrame([], schema=cols))
+        elif g.get("orrepl") and self.catalog.has_table(name):
+            # CREATE OR REPLACE TABLE (DuckDB dialect): the defining query
+            # reads the OLD table state (snapshot semantics), so resolve the
+            # plan BEFORE the drop
+            self.catalog.recreate_table(name, self.spark.sql(g["sql"]))
+        else:
+            self.catalog.add_table(name, self.spark.sql(g["sql"]))
+
+    def _create_function(self, r: Route, args) -> None:
+        m = r.match
+        self.spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {m['name']}{m['rest']}")
+        self._functions[m["name"].lower()] = r.text.strip()
+        self.catalog.bump_epoch()
+
+    def _drop_function(self, r: Route, args) -> None:
+        m = r.match
+        if m["name"].lower() in self._functions:
+            self.spark.sql(f"DROP TEMPORARY FUNCTION {m['name']}")
+            del self._functions[m["name"].lower()]
             self.catalog.bump_epoch()
-            m = _SESSION_VIEW_RE.match(stmt)
-            if m:
-                self._session_views[m["name"].lower()] = stmt
-        if args is not None:
-            return self.spark.sql(stmt, args=args)
-        return self.spark.sql(stmt)
+        elif not m["ifex"]:
+            raise ValueError(f"no such function: {m['name']}")
+
+    # -- prepared statements (statement text) ------------------------------
+    def _prepare_stmt(self, r: Route, args) -> None:
+        # hyrise doubles quotes inside the statement string literal
+        self.prepare(r.match["name"], r.match["sql"].replace("''", "'"))
+
+    def _deallocate(self, r: Route, args) -> None:
+        name = r.match["name"]
+        if name.upper() == "ALL":
+            self._prepared.clear()
+        elif self._prepared.pop(name, None) is None:
+            raise ValueError(f"prepared statement {name!r} does not exist")
+
+    def _execute_stmt(self, r: Route, args) -> DataFrame | None:
+        raw = (r.match["args"] or "").strip()
+        vals = [_parse_literal(t) for t in split_top_level(raw)] if raw else []
+        return self.execute_prepared(r.match["name"], vals)
+
+    # -- DML statements ---------------------------------------------------
+    def _insert_stmt(self, r: Route, args) -> DataFrame | None:
+        m = r.match
+        rest, ret = self._split_returning(m["rest"])
+        if rest is None:  # e.g. 'INSERT INTO t RETURNING x' — no body
+            raise ValueError(f"cannot parse INSERT statement: {r.text.strip()!r}")
+        k = find_top_level(rest, "CONFLICT")
+        if k != -1 and re.search(r"\bON\s*$", rest[:k], re.I):
+            if ret:
+                raise ValueError(
+                    "RETURNING is not supported with ON CONFLICT "
+                    "(use MERGE for upsert-with-result)"
+                )
+            head = rest[: re.search(r"\bON\s*$", rest[:k], re.I).start()]
+            return self._insert_on_conflict(m["table"], head, rest[k:], args)
+        return self._insert(m["table"], rest, args=args, returning=ret)
+
+    def _merge_stmt(self, r: Route, args) -> DataFrame | None:
+        return self._merge(r.match["table"], r.match["talias"], r.match["rest"])
+
+    def _delete_stmt(self, r: Route, args) -> DataFrame | None:
+        """DELETE FROM t [USING ...] [WHERE ...] [RETURNING ...], TRUNCATE t"""
+        m = r.match
+        rest, ret = self._split_returning(m.groupdict().get("rest"))
+        cond = None
+        if rest and rest.strip():
+            um = re.match(r"^\s*USING\s+(?P<src>.+)$", rest, re.I | re.S)
+            if um:
+                # DELETE ... USING (postgres/DuckDB): delete target rows
+                # with a match in the USING source — exactly MERGE's
+                # WHEN MATCHED THEN DELETE
+                if ret:
+                    raise ValueError("RETURNING unsupported with USING")
+                src = um["src"]
+                w = find_top_level(src, "WHERE")
+                if w == -1:
+                    raise ValueError("DELETE ... USING requires a WHERE join condition")
+                src, jcond = src[:w].rstrip(), src[w + len("WHERE"):].strip()
+                return self._merge(
+                    m["table"], None,
+                    f"{src} ON {jcond} WHEN MATCHED THEN DELETE",
+                )
+            wm = re.match(r"^\s*WHERE\s+(?P<cond>.+)$", rest, re.I | re.S)
+            if not wm:
+                raise ValueError(f"DELETE: cannot parse trailing {rest!r}")
+            cond = wm["cond"]
+        return self._delete(m["table"], cond, args=args, returning=ret)
+
+    def _update_stmt(self, r: Route, args) -> DataFrame | None:
+        m = r.match
+        rest, ret = self._split_returning(m["rest"])
+        if rest is None:  # e.g. 'UPDATE t RETURNING x' — no SET clause
+            raise ValueError(f"cannot parse UPDATE statement: {r.text.strip()!r}")
+        f = find_top_level(rest, "FROM")
+        w = find_top_level(rest, "WHERE")
+        if f != -1 and (w == -1 or f < w):
+            # UPDATE ... FROM (postgres/DuckDB): per-row update using the
+            # matching source row — MERGE's WHEN MATCHED UPDATE, with the
+            # stricter (deterministic) ANSI one-match cardinality check
+            # instead of postgres's arbitrary-row pick
+            if ret:
+                raise ValueError("RETURNING unsupported with UPDATE ... FROM")
+            if w == -1:
+                raise ValueError("UPDATE ... FROM requires a WHERE join condition")
+            sets = rest[:f].rstrip()
+            src = rest[f + len("FROM"):w].strip()
+            jcond = rest[w + len("WHERE"):].strip()
+            return self._merge(
+                m["table"], None,
+                f"{src} ON {jcond} WHEN MATCHED THEN UPDATE SET {sets}",
+            )
+        sets, cond = (rest, None) if w == -1 else (
+            rest[:w], rest[w + len("WHERE"):].strip())
+        return self._update(m["table"], sets.strip(), cond, args=args,
+                            returning=ret)
 
     def _recursive_union_sql(self, name: str, cols: str | None,
                              base_sql: str, step_sql: str,
@@ -2752,7 +2794,7 @@ class Engine:
         self._install(snap)
 
     # -- committed-only reads for concurrent connections ---------------------
-    def _snapshot_read(self, stmt: str, args) -> DataFrame | None:
+    def _snapshot_read(self, route: Route, args) -> DataFrame | None:
         """Resolve a non-owner connection's read against the BEGIN pin
         instead of the live catalog (see _install)."""
         # the live containers are set aside, not copied: the pin's copy is
@@ -2761,14 +2803,12 @@ class Engine:
         self._in_snap_read = True
         try:
             self._install(self._txn["snap"])
-            return self._dispatch(stmt, args)
+            return self._dispatch(route.text, args, route)
         finally:
             self._in_snap_read = False
             self._install(live, copy=False)
 
     def _begin(self) -> None:
-        import warnings
-
         if self._txn is not None:
             # postgres behavior: WARNING, transaction already in progress
             warnings.warn("there is already a transaction in progress",
@@ -2778,8 +2818,6 @@ class Engine:
                      "owner": self._owner_token()}
 
     def _commit(self) -> None:
-        import warnings
-
         if self._txn is None:
             warnings.warn("there is no transaction in progress", stacklevel=4)
             return
@@ -2788,8 +2826,6 @@ class Engine:
             self._txn_cv.notify_all()  # wake writers queued on lock_timeout
 
     def _rollback(self) -> None:
-        import warnings
-
         if self._txn is None:
             warnings.warn(
                 "ROLLBACK outside a transaction: nothing to abort (statements "
@@ -2807,10 +2843,10 @@ class Engine:
     # and discards LATER savepoints but keeps the named one established
     # (postgres semantics); RELEASE drops it and everything after without
     # touching state. Outside a transaction block all three error, like pg.
-    def _savepoint(self, name: str) -> None:
+    def _savepoint(self, r: Route, args) -> None:
         if self._txn is None:
             raise ValueError("SAVEPOINT can only be used in transaction blocks")
-        self._txn["savepoints"].append((name.lower(), self._snapshot()))
+        self._txn["savepoints"].append((r.match["name"].lower(), self._snapshot()))
 
     def _find_savepoint(self, name: str) -> int:
         sps = self._txn["savepoints"] if self._txn else []
@@ -2819,21 +2855,21 @@ class Engine:
                 return i
         raise ValueError(f"savepoint {name!r} does not exist")
 
-    def _rollback_to_savepoint(self, name: str) -> None:
+    def _rollback_to_savepoint(self, r: Route, args) -> None:
         if self._txn is None:
             raise ValueError(
                 "ROLLBACK TO SAVEPOINT can only be used in transaction blocks"
             )
-        i = self._find_savepoint(name)
+        i = self._find_savepoint(r.match["name"])
         self._restore(self._txn["savepoints"][i][1])
         del self._txn["savepoints"][i + 1:]  # the named one stays established
 
-    def _release_savepoint(self, name: str) -> None:
+    def _release_savepoint(self, r: Route, args) -> None:
         if self._txn is None:
             raise ValueError(
                 "RELEASE SAVEPOINT can only be used in transaction blocks"
             )
-        i = self._find_savepoint(name)
+        i = self._find_savepoint(r.match["name"])
         del self._txn["savepoints"][i:]
 
     # -- DML (Insert/Delete/Update operators, SURVEY.md §2.8) ---------------
@@ -2843,15 +2879,20 @@ class Engine:
     # derives a new DataFrame and re-registers the table — a snapshot
     # semantics equivalent for the autocommit case (SURVEY.md §7 risk 6).
     # At warehouse scale this maps 1:1 onto a table format's MERGE/append.
-    def _after_dml(self, table: str) -> None:
-        """MvccDeletePlugin analog (mvcc_delete_plugin.hpp:21-32): once the
-        snapshot-DML lineage depth crosses the threshold, physically compact
-        the table inline on the commit path (the plugin's logical+physical
-        delete collapse into one parquet rewrite here; see catalog.py)."""
+    def _apply_dml(self, table: str, df: DataFrame, affected=None,
+                   returning: str | None = None, args=None) -> DataFrame | None:
+        """Install `df` as `table`'s new state; the RETURNING frame over
+        `affected` if one is asked for. Then the MvccDeletePlugin analog
+        (mvcc_delete_plugin.hpp:21-32): once the snapshot-DML lineage depth
+        crosses the threshold, physically compact the table inline on the
+        commit path (the plugin's logical+physical delete collapse into one
+        parquet rewrite here; see catalog.py)."""
         from hyrise_spark.catalog import COMPACT_THRESHOLD_DML_DEPTH
 
+        self.catalog.replace_table(table, df)
         if self.catalog.note_dml(table) >= COMPACT_THRESHOLD_DML_DEPTH:
             self.catalog.compact_table(table)
+        return self._returning_frame(affected, returning, args) if returning else None
 
     def _split_returning(self, text: str | None) -> tuple[str | None, str | None]:
         """Split a DML statement tail at a top-level RETURNING clause
@@ -2889,14 +2930,10 @@ class Engine:
         # optional explicit column list: INSERT INTO t (b, id, ...) VALUES/SELECT
         # — values bind to the NAMED columns in the given order; unmentioned
         # columns become NULL (insert.hpp routing / standard SQL)
-        target_cols: list[str] | None = None
-        m = re.match(r"^\(\s*(?P<cols>\w+(?:\s*,\s*\w+)*)\s*\)\s*(?P<rest>.+)$", rest, re.S)
-        if m and m["cols"].split(",")[0].strip().upper() != "SELECT":
-            target_cols = [c.strip() for c in m["cols"].split(",")]
-            unknown = [c for c in target_cols if c not in cur.columns]
-            if unknown:
-                raise ValueError(f"INSERT column(s) {unknown} not in {table}")
-            rest = m["rest"].strip()
+        target_cols, rest = _insert_columns(rest)
+        unknown = [c for c in target_cols or () if c not in cur.columns]
+        if unknown:
+            raise ValueError(f"INSERT column(s) {unknown} not in {table}")
         # parameter markers (?/:name) bind through spark.sql's args — keeps
         # parameterized DML working via pg-wire Bind and PREPARE/EXECUTE
         kw = {"args": args} if args else {}
@@ -2919,24 +2956,9 @@ class Engine:
                     f"INSERT BY NAME column(s) {unknown} not in {table}")
             target_cols = [canon[c.lower()] for c in sel.columns]
             new_rows = sel.toDF(*target_cols)
-            if _NONDET_RE.search(rest):
-                new_rows = new_rows.localCheckpoint(eager=True)
-            for fld in cur.schema.fields:
-                if fld.name not in target_cols:
-                    new_rows = new_rows.withColumn(
-                        fld.name, F.lit(None).cast(fld.dataType)
-                    )
-            new_rows = new_rows.select(*cur.columns)
-            self.catalog.replace_table(table, cur.unionByName(new_rows))
-            self._after_dml(table)
-            if returning:
-                return self._returning_frame(new_rows, returning, args)
-            return None
-        names = target_cols or cur.columns
-        if rest.upper().startswith("VALUES"):
-            new_rows = self.spark.sql(f"SELECT * FROM ({rest})", **kw).toDF(*names)
-        else:  # INSERT INTO t SELECT ...
-            new_rows = self.spark.sql(rest, **kw).toDF(*names)
+        else:  # VALUES rows, or INSERT INTO t SELECT ...
+            src = f"SELECT * FROM ({rest})" if rest.upper().startswith("VALUES") else rest
+            new_rows = self.spark.sql(src, **kw).toDF(*(target_cols or cur.columns))
         if _NONDET_RE.search(rest):
             # pin the roll: the unioned table state and the RETURNING frame
             # must see the same generated rows, and later scans must not
@@ -2949,11 +2971,9 @@ class Engine:
                         fld.name, F.lit(None).cast(fld.dataType)
                     )
             new_rows = new_rows.select(*cur.columns)
-        self.catalog.replace_table(table, cur.unionByName(new_rows))
-        self._after_dml(table)
-        if returning:  # new_rows is already schema-aligned post-image
-            return self._returning_frame(new_rows, returning, args)
-        return None
+        # new_rows is the schema-aligned post-image RETURNING reads
+        return self._apply_dml(table, cur.unionByName(new_rows), new_rows,
+                               returning, args)
 
     def _insert_on_conflict(self, table: str, head: str, conflict: str, args):
         """INSERT ... ON CONFLICT (keys) DO NOTHING | DO UPDATE SET ...
@@ -2975,14 +2995,7 @@ class Engine:
             )
         keys = [c.strip() for c in cm["keys"].split(",")]
         cur = self.catalog.get_table(table)
-        head = head.strip()
-        target_cols = None
-        m = re.match(
-            r"^\(\s*(?P<cols>\w+(?:\s*,\s*\w+)*)\s*\)\s*(?P<rest>.+)$", head, re.S
-        )
-        if m and m["cols"].split(",")[0].strip().upper() != "SELECT":
-            target_cols = [c.strip() for c in m["cols"].split(",")]
-            head = m["rest"].strip()
+        target_cols, head = _insert_columns(head.strip())
         names = target_cols or cur.columns
         missing = [k for k in keys if k not in names]
         if missing:
@@ -3003,12 +3016,8 @@ class Engine:
         if table.lower() == "meta_settings":
             return self._change_meta_settings("delete", cond=cond)
         cur = self.catalog.get_table(table)
-        if cond is None:
-            self.catalog.replace_table(table, cur.limit(0))
-            self._after_dml(table)
-            if returning:  # every (old) row was deleted
-                return self._returning_frame(cur, returning, args)
-            return None
+        if cond is None:  # every (old) row is deleted
+            return self._apply_dml(table, cur.limit(0), cur, returning, args)
         # SQL deletes only rows where the condition is TRUE; rows where it
         # evaluates to NULL must be KEPT (3VL — delete.hpp:14-18 operates on a
         # Validate output whose scan already dropped NULL matches). Routed
@@ -3040,11 +3049,7 @@ class Engine:
                     f" WHERE COALESCE(({cond}), FALSE)",
                     **kw,
                 )
-        self.catalog.replace_table(table, kept)
-        self._after_dml(table)
-        if returning:
-            return self._returning_frame(removed, returning, args)
-        return None
+        return self._apply_dml(table, kept, removed, returning, args)
 
     def _update(self, table: str, sets: str, cond: str | None, args=None,
                 returning: str | None = None):
@@ -3102,11 +3107,7 @@ class Engine:
                     f"SELECT {cols} FROM {src} AS {table}"
                     f" WHERE {match}", **kw
                 )
-        self.catalog.replace_table(table, updated)
-        self._after_dml(table)
-        if returning:
-            return self._returning_frame(affected, returning, args)
-        return None
+        return self._apply_dml(table, updated, affected, returning, args)
 
     # -- time travel (`<table> VERSION AS OF <n>`, mvcc_data.hpp analog) ----
     def _resolve_versions(self, stmt: str) -> str:
@@ -3130,9 +3131,10 @@ class Engine:
     # sql_translator.cpp handles no hsql::kStmtAlter; standard warehouse
     # schema evolution a switching user expects). Snapshot semantics like
     # the other DDL: the altered schema applies from this statement on.
-    def _alter(self, table: str, action: str):
+    def _alter(self, r: Route, args):
         import pyspark.sql.functions as F
 
+        table, action = r.match["table"], r.match["action"]
         if not self.catalog.has_table(table):
             raise ValueError(f"ALTER TABLE target {table!r} is not registered")
         cur = self.catalog.get_table(table)
@@ -3371,9 +3373,7 @@ class Engine:
                 f"LEFT ANTI JOIN {mt} AS {talias} ON {cond}"
             )
             new = base.unionByName(inserted)
-        self.catalog.replace_table(table, new)
-        self._after_dml(table)
-        return None
+        return self._apply_dml(table, new)
 
     # -- ChangeMetaTable (change_meta_table.hpp:26) -------------------------
     # DML against `meta_settings` mutates SESSION CONFS, mirroring the
@@ -3533,19 +3533,21 @@ class Engine:
             raise ValueError(f"unsupported COPY format {fmt!r}")
 
     # -- plan introspection (console `visualize` analog, SURVEY §3.3) -------
-    _QUERY_STMT_RE = re.compile(r"^\s*(?:SELECT|WITH|VALUES|SHOW|DESCRIBE|DESC)\b",
-                                re.I)
-
     def query_statement(self, sql: str) -> str:
         """The one query in `sql`, for the plan views to build through the
         router. The router runs what it is given, so any other text (a
         write, EXPORT, PREPARE, or a second statement) is refused before
         anything runs."""
         stmts = split_statements(sql)
-        if len(stmts) != 1 or not self._QUERY_STMT_RE.match(stmts[0]):
+        # EXPLAIN and SUMMARIZE compute their rows when they run, so the
+        # plan of their frame shows nothing of the statement; EXECUTE runs
+        # another text
+        r = self._route(stmts[0]) if len(stmts) == 1 else None
+        if r is None or r.kind != "query" or r.handler in (
+                "_explain", "_summarize", "_execute_stmt"):
             raise ValueError(
-                "only a single query (SELECT, WITH, VALUES, SHOW, DESCRIBE) "
-                f"has a plan to show: {sql!r}"
+                "only a single query (SELECT, WITH, VALUES, TABLE, FROM, "
+                f"SHOW, DESCRIBE) has a plan to show: {sql!r}"
             )
         return stmts[0]
 
@@ -3558,7 +3560,7 @@ class Engine:
         stmt = self.query_statement(sql)
         return self.execute(f"EXPLAIN {kw} {stmt}").collect()[0]["plan"]
 
-    def _summarize(self, table: str) -> DataFrame:
+    def _summarize(self, r: Route, args) -> DataFrame:
         """`SUMMARIZE t` (DuckDB dialect; the reference's closest analog is
         the meta_segments statistics surface, utils/meta_tables/): one
         wide aggregate pass over the table, transposed to one profile row
@@ -3569,10 +3571,8 @@ class Engine:
         every column type."""
         import pyspark.sql.functions as F
 
-        if re.match(r"^SELECT\b", table, re.I):
-            df = self._execute_one(table, None)  # SUMMARIZE <query> form
-        else:
-            df = self._execute_one(f"SELECT * FROM {table}", None)
+        query = r.match["query"] or f"SELECT * FROM {r.match['table']}"
+        df = self._execute_one(query.strip(), None)
         numeric = {"tinyint", "smallint", "int", "bigint", "float", "double",
                    "decimal"}
         aggs: list = [F.count(F.lit(1)).alias("__n")]

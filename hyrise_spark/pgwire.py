@@ -518,7 +518,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
             if any(f not in (0, 1) for f in rfmts):
                 raise ValueError(f"unknown result format code in {rfmts}")
         df = server.engine.execute(sql, args or None)
-        tag = sql.strip().split()[0].upper() if sql.strip() else "OK"
+        tag = server.engine.command_tag(sql) if df is None else None
         # portal = {df, tag, rfmts, rows (collected on first Execute), pos}
         portals[portal.decode()] = {"df": df, "tag": tag, "rfmts": rfmts,
                                     "rows": None, "pos": 0}
@@ -573,8 +573,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
             return self._copy_in(sock, server, m)
         df = server.engine.execute(sql)
         if df is None:
-            tag = sql.strip().split()[0].upper() if sql.strip() else "OK"
-            self._send(sock, _msg(b"C", _cstr(tag)))
+            self._send(sock, _msg(b"C", _cstr(server.engine.command_tag(sql))))
             return
         rows = server.engine.fetch(df, server.max_rows)
         self._send_row_description(sock, df)

@@ -794,21 +794,17 @@ _DISTINCT_ON_SQL = """
 """
 
 
-@register(
+# DISTINCT ON (postgres/DuckDB dialect; the reference's DISTINCT is
+# group-by-all-columns only, sql_translator.cpp:436): latest order per
+# customer. The engine rewrites to ROW_NUMBER()=1, which Spark executes
+# as two-stage WindowGroupLimit (partial top-1 per key below the
+# exchange) — ~1 row/key/partition crosses the shuffle at any scale.
+register_sql(
     "distinct_on_latest",
-    oracle=_DISTINCT_ON_SQL,
+    _DISTINCT_ON_SQL,
     tags=("distinct", "dialect", "sql"),
+    engine=True,
 )
-def distinct_on_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DISTINCT ON (postgres/DuckDB dialect; the reference's DISTINCT is
-    group-by-all-columns only, sql_translator.cpp:436): latest order per
-    customer. The engine rewrites to ROW_NUMBER()=1, which Spark executes
-    as two-stage WindowGroupLimit (partial top-1 per key below the
-    exchange) — ~1 row/key/partition crosses the shuffle at any scale."""
-    from hyrise_spark.engine import Engine
-
-    load_tables(spark, sf_dir, ("orders",))
-    return Engine(spark).execute(_DISTINCT_ON_SQL)
 
 
 _CORR_PROJ_SQL = """
@@ -822,27 +818,23 @@ _CORR_PROJ_SQL = """
 """
 
 
-@register(
+# Outer column inside a scalar subquery's SELECT list (reference
+# corpus sqlite_testrunner_queries.sql:385-386; executed through the
+# reference's correlated-parameter path, sql_translator.cpp /
+# correlated_parameter_expression.hpp). Spark allows correlation only in
+# predicates, so the engine hoists the additive outer terms out of the
+# subquery (constant per outer row; the aggregate guarantees one row):
+# `(SELECT agg ± outer FROM s)` → `((SELECT agg FROM s) ± outer)`. The
+# hoisted form is a plain uncorrelated scalar subquery — Catalyst plans
+# it ONCE as a broadcast scalar, not per-outer-row, which is also the
+# 100 TB shape (the reference re-executes the subplan per parameter
+# binding). DuckDB runs the same text natively.
+register_sql(
     "subquery_correlated_projection",
-    oracle=_CORR_PROJ_SQL,
+    _CORR_PROJ_SQL,
     tags=("subquery", "dialect", "sql"),
+    engine=True,
 )
-def subquery_correlated_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Outer column inside a scalar subquery's SELECT list (reference
-    corpus sqlite_testrunner_queries.sql:385-386; executed through the
-    reference's correlated-parameter path, sql_translator.cpp /
-    correlated_parameter_expression.hpp). Spark allows correlation only in
-    predicates, so the engine hoists the additive outer terms out of the
-    subquery (constant per outer row; the aggregate guarantees one row):
-    `(SELECT agg ± outer FROM s)` → `((SELECT agg FROM s) ± outer)`. The
-    hoisted form is a plain uncorrelated scalar subquery — Catalyst plans
-    it ONCE as a broadcast scalar, not per-outer-row, which is also the
-    100 TB shape (the reference re-executes the subplan per parameter
-    binding). DuckDB runs the same text natively."""
-    from hyrise_spark.engine import Engine
-
-    load_tables(spark, sf_dir, ("nation", "part", "region"))
-    return Engine(spark).execute(_CORR_PROJ_SQL)
 
 
 _CORR_PROJ_WHERE_SQL = """
@@ -853,22 +845,16 @@ _CORR_PROJ_WHERE_SQL = """
 """
 
 
-@register(
+# The WHERE-side shape of the correlated-projection hoist (reference
+# corpus sqlite_testrunner_queries.sql:390: the outer ALIAS appears
+# inside the comparison subquery's SELECT list). Same rewrite, same
+# single-broadcast-scalar plan; DuckDB runs the text natively.
+register_sql(
     "subquery_correlated_projection_where",
-    oracle=_CORR_PROJ_WHERE_SQL,
+    _CORR_PROJ_WHERE_SQL,
     tags=("subquery", "dialect", "sql"),
+    engine=True,
 )
-def subquery_correlated_projection_where(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The WHERE-side shape of the correlated-projection hoist (reference
-    corpus sqlite_testrunner_queries.sql:390: the outer ALIAS appears
-    inside the comparison subquery's SELECT list). Same rewrite, same
-    single-broadcast-scalar plan; DuckDB runs the text natively."""
-    from hyrise_spark.engine import Engine
-
-    load_tables(spark, sf_dir, ("nation", "part"))
-    return Engine(spark).execute(_CORR_PROJ_WHERE_SQL)
 
 
 _STAR_MOD_SQL = """
@@ -880,21 +866,17 @@ _STAR_MOD_SQL = """
 """
 
 
-@register(
+# `* EXCLUDE (...) REPLACE (...)` (DuckDB star modifiers; the reference
+# projects explicit lists only, projection.hpp). The engine expands `*`
+# against the analyzed schema (LIMIT 0 — no scan) into an explicit
+# projection, so column pruning reaches the parquet scan: EXCLUDE'd
+# columns are never read.
+register_sql(
     "projection_star_modifiers",
-    oracle=_STAR_MOD_SQL,
+    _STAR_MOD_SQL,
     tags=("projection", "dialect", "sql"),
+    engine=True,
 )
-def projection_star_modifiers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`* EXCLUDE (...) REPLACE (...)` (DuckDB star modifiers; the reference
-    projects explicit lists only, projection.hpp). The engine expands `*`
-    against the analyzed schema (LIMIT 0 — no scan) into an explicit
-    projection, so column pruning reaches the parquet scan: EXCLUDE'd
-    columns are never read."""
-    from hyrise_spark.engine import Engine
-
-    load_tables(spark, sf_dir, ("orders",))
-    return Engine(spark).execute(_STAR_MOD_SQL)
 
 
 # -- round 9: string-function vocabulary (beyond the reference's expression

@@ -261,16 +261,12 @@ _QUALIFY_SQL = """
 """
 
 
-@register(
+register_sql(
     "window_qualify",
-    oracle=_QUALIFY_SQL,
+    _QUALIFY_SQL,
     tags=("window", "qualify", "sql"),
+    engine=True,
 )
-def window_qualify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hyrise_spark.engine import Engine
-
-    load_tables(spark, sf_dir, ("lineitem",))
-    return Engine(spark).execute(_QUALIFY_SQL)
 
 
 # -- named WINDOW clause (SQL:2003; native in both Spark and DuckDB) ---------
@@ -331,20 +327,16 @@ _FRAME_EXCLUDE_SQL = """
 """
 
 
-@register(
+# Frame EXCLUDE CURRENT ROW (SQL:2011; the reference declares frames
+# but cannot execute windows, window_expression.hpp:30): peer-group
+# statistics that leave the row itself out — the leave-one-out shape used
+# by anomaly scoring. Same text runs natively on DuckDB (the oracle).
+register_sql(
     "window_frame_exclude",
-    oracle=_FRAME_EXCLUDE_SQL,
+    _FRAME_EXCLUDE_SQL,
     tags=("window", "frame", "sql"),
+    engine=True,
 )
-def window_frame_exclude(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame EXCLUDE CURRENT ROW (SQL:2011; the reference declares frames
-    but cannot execute windows, window_expression.hpp:30): peer-group
-    statistics that leave the row itself out — the leave-one-out shape used
-    by anomaly scoring. Same text runs natively on DuckDB (the oracle)."""
-    from hyrise_spark.engine import Engine
-
-    load_tables(spark, sf_dir, ("lineitem",))
-    return Engine(spark).execute(_FRAME_EXCLUDE_SQL)
 
 
 # -- round 9: IGNORE NULLS value functions (SQL:2008 null treatment) ---------
@@ -435,22 +427,18 @@ _FRAME_EXCLUDE_GROUP_SQL = """
 """
 
 
-@register(
+# EXCLUDE GROUP / EXCLUDE TIES (SQL:2011 frame exclusion, completing
+# the vocabulary beyond EXCLUDE CURRENT ROW): running totals of the
+# strictly-lower peer groups (GROUP) and the same keeping the row itself
+# (TIES), plus leave-my-peers-out partition average. Same text runs
+# natively on DuckDB (the oracle); NULL/0 on the first peer group where
+# the excluded frame is empty.
+register_sql(
     "window_frame_exclude_group",
-    oracle=_FRAME_EXCLUDE_GROUP_SQL,
+    _FRAME_EXCLUDE_GROUP_SQL,
     tags=("window", "frame", "sql"),
+    engine=True,
 )
-def window_frame_exclude_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCLUDE GROUP / EXCLUDE TIES (SQL:2011 frame exclusion, completing
-    the vocabulary beyond EXCLUDE CURRENT ROW): running totals of the
-    strictly-lower peer groups (GROUP) and the same keeping the row itself
-    (TIES), plus leave-my-peers-out partition average. Same text runs
-    natively on DuckDB (the oracle); NULL/0 on the first peer group where
-    the excluded frame is empty."""
-    from hyrise_spark.engine import Engine
-
-    load_tables(spark, sf_dir, ("lineitem",))
-    return Engine(spark).execute(_FRAME_EXCLUDE_GROUP_SQL)
 
 
 # -- round 9: FILTER clause over window functions (SQL:2003 T612) ------------
@@ -482,19 +470,15 @@ _WINDOW_FILTER_SQL = """
 """
 
 
-@register(
+# FILTER over window functions, incl. composed with EXCLUDE GROUP in
+# one expression (the FILTER rewrite runs first, then the exclusion
+# arithmetic) — conditional running totals without a self-join.
+register_sql(
     "window_filter_clause",
-    oracle=_WINDOW_FILTER_SQL,
+    _WINDOW_FILTER_SQL,
     tags=("window", "filter", "sql"),
+    engine=True,
 )
-def window_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FILTER over window functions, incl. composed with EXCLUDE GROUP in
-    one expression (the FILTER rewrite runs first, then the exclusion
-    arithmetic) — conditional running totals without a self-join."""
-    from hyrise_spark.engine import Engine
-
-    load_tables(spark, sf_dir, ("lineitem",))
-    return Engine(spark).execute(_WINDOW_FILTER_SQL)
 
 
 # -- round 9: DISTINCT window aggregates (engine rewrite; DuckDB native) -----
@@ -526,19 +510,15 @@ _WINDOW_DISTINCT_SQL = """
 """
 
 
-@register(
+# COUNT/SUM/AVG(DISTINCT ...) OVER — partition-wide and framed. One
+# Window operator computes all four rewritten expressions (same
+# partition key): no shuffle beyond the window's own exchange.
+register_sql(
     "window_count_distinct",
-    oracle=_WINDOW_DISTINCT_SQL,
+    _WINDOW_DISTINCT_SQL,
     tags=("window", "distinct", "sql"),
+    engine=True,
 )
-def window_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COUNT/SUM/AVG(DISTINCT ...) OVER — partition-wide and framed. One
-    Window operator computes all four rewritten expressions (same
-    partition key): no shuffle beyond the window's own exchange."""
-    from hyrise_spark.engine import Engine
-
-    load_tables(spark, sf_dir, ("lineitem",))
-    return Engine(spark).execute(_WINDOW_DISTINCT_SQL)
 
 
 # -- round 9: MEDIAN as a window aggregate (native in BOTH engines) ----------
@@ -606,21 +586,17 @@ _FRAME_EXCLUDE_ROWS_GROUP_SQL = """
 """
 
 
-@register(
+# EXCLUDE GROUP / TIES under ROWS frames (VERDICT r10 task 4): the
+# last declared-but-unsupported corner of the reference's frame grammar.
+# Exact position arithmetic over prefix windows — every added window
+# shares the partition/order, so Spark still plans ONE Window operator
+# (pinned in test_plan_quality.py).
+register_sql(
     "window_frame_exclude_rows_group",
-    oracle=_FRAME_EXCLUDE_ROWS_GROUP_SQL,
+    _FRAME_EXCLUDE_ROWS_GROUP_SQL,
     tags=("window", "frame", "sql"),
+    engine=True,
 )
-def window_frame_exclude_rows_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCLUDE GROUP / TIES under ROWS frames (VERDICT r10 task 4): the
-    last declared-but-unsupported corner of the reference's frame grammar.
-    Exact position arithmetic over prefix windows — every added window
-    shares the partition/order, so Spark still plans ONE Window operator
-    (pinned in test_plan_quality.py)."""
-    from hyrise_spark.engine import Engine
-
-    load_tables(spark, sf_dir, ("lineitem",))
-    return Engine(spark).execute(_FRAME_EXCLUDE_ROWS_GROUP_SQL)
 
 
 # -- round 12: MIN/MAX under frame exclusion (VERDICT r11 #2) ----------------
@@ -674,20 +650,16 @@ _FRAME_EXCLUDE_MINMAX_SQL = """
 """
 
 
-@register(
+# MIN/MAX with EXCLUDE CURRENT ROW / GROUP / TIES under both ROWS and
+# RANGE frames — the round-11 rewriter rejected MIN/MAX outright; the
+# reference declares the full SQL:2011 vocabulary for every window
+# function (window_expression.hpp:11-30).
+register_sql(
     "window_frame_exclude_minmax",
-    oracle=_FRAME_EXCLUDE_MINMAX_SQL,
+    _FRAME_EXCLUDE_MINMAX_SQL,
     tags=("window", "frame", "sql"),
+    engine=True,
 )
-def window_frame_exclude_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MIN/MAX with EXCLUDE CURRENT ROW / GROUP / TIES under both ROWS and
-    RANGE frames — the round-11 rewriter rejected MIN/MAX outright; the
-    reference declares the full SQL:2011 vocabulary for every window
-    function (window_expression.hpp:11-30)."""
-    from hyrise_spark.engine import Engine
-
-    load_tables(spark, sf_dir, ("lineitem",))
-    return Engine(spark).execute(_FRAME_EXCLUDE_MINMAX_SQL)
 
 
 # -- round 12: DISTINCT window aggregates composed with EXCLUDE --------------
@@ -730,16 +702,12 @@ _DISTINCT_EXCLUDE_SQL = """
 """
 
 
-@register(
+# DISTINCT window aggregates composed with SQL:2011 frame exclusion
+# (COUNT/SUM/MIN DISTINCT x EXCLUDE CURRENT ROW/GROUP/TIES) — the
+# round-11 exclusion rewriter raised ValueError on DISTINCT args.
+register_sql(
     "window_count_distinct_exclude",
-    oracle=_DISTINCT_EXCLUDE_SQL,
+    _DISTINCT_EXCLUDE_SQL,
     tags=("window", "frame", "distinct", "sql"),
+    engine=True,
 )
-def window_count_distinct_exclude(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DISTINCT window aggregates composed with SQL:2011 frame exclusion
-    (COUNT/SUM/MIN DISTINCT x EXCLUDE CURRENT ROW/GROUP/TIES) — the
-    round-11 exclusion rewriter raised ValueError on DISTINCT args."""
-    from hyrise_spark.engine import Engine
-
-    load_tables(spark, sf_dir, ("lineitem",))
-    return Engine(spark).execute(_DISTINCT_EXCLUDE_SQL)

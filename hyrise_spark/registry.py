@@ -10,7 +10,8 @@ Two ways in:
   * `register_sql(name, text, tags)` — the default for any query Spark can
     run from its SQL text. The text is the oracle AND the builder: the
     builder loads the base tables the text names and returns
-    `spark.sql(text)`, so DuckDB and Spark run one text and there is no
+    `spark.sql(text)` (`Engine.execute(text)` with `engine=True`, for the
+    engine's SQL dialect), so DuckDB and Spark run one text and there is no
     second spelling to drift. The TPC-H, SSB, JOB and TPC-DS suites
     (plans/tpch.py, ssb.py, job.py, tpcds_real.py, tpcds.py) are registered
     this way, as are the relational, analytic, window, events, TPC-C and
@@ -61,18 +62,27 @@ def register(name: str, oracle: Optional[str] = None, tags: tuple[str, ...] = ()
     return deco
 
 
-def register_sql(name: str, text: str, tags: tuple[str, ...] = ()) -> None:
+def register_sql(name: str, text: str, tags: tuple[str, ...] = (),
+                 engine: bool = False) -> None:
     """Register a query whose SQL text is both its DuckDB oracle and its
     Spark builder.
 
     The builder registers views for only the base tables named in the text,
-    then returns `spark.sql(text)`. Registering a view is not free: on a
-    4-core VM, all 10 base tables took ~50 ms per call and 4 took ~15 ms.
+    then returns `spark.sql(text)`, or with `engine=True`
+    `Engine(spark).execute(text)`: for a text in the engine's dialect
+    (QUALIFY, frame EXCLUDE, window FILTER and DISTINCT, DISTINCT ON, star
+    modifiers, correlated projections) that DuckDB runs natively and
+    Spark's parser does not. Registering a view is not free: on a 4-core
+    VM, all 10 base tables took ~50 ms per call and 4 took ~15 ms.
     """
     tables = tuple(t for t in TESTDATA_TABLES if re.search(rf"\b{t}\b", text))
 
     def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_tables(spark, sf_dir, tables)
+        if engine:
+            from hyrise_spark.engine import Engine
+
+            return Engine(spark).execute(text)
         return spark.sql(text)
 
     register(name, oracle=text, tags=tags)(builder)

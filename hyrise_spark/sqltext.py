@@ -7,8 +7,10 @@ text (find a top-level keyword, match a parenthesis, split a list on
 commas). Every such scan must skip the same token classes, so one regex
 finds them all:
 
-- string literals ``'...'`` (``''`` inside is an escaped quote);
-- quoted identifiers ``"..."`` and ```...``` (a doubled delimiter escapes);
+- string literals ``'...'`` (``''`` or a backslash before the quote
+  escapes it, as Spark's lexer reads them);
+- quoted identifiers ``"..."`` (escaped the same way) and ```...```
+  (a doubled delimiter escapes);
 - line comments ``-- ...`` up to the end of the line;
 - block comments ``/* ... */``, optimizer hints ``/*+ ... */`` included.
 
@@ -31,8 +33,8 @@ from __future__ import annotations
 import re
 
 _LEX = (
-    r"'[^']*(?:''[^']*)*'?"
-    r'|"[^"]*(?:""[^"]*)*"?'
+    r"'[^'\\]*(?:(?:''|\\.)[^'\\]*)*'?"
+    r'|"[^"\\]*(?:(?:""|\\.)[^"\\]*)*"?'
     r"|`[^`]*(?:``[^`]*)*`?"
     r"|--[^\n]*"
     r"|/\*.*?(?:\*/|\Z)"

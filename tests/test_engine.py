@@ -2164,3 +2164,161 @@ def test_fenced_prepare_deallocate_vacuum_hit_write_fence(engine):
             e.execute("DEALLOCATE fpv_old")
     finally:
         e.execute("DEALLOCATE ALL; DROP TABLE fpv")
+
+
+def test_fenced_export_and_copy_to_read_the_pin(engine, spark, tmp_path):
+    """EXPORT and COPY ... TO write files from a read. From a connection
+    fenced by another's open transaction both write the committed rows, as
+    postgres runs COPY TO during another session's transaction. COPY TO
+    used to be refused as a write while EXPORT ran."""
+    e = engine
+    e.execute("CREATE TABLE fex AS SELECT CAST(id AS INT) AS x FROM RANGE(3)")
+    paths = [str(tmp_path / n) for n in ("e.parquet", "c.parquet", "q.parquet")]
+    try:
+        e.execute("BEGIN; INSERT INTO fex VALUES (10)")
+        for sql in (f"EXPORT fex TO '{paths[0]}'", f"COPY fex TO '{paths[1]}'",
+                    f"COPY (SELECT x FROM fex) TO '{paths[2]}'"):
+            assert _on_thread(lambda: _try_exec(e, sql)) == "allowed", sql
+        e.execute("COMMIT")
+        for path in paths:
+            assert sorted(r["x"] for r in spark.read.parquet(path).collect()) == [0, 1, 2]
+        # the body of COPY (...) TO must be a query: a write there would run
+        # against the pin from a fenced connection and be dropped
+        with pytest.raises(ValueError, match="exports a query"):
+            e.execute(f"COPY (DELETE FROM fex WHERE x = 0) TO '{tmp_path}/d.parquet'")
+        assert e.execute("SELECT COUNT(*) AS n FROM fex").collect()[0]["n"] == 4
+    finally:
+        e.execute("DROP TABLE fex")
+
+
+def test_catalog_names_fold_to_lower_case(engine):
+    """Table and view names are case-insensitive, as in postgres and Spark:
+    DML, VACUUM and DROP reach `CaseT` through any spelling (INSERT used to
+    raise "not registered" and DROP a KeyError)."""
+    e = engine
+    e.execute("CREATE TABLE CaseT AS SELECT 1 AS x; CREATE VIEW CaseV AS SELECT x FROM caset")
+    e.execute("INSERT INTO caset VALUES (2)")
+    e.execute("UPDATE CASET SET x = x + 10 WHERE x = 2")
+    e.execute("DELETE FROM Caset WHERE x > 100")
+    e.execute("VACUUM cAsEt")
+    assert sorted(r["x"] for r in e.execute("SELECT x FROM casev").collect()) == [1, 12]
+    e.execute("DROP VIEW casev; DROP TABLE caset")
+    assert not e.catalog.has_table("CaseT") and not e.catalog.has_view("CASEV")
+
+
+def test_backslash_escaped_quote_stays_in_its_literal(engine, spark):
+    """The engine splits a script as Spark's lexer reads it: `\'` inside a
+    literal is a quote, so the ';' after it does not end the statement."""
+    sql = r"SELECT 'a\';b' AS s"
+    assert engine.execute(sql).collect()[0]["s"] == "a';b"
+    assert spark.sql(sql).collect()[0]["s"] == "a';b"
+
+
+# -- statement routing, one row per statement shape ---------------------------
+# (text, fenced, cached, plan view, epoch bump, setup, cleanup):
+# - fenced: from a connection fenced by another's open transaction the text
+#   is refused ("F"), or runs against the BEGIN pin ("P");
+# - cached: an autocommit run leaves a plan-cache entry under its text;
+# - plan view: Engine.query_statement accepts the text (explain, visualize);
+# - epoch bump: the autocommit run moves Catalog.epoch.
+# setup/cleanup run around the autocommit run only. {d} is a scratch dir.
+_ROUTING_ROWS = [
+    ("SELECT x FROM rt", "P", True, True, False, None, None),
+    ("WITH c AS (SELECT x FROM rt) SELECT x FROM c", "P", True, True, False, None, None),
+    ("VALUES (1), (2)", "P", True, True, False, None, None),
+    ("TABLE rt", "P", True, True, False, None, None),
+    ("FROM rt SELECT x", "P", True, True, False, None, None),
+    ("(SELECT x FROM rt) UNION (SELECT 7)", "P", True, True, False, None, None),
+    ("EXPLAIN SELECT x FROM rt", "P", False, False, False, None, None),
+    ("SHOW TABLES", "P", False, True, False, None, None),
+    ("SHOW COLUMNS FROM rt", "P", False, True, False, None, None),
+    ("SHOW DATABASES", "P", False, True, False, None, None),
+    ("DESCRIBE rt", "P", False, True, False, None, None),
+    ("DESC rt", "P", False, True, False, None, None),
+    ("SUMMARIZE rt", "P", False, False, False, None, None),
+    ("INSERT INTO rt VALUES (5)", "F", False, False, False, None, None),
+    ("UPDATE rt SET x = x + 1 WHERE x = 5", "F", False, False, False, None, None),
+    ("DELETE FROM rt WHERE x > 100", "F", False, False, False, None, None),
+    ("MERGE INTO rt USING (SELECT 9 AS x) s ON rt.x = s.x "
+     "WHEN NOT MATCHED THEN INSERT (x) VALUES (s.x)", "F", False, False, False, None, None),
+    ("TRUNCATE TABLE rt2", "F", False, False, False, None, None),
+    ("ALTER TABLE rt2 ADD COLUMN y INT", "F", False, False, False, None, None),
+    ("CREATE TABLE rt3 AS SELECT 1 AS x", "F", False, False, True, None, None),
+    ("CREATE VIEW rtv AS SELECT x FROM rt", "F", False, False, True, None, None),
+    ("DROP VIEW rtv", "F", False, False, True, None, None),
+    ("DROP TABLE rt3", "F", False, False, True, None, None),
+    ("CREATE TEMP VIEW rtt AS SELECT 1 AS x", "F", False, False, True, None, None),
+    ("CREATE FUNCTION rtf(a INT) RETURNS INT RETURN a + 1", "F", False, False, True, None, None),
+    ("CREATE MATERIALIZED VIEW rtm AS SELECT COUNT(*) AS n FROM rt",
+     "F", False, False, True, None, None),
+    ("REFRESH MATERIALIZED VIEW rtm", "F", False, False, False, None, None),
+    ("VACUUM rt", "F", False, False, False, None, None),
+    ("EXPORT rt TO '{d}/e.parquet'", "P", False, False, True, None, None),
+    ("COPY rt TO '{d}/c.parquet'", "P", False, False, True, None, None),
+    ("COPY (SELECT x FROM rt) TO '{d}/q.parquet'", "P", False, False, True, None, None),
+    ("IMPORT FROM '{d}/e.parquet' INTO rt4", "F", False, False, True, None, None),
+    ("COPY rt4 FROM '{d}/c.parquet'", "F", False, False, False, None, None),
+    ("BEGIN", "F", False, False, False, None, "COMMIT"),
+    ("START TRANSACTION", "F", False, False, False, None, "COMMIT"),
+    ("COMMIT", "F", False, False, False, "BEGIN", None),
+    ("ROLLBACK", "F", False, False, True, "BEGIN", None),
+    ("SAVEPOINT s1", "F", False, False, False, "BEGIN", "COMMIT"),
+    ("RELEASE SAVEPOINT s1", "F", False, False, False, "BEGIN; SAVEPOINT s1", "COMMIT"),
+    ("ROLLBACK TO SAVEPOINT s1", "F", False, False, True, "BEGIN; SAVEPOINT s1", "COMMIT"),
+    ("PREPARE rt_p FROM 'SELECT x FROM rt'", "F", False, False, False, None, None),
+    ("DEALLOCATE rt_p", "F", False, False, False, None, None),
+    ("EXECUTE rt_w", "F", False, False, False, None, None),
+    ("EXECUTE rt_r", "P", False, False, False, None, None),
+    ("SET hyrise_spark.routing_probe = 1", "P", False, False, True, None, None),
+    ("RESET hyrise_spark.routing_probe", "P", False, False, True, None, None),
+    ("USE default", "P", False, False, True, None, None),
+    ("-- note\nINSERT INTO rt VALUES (6)", "F", False, False, False, None, None),
+    ("/* note */ SELECT x FROM rt WHERE x > 0", "P", True, True, False, None, None),
+    ("select x from rt where x < 100", "P", True, True, False, None, None),
+    ("insert into rt values (7)", "F", False, False, False, None, None),
+    ("SELECT /*+ BROADCAST(rt) */ x FROM rt", "P", True, True, False, None, None),
+]
+
+
+def test_statement_routing_table(engine, tmp_path):
+    """One row per statement shape: fenced or pinned, cached or not, a plan
+    view or not, epoch bump or not. The routing of every shape comes from
+    one table (engine.py), so this pins each of its readers at once."""
+    import warnings
+
+    from hyrise_spark.sqltext import split_statements
+
+    e, d = engine, str(tmp_path)
+    e.execute("CREATE TABLE rt AS SELECT CAST(id AS INT) AS x FROM RANGE(3); "
+              "CREATE TABLE rt2 AS SELECT 1 AS x; "
+              "PREPARE rt_w FROM 'INSERT INTO rt VALUES (11)'; "
+              "PREPARE rt_r FROM 'SELECT x FROM rt'")
+    rows = [(r[0].format(d=d),) + r[1:] for r in _ROUTING_ROWS]
+    e.execute("BEGIN")
+    try:
+        fence = _on_thread(lambda: [
+            "F" if "another connection" in _try_exec(e, r[0]) else "P" for r in rows])
+    finally:
+        e.execute("ROLLBACK")
+    got, want = [], []
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        for (sql, fenced, cached, planned, bumps, setup, cleanup), f in zip(rows, fence):
+            try:
+                e.query_statement(sql)
+                in_view = True
+            except ValueError:
+                in_view = False
+            if setup:
+                e.execute(setup)
+            epoch = e.catalog.epoch
+            e.execute(sql)
+            bumped = e.catalog.epoch != epoch
+            in_cache = split_statements(sql)[-1] in e._plan_cache._entries
+            if cleanup:
+                e.execute(cleanup)
+            got.append((sql, f, in_cache, in_view, bumped))
+            want.append((sql, fenced, cached, planned, bumps))
+    e.execute("DEALLOCATE ALL; DROP FUNCTION rtf")
+    e.spark.catalog.dropTempView("rtt")
+    assert [(g, w[1:]) for g, w in zip(got, want) if g != w] == []

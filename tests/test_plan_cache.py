@@ -346,6 +346,40 @@ def test_name_starting_with_a_digit_is_read(engine):
         engine.execute("DROP TABLE 2024_rv")
 
 
+def test_parenthesized_query_keeps_cached_reads(engine):
+    """`(SELECT ...) UNION (...)` is a query: it moves no epoch, so a cached
+    read stays a hit with no invalidation (it used to count as a
+    pass-through statement and drop every cached plan)."""
+    engine.execute("CREATE TABLE pc AS SELECT 1 AS x")
+    q = "SELECT x FROM pc"
+    try:
+        engine.execute(q).collect()
+        cache = engine._plan_cache
+        h0, i0 = cache.hits, cache.invalidations
+        rows = engine.execute("(SELECT x FROM pc) UNION (SELECT 7)").collect()
+        assert sorted(r[0] for r in rows) == [1, 7]
+        engine.execute(q).collect()
+        assert (cache.hits - h0, cache.invalidations - i0) == (1, 0)
+    finally:
+        engine.execute("DROP TABLE pc")
+
+
+def test_write_spelled_in_another_case_invalidates(engine):
+    """Catalog names fold to lower case: a write to `RV_CASE` moves the
+    version of the `rv_case` a cached read depends on."""
+    engine.execute("CREATE TABLE Rv_Case AS SELECT 1 AS x")
+    q = "SELECT SUM(x) AS s FROM rv_case"
+    try:
+        assert engine.execute(q).collect()[0]["s"] == 1
+        assert _served(engine, q)
+        engine.execute("INSERT INTO RV_CASE VALUES (5)")
+        h0 = engine._plan_cache.hits
+        assert engine.execute(q).collect()[0]["s"] == 6
+        assert engine._plan_cache.hits == h0
+    finally:
+        engine.execute("DROP TABLE rv_case")
+
+
 def test_begin_commit_keep_hits_and_commit_shows_writes(engine):
     """BEGIN and COMMIT move nothing; the transaction's own writes moved
     their table, so a read of it re-plans after COMMIT and one of another

@@ -96,6 +96,19 @@ def test_split_top_level(s, want):
     assert split_top_level(s) == want
 
 
+@pytest.mark.parametrize("sql, want", [
+    (r"SELECT 'a\';b' AS s; SELECT 2", [r"SELECT 'a\';b' AS s", "SELECT 2"]),
+    (r"SELECT 'a\\'; SELECT 2", [r"SELECT 'a\\'", "SELECT 2"]),
+    (r'SELECT "a\";b" FROM t; SELECT 2', [r'SELECT "a\";b" FROM t', "SELECT 2"]),
+])
+def test_backslash_escapes_a_quote_as_spark_reads_it(sql, want):
+    """Spark's lexer reads a backslash before a quote as an escape, so the
+    split and the mask follow it: `'a\';b'` is one literal, `'a\\'` ends
+    after the escaped backslash."""
+    assert split_statements(sql) == want
+    assert mask(want[0]).count(";") == 0 and len(mask(sql)) == len(sql)
+
+
 def test_sub_outside_skips_literals_and_comments():
     pat = re.compile(r"\$(\d+)")
     s = "SELECT $1, '$2', \"$3\", $4 -- $5\n/* $6 */"
